@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the listener bus's drain, which Spark keeps package-private:
+  * the traced run reads its counters only after every event is
+  * delivered. */
+object BenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
