@@ -1,10 +1,40 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 object Bench {
+  /** Untimed warmup: absorb session init (parquet reader, codegen
+    * infra, JIT of common paths) so per-query timings reflect steady
+    * state; each query still pays its own plan/codegen cost. One
+    * representative per table family (lineitem / documents /
+    * embeddings / events) — with the name-sorted run order the first
+    * catalog queries would otherwise absorb every table's first-read
+    * cost and their times would measure run position, not the query.
+    * A failing warmup query is reported and left to fail its own row. */
+  def warmup(spark: SparkSession, sfDir: String): Unit =
+    for (w <- Seq("q1_pricing_summary", "t2_quality_score",
+        "s1_cosine_topk", "e1_tumbling_window", "t7_vocab_topk"))
+      try SparkEntry.queries(w)(spark, sfDir).count()
+      catch { case NonFatal(e) => System.err.println(s"[bench] warmup $w failed: $e") }
+
+  /** Release leftover blocks (localCheckpoints inside operators are
+    * otherwise only freed by the ContextCleaner after GC) so earlier
+    * queries don't tax later ones — measurement hygiene, VERDICT r2
+    * item 4. Blocking unpersist, then a forced GC: broadcast blocks
+    * and shuffle files are reclaimed by the ContextCleaner only after
+    * their references are collected — without it late queries pay the
+    * accumulated memory/GC tax (the BENCH_r02/r03 late-run slowdown). */
+  def hygiene(spark: SparkSession, keepPersisted: Boolean = false): Unit = {
+    spark.catalog.clearCache()
+    if (!keepPersisted)
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    System.gc()
+    Thread.sleep(50) // let the async ContextCleaner drain its queue
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     // per-query repetitions; the reported figure is the MEDIAN, so a
     // single ambient-load spike on the box can't masquerade as a plan
     // regression (VERDICT r5 item 7 — three rounds of uniform
@@ -20,77 +50,11 @@ object Bench {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")))
         .split("\\s+")(1).toDouble).getOrElse(-1.0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded collects scan all local partitions in ONE scheduling
-      // round instead of the 1→4→16→… escalation (see Verify)
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      // r21 (guide §2.1/§2.2 — measured, not guessed): with R ≤ 200
-      // reducers Spark picks BypassMergeSortShuffleWriter, which opens
-      // R partition files PER MAP TASK (M×R tiny files); profiled at
-      // local[32] that writer costs ~230 ms CPU + ~100 ms write time
-      // per task on KB-sized exchanges — it dominated every
-      // exchange-bearing query (d5's two 32-task map stages: 12.7 s →
-      // 1.3 s task time with the sort writer). Threshold 2 forces the
-      // one-file-per-map-task SortShuffleWriter. Production note: on a
-      // real cluster R > 200 everywhere, so bypass never fires and
-      // this knob is a no-op — it parameterizes LOCAL behavior only
-      // (override via SPARK_GRAFT_BYPASS_THRESHOLD to restore the
-      // default 200).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
-      // r22: the r21 blanket 64 KB AQE coalescing floor is GONE
-      // (VERDICT r21 item 2): it fanned every small stage of every
-      // query to 32 tiny tasks, and under a loaded driver box the
-      // CPU-dense ones (d15 lcp-verify, d4/d5 kernels) ran SLOWER at
-      // 32 cores than at 8 (scaling ratio 0.16-0.25) — the knob also
-      // lived only in the bench session, not the library. The r22
-      // replacement is operator-level: the d15/d16/d17 verify kernel
-      // is fused+zero-copy (graft_lcp_ext — the allocation pressure,
-      // not the task count, was the binding constraint), and
-      // CPU-dense scans keep ql.spread. Env hook kept for A/B only
-      // (unset = Spark's 1 MB default).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
-      // optional scratch-dir override for shuffle/spill files (dev
-      // A/B lever; unset = Spark default java.io.tmpdir)
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-          System.getProperty("java.io.tmpdir", "/tmp")))
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: absorb session init (parquet reader, codegen
-    // infra, JIT of common paths) so per-query timings reflect steady
-    // state; each query still pays its own plan/codegen cost. One
-    // representative per table family (lineitem / documents /
-    // embeddings / events) — with the name-sorted run order the first
-    // catalog queries would otherwise absorb every table's first-read
-    // cost and their times would measure run position, not the query.
-    for (w <- Seq("q1_pricing_summary", "t2_quality_score",
-        "s1_cosine_topk", "e1_tumbling_window", "t7_vocab_topk"))
-      try SparkEntry.queries(w)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-    // release leftover blocks (localCheckpoints inside operators are
-    // otherwise only freed by the ContextCleaner after GC) so earlier
-    // queries don't tax later ones — measurement hygiene, VERDICT r2
-    // item 4. Blocking unpersist, then a forced GC: broadcast blocks
-    // and shuffle files are reclaimed by the ContextCleaner only after
-    // their references are collected — without it late queries pay the
-    // accumulated memory/GC tax (the BENCH_r02/r03 late-run slowdown).
-    def hygiene(keepPersisted: Boolean = false): Unit = {
-      spark.catalog.clearCache()
-      if (!keepPersisted)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-      Thread.sleep(50) // let the async ContextCleaner drain its queue
-    }
-    // median of `runs` timed executions (failure -> -1 so breakage is
-    // visible, not a fast time); hygiene between every run.
+    val spark = Session.local(cpus)
+    warmup(spark, sfDir)
+    // median of `runs` timed executions; hygiene between every run.
+    // A row that throws is named in `failed`, left out of every
+    // figure, and turns the exit code non-zero.
     // keepPersisted=true for the index-split timings below: their
     // whole point is probing a LIVE prebuilt artifact, which the
     // blanket unpersist would silently evict between runs.
@@ -101,8 +65,8 @@ object Bench {
     // and a round's top priority was spent on a phantom. THE RULE: a
     // median move only counts as a regression if it sits OUTSIDE the
     // other round's [min, max] band (tools/bench_drift.py applies it).
-    def medianOf(times: Seq[Double]): Double =
-      if (times.contains(-1.0)) -1.0 else times.sorted.apply(times.size / 2)
+    def medianOf(times: Seq[Double]): Double = times.sorted.apply(times.size / 2)
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     // sub-second rows re-run to 5 samples (r19, VERDICT r18 item 6):
     // the r17->r18 drift report band-separated ~20 UNTOUCHED
     // sub-second plans on a measured 27% same-code day spread —
@@ -115,19 +79,23 @@ object Bench {
     // source). bench_drift.py additionally gates sub-second rows on
     // min-vs-band, the statistic least sensitive to ambient load.
     val subSecondRuns = math.max(runs, 5)
-    def allTimed(f: () => Unit, keepPersisted: Boolean = false): Seq[Double] = {
+    def allTimed(name: String, f: () => Unit,
+                 keepPersisted: Boolean = false): Option[Seq[Double]] = {
       def one(): Double = {
         val t0 = System.nanoTime()
-        val ok = try { f(); true } catch { case _: Throwable => false }
-        val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        hygiene(keepPersisted)
-        sec
+        try { f(); (System.nanoTime() - t0) / 1e9 }
+        finally hygiene(spark, keepPersisted)
       }
-      val base = (1 to runs).map(_ => one())
-      val med = medianOf(base)
-      if (med >= 0 && med < 1.0 && base.size < subSecondRuns)
-        base ++ (base.size until subSecondRuns).map(_ => one())
-      else base
+      try {
+        val base = (1 to runs).map(_ => one())
+        Some(if (medianOf(base) < 1.0 && base.size < subSecondRuns)
+          base ++ (base.size until subSecondRuns).map(_ => one())
+        else base)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+        None
+      }
     }
     // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the catalog (the
     // driver sets no filter and always times everything)
@@ -141,8 +109,8 @@ object Bench {
     // hash-arbitrary and changes as the catalog grows, which makes
     // per-query times incomparable across rounds (a query's cost
     // depends on which queries warmed the JVM before it)
-    val allRuns = catalog.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> allTimed(() => { fn(spark, sfDir).count(); () })
+    val allRuns = catalog.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      allTimed(name, () => { fn(spark, sfDir).count(); () }).map(name -> _)
     }
     val results = allRuns.map { case (name, ts) => name -> medianOf(ts) }
 
@@ -158,11 +126,11 @@ object Bench {
     val splitRuns = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     // named split timing: records raw runs so the spread object covers
     // the index-split rows too (same noise rule as the catalog rows)
-    def timeSplit(name: String)(f: => Unit): Unit = {
-      val ts = allTimed(() => f, keepPersisted = true)
-      splitRuns(name) = ts
-      splits(name) = medianOf(ts)
-    }
+    def timeSplit(name: String)(f: => Unit): Unit =
+      allTimed(name, () => f, keepPersisted = true).foreach { ts =>
+        splitRuns(name) = ts
+        splits(name) = medianOf(ts)
+      }
     if (only.isEmpty) try {
       val emb = t(spark, sfDir, "embeddings")
       val qv = emb.filter(col("vec_id") < 5)
@@ -277,7 +245,7 @@ object Bench {
             .as("toks"))
       // one pre-fragmented store per POSSIBLE timed run: the adaptive
       // sub-second extension can take this row to subSecondRuns
-      // samples, and an exhausted iterator here read as a -1 failure
+      // samples, and an exhausted iterator here read as a failure
       // in the first r19 artifact
       val fragDirs = (1 to subSecondRuns).map { _ =>
         val d = java.nio.file.Files
@@ -290,7 +258,11 @@ object Bench {
         graft.sources.ShardSink.compactShards(spark, fragDirs.next(),
           "doc_id"); ()
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      // set-up outside any one row failed: every split row is suspect
+      System.err.println(s"[bench] ann_split set-up failed: $e")
+      failed += "ann_split"
+    }
 
     // ms-rounded per-query times and a duplicate total at the END of
     // the object: the driver keeps only the last ~2000 chars of output,
@@ -300,22 +272,18 @@ object Bench {
     // Locale.ROOT: the f-interpolator uses the default locale, and a
     // comma-decimal locale would emit invalid JSON ("value":1,234)
     def r3(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val sp = splits.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     // per-query spread of the raw runs (min/med/max): the
-    // noise-vs-regression discriminator (VERDICT r13 item 2). A
-    // failed run poisons the whole triple to -1 so breakage stays
-    // visible in every field.
+    // noise-vs-regression discriminator (VERDICT r13 item 2)
     val spread = (allRuns ++ splitRuns.toSeq).map { case (k, ts) =>
-      val bad = ts.contains(-1.0)
-      val (mn, mx) = if (bad) (-1.0, -1.0) else (ts.min, ts.max)
-      s"\"" + k + "\":{\"min\":" + r3(mn) + ",\"med\":" + r3(medianOf(ts)) +
-        ",\"max\":" + r3(mx) + "}"
+      s"\"" + k + "\":{\"min\":" + r3(ts.min) + ",\"med\":" + r3(medianOf(ts)) +
+        ",\"max\":" + r3(ts.max) + "}"
     }.mkString("{", ",", "}")
+    val fl = failed.map(k => s"\"" + k + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     // r22 (VERDICT r21 item 8): the STDOUT line carries only the
     // medians — r20's line, with the per-query min/med/max spread
@@ -323,8 +291,8 @@ object Bench {
     // the round its prev/now comparison. The spread object still goes
     // to the FILE artifact below (same schema as before), where
     // tools/bench_drift.py reads it.
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"loadavg_5m":${r3(loadavg5m)},"queries":$qs,"ann_split":$sp,"sf":"$sfDir","n_queries":${results.size},"total_sec":${r3(total)}}"""
-    val fileLine = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"loadavg_5m":${r3(loadavg5m)},"queries":$qs,"ann_split":$sp,"spread":$spread,"sf":"$sfDir","n_queries":${results.size},"total_sec":${r3(total)}}"""
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"loadavg_5m":${r3(loadavg5m)},"queries":$qs,"ann_split":$sp,"sf":"$sfDir","n_queries":${results.size},"failed":$fl,"total_sec":${r3(total)}}"""
+    val fileLine = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"loadavg_5m":${r3(loadavg5m)},"queries":$qs,"ann_split":$sp,"spread":$spread,"sf":"$sfDir","n_queries":${results.size},"failed":$fl,"total_sec":${r3(total)}}"""
     println(line)
     // durability: the driver keeps only a ~2000-char stdout tail, which
     // has truncated 40 of 119 per-query medians in past rounds — also
@@ -343,5 +311,9 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

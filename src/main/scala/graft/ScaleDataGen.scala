@@ -3,10 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** sf1 (10× the bench SF) synthetic data + the one full-size scaling
-  * datapoint VERDICT r11 item 2 asked for: per-operator synthetic
-  * evidence says the heavy plans are hub-safe; this measures the
-  * ACTUAL catalog queries at 10× and flags anything superlinear.
+/** sf1 (10× the bench SF) synthetic data for the sf1 exactness runs
+  * (`tools/sf1_correctness.sh`).
   *
   * The generator mirrors sf0.1's measured marginals (31-word vocab,
   * 10–100 words/doc, lang mix ≈ 41/15/15/15/14, 20 uniform sources,
@@ -97,13 +95,7 @@ object ScaleDataGen {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("target/sf1")
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     // dimensions: fixed size at every SF (as in TPC-H)
@@ -136,91 +128,6 @@ object ScaleDataGen {
     write(genEmbeddings(spark, nVecs), "embeddings")
     println(s"[sf-gen] wrote ${mult}x of $srcDir to $outDir " +
       s"($nDocs docs, $nVecs vectors)")
-    spark.stop()
-  }
-}
-
-/** Times the PlanShapeSpec heavy-query set at sf0.1 and at the
-  * generated 10× dir, logs sec(sf1)/sec(sf0.1) per query, and flags
-  * ratios well beyond the data ratio as superlinear. Run after
-  * [[ScaleDataGen]]; output is committed as
-  * tools/scale_evidence_sf1_r12.log. */
-object ScaleEvidenceSf1 {
-  /** The PlanShapeSpec golden set — the queries whose 100× story the
-    * sf1 datapoint is meant to bind. */
-  val Heavy: Seq[String] = Seq(
-    "t30_paragraph_dedup", "t25_novelty", "p1_corpus_pipeline",
-    "p7_crawl_pipeline", "t15_bigram_lm", "t10_mix_budget",
-    "d15_exact_substr", "d16_substr_remove", "d17_cross_substr",
-    "d7_dup_clusters", "d12_pagerank", "p6_cluster_keep_best",
-    "m5_image_pipeline", "q20_excess_suppliers", "d10_triangles",
-    "s11_hybrid_fusion", "q_cdc_upsert", "q_asof_join",
-    // KITTI surface at 10× (VERDICT r13 item 7): the k-queries bind
-    // to events/part/lineitem, so the replicated sf1 tables ARE the
-    // 10× pointcloud corpus (10× the frames, disjoint frame keys —
-    // the reference's own cut-out loop was O(frames) driver-side;
-    // these must stay flat ratios)
-    "k1_point_extents", "k8_voxel_downsample", "k9_bev_grid",
-    "k10_density_patches")
-
-  def main(args: Array[String]): Unit = {
-    val small = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val big = args.lift(1).getOrElse("target/sf1")
-    val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    // 4th arg: "all" = full catalog (the r12 full-size datapoint),
-    // or a comma-separated query list; default = the Heavy golden set
-    val set: Seq[String] = args.lift(3) match {
-      case Some("all") => SparkEntry.queries.keys.toSeq.sorted
-      case Some(csv) => csv.split(",").toSeq
-      case None => Heavy
-    }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc(); Thread.sleep(50)
-    }
-    def median(name: String, dir: String): Double = {
-      val ts = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(name)(spark, dir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[sf1] $name@$dir failed: $e"); false }
-        val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        hygiene(); sec
-      }
-      if (ts.contains(-1.0)) -1.0 else ts.sorted.apply(runs / 2)
-    }
-    // warm both dirs' parquet readers once
-    for (d <- Seq(small, big); w <- Seq("t2_quality_score", "q1_pricing_summary"))
-      try SparkEntry.queries(w)(spark, d).count()
-      catch { case _: Throwable => () }
-    hygiene()
-    println(f"${"query"}%-24s ${"sf0.1"}%8s ${"sf1"}%8s ${"ratio"}%7s  verdict")
-    var worst = 0.0
-    set.foreach { name =>
-      val a = median(name, small)
-      val b = median(name, big)
-      val ratio = if (a > 0 && b > 0) b / a else -1.0
-      worst = math.max(worst, ratio)
-      // 10× data on a fixed-width local box: ≤10× is at-or-under
-      // linear, the band up to 20× covers constant-factor effects
-      // (spill onset, second-stage shuffles crossing the in-memory
-      // threshold); beyond that the plan owes an explanation.
-      val verdict = if (ratio < 0) "FAILED"
-        else if (ratio <= 12.0) "linear"
-        else if (ratio <= 20.0) "near-linear"
-        else "SUPERLINEAR"
-      println(f"$name%-24s $a%8.2f $b%8.2f $ratio%7.1f  $verdict")
-    }
-    println(f"[sf1] done; worst ratio $worst%.1f (data ratio 10.0)")
     spark.stop()
   }
 }

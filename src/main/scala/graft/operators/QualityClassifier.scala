@@ -39,6 +39,14 @@ import org.apache.spark.sql.functions._
   */
 object QualityClassifier {
 
+  /** One step of the training folds' decimal dot product: the term
+    * rounds to decimal(28,16), the add types as decimal(38,16) and the
+    * cast back to the decimal(37,16) accumulator keeps the scale, so
+    * every step is exact. Past 1e21 that cast overflows, which raises
+    * an error under the pinned ANSI mode (see [[train]]). */
+  private[graft] def foldStep(acc: Column, term: Column): Column =
+    (acc + term.cast("decimal(28,16)")).cast("decimal(37,16)")
+
   /** The two link functions mapping the linear score to (0, 1):
     *   - `"logistic"` — the textbook sigmoid 1/(1+e^−s). exp() is NOT
     *     ulp-identical across engines (measured: DuckDB's libm exp
@@ -130,7 +138,8 @@ object QualityClassifier {
     // at most lr·Σ|(p−y)·x| per epoch with |p−y| ≤ 1 and x bounded by
     // the per-doc token count), |x| < 1e9, |fs| ≤ nBuckets+1 ≤ 257, so
     // |dot| < 257·1e15 ≪ 1e21. If the feature layout ever widens,
-    // revisit this bound before trusting the cast.
+    // revisit this bound before trusting the cast. graft.Session pins
+    // ANSI mode, so an overflow raises instead (SessionSpec).
     val zeroDec = lit(BigDecimal(0)).cast("decimal(37,16)")
     for (_ <- 1 to epochs) {
       // score each doc: Σ w[b]·x + bias as a decimal array fold over
@@ -140,8 +149,8 @@ object QualityClassifier {
       val dot = aggregate(
         filter(col("fs"), f => f.getField("b") >= 0),
         zeroDec,
-        (acc, f) => (acc + (element_at(wLit, f.getField("b").cast("int") + 1) *
-          f.getField("x")).cast("decimal(28,16)")).cast("decimal(37,16)"))
+        (acc, f) => foldStep(acc,
+          element_at(wLit, f.getField("b").cast("int") + 1) * f.getField("x")))
         .cast("double")
       // gradient: per-bucket Σ (p−y)·x, decimal-summed (order-
       // independent ⇒ partition-invariant training); bucket −1 IS the
@@ -218,8 +227,8 @@ object QualityClassifier {
         aggregate(
           filter(col("fs"), f => f.getField("b") >= 0),
           zeroDec,
-          (acc, f) => (acc + (element_at(lit(w(j)), f.getField("b").cast("int") + 1) *
-            f.getField("x")).cast("decimal(28,16)")).cast("decimal(37,16)"))
+          (acc, f) => foldStep(acc,
+            element_at(lit(w(j)), f.getField("b").cast("int") + 1) * f.getField("x")))
           .cast("double").as(s"__dot$j")
       }
       val errCols = classes.indices.map { j =>

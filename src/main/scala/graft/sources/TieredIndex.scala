@@ -241,7 +241,7 @@ private[graft] object TieredIndex {
     * COMPLETE generations a pass over the cap starts merging: the
     * MOST-EQUAL adjacent pair in row-count order (minimum size ratio;
     * ties by smaller combined size, then id). Extracted so the
-    * long-horizon schedule simulation ([[graft.ScaleEvidenceTierSim]],
+    * long-horizon schedule simulation ([[TierSchedule.simulate]],
     * TieredIndexSpec's schedule property) drives the exact policy
     * [[compact]] executes rather than a re-implementation (VERDICT
     * r19 item 7 — and the reason the policy changed in r20: the

@@ -6,7 +6,7 @@ import graft.operators.Cdc
 
 /** CDC merge semantics: latest-version-wins, deletes remove, inserts
   * of unseen keys appear, equal-timestamp changes resolve by seq, and
-  * the result is partitioning-invariant. */
+  * the result is partitioning-invariant, also under a hub key. */
 class CdcSpec extends SparkSpec {
   import spark.implicits._
 
@@ -50,5 +50,28 @@ class CdcSpec extends SparkSpec {
         "k", "ts", "seq", "op", Seq("bal" -> col("value")))
       .orderBy("k").as[(Long, Double)].collect().toSeq
     assert(a == b)
+  }
+
+  test("hub key: the merge equals the keyed row_number window formulation") {
+    import org.apache.spark.sql.expressions.Window
+    // key 1 carries half the changelog; (ts, seq) is total per key
+    val ch = spark.range(2000).select(
+      when(col("id") % 2 === 0, lit(1L)).otherwise(col("id") % 97 + 2).as("k"),
+      timestamp_seconds(col("id") % 13).as("ts"), col("id").as("seq"),
+      when(col("id") % 20 === 0, lit("D")).otherwise(lit("U")).as("op"),
+      (col("id") % 1000 / 10.0).as("value"))
+    val hubBase = spark.range(1, 120).select(col("id").as("k"), lit(0.0).as("bal"))
+    val got = Cdc.applyChanges(hubBase, ch, "k", "ts", "seq", "op",
+        Seq("bal" -> col("value")))
+      .orderBy("k").as[(Long, Double)].collect().toSeq
+    val w = Window.partitionBy("k").orderBy(col("ts").desc, col("seq").desc)
+    val latest = ch.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+    val want = hubBase.join(latest.select("k"), Seq("k"), "left_anti")
+      .unionByName(latest.filter(col("op") =!= "D")
+        .select(col("k"), col("value").as("bal")))
+      .orderBy("k").as[(Long, Double)].collect().toSeq
+    assert(got == want)
+    assert(got.size > 100)
   }
 }

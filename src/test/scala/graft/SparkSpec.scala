@@ -40,14 +40,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.limit.initialNumPartitions", "4")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .getOrCreate()
+  lazy val session: SparkSession = Session.local(4)
 }

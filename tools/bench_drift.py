@@ -64,6 +64,9 @@ def main():
     def rows(d):
         return {**d.get("queries", {}), **d.get("ann_split", {})}
     orows, nrows = rows(old), rows(new)
+    # rows that threw are absent from "queries"; name them, never skip
+    for q in new.get("failed", []):
+        print(f"FAILED      {q}: no timing in the new artifact")
     n_reg = n_imp = n_sub = 0
     for q in sorted(set(orows) & set(nrows)):
         om, nm = orows[q], nrows[q]

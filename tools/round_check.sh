@@ -66,7 +66,7 @@ echo "== 5/5 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
 # the 13 flagged queries are the documented 1-row-scalar broadcast
 # nested loops (global aggregates joined back); anything NEW flagged
 # here is a plan regression the golden specs didn't cover
-sbt -batch "runMain graft.PlanAudit /root/testdata/sf0.01" 2>/dev/null \
+sbt -batch "runMain graft.Dev audit $SF" 2>/dev/null \
   | grep -o 'AUDIT [a-z0-9_]*:.*' | grep -v '^AUDIT done:' \
   | sort > /tmp/plan_audit_now.txt
 cat > /tmp/plan_audit_allow.txt <<'ALLOW'
