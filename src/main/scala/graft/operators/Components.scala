@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -33,15 +36,25 @@ import org.apache.spark.sql.functions._
   * Rounds scale with log(diameter) on label chains via the pointer
   * jump; `maxIters` guards pathological inputs and the operator fails
   * loudly rather than return a non-converged (wrong) labeling. Since
-  * r22 each materialized round chains k propagation steps (default 2,
-  * GRAFT_CC_STEPS; `maxIters` bounds the loop at k·maxIters steps):
+  * r22 each materialized round chains k = [[ChainSteps]] propagation
+  * steps (`maxIters` bounds the loop at k·maxIters steps):
   * the loop's local cost is per-action fixed overhead, its at-scale
   * cost per-step shuffles — k steps per barrier divides the former by
   * k for the same latter, and the in-flight per-step observes keep
   * convergence detection per-step (at most k-1 steps of overshoot,
-  * which recompute the converged labels bit-identically).
+  * which recompute the converged labels bit-identically). Each round
+  * logs its index, step count, label sum and wall time at INFO.
   */
 object Components {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Propagation steps chained per materialized round. The round plan
+    * duplicates the label subtree 2^k times (step references lb
+    * twice), and at k=3/k=4 the planning cost of the bigger round plan
+    * exceeded the barrier savings: d7 4.4 s at k=2 vs 4.8 s at k=3 on
+    * the same box. */
+  private val ChainSteps = 2
 
   /** (node, component) for every node in `edges` (+ optional isolated
     * `nodes`, which keep themselves as component). `component` is the
@@ -117,80 +130,51 @@ object Components {
       // step boundary: labels only ever decrease, so ANY equal
       // adjacent pair of sums certifies a fixpoint (at most k-1 steps
       // of overshoot past it — overshoot steps recompute the converged
-      // labels bit-identically, so results never depend on k). k = 2
-      // measured best locally: the round plan duplicates the label
-      // subtree 2^k times (step references lb twice), and at k=3/k=4
-      // the planning cost of the bigger round plan exceeded the
-      // barrier savings (d7 4.4 s @k=2 vs 4.8 s @k=3 on the same box);
-      // GRAFT_CC_STEPS is the dev A/B lever.
-      val chainK = sys.env.get("GRAFT_CC_STEPS").map(_.toInt)
-        .getOrElse(2).max(1)
+      // labels bit-identically, so results never depend on k; see
+      // ChainSteps for why k = 2).
       val chainObs = scala.collection.mutable.Buffer[Observation]()
       var chained = labels
-      for (_ <- 1 to chainK) {
+      for (_ <- 1 to ChainSteps) {
         val s = step(chained)
         chained = if (useObserve) {
           val o = Observation(); chainObs += o
           s.observe(o, sum(col("comp").cast("decimal(38,0)")).as("s"))
         } else s
       }
-      if (sys.env.contains("GRAFT_CC_EXPLAIN") && round <= 2)
-        chained.explain("formatted")
       val next = chained.localCheckpoint(true)
       // the checkpoint materialization IS the round's only job; observe
       // collected the label sum during it. Defensive timeout: if the
-      // metric ever failed to fire (obs.get would block forever), fall
+      // metric ever failed to fire (its future would never complete), fall
       // back to an explicit aggregation over the checkpointed blocks —
       // and stop observing for the rest of the run (see useObserve).
       // Only the TIMEOUT falls back: a real failure inside the metric
-      // computation (ExecutionException) propagates rather than being
-      // silently converted into a second job. A dedicated daemon
-      // thread is interrupted on timeout — parking the wait on the
-      // shared global pool would leak one blocked worker per round in
-      // exactly the scenario the timeout defends against.
+      // computation propagates rather than being silently converted
+      // into a second job.
       val checkpointSum = () => next.agg(sum(col("comp").cast("decimal(38,0)")))
         .head().getDecimal(0)
-      def observed(o: Observation): java.math.BigDecimal = {
-        val exec = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-          val t = new Thread(r, "graft-cc-observe"); t.setDaemon(true); t
-        })
-        try {
-          val fut = exec.submit(new java.util.concurrent.Callable[java.math.BigDecimal] {
-            override def call(): java.math.BigDecimal =
-              o.get("s").asInstanceOf[java.math.BigDecimal]
-          })
-          try fut.get(30, java.util.concurrent.TimeUnit.SECONDS)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              System.err.println(
-                s"connectedComponents: observe metric missed in round $round; " +
-                  "falling back to explicit aggregation for remaining rounds")
-              useObserve = false
-              null
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        } finally exec.shutdownNow()
-      }
+      def observed(o: Observation): java.math.BigDecimal =
+        try Await.result(o.future, 30.seconds).getAs[java.math.BigDecimal]("s")
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            log.warn(s"connectedComponents: observe metric missed in round " +
+              s"$round; falling back to explicit aggregation for remaining rounds")
+            useObserve = false
+            null
+        }
       // in-chain sums: only meaningful on the observe path (a second
       // aggregation job per step would defeat the point; without them
       // convergence is still detected, one round later). Guard each
       // wait on useObserve so ONE missed metric doesn't serialize k
       // 30 s timeouts — after the first miss the rest are skipped and
       // the round falls back to the explicit aggregation.
-      val tObs = System.nanoTime()
       val chainSums: Seq[java.math.BigDecimal] =
         chainObs.toSeq.map(o => if (useObserve) observed(o) else null)
       val labelSum = chainSums.lastOption.filter(_ != null)
         .getOrElse(checkpointSum())
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"cc obs waits: total=" +
-          f"${(System.nanoTime() - tObs) / 1e6}%.0fms")
       labels = next
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"connectedComponents round $round " +
-          s"sums=${chainSums.mkString(",")} labelSum=$labelSum " +
-          f"wall=${(System.nanoTime() - tRound) / 1e6}%.0fms")
+      log.info(s"connectedComponents round $round: steps=$ChainSteps " +
+        s"labelSum=$labelSum " +
+        f"wall=${(System.nanoTime() - tRound) / 1e6}%.0fms")
       // value compare, not object equals: BigDecimal.equals is
       // scale-sensitive (2 != 2.0), and the observe vs fallback paths
       // could legally disagree on result scale (ADVICE r4). Labels only

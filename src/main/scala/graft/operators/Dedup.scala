@@ -969,7 +969,6 @@ object Dedup {
     import ss.implicits._
     import graft.sources.{DirSwap, TieredIndex}
     val (fs, target) = DirSwap.fsOf(ss, indexDir)
-    DirSwap.recover(fs, target, "__compact")
     TieredIndex.recover(ss, indexDir)
     def gauge(name: String, v: Double): Unit =
       stageLog.foreach(_ += s"anchor:$name" -> v)

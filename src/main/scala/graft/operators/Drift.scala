@@ -71,28 +71,22 @@ object Drift {
     a.unionByName(b).groupBy(keys.map(col): _*)
       .agg(sum(col(cntCol)).cast("long").as(cntCol))
 
-  /** Pre-r15 [[foldDocsIntoStore]] stores were TWO subdirectories
-    * (`<dir>/buckets`, `<dir>/tokens`); the kind-tagged layout is one
-    * table at `<dir>`. A legacy store is detected by its `buckets`
-    * child and rewritten in place (tag + union, then DirSwap's
-    * rename-only swap — a crash at any point leaves either the old
-    * subdir layout or the complete tagged table, and this runs again)
-    * so existing monitors upgrade instead of silently failing the
-    * first post-upgrade fold (r15 review finding). */
-  private def migrateLegacyStore(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String): Unit = {
+  /** Crash recovery for a [[foldDocsIntoStore]] store, then a layout
+    * check. Pre-r15 stores were TWO subdirectories (`<dir>/buckets`,
+    * `<dir>/tokens`); the kind-tagged layout is one table at `<dir>`,
+    * and nothing reads the old one. Such a store fails here, naming the
+    * path, instead of being read as empty — which would restart every
+    * source's counts from zero without a trace. Returns the store's
+    * (FileSystem, Path). */
+  private[graft] def recoverStore(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String) = {
     val (fs, target) = graft.sources.DirSwap.fsOf(spark, dir)
     graft.sources.DirSwap.recover(fs, target, "__fold")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(target, "buckets"))) return
-    val tagged = spark.read.parquet(s"$dir/buckets")
-      .select(lit("b").as("kind"), col("source"),
-        col("b").cast("string").as("k"), col("cnt"))
-      .unionByName(spark.read.parquet(s"$dir/tokens")
-        .select(lit("t").as("kind"), col("source"),
-          col("w").as("k"), col("c").as("cnt")))
-    tagged.write.mode("overwrite").parquet(dir + "__fold")
-    graft.sources.DirSwap.swap(fs, target,
-      new org.apache.hadoop.fs.Path(dir + "__fold"))
+    if (fs.exists(new org.apache.hadoop.fs.Path(target, "buckets")))
+      throw new IllegalStateException(
+        s"drift store $dir holds a buckets/ subdirectory: the pre-r15 " +
+          "two-subdir layout is no longer read")
+    (fs, target)
   }
 
   /** Fold a per-batch count increment into a persisted parquet store
@@ -155,7 +149,7 @@ object Drift {
     * previous merge form had, documented monitor semantics. */
   def foldDocsIntoStore(store: String, docs: DataFrame, srcCol: String,
                         textCol: String, nBuckets: Int = 4096): Unit = {
-    migrateLegacyStore(docs.sparkSession, store) // also runs recovery
+    recoverStore(docs.sparkSession, store)
     bucketCounts(docs, srcCol, textCol, nBuckets)
       .select(lit("b").as("kind"), col("source"),
         col("b").cast("string").as("k"), col("cnt"))
@@ -171,8 +165,7 @@ object Drift {
     * twin swap the shard and index compactors use. */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    dir: String): Unit = {
-    val (fs, target) = graft.sources.DirSwap.fsOf(spark, dir)
-    graft.sources.DirSwap.recover(fs, target, "__fold")
+    val (fs, target) = recoverStore(spark, dir)
     if (!fs.exists(target)) return
     spark.read.parquet(dir)
       .groupBy("kind", "source", "k")
@@ -183,8 +176,8 @@ object Drift {
   }
 
   /** Read a drift card off a store directory written by
-    * [[foldDocsIntoStore]]: recover any interrupted swap, migrate a
-    * legacy layout, sum the appended increments per key (a no-op on a
+    * [[foldDocsIntoStore]]: recover any interrupted swap, reject a
+    * retired layout, sum the appended increments per key (a no-op on a
     * freshly compacted store), split by kind. The summed table is
     * checkpointed — bounded (grid + vocab rows), and cardFromCounts
     * fans each side into several consumers, which without the
@@ -192,9 +185,7 @@ object Drift {
     * (the same reason sourceDrift checkpoints its count tables). */
   def cardFromStore(spark: org.apache.spark.sql.SparkSession,
                     dir: String, smoothing: Int = 4096): DataFrame = {
-    val (fs, target) = graft.sources.DirSwap.fsOf(spark, dir)
-    graft.sources.DirSwap.recover(fs, target, "__fold")
-    migrateLegacyStore(spark, dir)
+    recoverStore(spark, dir)
     val all = spark.read.parquet(dir)
       .groupBy("kind", "source", "k")
       .agg(sum(col("cnt")).cast("long").as("cnt"))

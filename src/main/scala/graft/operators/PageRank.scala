@@ -126,11 +126,6 @@ object PageRank {
         .select(col("v").as("node"),
           (teleport + dampDec * col("in_mass").cast(narrow))
             .cast(RankType).as("rank"))
-      // per-round plan dump (dev evidence hook, the GRAFT_CC_EXPLAIN
-      // precedent — VERDICT r21 item 4: the assembled RESULT's plan is
-      // a checkpoint scan and proves nothing about the iteration)
-      if (sys.env.contains("GRAFT_PR_EXPLAIN") && i <= 2)
-        next.explain("formatted")
       ranks = if (i % 5 == 0 || i == iters) next.localCheckpoint(true) else next
     }
     ranks

@@ -21,18 +21,15 @@ object ql {
     * ASSUMPTIONS (ADVICE r21): the sf data dirs are immutable (the
     * driver generates them once; overwriting a path with a different
     * schema mid-process would serve the stale one), and every session
-    * in the JVM reads parquet with the same schema-affecting configs
-    * (all graft mains set `nanosAsLong` identically). A long-lived
-    * multi-session host that violates either can disable the cache
-    * with GRAFT_NO_SCHEMA_CACHE=1. */
+    * in the JVM reads parquet with the same schema-affecting confs —
+    * which holds because [[Session.local]] is the only session builder,
+    * so `nanosAsLong` and the rest of its parquet confs are fixed. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   /** Load one driver-generated table from an sf directory. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    if (sys.env.contains("GRAFT_NO_SCHEMA_CACHE"))
-      return spark.read.parquet(path)
     val schema = schemaCache.computeIfAbsent(path,
       p => spark.read.parquet(p).schema)
     spark.read.schema(schema).parquet(path)
@@ -90,10 +87,11 @@ object ql {
   /** Source parallelism, read from the LEAF nodes of the physical plan
     * (file scans / checkpointed RDD scans — their RDDs exist to be
     * partition-counted: file listing + split math only). See spread()
-    * for why not `df.rdd`. */
+    * for why not `df.rdd`. A leaf that cannot be planned or listed
+    * fails the caller: reading the error as "small source" would
+    * silently add a repartition. */
   private[graft] def leafParallelism(df: DataFrame): Int =
-    try df.queryExecution.sparkPlan.collectLeaves().map(_.execute().getNumPartitions).sum
-    catch { case _: Throwable => 0 } // unexecutable leaf: treat as small
+    df.queryExecution.sparkPlan.collectLeaves().map(_.execute().getNumPartitions).sum
 
   /** spread()'s sibling for CPU-dense stages ABOVE a key-partitioned
     * exchange (r22, VERDICT r21 item 2 — the operator-level replacement
@@ -115,7 +113,6 @@ object ql {
     * up to defaultParallelism ways and swamp the sum) pass the
     * scan-rooted source they are derived from as `guard`. */
   def spreadKeyed(df: DataFrame, guard: DataFrame, keys: Column*): DataFrame = {
-    if (sys.env.contains("GRAFT_NO_PIN")) return df // dev A/B lever only
     val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     if (leafParallelism(guard) >= target) df else df.repartition(target, keys: _*)
   }

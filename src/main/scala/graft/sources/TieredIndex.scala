@@ -198,7 +198,6 @@ private[graft] object TieredIndex {
     * with another pass or an in-flight append. */
   def compact(ss: SparkSession, dir: String, spec: Spec): Unit = {
     val (fs, target) = DirSwap.fsOf(ss, dir)
-    DirSwap.recover(fs, target, "__compact") // pre-r19 full-rewrite twin
     recover(ss, dir)
     if (!fs.exists(target)) return
     val live = liveNames(ss, dir)

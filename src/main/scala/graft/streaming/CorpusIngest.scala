@@ -188,8 +188,6 @@ object CorpusIngest {
                   substr: Option[SubstrGate] = None,
                   stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None,
                   rolloverAt: Double = BloomMembership.FillWarnAt,
-                  maxBroadcastUrlRows: Long = MaxBroadcastUrlRows,
-                  maxBroadcastKeyRows: Long = MaxBroadcastKeyRows,
                   payloadStorage: Option[org.apache.spark.storage.StorageLevel] = None): Long = {
     val ss = batch.sparkSession
     val timed = new TimedFn {
@@ -221,8 +219,7 @@ object CorpusIngest {
     try {
       ingestBatchBody(batch, urlBloomPath, textBloomPath, shardDir,
         numShards, expectedItems, qualityGate, driftDir, repairEncoding,
-        nearDup, substr, stageLog, rolloverAt, maxBroadcastUrlRows,
-        maxBroadcastKeyRows, ckptPayload, timed)
+        nearDup, substr, stageLog, rolloverAt, ckptPayload, timed)
     } finally {
       ss.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!rddsBefore.contains(id)) rdd.unpersist(blocking = false)
@@ -237,8 +234,7 @@ object CorpusIngest {
       nearDup: Option[NearDupGate],
       substr: Option[SubstrGate],
       stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]],
-      rolloverAt: Double, maxBroadcastUrlRows: Long,
-      maxBroadcastKeyRows: Long,
+      rolloverAt: Double,
       ckptPayload: DataFrame => DataFrame,
       timed: TimedFn): Long = {
     val ss = batch.sparkSession
@@ -246,8 +242,11 @@ object CorpusIngest {
     // persisted frontier state is read ONCE per batch; the epoch
     // bytes feed both the probes and the end-of-batch merges (r15 —
     // previously each artifact was read twice)
-    val (urlPrev, textPrev) = timed("state_load")(
-      (loadBloomEpochs(ss, urlBloomPath), loadBloomEpochs(ss, textBloomPath)))
+    val (urlPrev, textPrev) = timed("state_load") {
+      // a retired drift layout fails here, before anything is written
+      driftDir.foreach(Drift.recoverStore(ss, _))
+      (loadBloomEpochs(ss, urlBloomPath), loadBloomEpochs(ss, textBloomPath))
+    }
 
     // 1. within-batch URL dedup (min doc_id per canonical url) + the
     //    cross-batch frontier, computed on (canon_url, doc_id) ALONE:
@@ -287,7 +286,7 @@ object CorpusIngest {
       recordBloomDrops(flagged, urlBloomPath, "canon_url", "url", stageLog)
       val winners = flagged.filter(!col("__seen")).drop("__seen")
       val wj =
-        if (winners.count() <= maxBroadcastUrlRows)
+        if (winners.count() <= MaxBroadcastUrlRows)
           broadcast(winners.alias("w"))
         else winners.alias("w")
       val text =
@@ -356,7 +355,7 @@ object CorpusIngest {
       recordBloomDrops(flagged, textBloomPath, "text_hash", "text", stageLog)
       val winners = flagged.filter(!col("__seen")).drop("__seen")
       val wj =
-        if (winners.count() <= maxBroadcastKeyRows)
+        if (winners.count() <= MaxBroadcastKeyRows)
           broadcast(winners.alias("w"))
         else winners.alias("w")
       val joined = hashed.alias("h").join(wj,
@@ -395,8 +394,8 @@ object CorpusIngest {
         ckptPayload(fresh.join(
           nearDupDrops(bandIdx.get,
             narrowedCorpusIndex(ss, nd.indexDir, bandIdx.get, nd.minBands,
-              stageLog, maxBroadcastKeyRows),
-            nd.minBands, maxBroadcastKeyRows),
+              stageLog),
+            nd.minBands),
           Seq("doc_id"), "left_anti"))
       }
     }
@@ -959,7 +958,6 @@ object CorpusIngest {
     import ss.implicits._
     import graft.sources.TieredIndex
     val (fs, target) = fsOf(ss, indexDir)
-    graft.sources.DirSwap.recover(fs, target, "__compact")
     TieredIndex.recover(ss, indexDir)
     def emptyIdx = Seq.empty[(Long, Int, Long)].toDF("doc", "band", "bucket")
     if (!fs.exists(target)) return emptyIdx
@@ -1083,9 +1081,7 @@ object CorpusIngest {
     // least once per rollover period.
     // the trigger counts committed epoch DIRS (listing only — ADVICE
     // r16: loading the chain's bytes here paid ~150 MB × length per
-    // frontier per cadence even when no rebuild fires); a legacy
-    // pre-epoch store lists no epoch dirs and counts 0 — below any
-    // trigger, same outcome as the old byte-loading count of 1
+    // frontier per cadence even when no rebuild fires)
     val urlDue = committedEpochs(ss, urlBloomPath).size > 2
     val textDue = committedEpochs(ss, textBloomPath).size > 2
     var urlRebuilt = false
@@ -1149,44 +1145,38 @@ object CorpusIngest {
     * one 1-row parquet per epoch — frozen epochs are immutable, only
     * the max epoch ever rewrites. Runs the twin-swap recovery on
     * every epoch dir first, so a crash inside a previous [[saveBloom]]
-    * never loses the frontier.
-    *
-    * A PRE-EPOCH store (the single 1-row parquet the previous layout
-    * wrote directly at `path`) is read as epoch 0 — silently ignoring
-    * it would discard the whole seen-URL / seen-text frontier and
-    * re-ship every already-crawled doc as a duplicate (r15 review
-    * finding). The first [[saveBloom]] merges it into the real
-    * `epoch=0` dir and deletes the legacy files; until then epoch
-    * dirs, when present, take precedence (legacy files left by a
-    * crash mid-migration are already-merged garbage). */
+    * never loses the frontier. */
   private def loadBloomEpochs(ss: SparkSession,
-                              path: String): Seq[(Int, Array[Byte])] = {
-    val epochs = committedEpochs(ss, path)
-    val (fs, root) = fsOf(ss, path)
-    if (epochs.isEmpty && fs.exists(root) && legacyFiles(fs, root).nonEmpty)
-      return ss.read.parquet(path).take(1).headOption
-        .flatMap(r => Option(r.getAs[Array[Byte]](0)))
-        .map(0 -> _).toSeq
-    epochs.flatMap { e =>
+                              path: String): Seq[(Int, Array[Byte])] =
+    committedEpochs(ss, path).flatMap { e =>
       ss.read.parquet(s"$path/epoch=$e").take(1).headOption
         .flatMap(r => Option(r.getAs[Array[Byte]](0)))
         .map(e -> _)
     }
-  }
 
   /** Committed epoch ids (sorted), after the full recovery pass —
     * the driver-side LISTING half of [[loadBloomEpochs]], split out so
     * the compaction TRIGGER can count the chain without deserializing
     * every epoch's sketch bytes (ADVICE r16: the >2 check loaded
     * potentially ~150 MB × chain length per frontier per cadence even
-    * when no rebuild fires). */
+    * when no rebuild fires).
+    *
+    * A PRE-EPOCH store (one 1-row parquet written directly at `path`,
+    * the layout before epoch dirs) fails here, naming the path:
+    * nothing reads that layout, and ignoring it would discard the
+    * whole seen-URL / seen-text frontier and re-ship every
+    * already-crawled doc as a duplicate. */
   private def committedEpochs(ss: SparkSession, path: String): Seq[Int] = {
     val (fs, root) = fsOf(ss, path)
     // a crashed whole-store compaction swap first ([[compactFrontierBlooms]]
-    // twin-swaps the ROOT), then pre-epoch fold swaps
+    // twin-swaps the ROOT)
     graft.sources.DirSwap.recover(fs, root, "__compact")
-    graft.sources.DirSwap.recover(fs, root, "__fold") // pre-epoch swaps
     if (!fs.exists(root)) return Seq.empty
+    if (fs.listStatus(root).exists(s =>
+        s.isFile && s.getPath.getName.endsWith(".parquet")))
+      throw new IllegalStateException(
+        s"bloom store $path holds .parquet files at its root: the " +
+          "pre-epoch layout is no longer read")
     fs.listStatus(root).map(_.getPath.getName)
       .filter(_.startsWith("epoch="))
       .map(graft.sources.DirSwap.baseOf(_, "__fold"))
@@ -1196,7 +1186,7 @@ object CorpusIngest {
     // prune crash leftovers: an epoch dir with no committed data file
     // is a write that died before its parquet commit (possibly a
     // partial first twin the recover promoted — DirSwap.hasData doc);
-    // it cannot be a real epoch and must not shadow the legacy branch
+    // it cannot be a real epoch
     fs.listStatus(root).map(_.getPath).filter(p =>
         p.getName.matches("epoch=\\d+") &&
         !graft.sources.DirSwap.hasData(fs, p))
@@ -1208,13 +1198,6 @@ object CorpusIngest {
 
   private def fsOf(ss: SparkSession, path: String) =
     graft.sources.DirSwap.fsOf(ss, path)
-
-  /** Data files of a pre-epoch bloom artifact sitting directly under
-    * the store root. */
-  private def legacyFiles(fs: org.apache.hadoop.fs.FileSystem,
-                          root: org.apache.hadoop.fs.Path) =
-    fs.listStatus(root).filter(s => s.isFile &&
-      s.getPath.getName.endsWith(".parquet"))
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -1251,11 +1234,6 @@ object CorpusIngest {
         graft.sources.DirSwap.swap(fs, target,
           new org.apache.hadoop.fs.Path(root, s"epoch=${e}__fold"))
       }
-      // a pre-epoch artifact read as epoch 0 is now merged into a real
-      // epoch dir — its root files are garbage (and are ignored by the
-      // reader once committed epoch dirs exist, so a crash right here
-      // is safe)
-      legacyFiles(fs, root).foreach(s => fs.delete(s.getPath, false))
     }
     def warnIfOverfull(fill: Double): Double = {
       if (fill > rolloverAt)
@@ -1281,8 +1259,6 @@ object CorpusIngest {
         // rollover by construction: freeze the differently-sized epoch
         // as-is, start the next with the increment alone — the same
         // no-key-lost contract as the fill-triggered roll
-        if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"epoch=$e")))
-          writeEpoch(e, act)
         writeEpoch(e + 1, b)
         log.info(s"bloom $path: epoch $e sizing " +
           s"${BloomMembership.sizingOf(act)} != increment " +
@@ -1293,11 +1269,6 @@ object CorpusIngest {
         val merged = BloomMembership.merge(act, b)
         val mFill = BloomMembership.fillRatio(merged)
         if (mFill > rolloverAt) {
-          // freezing assumes epoch e is a dir on disk — a legacy
-          // pre-epoch artifact read as epoch 0 isn't yet; persist it
-          // first or its bytes would vanish with the legacy files
-          if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"epoch=$e")))
-            writeEpoch(e, act)
           writeEpoch(e + 1, b)
           log.info(f"bloom $path: epoch $e frozen at " +
             f"${BloomMembership.fillRatio(act)}%.2f fill (merge would hit " +

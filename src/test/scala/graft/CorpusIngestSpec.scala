@@ -318,84 +318,67 @@ class CorpusIngestSpec extends SparkSpec {
       (7L, "https://a-site.com/x")), rows.mkString(","))
   }
 
-  test("partial first-epoch write never wedges or shadows the store: " +
-      "commit-less epoch debris is pruned and the legacy frontier " +
-      "still gates") {
+  test("partial epoch write never wedges or shadows the store: " +
+      "commit-less epoch debris is pruned and the frontier still gates") {
     val dir = Files.createTempDirectory("ingest_partial").toString
     val (ub, tb, shards) = (s"$dir/ub", s"$dir/tb", s"$dir/shards")
     val b1 = (1 to 4).map(i => (s"https://site.com/p$i", i.toLong, good(i.toLong)))
       .toDF("url", "doc_id", "text")
     assert(CorpusIngest.ingestBatch(b1, ub, tb, shards, numShards = 2) == 4L)
-    // rewrite the url store into the legacy layout, then plant the
-    // crash state: a first-epoch twin that died before its parquet
-    // commit (only _temporary debris inside — no committed data file)
-    def rmRf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmRf)); f.delete(); ()
+    // plant the crash states of fold twins that died before their
+    // parquet commit (only _temporary debris inside — no committed data
+    // file): one beside the committed epoch 0, and one alone for an
+    // epoch 1 that the twin-alone recovery rule promotes to a
+    // commit-less epoch dir
+    for (twin <- Seq("epoch=0__fold", "epoch=1__fold")) {
+      val debris = new java.io.File(ub, s"$twin/_temporary")
+      assert(debris.mkdirs())
+      java.nio.file.Files.write(debris.toPath.resolve("attempt_0"),
+        Array[Byte](1, 2, 3))
     }
-    val bytes = spark.read.parquet(s"$ub/epoch=0").as[Array[Byte]].collect().head
-    rmRf(new java.io.File(ub))
-    Seq(Option(bytes)).toDF("bloom").write.parquet(ub)
-    val debris = new java.io.File(ub, "epoch=0__fold/_temporary")
-    assert(debris.mkdirs())
-    java.nio.file.Files.write(debris.toPath.resolve("attempt_0"),
-      Array[Byte](1, 2, 3))
 
-    // replaying batch 1 must still ship 0: the promoted-but-empty
-    // epoch dir is pruned, the legacy bytes stay authoritative
+    // replaying batch 1 must still ship 0: the debris is dropped, the
+    // promoted-but-empty epoch dir is pruned, epoch 0 stays
+    // authoritative
     assert(CorpusIngest.ingestBatch(b1, ub, tb, shards, numShards = 2) == 0L)
-    // and a fresh batch both ships and completes the migration
+    // and a fresh batch ships and folds into epoch 0
     val b2 = (11 to 14).map(i => (s"https://site.com/p$i", i.toLong, good(i.toLong)))
       .toDF("url", "doc_id", "text")
     assert(CorpusIngest.ingestBatch(b2, ub, tb, shards, numShards = 2) == 4L)
     val names = new java.io.File(ub).listFiles().map(_.getName)
-    assert(names.contains("epoch=0") && !names.exists(_.endsWith(".parquet")),
-      names.mkString(","))
-  }
-
-  test("pre-epoch bloom store migrates: legacy 1-row artifact is read " +
-      "as epoch 0 (no frontier loss), then folded into the epoch layout") {
-    val dir = Files.createTempDirectory("ingest_legacy").toString
-    val (ub, tb, shards) = (s"$dir/ub", s"$dir/tb", s"$dir/shards")
-    val b1 = (1 to 5).map(i => (s"https://site.com/p$i", i.toLong, good(i.toLong)))
-      .toDF("url", "doc_id", "text")
-    assert(CorpusIngest.ingestBatch(b1, ub, tb, shards, numShards = 2) == 5L)
-
-    // rewrite BOTH stores into the pre-r15 layout: the epoch-0 bytes
-    // as a 1-row parquet directly at the store root (the old writer's
-    // exact form)
-    def rmRf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmRf)); f.delete(); ()
-    }
-    for (p <- Seq(ub, tb)) {
-      val bytes = spark.read.parquet(s"$p/epoch=0")
-        .as[Array[Byte]].collect().head
-      rmRf(new java.io.File(p))
-      Seq(Option(bytes)).toDF("bloom").write.parquet(p)
-      assert(new java.io.File(p).listFiles()
-        .exists(f => f.isFile && f.getName.endsWith(".parquet")))
-      assert(!new java.io.File(p, "epoch=0").exists())
-    }
-
-    // replaying batch 1 against the LEGACY stores must still ship 0
-    // (the frontier survives the layout change); an all-dropped batch
-    // folds nothing, so the legacy artifact rightly stays put
-    assert(CorpusIngest.ingestBatch(b1, ub, tb, shards, numShards = 2) == 0L)
-    assert(new java.io.File(ub).listFiles()
-      .exists(f => f.isFile && f.getName.endsWith(".parquet")))
-
-    // a genuinely new batch ships AND its fold migrates the store to
-    // the epoch layout (legacy bytes merged into epoch=0, files gone)
-    val b2 = (11 to 15).map(i => (s"https://site.com/p$i", i.toLong, good(i.toLong)))
-      .toDF("url", "doc_id", "text")
-    assert(CorpusIngest.ingestBatch(b2, ub, tb, shards, numShards = 2) == 5L)
-    for (p <- Seq(ub, tb)) {
-      val names = new java.io.File(p).listFiles().map(_.getName)
-      assert(names.contains("epoch=0"), names.mkString(","))
-      assert(!names.exists(_.endsWith(".parquet")), names.mkString(","))
-    }
-    // the merged epoch remembers BOTH eras: replaying b1 ∪ b2 ships 0
+    assert(names.toSet == Set("epoch=0"), names.mkString(","))
     assert(CorpusIngest.ingestBatch(b1.unionByName(b2), ub, tb, shards,
       numShards = 2) == 0L)
+  }
+
+  test("retired store layouts fail loudly: a pre-epoch bloom root or a " +
+      "two-subdir drift store is named in the error, no shard or fold is written") {
+    val dir = Files.createTempDirectory("ingest_retired").toString
+    val b1 = (1 to 5).map(i => (s"https://site.com/p$i", i.toLong, good(i.toLong)))
+      .toDF("url", "doc_id", "text")
+
+    // the pre-epoch bloom layout: one 1-row parquet at the store root
+    val (ub, tb, shards) = (s"$dir/ub", s"$dir/tb", s"$dir/shards")
+    Seq(Option(Array[Byte](1, 2, 3))).toDF("bloom").write.parquet(ub)
+    val ubBefore = fileTree(ub)
+    val e1 = intercept[IllegalStateException](
+      CorpusIngest.ingestBatch(b1, ub, tb, shards, numShards = 2))
+    assert(e1.getMessage.contains(ub), e1.getMessage)
+    assert(fileTree(ub) == ubBefore, "no epoch may be folded into the store")
+    assert(!new java.io.File(shards).exists() && !new java.io.File(tb).exists())
+
+    // the pre-r15 drift layout, reached through the ingest loop: it
+    // fails at state load, before the shard write
+    val (ub2, tb2, shards2, dd) =
+      (s"$dir/ub2", s"$dir/tb2", s"$dir/shards2", s"$dir/drift")
+    Seq((1L, "a")).toDF("b", "source").write.parquet(s"$dd/buckets")
+    val ddBefore = fileTree(dd)
+    val e2 = intercept[IllegalStateException](
+      CorpusIngest.ingestBatch(b1, ub2, tb2, shards2, numShards = 2,
+        driftDir = Some(dd)))
+    assert(e2.getMessage.contains(dd), e2.getMessage)
+    assert(fileTree(dd) == ddBefore, "no drift increment may be appended")
+    assert(Seq(ub2, tb2, shards2).forall(p => !new java.io.File(p).exists()))
   }
 
   test("ALL optional stages on at once: one planted drop per stage, " +

@@ -9,6 +9,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // shared session, leave running
 
+  /** Every path under `dir`, relative to it (the dir itself is ""). */
+  def fileTree(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File(dir).toPath
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.map(root.relativize(_).toString).toSet
+    finally walk.close()
+  }
+
   /** Every FileSourceScanExec in an EXECUTED plan, walked through the
     * AQE wrappers (final adaptive plan, materialized query stages,
     * reused exchanges/subqueries) that hide scans from

@@ -129,34 +129,27 @@ class StreamingDriftSpec extends SparkSpec {
     assert(card() != before)
   }
 
-  test("legacy two-subdir drift store migrates: counts survive the " +
-      "kind-tagged layout change, folds and cards keep working") {
+  test("retired two-subdir drift store fails loudly: the error names " +
+      "the store, no fold is written") {
     val dir = Files.createTempDirectory("driftstore3").toString
     val store = s"$dir/store"
     val b1 = Seq(("web text common alpha beta", "a"),
       ("spamword spamword web", "c")).toDF("text", "source")
-    val b2 = Seq(("web text common alpha gamma", "b"),
-      ("spamword spamword spam", "c")).toDF("text", "source")
     // the pre-r15 layout: two separate count tables under the store
     Drift.bucketCounts(b1, "source", "text")
       .write.parquet(s"$store/buckets")
     Drift.tokenCounts(b1, "source", "text")
       .write.parquet(s"$store/tokens")
+    val before = fileTree(dir)
 
-    // a card read off the legacy store migrates it and matches the
-    // one-shot card of everything folded so far
-    val cardLegacy = Drift.cardFromStore(spark, store)
-      .collect().map(_.toSeq).toSeq
-    assert(cardLegacy == Drift.sourceDrift(b1, "source", "text")
-      .collect().map(_.toSeq).toSeq)
-    assert(!new java.io.File(s"$store/buckets").exists(),
-      "migration must replace the subdir layout")
-
-    // and the next fold lands on the migrated store: N folds (one
-    // legacy, one tagged) == the one-shot card of the union
-    Drift.foldDocsIntoStore(store, b2, "source", "text")
-    assert(Drift.cardFromStore(spark, store).collect().map(_.toSeq).toSeq ==
-      Drift.sourceDrift(b1.unionByName(b2), "source", "text")
-        .collect().map(_.toSeq).toSeq)
+    val calls = Seq[() => Unit](
+      () => Drift.foldDocsIntoStore(store, b1, "source", "text"),
+      () => { Drift.cardFromStore(spark, store); () },
+      () => Drift.compactStore(spark, store))
+    for (call <- calls) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(store), e.getMessage)
+      assert(fileTree(dir) == before, "the retired store must be left as it was")
+    }
   }
 }

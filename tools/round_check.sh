@@ -10,16 +10,27 @@ cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/round_check}
 
-echo "== 1/4 compile =="
+echo "== 1/6 env reads only in Bench.scala and Session.scala =="
+# library behaviour is set by arguments and inputs alone; only the
+# mains' settings (Bench) and the session's core count (Session) read
+# the environment
+ENV_READS=$(grep -rnE 'sys\.env|System\.getenv' src/main/scala \
+  | grep -vE '^src/main/scala/graft/(Bench|Session)\.scala:' || true)
+if [ -n "$ENV_READS" ]; then
+  echo "$ENV_READS"
+  echo "ENV READ outside Bench.scala / Session.scala"; exit 1
+fi
+
+echo "== 2/6 compile =="
 sbt -batch compile
 
-echo "== 2/4 scalatest =="
+echo "== 3/6 scalatest =="
 # stale suite XMLs from deleted specs otherwise inflate the directory
 # aggregate vs the fresh run's true tally (VERDICT r15 item 4)
 rm -rf target/test-reports
 sbt -batch test
 
-echo "== 3/4 verify dump + DuckDB oracle compare ($SF) =="
+echo "== 4/6 verify dump + DuckDB oracle compare ($SF) =="
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT"
 python3 tools/check.py "$SF" "$OUT"
@@ -56,13 +67,13 @@ else
   echo "load guard passed: 5-min load $LOAD5 <= $LOAD_MAX"
 fi
 
-echo "== 4/4 bench smoke (sf0.001, 1 run) =="
+echo "== 5/6 bench smoke (sf0.001, 1 run) =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_RUNS=1 \
   SPARK_GRAFT_BENCH_OUT=/tmp/round_check_bench.json \
   sbt -batch "runMain graft.Bench" > /dev/null
 grep -o '"metric":"total","value":[0-9.]*' /tmp/round_check_bench.json
 
-echo "== 5/5 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
+echo "== 6/6 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
 # the 13 flagged queries are the documented 1-row-scalar broadcast
 # nested loops (global aggregates joined back); anything NEW flagged
 # here is a plan regression the golden specs didn't cover
