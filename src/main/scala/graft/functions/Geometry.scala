@@ -72,22 +72,29 @@ object Geometry {
     (0, -0.5, 0.0, -0.5), (1, 0.5, 0.0, -0.5), (2, 0.5, 0.0, 0.5), (3, -0.5, 0.0, 0.5),
     (4, -0.5, -1.0, -0.5), (5, 0.5, -1.0, -0.5), (6, 0.5, -1.0, 0.5), (7, -0.5, -1.0, 0.5))
 
+  /** One corner of a KITTI 3D box from its unit-box offset: Y-axis
+    * rotation of the scaled offsets, translate, then the axis remap
+    * (fx, fz, -fy); + 0.0 normalizes -0.0 (see rotateX90). */
+  private def corner(sx: Double, sy: Double, sz: Double,
+                     h: Column, w: Column, l: Column,
+                     x: Column, y: Column, z: Column,
+                     ry: Column): (Column, Column, Column) = {
+    val fx = cos(ry) * (lit(sx) * l) + sin(ry) * (lit(sz) * w) + x
+    val fy = lit(sy) * h + y
+    val fz = -sin(ry) * (lit(sx) * l) + cos(ry) * (lit(sz) * w) + z
+    (fx, fz, -fy + lit(0.0))
+  }
+
   /** 8 corners of a KITTI 3D box (dims h,w,l; location x,y,z; yaw
     * rotation_y), already axis-remapped by rotateX90 — mirrors
     * `get_3d_bbox` (data_utils.py:111). Returns array<struct<i,cx,cy,cz>>;
     * explode with `inline()`. */
   def bbox3dCorners(h: Column, w: Column, l: Column,
-                    x: Column, y: Column, z: Column, ry: Column): Column = {
-    val corners = cornerOffsets.map { case (i, sx, sy, sz) =>
-      // Y-axis rotation of the scaled offsets, then translate:
-      val fx = cos(ry) * (lit(sx) * l) + sin(ry) * (lit(sz) * w) + x
-      val fy = lit(sy) * h + y
-      val fz = -sin(ry) * (lit(sx) * l) + cos(ry) * (lit(sz) * w) + z
-      // axis remap (fx, fz, -fy); + 0.0 normalizes -0.0 (see rotateX90)
-      struct(lit(i).as("i"), fx.as("cx"), fz.as("cy"), (-fy + lit(0.0)).as("cz"))
-    }
-    array(corners: _*)
-  }
+                    x: Column, y: Column, z: Column, ry: Column): Column =
+    array(cornerOffsets.map { case (i, sx, sy, sz) =>
+      val (cx, cy, cz) = corner(sx, sy, sz, h, w, l, x, y, z, ry)
+      struct(lit(i).as("i"), cx.as("cx"), cy.as("cy"), cz.as("cz"))
+    }: _*)
 
   /** The 12 edges of a 3D box as (start,end) corner-index pairs —
     * the data prep behind visualize.py:85-89. */
@@ -98,17 +105,20 @@ object Geometry {
 
   /** The 12 box edges as line segments: array<struct<edge_id, x1..z2>>
     * — the data prep behind the reference's wireframe rendering
-    * (visualize.py:85-98). */
+    * (visualize.py:85-98). Each endpoint is built from its own corner
+    * offset: indexing a [[bbox3dCorners]] array per field would embed
+    * 72 copies of every corner's trig tree in one projection. */
   def bboxEdgeSegments(h: Column, w: Column, l: Column,
                        x: Column, y: Column, z: Column, ry: Column): Column = {
-    val cs = bbox3dCorners(h, w, l, x, y, z, ry)
-    val segs = bboxEdges.zipWithIndex.map { case ((s, e), id) =>
-      val a = element_at(cs, s + 1); val b = element_at(cs, e + 1)
-      struct(lit(id).as("edge_id"),
-        a.getField("cx").as("x1"), a.getField("cy").as("y1"), a.getField("cz").as("z1"),
-        b.getField("cx").as("x2"), b.getField("cy").as("y2"), b.getField("cz").as("z2"))
+    def at(i: Int) = {
+      val (_, sx, sy, sz) = cornerOffsets(i)
+      corner(sx, sy, sz, h, w, l, x, y, z, ry)
     }
-    array(segs: _*)
+    array(bboxEdges.zipWithIndex.map { case ((s, e), id) =>
+      val (x1, y1, z1) = at(s); val (x2, y2, z2) = at(e)
+      struct(lit(id).as("edge_id"), x1.as("x1"), y1.as("y1"), z1.as("z1"),
+        x2.as("x2"), y2.as("y2"), z2.as("z2"))
+    }: _*)
   }
 
   /** Rectangle corners for an axis-aligned plane spanned by two

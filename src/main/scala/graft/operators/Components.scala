@@ -209,8 +209,6 @@ object Components {
     }
   }
 
-  /** One row per duplicate cluster: canonical keeper (min id), member
-    * count — the "which doc survives dedup" summary. */
   /** Exact triangle count of an undirected pair graph — the standard
     * graph-shape statistic of a near-dup pair pipeline (triangles ≈
     * transitively-consistent duplicate groups; wedges that DON'T close

@@ -904,7 +904,8 @@ object Dedup {
   }
 
   /** Rebuild the persisted boilerplate-fingerprint table (hashes with
-    * df > maxDf over the WHOLE index) behind a DirSwap twin. Runs on
+    * df > maxDf over the WHOLE index) through
+    * [[graft.sources.DirSwap.replace]]. Runs on
     * the compaction cadence; between rebuilds the table is STALE by
     * up to one cadence of appends — staleness only delays a hub's
     * exclusion (more candidate rows, never a lost pair), and the
@@ -912,17 +913,11 @@ object Dedup {
   def writeAnchorHotHashes(ss: org.apache.spark.sql.SparkSession,
                            indexDir: String, maxDf: Long): Unit = {
     val (fs, root) = graft.sources.DirSwap.fsOf(ss, indexDir)
-    if (!fs.exists(root) ||
-      !fs.listStatus(root).exists(_.getPath.getName.endsWith(".parquet")))
-      return
-    val hotPath = anchorHotPath(indexDir)
-    val (hfs, hroot) = graft.sources.DirSwap.fsOf(ss, hotPath)
-    graft.sources.DirSwap.recover(hfs, hroot, "__compact")
-    val twin = hotPath + "__compact"
-    winnowHotHashes(ss.read.parquet(indexDir).select("doc", "h"), maxDf)
-      .coalesce(1).write.mode("overwrite").parquet(twin)
-    graft.sources.DirSwap.swap(hfs, hroot,
-      new org.apache.hadoop.fs.Path(twin))
+    if (!graft.sources.DirSwap.hasData(fs, root)) return
+    graft.sources.DirSwap.replace(ss, anchorHotPath(indexDir)) { out =>
+      winnowHotHashes(ss.read.parquet(indexDir).select("doc", "h"), maxDf)
+        .coalesce(1).write.mode("overwrite").parquet(out)
+    }
   }
 
   /** The persisted hot-hash metadata, if a compaction has built it. */
@@ -930,7 +925,7 @@ object Dedup {
                           indexDir: String): Option[DataFrame] = {
     val hotPath = anchorHotPath(indexDir)
     val (hfs, hroot) = graft.sources.DirSwap.fsOf(ss, hotPath)
-    graft.sources.DirSwap.recover(hfs, hroot, "__compact")
+    graft.sources.DirSwap.recover(hfs, hroot)
     if (graft.sources.DirSwap.hasData(hfs, hroot))
       Some(ss.read.parquet(hotPath))
     else None
@@ -945,83 +940,40 @@ object Dedup {
     * row-eval cost of the OR-of-In dominated a 30-file probe. */
   private[graft] val MaxAnchorInLiterals = 256
 
-  /** The tiered per-batch view of a persisted anchor index: TAIL
-    * files (appended since the last [[compactAnchorIndex]]) are
-    * scanned in full — bounded by the appends, corpus-independent —
-    * while BASE files are opened only if their clustered h-range
-    * contains a batch fingerprint that some generation's bloom
-    * claims to hold. The bloom tests run DRIVER-SIDE on the already-
-    * collected probe keys (no extra Spark job — the r18-item-3
-    * discipline): winnow fingerprints are uniform hashes, so range
-    * pruning alone would match every file; only the bloom's
-    * "actually in the index" signal (true cross-corpus collisions,
-    * rare by construction) makes the hot set small enough to prune.
-    * A missing or stale sidecar degrades every file to tail — the
-    * pre-r19 full scan, same semantics.
-    *
-    * Gauges (`stageLog`): `anchor:generations` / `anchor:base_files`
-    * / `anchor:base_files_read` / `anchor:hot_keys` /
-    * `anchor:tail_files`. */
+  /** The tiered per-batch view of a persisted anchor index
+    * ([[graft.sources.TieredIndex.probe]], gauges `anchor:*`): a key
+    * is hot when some generation's bloom claims it. The bloom tests
+    * run DRIVER-SIDE on the already-collected probe keys (no extra
+    * Spark job — the r18-item-3 discipline): winnow fingerprints are
+    * uniform hashes, so range pruning alone would match every file;
+    * only the bloom's "actually in the index" signal (true
+    * cross-corpus collisions, rare by construction) makes the hot set
+    * small enough to prune. */
   private[graft] def narrowedAnchorIndex(ss: org.apache.spark.sql.SparkSession,
       indexDir: String, batchHs: Seq[Long],
       stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None)
       : DataFrame = {
-    import ss.implicits._
-    import graft.sources.{DirSwap, TieredIndex}
-    val (fs, target) = DirSwap.fsOf(ss, indexDir)
-    TieredIndex.recover(ss, indexDir)
-    def gauge(name: String, v: Double): Unit =
-      stageLog.foreach(_ += s"anchor:$name" -> v)
-    def emptyIdx = Seq.empty[(Long, Int, Long)].toDF("doc", "pos", "h")
-    if (!fs.exists(target)) return emptyIdx
-    val live = fs.listStatus(target).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-    if (live.isEmpty) return emptyIdx
-    val liveNames = live.map(_.getName).toSet
-    TieredIndex.load(ss, indexDir, liveNames).getOrElse(Seq.empty) match {
-      case Seq() =>
-        gauge("generations", 0); gauge("base_files", 0)
-        gauge("base_files_read", 0); gauge("hot_keys", 0)
-        gauge("tail_files", live.length.toDouble)
-        ss.read.parquet(live.map(_.toString).toIndexedSeq: _*)
-          .select("doc", "pos", "h")
-      case gens =>
-        val baseFiles = gens.flatMap(_.files)
-        val baseNames = baseFiles.map(_.name).toSet
-        val tail = live.filter(p => !baseNames.contains(p.getName))
-        gauge("generations", gens.length.toDouble)
-        gauge("base_files", baseFiles.length.toDouble)
-        gauge("tail_files", tail.length.toDouble)
-        val tailDf =
-          if (tail.isEmpty) emptyIdx
-          else ss.read.parquet(tail.map(_.toString).toIndexedSeq: _*)
-            .select("doc", "pos", "h")
-        val hot = batchHs.filter(h =>
-          gens.exists(g => TieredIndex.mightContainKey(g, h)))
-        gauge("hot_keys", hot.length.toDouble)
-        if (hot.isEmpty) { gauge("base_files_read", 0); return tailDf }
-        val toRead =
-          if (hot.length <= TieredIndex.MaxHotKeysForFilePrune)
-            TieredIndex.pruneFiles(baseFiles, hot.map(Seq(_)))
-          else baseFiles.map(_.name)
-        gauge("base_files_read", toRead.length.toDouble)
-        val baseDf =
-          if (toRead.isEmpty) emptyIdx
-          else {
-            val read = ss.read.parquet(toRead.map(n =>
-                new org.apache.hadoop.fs.Path(target, n).toString): _*)
-              .select("doc", "pos", "h")
-            // narrow fingerprints at the SCAN when the hot set is
-            // literal-sized (exact row-group pruning on the clustered
-            // layout); the core's probe-key semi-join still narrows
-            // either way, so this is purely physical
-            if (hot.length <= MaxAnchorInLiterals)
-              read.filter(ScanPrune.chunkedIn(col("h"), hot,
-                ScanPrune.inThreshold(ss)))
-            else read
-          }
-        tailDf.unionByName(baseDf)
+    import graft.sources.TieredIndex
+    TieredIndex.probe(ss, indexDir, emptyAnchorIdx(ss), "anchor",
+        stageLog) { gens =>
+      val hot = batchHs.filter(h =>
+        gens.exists(g => TieredIndex.mightContainKey(g, h)))
+      // narrow fingerprints at the SCAN when the hot set is
+      // literal-sized (exact row-group pruning on the clustered
+      // layout); the core's probe-key semi-join still narrows either
+      // way, so this is purely physical
+      TieredIndex.Hot(hot.length.toLong, () => hot.map(Seq(_)),
+        read =>
+          if (hot.length <= MaxAnchorInLiterals)
+            read.filter(ScanPrune.chunkedIn(col("h"), hot,
+              ScanPrune.inThreshold(ss)))
+          else read)
     }
+  }
+
+  private def emptyAnchorIdx(ss: org.apache.spark.sql.SparkSession) = {
+    import ss.implicits._
+    Seq.empty[(Long, Int, Long)].toDF("doc", "pos", "h")
   }
 
   /** [[exactSubstrPairsAgainst]] against a PERSISTED anchor-index dir
@@ -1080,36 +1032,13 @@ object Dedup {
           "anchor:narrow_s" -> ((System.nanoTime() - tN) / 1e9))
         narrowed
       case None => // oversize probe: read everything (tail + base)
-        graft.sources.TieredIndex.recover(ss, indexDir)
-        val (fs, root) = graft.sources.DirSwap.fsOf(ss, indexDir)
-        if (fs.exists(root) && fs.listStatus(root)
-            .exists(_.getPath.getName.endsWith(".parquet")))
-          ss.read.parquet(indexDir).select("doc", "pos", "h")
-        else {
-          import ss.implicits._
-          Seq.empty[(Long, Int, Long)].toDF("doc", "pos", "h")
-        }
+        graft.sources.TieredIndex.readAll(ss, indexDir, emptyAnchorIdx(ss))
     }
     exactSubstrPairsCore(idx, corpusDocs, batch, probePlan, probeOpt,
       idCol, textCol, minLen, k, maxDf, dedupIndex, hot,
       probeMaterialized = batchAnchors.isDefined, stageLog = stageLog)
   }
 
-  /** The ExactSubstr dedup ACTION (Lee et al. 2021 §4.2): remove every
-    * ≥ `minLen` span that already occurs in an earlier document —
-    * keep-first policy, the lower id keeps its text, the higher id
-    * loses the shared span. Returns (idCol, textCol) with cleaned
-    * text for every input document (unaffected docs pass through).
-    * Overlapping spans from different partners merge before cutting,
-    * so each duplicated character is removed once.
-    *
-    * Same candidate/verify machinery as exactSubstrPairs (winnowed
-    * anchors, lcp extension — exact span recovery); the cut itself is
-    * a per-doc fold over the merged span list (HOF, map-side). NOT
-    * idempotent-by-meaning (removing a span can juxtapose two
-    * previously-separated fragments into a NEW ≥minLen duplicate) but
-    * deterministic; run to fixpoint for full elimination like the
-    * reference implementation. */
   /** `exactSubstrRemove` iterated to FIXPOINT: cutting a span can
     * juxtapose two fragments into a NEW ≥minLen duplicate, so full
     * elimination needs another pass — in practice one or two (each
@@ -1141,6 +1070,21 @@ object Dedup {
     cur
   }
 
+  /** The ExactSubstr dedup ACTION (Lee et al. 2021 §4.2): remove every
+    * ≥ `minLen` span that already occurs in an earlier document —
+    * keep-first policy, the lower id keeps its text, the higher id
+    * loses the shared span. Returns (idCol, textCol) with cleaned
+    * text for every input document (unaffected docs pass through).
+    * Overlapping spans from different partners merge before cutting,
+    * so each duplicated character is removed once.
+    *
+    * Same candidate/verify machinery as exactSubstrPairs (winnowed
+    * anchors, lcp extension — exact span recovery); the cut itself is
+    * a per-doc fold over the merged span list (HOF, map-side). NOT
+    * idempotent-by-meaning (removing a span can juxtapose two
+    * previously-separated fragments into a NEW ≥minLen duplicate) but
+    * deterministic; run to fixpoint for full elimination like the
+    * reference implementation. */
   def exactSubstrRemove(df: DataFrame, idCol: String, textCol: String,
                         minLen: Int = 50, k: Int = 16,
                         maxDf: Long = 0L): DataFrame =

@@ -81,7 +81,7 @@ object Drift {
   private[graft] def recoverStore(spark: org.apache.spark.sql.SparkSession,
                                   dir: String) = {
     val (fs, target) = graft.sources.DirSwap.fsOf(spark, dir)
-    graft.sources.DirSwap.recover(fs, target, "__fold")
+    graft.sources.DirSwap.recover(fs, target)
     if (fs.exists(new org.apache.hadoop.fs.Path(target, "buckets")))
       throw new IllegalStateException(
         s"drift store $dir holds a buckets/ subdirectory: the pre-r15 " +
@@ -95,33 +95,27 @@ object Drift {
     * grid / vocab), and because counts are a commutative monoid the
     * store after N folds equals the one-shot batch counts exactly.
     *
-    * The merged table is written to a `<store>__fold` TWIN and
-    * rename-swapped over the store (graft.sources.DirSwap) — ADVICE
-    * r14: the previous read → localCheckpoint → overwrite-in-place
-    * had a window where the only copy of the merged store was
-    * executor-memory checkpoint blocks (a crash mid-overwrite lost
-    * the whole store), and the per-call checkpoint was never
-    * unpersisted (two leaked cached frames per micro-batch). Writing
-    * to a sibling dir needs no checkpoint at all — the read and the
-    * write never touch the same path — and a crash at any point
-    * leaves a complete copy DirSwap.recover restores. */
+    * The merged table replaces the store through
+    * [[graft.sources.DirSwap.replace]] — ADVICE r14: the previous
+    * read → localCheckpoint → overwrite-in-place had a window where the
+    * only copy of the merged store was executor-memory checkpoint
+    * blocks (a crash mid-overwrite lost the whole store), and the
+    * per-call checkpoint was never unpersisted (two leaked cached
+    * frames per micro-batch). Writing to a sibling dir needs no
+    * checkpoint at all — the read and the write never touch the same
+    * path — and a crash at any point leaves a complete copy
+    * DirSwap.recover restores. */
   def foldIntoStore(store: String, inc: DataFrame, keys: Seq[String],
                     cntCol: String): Unit = {
     val ss = inc.sparkSession
     val (fs, target) = graft.sources.DirSwap.fsOf(ss, store)
-    graft.sources.DirSwap.recover(fs, target, "__fold")
-    if (!graft.sources.DirSwap.hasData(fs, target)) {
-      // FIRST fold (or a crash leftover with no committed data —
-      // including a partial first twin the recover promoted): write
-      // the target directly; parquet's commit keeps a crashed write
-      // invisible, and a twin would have no complete old copy to
-      // protect anyway (r15 review finding)
-      inc.write.mode("overwrite").parquet(store)
-    } else {
-      mergeCounts(ss.read.parquet(store), inc, keys, cntCol)
-        .write.mode("overwrite").parquet(store + "__fold")
-      graft.sources.DirSwap.swap(fs, target,
-        new org.apache.hadoop.fs.Path(store + "__fold"))
+    graft.sources.DirSwap.replace(ss, store) { out =>
+      // a commit-less crash leftover holds no counts to merge
+      val merged =
+        if (graft.sources.DirSwap.hasData(fs, target))
+          mergeCounts(ss.read.parquet(store), inc, keys, cntCol)
+        else inc
+      merged.write.mode("overwrite").parquet(out)
     }
   }
 
@@ -161,18 +155,19 @@ object Drift {
 
   /** Maintenance for the append-only drift store: fold the
     * accumulated increments back to one row per (kind, source, key) —
-    * card-invariant by the counts monoid — behind the same rename-only
-    * twin swap the shard and index compactors use. */
+    * card-invariant by the counts monoid — through the same
+    * [[graft.sources.DirSwap.replace]] the shard and index compactors
+    * use. */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    dir: String): Unit = {
     val (fs, target) = recoverStore(spark, dir)
     if (!fs.exists(target)) return
-    spark.read.parquet(dir)
-      .groupBy("kind", "source", "k")
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-      .write.mode("overwrite").parquet(dir + "__fold")
-    graft.sources.DirSwap.swap(fs, target,
-      new org.apache.hadoop.fs.Path(dir + "__fold"))
+    graft.sources.DirSwap.replace(spark, dir) { out =>
+      spark.read.parquet(dir)
+        .groupBy("kind", "source", "k")
+        .agg(sum(col("cnt")).cast("long").as("cnt"))
+        .write.mode("overwrite").parquet(out)
+    }
   }
 
   /** Read a drift card off a store directory written by

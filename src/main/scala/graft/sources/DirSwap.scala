@@ -3,9 +3,11 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Atomic directory replacement for persisted artifacts (compacted
-  * shard dirs, drift count stores, bloom sketches): a writer produces
-  * a complete TWIN directory beside the target, then [[swap]] makes it
-  * the target using RENAMES ONLY —
+  * shard dirs, drift count stores, bloom sketches, index sidecars and
+  * hot-hash tables) — the one place the protocol lives. A caller states
+  * what to write through [[replace]]; when the target already exists
+  * the writer produces a complete TWIN directory `<target>__compact`
+  * beside it, which the swap then makes the target using RENAMES ONLY —
   *
   *   1. rename target  → `<target>__old`   (atomic)
   *   2. rename twin    → target            (atomic)
@@ -20,12 +22,20 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * can leave partial state is the delete of `__old`, and `__old` is
   * never the preferred copy when the target exists.
   *
-  * [[recover]] is idempotent — run it before reading or re-writing a
-  * store that uses this protocol:
+  * An ABSENT target is written directly, never through a twin: a
+  * first-write twin has no complete old copy to protect, and the
+  * twin-alone rule below would promote it even if it died partial (r15
+  * review finding). Parquet's commit keeps a crashed direct write
+  * invisible — the target then holds no committed data file, which
+  * readers that must tell such debris from a store check with
+  * [[hasData]].
+  *
+  * [[recover]] is idempotent — run it before reading a store that uses
+  * this protocol ([[replace]] runs it before every write):
   *
   *   - `__old` present, target present   → crash mid-step-3 (the swap
   *     completed; the possibly-partial `__old` is garbage) or inside
-  *     [[swap]]'s defensive stale-`__old` delete before step 1 (the
+  *     the swap's defensive stale-`__old` delete before step 1 (the
   *     target is intact, the complete twin is an uncommitted rewrite)
   *     — the target is the preferred copy either way: delete `__old`
   *     AND any lingering twin in the same pass (the interrupted
@@ -34,8 +44,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     steps 1 and 2: the twin is complete BY PROTOCOL (the target is
   *     only renamed away after the twin write finished) — rename the
   *     twin in, delete `__old`.
-  *   - `__old` present alone → outside the protocol's reachable
-  *     states; `__old` holds the last complete target — restore it.
+  *   - `__old` present alone → `__old` holds the last complete target
+  *     — restore it. Besides states outside the protocol, this is what
+  *     a crash between steps 1 and 2 of a store last written under the
+  *     retired `__fold` twin name recovers to: the `__fold` dir is left
+  *     as inert debris and `__old`, the pre-fold copy, comes back — the
+  *     at-least-once batch replay then folds that batch again.
   *   - twin present, target present, no `__old` → crash mid-twin-write
   *     (the twin may be partial, the target is intact) — discard the
   *     twin; the interrupted rewrite just re-runs.
@@ -44,6 +58,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 private[graft] object DirSwap {
 
+  private val TwinSuffix = "__compact"
   private val OldSuffix = "__old"
 
   /** (FileSystem, Path) of a store path — the pair every caller of
@@ -54,17 +69,17 @@ private[graft] object DirSwap {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  def oldPath(target: Path): Path =
-    new Path(target.getParent, target.getName + OldSuffix)
+  private def sibling(target: Path, suffix: String): Path =
+    new Path(target.getParent, target.getName + suffix)
 
   /** True if `name` is a twin/backup artifact of this protocol (never
     * list such dirs as data). */
-  def isScratch(name: String, twinSuffix: String): Boolean =
-    name.endsWith(twinSuffix) || name.endsWith(OldSuffix)
+  def isScratch(name: String): Boolean =
+    name.endsWith(TwinSuffix) || name.endsWith(OldSuffix)
 
   /** Base target name of a scratch dir name. */
-  def baseOf(name: String, twinSuffix: String): String =
-    name.stripSuffix(twinSuffix).stripSuffix(OldSuffix)
+  def baseOf(name: String): String =
+    name.stripSuffix(TwinSuffix).stripSuffix(OldSuffix)
 
   /** True iff `dir` exists and holds at least one committed parquet
     * data file at its top level. A directory that exists WITHOUT data
@@ -72,18 +87,32 @@ private[graft] object DirSwap {
     * only `_temporary`/`_SUCCESS` debris inside), never a committed
     * store: every writer of this protocol commits at least one part
     * file. Callers use this to treat such dirs as absent — including
-    * the case where [[recover]]'s twin-alone rule promoted a PARTIAL
-    * first-write twin (the twin-alone state is only guaranteed
-    * complete when a target once existed; a brand-new store's first
-    * twin write can die partial with no old copy to prefer). */
+    * a commit-less twin that [[recover]]'s twin-alone rule promoted. */
   def hasData(fs: FileSystem, dir: Path): Boolean =
     fs.exists(dir) && fs.listStatus(dir).exists(s =>
       s.isFile && s.getPath.getName.endsWith(".parquet"))
 
+  /** Replace the directory at `target` with what `write` produces at
+    * the path it is handed: after [[recover]], an absent target is
+    * written directly, an existing one through the twin and the swap
+    * (see the object doc). `write` may read the current target — it
+    * stays intact until the twin is complete. */
+  def replace(spark: org.apache.spark.sql.SparkSession, target: String)(
+      write: String => Unit): Unit = {
+    val (fs, t) = fsOf(spark, target)
+    recover(fs, t)
+    if (!fs.exists(t)) write(target)
+    else {
+      val twin = sibling(t, TwinSuffix)
+      write(twin.toString)
+      swap(fs, t, twin)
+    }
+  }
+
   /** Make the complete `twin` directory become `target` (see object
     * doc for the crash analysis). */
-  def swap(fs: FileSystem, target: Path, twin: Path): Unit = {
-    val old = oldPath(target)
+  private def swap(fs: FileSystem, target: Path, twin: Path): Unit = {
+    val old = sibling(target, OldSuffix)
     if (fs.exists(old)) fs.delete(old, true) // stale garbage, defensive
     if (fs.exists(target))
       require(fs.rename(target, old), s"rename $target -> $old failed")
@@ -93,9 +122,9 @@ private[graft] object DirSwap {
 
   /** Restore `target` after a possible crash (idempotent; see object
     * doc for the case table). */
-  def recover(fs: FileSystem, target: Path, twinSuffix: String): Unit = {
-    val old = oldPath(target)
-    val twin = new Path(target.getParent, target.getName + twinSuffix)
+  def recover(fs: FileSystem, target: Path): Unit = {
+    val old = sibling(target, OldSuffix)
+    val twin = sibling(target, TwinSuffix)
     if (fs.exists(old)) {
       if (fs.exists(target)) {
         // old+target(+twin): the swap either completed (old is

@@ -80,8 +80,8 @@ object ShardSink {
     * manifests invariant, resume order invariant, rank-predicate
     * row-group pruning restored (ShardSinkSpec, off disk).
     *
-    * One rewrite job per shard directory, swapped in via
-    * [[DirSwap]]'s RENAME-ONLY protocol on completion — incremental
+    * One rewrite job per shard directory, swapped in by
+    * [[DirSwap.replace]]'s RENAME-ONLY protocol on completion — incremental
     * and restartable: a crash mid-store leaves some dirs compacted,
     * some not, and re-running finishes the rest; a crash at ANY point
     * inside one dir's swap leaves a complete copy under a known name
@@ -111,28 +111,25 @@ object ShardSink {
     // must never be listed as shard dirs themselves (they match the
     // `shard=` prefix).
     fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(DirSwap.isScratch(_, "__compact"))
-      .map(DirSwap.baseOf(_, "__compact")).distinct
-      .foreach { base =>
-        DirSwap.recover(fs, new org.apache.hadoop.fs.Path(root, base),
-          "__compact")
-      }
+      .filter(DirSwap.isScratch).map(DirSwap.baseOf).distinct
+      .foreach(base =>
+        DirSwap.recover(fs, new org.apache.hadoop.fs.Path(root, base)))
     // re-list after recovery so restored targets are seen
     val shardDirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
       .filter(d => d.getName.startsWith("shard=") &&
-        !DirSwap.isScratch(d.getName, "__compact"))
+        !DirSwap.isScratch(d.getName))
     val pool = Executors.newFixedThreadPool(
       math.max(1, math.min(concurrency, shardDirs.length)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val jobs = shardDirs.toSeq.map { d =>
         Future {
-          val tmp =
-            new org.apache.hadoop.fs.Path(d.getParent, d.getName + "__compact")
-          val n = Layout.compact(spark, d.toString, tmp.toString,
-            targetFileBytes, clusterCols = Seq("rk", idCol))
-          // the swap is per-directory; no two futures touch the same dir
-          DirSwap.swap(fs, d, tmp)
+          // the replace is per-directory; no two futures touch the same dir
+          var n = 0
+          DirSwap.replace(spark, d.toString) { out =>
+            n = Layout.compact(spark, d.toString, out, targetFileBytes,
+              clusterCols = Seq("rk", idCol))
+          }
           n
         }
       }

@@ -12,7 +12,8 @@ import graft.operators.BloomMembership
   * loop appends one small file per micro-batch, and the per-batch
   * probe wants (a) a key-summary bloom to decide whether the store
   * must be read at all and (b) per-file clustered key ranges so only
-  * the files a hot key lands in are opened.
+  * the files a hot key lands in are opened. Both indexes read through
+  * one [[probe]] and pass in only their hot-key policy ([[Hot]]).
   *
   * The store is a flat parquet dir; a SIDECAR at `<dir>_keys` (one
   * row per GENERATION: right-sized key bloom + per-file lexicographic
@@ -82,7 +83,7 @@ import graft.operators.BloomMembership
   *      probe sees the new generation as tail beside its sources —
   *      transiently duplicated rows, which every probe consumer
   *      already distinct-collapses for foreachBatch replay safety);
-  *   4. swap the updated sidecar in ([[DirSwap]] twin) — THE COMMIT
+  *   4. replace the sidecar ([[DirSwap.replace]]) — THE COMMIT
   *      PIVOT: [[recover]] decides redo-vs-undo by whether the
   *      current sidecar references the manifest's added files;
   *   5. delete the source files (now unreferenced);
@@ -510,22 +511,20 @@ private[graft] object TieredIndex {
   // ---------------------------------------------------------------
   // sidecar serialization
 
-  /** Serialize the generation list behind the DirSwap twin protocol
-    * and invalidate the driver cache. */
+  /** Serialize the generation list through [[DirSwap.replace]] and
+    * invalidate the driver cache. */
   private[graft] def writeSidecar(ss: SparkSession, dir: String,
                                   gens: Seq[Gen]): Unit = {
     import ss.implicits._
     val scPath = sidecarPath(dir)
-    val (fs, root) = DirSwap.fsOf(ss, scPath)
-    DirSwap.recover(fs, root, "__compact")
-    val twin = scPath + "__compact"
-    gens.map(g => (g.id, g.bloom,
-        g.files.map(f => (f.name, f.lo, f.hi, f.rows)),
-        g.rows, g.pending, g.srcIds))
-      .toDF("gen", "bloom", "files", "rows", "pending", "src_ids")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(twin)
-    DirSwap.swap(fs, root, new Path(twin))
+    DirSwap.replace(ss, scPath) { out =>
+      gens.map(g => (g.id, g.bloom,
+          g.files.map(f => (f.name, f.lo, f.hi, f.rows)),
+          g.rows, g.pending, g.srcIds))
+        .toDF("gen", "bloom", "files", "rows", "pending", "src_ids")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(out)
+    }
     cache.synchronized { cache.remove(scPath); () }
   }
 
@@ -541,7 +540,7 @@ private[graft] object TieredIndex {
   private def parseRaw(ss: SparkSession, dir: String): Option[Seq[Gen]] = {
     val scPath = sidecarPath(dir)
     val (fs, root) = DirSwap.fsOf(ss, scPath)
-    DirSwap.recover(fs, root, "__compact")
+    DirSwap.recover(fs, root)
     if (!DirSwap.hasData(fs, root)) return None
     val stamp = fs.listStatus(root).map(_.getPath.getName)
       .filter(_.endsWith(".parquet")).sorted.mkString(",")
@@ -569,13 +568,17 @@ private[graft] object TieredIndex {
     parsed
   }
 
-  /** Committed data-file names of the store. */
-  def liveNames(ss: SparkSession, dir: String): Set[String] = {
+  /** Committed data files of the store, in listing order. */
+  private def liveFiles(ss: SparkSession, dir: String): Seq[Path] = {
     val (fs, target) = DirSwap.fsOf(ss, dir)
-    if (!fs.exists(target)) return Set.empty
-    fs.listStatus(target).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).toSet
+    if (!fs.exists(target)) return Seq.empty
+    fs.listStatus(target).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq
   }
+
+  /** Committed data-file names of the store. */
+  def liveNames(ss: SparkSession, dir: String): Set[String] =
+    liveFiles(ss, dir).map(_.getName).toSet
 
   /** The validated generation list: parsed sidecar whose every file
     * is in `live` (a stale sidecar — e.g. mid-crash debris — reads as
@@ -589,6 +592,78 @@ private[graft] object TieredIndex {
   /** [[load]] with its own live listing. */
   def load(ss: SparkSession, dir: String): Option[Seq[Gen]] =
     load(ss, dir, liveNames(ss, dir))
+
+  // ---------------------------------------------------------------
+  // probe
+
+  /** An index's hot keys for one probe ([[probe]]): how many there
+    * are, the keys Long-normalized like [[FileRange]] (collected only
+    * when per-file pruning runs), and the narrowing applied to the
+    * base files that are read. */
+  final case class Hot(n: Long, keys: () => Seq[Seq[Long]],
+                       narrow: DataFrame => DataFrame)
+
+  /** The tiered per-batch view of a persisted index, projected to
+    * `empty`'s columns (`empty` itself for an absent or empty store).
+    * TAIL files (appended since the last [[compact]]) are scanned in
+    * full — bounded by the appends, corpus-independent. BASE files
+    * are read only when `hotOf`, given the generations, reports hot
+    * keys: with at most [[MaxHotKeysForFilePrune]] of them only the
+    * files whose clustered key range holds one ([[pruneFiles]]),
+    * otherwise all of them, each read narrowed by the caller's
+    * `Hot.narrow`. A missing, stale or unparsable sidecar degrades
+    * every file to tail — the full scan, same semantics.
+    *
+    * Gauges (`stageLog`), named `<gaugePrefix>:<name>`: `generations`,
+    * `base_files`, `tail_files`, and — when there are generations to
+    * test keys against — `hot_keys` and `base_files_read`
+    * (`base_files_read` is 0 without generations). */
+  def probe(ss: SparkSession, dir: String, empty: DataFrame,
+            gaugePrefix: String,
+            stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]])(
+      hotOf: Seq[Gen] => Hot): DataFrame = {
+    recover(ss, dir)
+    val live = liveFiles(ss, dir)
+    if (live.isEmpty) return empty
+    def gauge(name: String, v: Double): Unit =
+      stageLog.foreach(_ += s"$gaugePrefix:$name" -> v)
+    val gens = load(ss, dir, live.map(_.getName).toSet).getOrElse(Seq.empty)
+    val baseFiles = gens.flatMap(_.files)
+    val baseNames = baseFiles.map(_.name).toSet
+    val tail = live.filterNot(p => baseNames.contains(p.getName))
+    gauge("generations", gens.length.toDouble)
+    gauge("base_files", baseFiles.length.toDouble)
+    gauge("tail_files", tail.length.toDouble)
+    if (gens.isEmpty) {
+      gauge("base_files_read", 0)
+      return read(ss, tail, empty)
+    }
+    val tailDf = if (tail.isEmpty) empty else read(ss, tail, empty)
+    val hot = hotOf(gens)
+    gauge("hot_keys", hot.n.toDouble)
+    if (hot.n == 0) { gauge("base_files_read", 0); return tailDf }
+    val toRead =
+      if (hot.n <= MaxHotKeysForFilePrune) pruneFiles(baseFiles, hot.keys())
+      else baseFiles.map(_.name)
+    gauge("base_files_read", toRead.length.toDouble)
+    val baseDf =
+      if (toRead.isEmpty) empty
+      else hot.narrow(read(ss, toRead.map(new Path(new Path(dir), _)), empty))
+    tailDf.unionByName(baseDf)
+  }
+
+  /** Every committed row of the index — [[probe]] with nothing
+    * narrowed: no sidecar is read and no gauge recorded. */
+  def readAll(ss: SparkSession, dir: String, empty: DataFrame): DataFrame = {
+    recover(ss, dir)
+    val live = liveFiles(ss, dir)
+    if (live.isEmpty) empty else read(ss, live, empty)
+  }
+
+  private def read(ss: SparkSession, files: Seq[Path],
+                   empty: DataFrame): DataFrame =
+    ss.read.parquet(files.map(_.toString): _*)
+      .select(empty.columns.map(col).toIndexedSeq: _*)
 
   // ---------------------------------------------------------------
   // probe-side pruning

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -249,64 +249,25 @@ object CorpusIngest {
     }
 
     // 1. within-batch URL dedup (min doc_id per canonical url) + the
-    //    cross-batch frontier, computed on (canon_url, doc_id) ALONE:
-    //    the wide text column never enters the dedup shuffle or the
-    //    bloom probe — at crawl scale the payload is ~all the bytes,
-    //    and the old min(struct(id, text)) aggregation shuffled every
-    //    one of them (r15b). The tiny post-probe winner table then
-    //    joins back BROADCAST when batch-sized (shuffled-join
-    //    fallback past the cap = the old full-payload cost), and the
-    //    optional t38 encoding repair runs on the JOINED survivors —
-    //    frontier-dropped docs never pay the repair regex. Repair
-    //    stays ahead of every gate and hash (its ordering contract:
-    //    a mojibake variant of a shipped page must repair to the
-    //    same bytes and fall to the exact-text dedup); canonical
-    //    urls never depended on the text. The post-join rows are the
-    //    stage's one payload materialization; everything downstream
-    //    derives from those blocks map-side.
+    //    cross-batch URL frontier ([[keepFirstUnseen]]). The optional
+    //    t38 encoding repair is a payload column, so it runs on the
+    //    JOINED survivors — frontier-dropped docs never pay the
+    //    repair regex. Repair stays ahead of every gate and hash (its
+    //    ordering contract: a mojibake variant of a shipped page must
+    //    repair to the same bytes and fall to the exact-text dedup);
+    //    canonical urls never depended on the text.
+    //    The joined rows are the stage's single payload
+    //    materialization; the copies split stays lazy, and both
+    //    downstream consumers (gates chain, url-bloom fold) derive it
+    //    off those checkpoint blocks.
     val urlFresh = timed("canon_frontier") {
-      // the winner also carries how many VERBATIM COPIES of its row
-      // the batch holds (a retried crawl record lands twice): copies
-      // are invisible to a key-equality join, so the duplicate slice
-      // — normally empty — is collapsed by a payload aggregation
-      // scoped to exactly those rows, and the unique bulk passes the
-      // join untouched
-      val flagged = BloomMembership.flagSeenAny(
-          batch.select(
-              TextOps.canonicalizeUrl(col("url")).as("canon_url"),
-              col("doc_id"))
-            .groupBy("canon_url", "doc_id")
-            .agg(count(lit(1)).as("__copies"))
-            .groupBy("canon_url")
-            .agg(min(struct(col("doc_id"), col("__copies"))).as("__w"))
-            .select(col("canon_url"), col("__w.doc_id").as("doc_id"),
-              col("__w.__copies").as("__copies")),
-          urlPrev.map(_._2), "canon_url", "__seen")
-        .localCheckpoint(true) // consumers: size guard, join, drop gauge
-      recordBloomDrops(flagged, urlBloomPath, "canon_url", "url", stageLog)
-      val winners = flagged.filter(!col("__seen")).drop("__seen")
-      val wj =
-        if (winners.count() <= MaxBroadcastUrlRows)
-          broadcast(winners.alias("w"))
-        else winners.alias("w")
       val text =
-        if (repairEncoding) TextOps.repairMojibake(col("b.text"))
-        else col("b.text")
-      // THE stage's single payload materialization; the copies split
-      // below stays lazy — both its branches, and both downstream
-      // consumers (gates chain, url-bloom fold), derive map-side off
-      // these checkpoint blocks
-      val joined = ckptPayload(batch
-        .withColumn("canon_url", TextOps.canonicalizeUrl(col("url")))
-        .alias("b")
-        .join(wj, col("b.canon_url") <=> col("w.canon_url") &&
-          col("b.doc_id") === col("w.doc_id"))
-        .select(col("b.canon_url"), col("b.doc_id"), text.as("text"),
-          col("w.__copies").as("__copies")))
-      joined.filter(col("__copies") === 1).drop("__copies")
-        .unionByName(joined.filter(col("__copies") > 1)
-          .groupBy("canon_url", "doc_id").agg(min(col("text")).as("text"))
-          .select(col("canon_url"), col("doc_id"), col("text")))
+        if (repairEncoding) TextOps.repairMojibake(col("text"))
+        else col("text")
+      keepFirstUnseen(
+        batch.withColumn("canon_url", TextOps.canonicalizeUrl(col("url"))),
+        "canon_url", urlPrev.map(_._2), urlBloomPath, "url",
+        MaxBroadcastUrlRows, Seq(text.as("text")), ckptPayload, stageLog)
     }
 
     // 2. quality gates — the t33 heuristic composite, then (when a
@@ -321,11 +282,9 @@ object CorpusIngest {
     }
 
     // 3. exact-text dedup: in-batch keep-first (min doc_id per text
-    //    hash), then cross-batch via the text bloom — both computed
-    //    on (text_hash, doc_id) ALONE, the same no-payload-shuffle
-    //    shape as the frontier (r15b): the winner aggregation moves a
-    //    tiny pair table, the bloom probes it, survivors join back
-    //    broadcast (size-guarded). With this the payload crosses the
+    //    hash) + the cross-batch text frontier ([[keepFirstUnseen]]),
+    //    the payload joined back to the (text_hash, doc_id) winners
+    //    like the URL stage's. With this the payload crosses the
     //    network exactly ONCE per batch — in the shard write, where
     //    clustering requires it. Without a classifier gate the chain
     //    feeding the winners is map-side codegen off the urlFresh
@@ -337,39 +296,10 @@ object CorpusIngest {
       val hashed0 = gated.withColumn("text_hash", xxhash64(col("text")))
       val hashed =
         if (qualityGate.isDefined) ckptPayload(hashed0) else hashed0
-      // winner per text hash, carrying how many rows share its
-      // (hash, doc_id) — the frontier's verbatim-copy defense again:
-      // the same doc_id under two canonical urls with identical text
-      // passes the URL stage as two rows that a key-equality join
-      // would BOTH keep (the old groupBy shipped exactly one)
-      val flagged = BloomMembership.flagSeenAny(
-          hashed.select("text_hash", "doc_id")
-            .groupBy("text_hash", "doc_id")
-            .agg(count(lit(1)).as("__copies"))
-            .groupBy("text_hash")
-            .agg(min(struct(col("doc_id"), col("__copies"))).as("__w"))
-            .select(col("text_hash"), col("__w.doc_id").as("doc_id"),
-              col("__w.__copies").as("__copies")),
-          textPrev.map(_._2), "text_hash", "__seen")
-        .localCheckpoint(true) // consumers: size guard, join, drop gauge
-      recordBloomDrops(flagged, textBloomPath, "text_hash", "text", stageLog)
-      val winners = flagged.filter(!col("__seen")).drop("__seen")
-      val wj =
-        if (winners.count() <= MaxBroadcastKeyRows)
-          broadcast(winners.alias("w"))
-        else winners.alias("w")
-      val joined = hashed.alias("h").join(wj,
-          col("h.text_hash") <=> col("w.text_hash") &&
-          col("h.doc_id") === col("w.doc_id"))
-        .select(col("h.text_hash"), col("h.doc_id"), col("h.canon_url"),
-          col("h.text"), col("w.__copies").as("__copies"))
       ckptPayload( // one execution feeds sink + both blooms
-        joined.filter(col("__copies") === 1).drop("__copies")
-          .unionByName(joined.filter(col("__copies") > 1)
-            .groupBy("text_hash", "doc_id")
-            .agg(min(struct(col("canon_url"), col("text"))).as("__r"))
-            .select(col("text_hash"), col("doc_id"), col("__r.canon_url"),
-              col("__r.text"))))
+        keepFirstUnseen(hashed, "text_hash", textPrev.map(_._2),
+          textBloomPath, "text", MaxBroadcastKeyRows,
+          Seq(col("canon_url"), col("text")), identity, stageLog))
     }
 
     // 3b. optional near-dup stage: band the batch ONCE, then
@@ -573,6 +503,73 @@ object CorpusIngest {
     n
   }
 
+  /** Broadcast cap for NARROW key tables — the near-dup (band,
+    * bucket) pairs and the (text_hash, doc_id) winners, ~16-20 bytes
+    * a row: 2M rows ≈ 40 MB serialized, comfortably under Spark's
+    * broadcast limits; larger batches fall back to a shuffled
+    * semi-join. */
+  private[graft] val MaxBroadcastKeyRows = 2000000L
+
+  /** Broadcast cap for the URL winner table, which carries full
+    * canonical-url STRINGS (~100-200 bytes a row, plus JVM string
+    * overhead once deserialized): 250k rows ≈ 25-50 MB serialized —
+    * the row-count cap must be width-aware or a 2M-row URL broadcast
+    * would build a multi-hundred-MB relation on the driver (r15
+    * review finding). */
+  private[graft] val MaxBroadcastUrlRows = 250000L
+
+  /** Keep-first-unseen: per `key`, the min-doc_id row of `rows` wins,
+    * unless some epoch of the frontier bloom (`bloom`) has seen the
+    * key — the URL frontier and the exact-text dedup. The winner
+    * table is computed on (key, doc_id) ALONE: the payload never
+    * enters the dedup shuffle or the bloom probe (r15b — at crawl
+    * scale the payload is ~all the bytes). Bloom-positive drops are
+    * recorded ([[recordBloomDrops]], gauge `bloomdrop:<name>`); the
+    * winners join back to `rows` broadcast when at most `broadcastCap`
+    * rows, shuffled past it.
+    *
+    * Each winner also carries how many VERBATIM COPIES of its
+    * (key, doc_id) the batch holds (a retried crawl record lands
+    * twice; one doc_id under two canonical urls with identical text):
+    * copies are invisible to a key-equality join, so that slice —
+    * normally empty — collapses to its min `payload` row, and the
+    * unique bulk passes the join untouched. Returns
+    * (key, doc_id, payload...); the joined rows pass through
+    * `materialize` before that split. */
+  private def keepFirstUnseen(rows: DataFrame, key: String,
+      bloom: Seq[Array[Byte]], bloomPath: String, name: String,
+      broadcastCap: Long, payload: Seq[Column],
+      materialize: DataFrame => DataFrame,
+      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]])
+      : DataFrame = {
+    val flagged = BloomMembership.flagSeenAny(
+        rows.select(key, "doc_id")
+          .groupBy(key, "doc_id").agg(count(lit(1)).as("__copies"))
+          .groupBy(key)
+          .agg(min(struct(col("doc_id"), col("__copies"))).as("__w"))
+          .select(col(key), col("__w.doc_id").as("doc_id"),
+            col("__w.__copies").as("__copies")),
+        bloom, key, "__seen")
+      .localCheckpoint(true) // consumers: size guard, join, drop gauge
+    recordBloomDrops(flagged, bloomPath, key, name, stageLog)
+    val winners = flagged.filter(!col("__seen")).drop("__seen")
+    val wj =
+      if (winners.count() <= broadcastCap) broadcast(winners.alias("w"))
+      else winners.alias("w")
+    val joined = materialize(rows.alias("r")
+      .join(wj, col(s"r.$key") <=> col(s"w.$key") &&
+        col("r.doc_id") === col("w.doc_id"))
+      .select(Seq(col(s"r.$key"), col("r.doc_id")) ++ payload :+
+        col("w.__copies"): _*))
+    val payloadNames = joined.columns.slice(2, joined.columns.length - 1)
+    joined.filter(col("__copies") === 1).drop("__copies")
+      .unionByName(joined.filter(col("__copies") > 1)
+        .groupBy(key, "doc_id")
+        .agg(min(struct(payloadNames.map(col).toIndexedSeq: _*)).as("__r"))
+        .select(Seq(col(key), col("doc_id")) ++
+          payloadNames.map(n => col(s"__r.$n")): _*))
+  }
+
   /** Near-dup drop set: batch docs colliding with a smaller-id batch
     * doc (keep-first) or ANY corpus doc on ≥ `minBands` bands.
     * Collisions are counted PER PARTNER PAIR (the minhashLshPairs
@@ -592,21 +589,6 @@ object CorpusIngest {
     * effective threshold) then runs on the collision-sized slice, not
     * the corpus — per-batch shuffle work no longer grows with the
     * index; the index contributes one filtered columnar scan. */
-  /** Broadcast cap for NARROW key tables — the near-dup (band,
-    * bucket) pairs and the (text_hash, doc_id) winners, ~16-20 bytes
-    * a row: 2M rows ≈ 40 MB serialized, comfortably under Spark's
-    * broadcast limits; larger batches fall back to a shuffled
-    * semi-join. */
-  private[graft] val MaxBroadcastKeyRows = 2000000L
-
-  /** Broadcast cap for the URL winner table, which carries full
-    * canonical-url STRINGS (~100-200 bytes a row, plus JVM string
-    * overhead once deserialized): 250k rows ≈ 25-50 MB serialized —
-    * the row-count cap must be width-aware or a 2M-row URL broadcast
-    * would build a multi-hundred-MB relation on the driver (r15
-    * review finding). */
-  private[graft] val MaxBroadcastUrlRows = 250000L
-
   private[graft] def nearDupDrops(batchIdx: DataFrame,
                                   corpusIdx: DataFrame,
                                   minBands: Int,
@@ -696,7 +678,7 @@ object CorpusIngest {
     def gauge(bloomPath: String, storeKeys: => DataFrame,
               keyCol: String, clear: Boolean): Long = {
       val (fs, droot) = fsOf(ss, bloomPath + DropsSuffix)
-      graft.sources.DirSwap.recover(fs, droot, "__compact")
+      graft.sources.DirSwap.recover(fs, droot)
       if (!fs.exists(droot)) return 0L
       val dropped = ss.read.parquet(droot.toString).select(keyCol).distinct()
       val lost =
@@ -720,21 +702,22 @@ object CorpusIngest {
     * — so rows and file count grow linearly in batches until a chain
     * rebuild clears the window, and grow forever if the >2-epoch
     * rebuild trigger never fires. On the bloom-maintenance cadence
-    * this folds the store to its DISTINCT keys in one file behind a
-    * rename-only twin swap: rows become O(distinct dropped keys) —
-    * the information [[frontierFpDrops]] actually consumes (it reads
+    * this folds the store to its DISTINCT keys in one file through
+    * [[graft.sources.DirSwap.replace]]: rows become O(distinct
+    * dropped keys) — the information [[frontierFpDrops]] actually consumes (it reads
     * through `distinct()`) — and the file count resets to 1, so the
     * gauge's scan stays flat on any cadence regardless of rebuild
-    * frequency. Crash-safe via [[graft.sources.DirSwap]]. */
+    * frequency. */
   private def compactDropsStore(ss: SparkSession, bloomPath: String,
                                 keyCol: String): Unit = {
-    val (fs, droot) = fsOf(ss, bloomPath + DropsSuffix)
-    graft.sources.DirSwap.recover(fs, droot, "__compact")
+    val drops = bloomPath + DropsSuffix
+    val (fs, droot) = fsOf(ss, drops)
+    graft.sources.DirSwap.recover(fs, droot)
     if (!fs.exists(droot)) return
-    val twin = new org.apache.hadoop.fs.Path(droot.toString + "__compact")
-    ss.read.parquet(droot.toString).select(keyCol).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(twin.toString)
-    graft.sources.DirSwap.swap(fs, droot, twin)
+    graft.sources.DirSwap.replace(ss, drops) { out =>
+      ss.read.parquet(drops).select(keyCol).distinct()
+        .coalesce(1).write.mode("overwrite").parquet(out)
+    }
   }
 
   /** The t36 drift card over everything shipped so far — exactly the
@@ -947,84 +930,44 @@ object CorpusIngest {
     * DROP survives the narrowing (CorpusIngestSpec pins the
     * with/without differential).
     *
-    * Gauges (when `stageLog` is on): `ndidx:base_files` /
-    * `ndidx:base_files_read` / `ndidx:hot_keys` (suspect docs' keys)
-    * / `ndidx:tail_files` / `ndidx:generations` — the bounded-scan
-    * evidence the ingest log prints. */
+    * The tail/base split, file pruning and gauges are
+    * [[graft.sources.TieredIndex.probe]]'s; the gauges are `ndidx:*`
+    * (`ndidx:hot_keys` counts the suspect docs' keys) — the
+    * bounded-scan evidence the ingest log prints. */
   private[graft] def narrowedCorpusIndex(ss: SparkSession, indexDir: String,
       batchIdx: DataFrame, minBands: Int,
       stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None,
       maxBroadcastKeys: Long = MaxBroadcastKeyRows): DataFrame = {
     import ss.implicits._
-    import graft.sources.TieredIndex
-    val (fs, target) = fsOf(ss, indexDir)
-    TieredIndex.recover(ss, indexDir)
-    def emptyIdx = Seq.empty[(Long, Int, Long)].toDF("doc", "band", "bucket")
-    if (!fs.exists(target)) return emptyIdx
-    val live = fs.listStatus(target).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-    if (live.isEmpty) return emptyIdx
-    def gauge(name: String, v: Double): Unit =
-      stageLog.foreach(_ += s"ndidx:$name" -> v)
-    val liveNames = live.map(_.getName).toSet
-    TieredIndex.load(ss, indexDir, liveNames).getOrElse(Seq.empty) match {
-      case Seq() =>
-        // no usable summary: every live file is tail (the pre-r17 scan)
-        gauge("base_files", 0); gauge("base_files_read", 0)
-        gauge("generations", 0)
-        gauge("tail_files", live.length.toDouble)
-        ss.read.parquet(live.map(_.toString).toIndexedSeq: _*)
-          .select("doc", "band", "bucket")
-      case gens =>
-        val baseFiles = gens.flatMap(_.files)
-        val baseNames = baseFiles.map(_.name).toSet
-        val tail = live.filter(p => !baseNames.contains(p.getName))
-        gauge("base_files", baseFiles.length.toDouble)
-        gauge("generations", gens.length.toDouble)
-        gauge("tail_files", tail.length.toDouble)
-        val tailDf =
-          if (tail.isEmpty) emptyIdx
-          else ss.read.parquet(tail.map(_.toString).toIndexedSeq: _*)
-            .select("doc", "band", "bucket")
-        // hot rows = batch (doc, band, bucket) rows whose key ANY
-        // generation's bloom claims to contain (map-side off the
-        // batchIdx checkpoint — one predicate per generation in the
-        // same scan), reduced to SUSPECT docs — ≥ minBands hot bands
-        // (one row per (doc, band), so the per-doc row count IS the
-        // hot band count); only their keys can contribute to a drop
-        val hotRows = BloomMembership
-          .flagSeenAny(batchIdx
-              .withColumn("__k", xxhash64(col("band"), col("bucket"))),
-            gens.map(_.bloom), "__k", "__hot")
-          .filter(col("__hot"))
-        val hot = hotRows
-          .join(hotRows.groupBy("doc").agg(count(lit(1)).as("__nb"))
-              .filter(col("__nb") >= minBands).select("doc"),
-            Seq("doc"), "left_semi")
-          .select("band", "bucket").distinct()
-          .localCheckpoint(true)
-        val nHot = hot.count()
-        gauge("hot_keys", nHot.toDouble)
-        if (nHot == 0) { gauge("base_files_read", 0); return tailDf }
-        val toRead =
-          if (nHot <= TieredIndex.MaxHotKeysForFilePrune)
-            TieredIndex.pruneFiles(baseFiles,
-              hot.select(col("band").cast("long"), col("bucket"))
-                .as[(Long, Long)].collect()
-                .map(t => Seq(t._1, t._2)).toIndexedSeq)
-          else baseFiles.map(_.name)
-        gauge("base_files_read", toRead.length.toDouble)
-        // same size guard as every other key-table broadcast in the
-        // loop: a corpus-scale backfill batch's hot set falls back to
-        // a shuffled semi-join, never a multi-GB driver relation
-        val hotJoin = if (nHot <= maxBroadcastKeys) broadcast(hot) else hot
-        val baseDf =
-          if (toRead.isEmpty) emptyIdx
-          else ss.read.parquet(toRead.map(n =>
-              new org.apache.hadoop.fs.Path(target, n).toString): _*)
-            .select("doc", "band", "bucket")
-            .join(hotJoin, Seq("band", "bucket"), "left_semi")
-        tailDf.unionByName(baseDf)
+    graft.sources.TieredIndex.probe(ss, indexDir,
+        Seq.empty[(Long, Int, Long)].toDF("doc", "band", "bucket"), "ndidx",
+        stageLog) { gens =>
+      // hot rows = batch (doc, band, bucket) rows whose key ANY
+      // generation's bloom claims to contain (map-side off the
+      // batchIdx checkpoint — one predicate per generation in the
+      // same scan), reduced to SUSPECT docs — ≥ minBands hot bands
+      // (one row per (doc, band), so the per-doc row count IS the
+      // hot band count); only their keys can contribute to a drop
+      val hotRows = BloomMembership
+        .flagSeenAny(batchIdx
+            .withColumn("__k", xxhash64(col("band"), col("bucket"))),
+          gens.map(_.bloom), "__k", "__hot")
+        .filter(col("__hot"))
+      val hot = hotRows
+        .join(hotRows.groupBy("doc").agg(count(lit(1)).as("__nb"))
+            .filter(col("__nb") >= minBands).select("doc"),
+          Seq("doc"), "left_semi")
+        .select("band", "bucket").distinct()
+        .localCheckpoint(true)
+      val nHot = hot.count()
+      // same size guard as every other key-table broadcast in the
+      // loop: a corpus-scale backfill batch's hot set falls back to
+      // a shuffled semi-join, never a multi-GB driver relation
+      val hotJoin = if (nHot <= maxBroadcastKeys) broadcast(hot) else hot
+      graft.sources.TieredIndex.Hot(nHot,
+        () => hot.select(col("band").cast("long"), col("bucket"))
+          .as[(Long, Long)].collect().map(t => Seq(t._1, t._2)).toIndexedSeq,
+        _.join(hotJoin, Seq("band", "bucket"), "left_semi"))
     }
   }
 
@@ -1035,8 +978,8 @@ object CorpusIngest {
     * SHIPPED key, so on the maintenance cadence this rebuilds ONE
     * filter per frontier, right-sized from the shipped count
     * (`headroom`× so the rebuilt epoch has room before its own fill
-    * rollover), and swaps it for the whole chain behind a rename-only
-    * root twin swap ([[graft.sources.DirSwap]] — crash at any point
+    * rollover), and swaps it for the whole chain by replacing the root
+    * ([[graft.sources.DirSwap.replace]] — crash at any point
     * leaves a complete chain or a complete rebuild, never neither;
     * [[loadBloomEpochs]] recovers before every read).
     *
@@ -1105,11 +1048,10 @@ object CorpusIngest {
         def rebuild(path: String, keyCol: String): Boolean =
           if (shipped > 0) {
             val expected = math.max(1L, math.ceil(shipped * headroom).toLong)
-            val (bfs, broot) = fsOf(ss, path)
-            BloomMembership.sketch(keys.select(keyCol), keyCol, expected)
-              .write.mode("overwrite").parquet(s"${path}__compact/epoch=0")
-            graft.sources.DirSwap.swap(bfs, broot,
-              new org.apache.hadoop.fs.Path(s"${path}__compact"))
+            graft.sources.DirSwap.replace(ss, path) { out =>
+              BloomMembership.sketch(keys.select(keyCol), keyCol, expected)
+                .write.mode("overwrite").parquet(s"$out/epoch=0")
+            }
             log.info(s"bloom $path: chain compacted to one epoch sized " +
               s"$expected (${headroom}x $shipped shipped keys)")
             true
@@ -1169,8 +1111,8 @@ object CorpusIngest {
   private def committedEpochs(ss: SparkSession, path: String): Seq[Int] = {
     val (fs, root) = fsOf(ss, path)
     // a crashed whole-store compaction swap first ([[compactFrontierBlooms]]
-    // twin-swaps the ROOT)
-    graft.sources.DirSwap.recover(fs, root, "__compact")
+    // replaces the ROOT)
+    graft.sources.DirSwap.recover(fs, root)
     if (!fs.exists(root)) return Seq.empty
     if (fs.listStatus(root).exists(s =>
         s.isFile && s.getPath.getName.endsWith(".parquet")))
@@ -1179,10 +1121,10 @@ object CorpusIngest {
           "pre-epoch layout is no longer read")
     fs.listStatus(root).map(_.getPath.getName)
       .filter(_.startsWith("epoch="))
-      .map(graft.sources.DirSwap.baseOf(_, "__fold"))
+      .map(graft.sources.DirSwap.baseOf)
       .distinct
       .foreach(base => graft.sources.DirSwap.recover(
-        fs, new org.apache.hadoop.fs.Path(root, base), "__fold"))
+        fs, new org.apache.hadoop.fs.Path(root, base)))
     // prune crash leftovers: an epoch dir with no committed data file
     // is a write that died before its parquet commit (possibly a
     // partial first twin the recover promoted — DirSwap.hasData doc);
@@ -1206,10 +1148,10 @@ object CorpusIngest {
     * merged filter would pass `rolloverAt`, freeze the active epoch
     * as-is and start the next epoch with the increment alone (the
     * BLOOM CAPACITY contract: no epoch past design fpp, no key ever
-    * dropped). The touched epoch dir is written to a `__fold` twin
-    * and rename-swapped, so a crash at any point leaves a complete
-    * copy. Returns (active-epoch fill ratio, epoch count); None when
-    * there is no state yet (empty batch onto no store). */
+    * dropped). The touched epoch dir is rewritten through
+    * [[graft.sources.DirSwap.replace]], so a crash at any point leaves
+    * a complete copy. Returns (active-epoch fill ratio, epoch count);
+    * None when there is no state yet (empty batch onto no store). */
   private def saveBloom(ss: SparkSession, path: String,
                         prevEpochs: Seq[(Int, Array[Byte])], keys: DataFrame,
                         keyCol: String, expectedItems: Long,
@@ -1217,24 +1159,10 @@ object CorpusIngest {
     import ss.implicits._
     val inc = BloomMembership.sketch(keys, keyCol, expectedItems)
       .take(1).headOption.flatMap(r => Option(r.getAs[Array[Byte]](0)))
-    val (fs, root) = fsOf(ss, path)
-    def writeEpoch(e: Int, bytes: Array[Byte]): Unit = {
-      val target = new org.apache.hadoop.fs.Path(root, s"epoch=$e")
-      if (!graft.sources.DirSwap.hasData(fs, target)) {
-        // brand-new epoch (or commit-less crash debris): write the
-        // target directly — parquet's commit keeps a crashed write
-        // invisible, and a first-write twin would have no complete
-        // old copy for recover's twin-alone rule to rely on (r15
-        // review finding: that rule promoted a PARTIAL first twin)
-        Seq(Option(bytes)).toDF("bloom")
-          .write.mode("overwrite").parquet(s"$path/epoch=$e")
-      } else {
-        Seq(Option(bytes)).toDF("bloom")
-          .write.mode("overwrite").parquet(s"$path/epoch=${e}__fold")
-        graft.sources.DirSwap.swap(fs, target,
-          new org.apache.hadoop.fs.Path(root, s"epoch=${e}__fold"))
+    def writeEpoch(e: Int, bytes: Array[Byte]): Unit =
+      graft.sources.DirSwap.replace(ss, s"$path/epoch=$e") { out =>
+        Seq(Option(bytes)).toDF("bloom").write.mode("overwrite").parquet(out)
       }
-    }
     def warnIfOverfull(fill: Double): Double = {
       if (fill > rolloverAt)
         log.warn(f"bloom $path: a SINGLE batch fills a fresh epoch to " +

@@ -330,7 +330,7 @@ class CorpusIngestSpec extends SparkSpec {
     // file): one beside the committed epoch 0, and one alone for an
     // epoch 1 that the twin-alone recovery rule promotes to a
     // commit-less epoch dir
-    for (twin <- Seq("epoch=0__fold", "epoch=1__fold")) {
+    for (twin <- Seq("epoch=0__compact", "epoch=1__compact")) {
       val debris = new java.io.File(ub, s"$twin/_temporary")
       assert(debris.mkdirs())
       java.nio.file.Files.write(debris.toPath.resolve("attempt_0"),

@@ -173,7 +173,7 @@ class ShardSinkSpec extends SparkSpec {
     graft.sources.DirSwap.recover(
       new org.apache.hadoop.fs.Path(outDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$outDir/shard=4"), "__compact")
+      new org.apache.hadoop.fs.Path(s"$outDir/shard=4"))
     assert(!new java.io.File(s"$outDir/shard=4__old").exists() &&
       !new java.io.File(s"$outDir/shard=4__compact").exists(),
       "one recover pass must clear old AND twin beside an intact target")

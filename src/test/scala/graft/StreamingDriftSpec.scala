@@ -76,7 +76,7 @@ class StreamingDriftSpec extends SparkSpec {
 
     // crash A: a later fold died mid-twin-write — garbage twin beside
     // an intact target must be discarded, not read
-    val twin = new java.io.File(s"${store}__fold")
+    val twin = new java.io.File(s"${store}__compact")
     assert(twin.mkdir())
     java.nio.file.Files.write(twin.toPath.resolve("part-junk.parquet"),
       Array[Byte](1, 2, 3))
@@ -120,7 +120,7 @@ class StreamingDriftSpec extends SparkSpec {
     assert(compacted.count() ==
       compacted.select("kind", "source", "k").distinct().count(),
       "compacted store must hold one row per key")
-    assert(!new java.io.File(s"${store}__fold").exists() &&
+    assert(!new java.io.File(s"${store}__compact").exists() &&
       !new java.io.File(s"${store}__old").exists())
     // and folds keep landing after compaction
     Drift.foldDocsIntoStore(store,

@@ -10,7 +10,7 @@ cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/round_check}
 
-echo "== 1/6 env reads only in Bench.scala and Session.scala =="
+echo "== 1/7 env reads only in Bench.scala and Session.scala =="
 # library behaviour is set by arguments and inputs alone; only the
 # mains' settings (Bench) and the session's core count (Session) read
 # the environment
@@ -21,16 +21,26 @@ if [ -n "$ENV_READS" ]; then
   echo "ENV READ outside Bench.scala / Session.scala"; exit 1
 fi
 
-echo "== 2/6 compile =="
+echo "== 2/7 directory-replace protocol only in DirSwap.scala =="
+# every crash-safe directory replace goes through DirSwap.replace, so
+# its twin name and its swap are spelled nowhere else
+SWAPS=$(grep -rnE '"__compact"|"__fold"|DirSwap\.swap' src/main/scala \
+  | grep -v '^src/main/scala/graft/sources/DirSwap\.scala:' || true)
+if [ -n "$SWAPS" ]; then
+  echo "$SWAPS"
+  echo "TWIN NAME or DirSwap.swap outside DirSwap.scala"; exit 1
+fi
+
+echo "== 3/7 compile =="
 sbt -batch compile
 
-echo "== 3/6 scalatest =="
+echo "== 4/7 scalatest =="
 # stale suite XMLs from deleted specs otherwise inflate the directory
 # aggregate vs the fresh run's true tally (VERDICT r15 item 4)
 rm -rf target/test-reports
 sbt -batch test
 
-echo "== 4/6 verify dump + DuckDB oracle compare ($SF) =="
+echo "== 5/7 verify dump + DuckDB oracle compare ($SF) =="
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT"
 python3 tools/check.py "$SF" "$OUT"
@@ -67,13 +77,13 @@ else
   echo "load guard passed: 5-min load $LOAD5 <= $LOAD_MAX"
 fi
 
-echo "== 5/6 bench smoke (sf0.001, 1 run) =="
+echo "== 6/7 bench smoke (sf0.001, 1 run) =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_RUNS=1 \
   SPARK_GRAFT_BENCH_OUT=/tmp/round_check_bench.json \
   sbt -batch "runMain graft.Bench" > /dev/null
 grep -o '"metric":"total","value":[0-9.]*' /tmp/round_check_bench.json
 
-echo "== 6/6 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
+echo "== 7/7 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
 # the 13 flagged queries are the documented 1-row-scalar broadcast
 # nested loops (global aggregates joined back); anything NEW flagged
 # here is a plan regression the golden specs didn't cover
