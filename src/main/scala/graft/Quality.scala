@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, KMeans, SemDedup}
 import graft.ql.t
 
-/** Per-round quality gate for the rows-only catalog queries (VERDICT
-  * r5 item 4): the driver's oracle can't hash-check hash/centroid-
-  * dependent outputs, so their QUALITY — planted-near-dup recall for
-  * the LSH dedup family, recall@k vs the exact s1 baseline for the ANN
-  * family, sketch error for KMV, hamming proximity for SimHash — is
-  * measured here and emitted as one JSON line (and optionally a file),
-  * making regressions in the un-oracled components visible
+/** Per-round quality gate for the approximate components (VERDICT
+  * r5 item 4). All 144 catalog queries have exact oracles, which
+  * check that an output is reproduced, not that it is GOOD: the
+  * QUALITY of the hash/centroid-dependent components — planted-near-dup
+  * recall for the LSH dedup family, recall@k vs the exact s1 baseline
+  * for the ANN family, sketch error for KMV, hamming proximity for
+  * SimHash — is measured here and emitted as one JSON line (and
+  * optionally a file), making quality regressions visible
   * round-over-round.
   *
   * Planted ground truth: every 10th document gets a twin (id +
@@ -202,7 +203,7 @@ object Quality {
       SimilaritySearch.ivfTopK(clusteredL.filter(col("vec_id") < 5),
         clusteredL, "vec_id", "embedding", "label", 3), 3)
 
-    // ---- t29: DEFLATE-ratio band positions (rows-only by nature) --
+    // ---- t29: zlib DEFLATE-ratio band positions -------------------
     // the degenerate-text gate works iff the three regimes stay in
     // separated bands: repeated-token junk far below the corpus's
     // prose-ish ratio, hash-chain noise far above it. Medians as

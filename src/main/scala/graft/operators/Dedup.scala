@@ -18,13 +18,13 @@ import graft.ql.spread
   */
 object Dedup {
 
-  /** Broadcast cap for the probe KEY tables that narrow a persisted
-    * corpus index to a batch (winnow `h` / LSH (band, bucket) keys,
-    * ~8-24 bytes a row): 2M rows ≈ tens of MB serialized. Past it the
-    * semi-join runs shuffled — the narrowing survives, only its
-    * physical form changes (the CorpusIngest.MaxBroadcastKeyRows
-    * convention). */
-  private[graft] val MaxBroadcastProbeKeys = 2000000L
+  /** Broadcast cap for NARROW key tables, ~8-24 bytes a row: the
+    * probe keys that narrow a persisted corpus index to a batch
+    * (winnow `h`, LSH (band, bucket)) and the ingest loop's
+    * (text_hash, doc_id) winners and hot band keys. 2M rows ≈ tens of
+    * MB serialized, comfortably under Spark's broadcast limits. Past
+    * it the join runs shuffled — only its physical form changes. */
+  private[graft] val MaxBroadcastKeyRows = 2000000L
 
   /** Row cap for forcing a locally-snapshotted PROBE (doc, pos, h)
     * frame onto the broadcast side of the candidate join (r20): the
@@ -51,7 +51,7 @@ object Dedup {
     * (doc, pos, h) is the same tens-of-MB driver footprint the
     * broadcast hash table paid anyway. Past the cap the operators
     * fall back to the checkpointed distributed path with the
-    * [[MaxBroadcastProbeKeys]] guards. */
+    * [[MaxBroadcastKeyRows]] guards. */
   private[graft] val MaxLocalProbeRows = 1000000
 
   /** One-action bounded snapshot: collect up to cap+1 rows of `df`;
@@ -136,18 +136,12 @@ object Dedup {
   /** Candidate near-dup pairs via MinHash+LSH: docs sharing ≥1 band
     * bucket, with the number of colliding bands per pair. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-                      k: Int = 3, numHashes: Int = 128, bands: Int = 16): DataFrame = {
+                      k: Int = 3, numHashes: Int = 128, bands: Int = 16): DataFrame =
     // localCheckpoint (eager): the self-join would otherwise recompute
     // the signature pipeline once per branch; unlike cache() the blocks
     // are released by the ContextCleaner when the plan is unreachable.
-    val banded = minhashIndex(df, idCol, textCol, k, numHashes, bands)
-      .localCheckpoint(true)
-    val a = banded.alias("a"); val b = banded.alias("b")
-    a.join(b, col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") && col("a.doc") < col("b.doc"))
-      .groupBy(col("a.doc").as("a_id"), col("b.doc").as("b_id"))
-      .agg(count(lit(1)).as("n_bands"))
-  }
+    bandPairCounts(minhashIndex(df, idCol, textCol, k, numHashes, bands)
+      .localCheckpoint(true))
 
   /** Cross-batch near-dup candidates: NEW documents probed against an
     * EXISTING corpus index (`minhashIndex` output, typically read back
@@ -173,42 +167,76 @@ object Dedup {
     // one bounded collect snapshots the probe (size guard, key table
     // and pair-join build side all derive from the same local rows,
     // zero further driver jobs — see [[MaxLocalProbeRows]]); an
-    // oversize batch falls back to the checkpointed distributed path
-    val probePlan = minhashIndex(batch, idCol, textCol, k, numHashes, bands)
-    val probeOpt = localRows(probePlan, MaxLocalProbeRows)
-    val probe = probeOpt.map(localDf(batch, _, probePlan.schema))
-      .getOrElse(probePlan.localCheckpoint(true))
-    // the corpus index is narrowed to the batch's (band, bucket) keys
-    // BEFORE the replay-dedup distinct (r18): a semi-join keeps every
-    // row of each touched key, so the distinct slice — and therefore
-    // every pair — is unchanged, but the per-probe shuffle is
-    // collision-bounded instead of re-shuffling the full corpus-sized
-    // index every batch. Broadcast under the cap, shuffled past it.
+    // oversize batch falls back to the checkpointed distributed path.
     // On the local path the key distinct happens DRIVER-SIDE (no
     // exchange under the broadcast build).
-    val keySchema = org.apache.spark.sql.types.StructType(
-      probePlan.schema.filter(f => f.name == "band" || f.name == "bucket"))
-    val keys = probeOpt match {
-      case Some(rows) => broadcast(localDf(batch,
-        rows.map(r => org.apache.spark.sql.Row(
-          r.getAs[Any]("band"), r.getAs[Any]("bucket"))).distinct.toSeq,
-        keySchema))
+    val probePlan = minhashIndex(batch, idCol, textCol, k, numHashes, bands)
+    localRows(probePlan, MaxLocalProbeRows) match {
+      case Some(rows) =>
+        val keySchema = org.apache.spark.sql.types.StructType(
+          probePlan.schema.filter(f => f.name == "band" || f.name == "bucket"))
+        val keys = localDf(batch,
+          rows.map(r => org.apache.spark.sql.Row(
+            r.getAs[Any]("band"), r.getAs[Any]("bucket"))).distinct.toSeq,
+          keySchema)
+        bandPairCounts(localDf(batch, rows, probePlan.schema),
+          Some(corpusIndex), dedupIndex, localKeys = Some(keys))
       case None =>
-        val bKeys = probe.select("band", "bucket").distinct()
-        if (probe.count() <= MaxBroadcastProbeKeys) broadcast(bKeys) else bKeys
+        bandPairCounts(probePlan.localCheckpoint(true), Some(corpusIndex),
+          dedupIndex)
     }
-    val narrowed = corpusIndex.select("doc", "band", "bucket")
-      .join(keys, Seq("band", "bucket"), "left_semi")
-    val corpus = if (dedupIndex) narrowed.distinct() else narrowed
-    // doc <> doc: a batch whose rows were already appended to the
-    // corpus index (replay after a partial failure, overlapping loads)
-    // must not report every replayed doc as a 16-band dup of itself
-    val probeJ = if (probeOpt.isDefined) broadcast(probe) else probe
-    corpus.alias("c")
-      .join(probeJ.alias("p"), col("c.band") === col("p.band") &&
-        col("c.bucket") === col("p.bucket") && col("c.doc") =!= col("p.doc"))
-      .groupBy(col("c.doc").as("corpus_id"), col("p.doc").as("batch_id"))
-      .agg(count(lit(1)).as("n_bands"))
+  }
+
+  /** Per-pair band-collision counts over (doc, band, bucket) band-index
+    * frames — the one counting core of [[minhashLshPairs]],
+    * [[minhashLshPairsAgainst]] and the ingest near-dup gate
+    * (`CorpusIngest.nearDupDrops`). Bands are counted PER PARTNER
+    * PAIR; callers threshold `n_bands` themselves.
+    *
+    *   - no `corpus`: the probe's own pairs, `a_id < b_id` →
+    *     (a_id, b_id, n_bands);
+    *   - with `corpus`: probe docs against corpus docs, `doc <> doc`
+    *     (a probe whose rows were already appended to the index —
+    *     replay after a partial failure, overlapping loads — must not
+    *     pair every doc with itself) → (corpus_id, batch_id, n_bands).
+    *     The corpus is narrowed to the probe's (band, bucket) keys
+    *     BEFORE the replay-dedup distinct (r18): a semi-join keeps
+    *     every row of each touched key, so the distinct slice — and
+    *     therefore every pair — is unchanged, but the per-probe
+    *     shuffle is collision-bounded instead of re-shuffling the full
+    *     corpus-sized index every batch. The key table is broadcast
+    *     while the probe has at most `maxBroadcastKeys` rows (a cheap
+    *     pass when the probe is checkpointed) and semi-joined shuffled
+    *     past it — the narrowing survives, only its physical form
+    *     changes.
+    *
+    * `localKeys` marks a probe that is a driver-side local relation:
+    * its pre-built key table replaces the guarded distinct, and both
+    * join as broadcast build sides. */
+  private[graft] def bandPairCounts(probe: DataFrame,
+      corpus: Option[DataFrame] = None, dedupIndex: Boolean = true,
+      localKeys: Option[DataFrame] = None,
+      maxBroadcastKeys: Long = MaxBroadcastKeyRows): DataFrame = {
+    def pairs(l: DataFrame, r: DataFrame, docCond: (Column, Column) => Column,
+              lId: String, rId: String): DataFrame =
+      l.alias("l").join(r.alias("r"), col("l.band") === col("r.band") &&
+          col("l.bucket") === col("r.bucket") &&
+          docCond(col("l.doc"), col("r.doc")))
+        .groupBy(col("l.doc").as(lId), col("r.doc").as(rId))
+        .agg(count(lit(1)).as("n_bands"))
+    corpus match {
+      case None => pairs(probe, probe, _ < _, "a_id", "b_id")
+      case Some(c) =>
+        val keys = localKeys.map(broadcast(_)).getOrElse {
+          val k = probe.select("band", "bucket").distinct()
+          if (probe.count() <= maxBroadcastKeys) broadcast(k) else k
+        }
+        val narrowed = c.select("doc", "band", "bucket")
+          .join(keys, Seq("band", "bucket"), "left_semi")
+        pairs(if (dedupIndex) narrowed.distinct() else narrowed,
+          if (localKeys.isDefined) broadcast(probe) else probe,
+          _ =!= _, "corpus_id", "batch_id")
+    }
   }
 
   /** 64-bit SimHash over whitespace tokens: per-bit signed vote of
@@ -743,7 +771,7 @@ object Dedup {
           .distinct.toSeq, hSchema))
       case None =>
         val hKeys = probe.select("h").distinct()
-        if (probe.count() <= MaxBroadcastProbeKeys) broadcast(hKeys) else hKeys
+        if (probe.count() <= MaxBroadcastKeyRows) broadcast(hKeys) else hKeys
     }
     val idx0 = corpusIndex.select(col("doc"), col("pos"), col("h"))
       .join(keys, Seq("h"), "left_semi")
@@ -769,8 +797,8 @@ object Dedup {
           // precomputed index metadata: a bounded existence probe
           // (limit early-exits the scan) instead of a full count per
           // batch (VERDICT r18 item 3 — the Bm25/IvfPq guard pattern)
-          if (h.limit(MaxBroadcastProbeKeys.toInt + 1).count()
-              <= MaxBroadcastProbeKeys) broadcast(h) else h
+          if (h.limit(MaxBroadcastKeyRows.toInt + 1).count()
+              <= MaxBroadcastKeyRows) broadcast(h) else h
         case None if probeOpt.isDefined =>
           // inline hot hashes are ⊆ the batch's own hash set (idx0 is
           // h-narrowed), which the local snapshot already bounds under
@@ -779,7 +807,7 @@ object Dedup {
           broadcast(winnowHotHashes(idx0, maxDf))
         case None =>
           val hot = winnowHotHashes(idx0, maxDf).localCheckpoint(true)
-          if (hot.count() <= MaxBroadcastProbeKeys) broadcast(hot) else hot
+          if (hot.count() <= MaxBroadcastKeyRows) broadcast(hot) else hot
       }
       idx0.join(hotJ, Seq("h"), "left_anti")
     } else idx0
@@ -826,7 +854,7 @@ object Dedup {
         ids.map(org.apache.spark.sql.Row(_)), idSchema))
       case None =>
         val cIds = cand.select("corpus_id").distinct()
-        if (cand.count() <= MaxBroadcastProbeKeys) broadcast(cIds) else cIds
+        if (cand.count() <= MaxBroadcastKeyRows) broadcast(cIds) else cIds
     }
     // literal-sized candidate sets ALSO push into the corpus scan as
     // a chunked In (r19): the semi-join narrows rows after they are

@@ -85,15 +85,19 @@ import graft.sources.ShardSink
   * batch, in the shard write, where clustering requires it. Bloom
   * probe/build are map-side + a driver-sized byte-array merge; the
   * drift fold is a batch-bounded append. Per batch the loop runs a
-  * FIXED job inventory (r15, after folding the cheap driver actions:
-  * the shipped-row count rides the shard write as an observed
-  * metric, each bloom store is read once and its bytes reused for
-  * probe + merge): 2 bloom loads, 2 winner-table checkpoints, 2
-  * payload materializations (the frontier join, the kept survivors;
-  * +1 with a classifier gate — all node-local, no network), the
-  * shard write, 2 sketch-agg + 2 bloom writes, 1 drift append, plus
-  * 3 near-dup jobs when that gate is on — none of whose input grows
-  * with the corpus.
+  * fixed set of driver actions: each bloom store is read once and its
+  * bytes reused for probe + merge; each frontier stage (URL, exact
+  * text, [[keepFirstUnseen]]) checkpoints its winner table and its
+  * result after the verbatim-copies split (+1 payload checkpoint with
+  * a classifier gate — all node-local, no network); the shard write
+  * carries the shipped-row count as an observed metric; then 2
+  * sketch-agg + 2 bloom writes and 1 drift append, plus the band,
+  * probe and drop-set actions of the near-dup gate when it is on.
+  * Under AQE each action runs one Spark job per shuffle stage.
+  * CorpusIngestSpec "job inventory" pins the resulting counts over a
+  * fixed 3-batch sequence with the near-dup gate and drift on: 45, 67
+  * and 54 jobs for the three batches, 19, 25 and 25 for the
+  * maintenance pass after each.
   *
   * MAINTENANCE: appendShards leaves one file per touched shard per
   * micro-batch, the near-dup gate and drift monitor each append one
@@ -113,10 +117,6 @@ import graft.sources.ShardSink
   * cadence via [[runMaintenance]].
   */
 object CorpusIngest {
-
-  /** Stage-timer shape threaded from [[ingestBatch]] into its body
-    * (polymorphic, so a plain function value can't carry it). */
-  private trait TimedFn { def apply[A](name: String)(f: => A): A }
 
   /** Trained-filter gate config: keep docs whose
     * [[QualityClassifier.score]] probability is ≥ `threshold`.
@@ -187,24 +187,8 @@ object CorpusIngest {
                   nearDup: Option[NearDupGate] = None,
                   substr: Option[SubstrGate] = None,
                   stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None,
-                  rolloverAt: Double = BloomMembership.FillWarnAt,
-                  payloadStorage: Option[org.apache.spark.storage.StorageLevel] = None): Long = {
+                  rolloverAt: Double = BloomMembership.FillWarnAt): Long = {
     val ss = batch.sparkSession
-    val timed = new TimedFn {
-      def apply[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val a = f
-        stageLog.foreach(_ += name -> (System.nanoTime() - t0) / 1e9); a
-      }
-    }
-    // PAYLOAD-bearing checkpoints take the caller's storage level
-    // (VERDICT r16 item 4): the default memory-first level is right
-    // for the ~hundreds-of-bytes catalog shape; a wide-payload crawl
-    // can pass DISK_ONLY so multi-GB payload blocks never contend for
-    // the unified memory region. Key-table checkpoints (winners, band
-    // rows) stay memory-first: they are payload-free and hot.
-    def ckptPayload(df: DataFrame): DataFrame =
-      payloadStorage.fold(df.localCheckpoint(true))(
-        lvl => df.localCheckpoint(true, lvl))
     // Every checkpoint this batch creates is INTERNAL — all consumers
     // (gates, winner joins, shard write, bloom folds, drift fold) run
     // inside this call — so the blocks are released DETERMINISTICALLY
@@ -217,9 +201,265 @@ object CorpusIngest {
     // batch) predate the snapshot and are spared.
     val rddsBefore = ss.sparkContext.getPersistentRDDs.keySet
     try {
-      ingestBatchBody(batch, urlBloomPath, textBloomPath, shardDir,
-        numShards, expectedItems, qualityGate, driftDir, repairEncoding,
-        nearDup, substr, stageLog, rolloverAt, ckptPayload, timed)
+      // persisted frontier state is read ONCE per batch; the epoch
+      // bytes feed both the probes and the end-of-batch merges (r15 —
+      // previously each artifact was read twice)
+      val (urlPrev, textPrev) = timed(stageLog, "state_load") {
+        // a retired drift layout fails here, before anything is written
+        driftDir.foreach(Drift.recoverStore(ss, _))
+        (loadBloomEpochs(ss, urlBloomPath), loadBloomEpochs(ss, textBloomPath))
+      }
+
+      // 1. within-batch URL dedup (min doc_id per canonical url) + the
+      //    cross-batch URL frontier ([[keepFirstUnseen]]). The optional
+      //    t38 encoding repair is a payload column, so it runs on the
+      //    JOINED survivors — frontier-dropped docs never pay the
+      //    repair regex. Repair stays ahead of every gate and hash (its
+      //    ordering contract: a mojibake variant of a shipped page must
+      //    repair to the same bytes and fall to the exact-text dedup);
+      //    canonical urls never depended on the text.
+      //    The stage's result is its single payload materialization,
+      //    checkpointed after the verbatim-copies split, so both
+      //    downstream consumers (gates chain, url-bloom fold) read
+      //    those blocks instead of re-running the split's shuffle.
+      val urlFresh = timed(stageLog, "canon_frontier") {
+        val text =
+          if (repairEncoding) TextOps.repairMojibake(col("text"))
+          else col("text")
+        keepFirstUnseen(
+          batch.withColumn("canon_url", TextOps.canonicalizeUrl(col("url"))),
+          "canon_url", urlPrev.map(_._2), urlBloomPath, "url",
+          MaxBroadcastUrlRows, Seq(text.as("text")), stageLog)
+      }
+
+      // 2. quality gates — the t33 heuristic composite, then (when a
+      //    model is supplied) the t35 trained filter: broadcast-weights
+      //    scoring, keep P(keep) ≥ threshold
+      val shaped = urlFresh
+        .filter(TextOps.gopherShape(col("text")).getField("keep"))
+      val gated = qualityGate.fold(shaped) { g =>
+        QualityClassifier
+          .score(shaped, "doc_id", "text", g.bias, g.weights, "__q", g.link)
+          .filter(col("__q") >= g.threshold).drop("__q")
+      }
+
+      // 3. exact-text dedup: in-batch keep-first (min doc_id per text
+      //    hash) + the cross-batch text frontier ([[keepFirstUnseen]]),
+      //    the payload joined back to the (text_hash, doc_id) winners
+      //    like the URL stage's. With this the payload crosses the
+      //    network exactly ONCE per batch — in the shard write, where
+      //    clustering requires it. Without a classifier gate the chain
+      //    feeding the winners is map-side codegen off the urlFresh
+      //    checkpoint (gopher + hash) and simply re-runs for the join
+      //    pass; WITH one, the gated rows checkpoint once so the
+      //    feature aggregation isn't paid twice (a local
+      //    materialization still moves no bytes across the network).
+      //    The stage's checkpointed result feeds the sink and both
+      //    blooms from one execution.
+      val fresh = timed(stageLog, "gates_exact_dedup") {
+        val hashed = gated.withColumn("text_hash", xxhash64(col("text")))
+        keepFirstUnseen(
+          if (qualityGate.isDefined) hashed.localCheckpoint(true) else hashed,
+          "text_hash", textPrev.map(_._2), textBloomPath, "text",
+          Dedup.MaxBroadcastKeyRows, Seq(col("canon_url"), col("text")),
+          stageLog)
+      }
+
+      // 3b. optional near-dup stage: band the batch ONCE, then
+      //     (a) in-batch greedy keep-first — any doc colliding with a
+      //         smaller doc_id on >= minBands bands drops;
+      //     (b) cross-batch — any doc colliding with the persisted
+      //         index drops (the corpus side is touched only through
+      //         its (band, bucket) rows — no text rescan).
+      // The band append happens AFTER the substring gate and the shard
+      // write (step 4b) so the index holds exactly the SHIPPED corpus's
+      // rows (ADVICE r19: appending the near-dup survivors here would
+      // persist band rows for docs 3c then drops — never-shipped
+      // content that silently gates genuinely novel future docs).
+      val bandIdx = nearDup.map { nd =>
+        timed(stageLog, "neardup_band") {
+          Dedup.minhashIndex(fresh, "doc_id", "text",
+            nd.k, nd.numHashes, nd.bands).localCheckpoint(true)
+        }
+      }
+      val survivors = nearDup.fold(fresh) { nd =>
+        timed(stageLog, "neardup_gate") {
+          fresh.join(
+            nearDupDrops(bandIdx.get,
+              narrowedCorpusIndex(ss, nd.indexDir, bandIdx.get, nd.minBands,
+                stageLog),
+              nd.minBands),
+            Seq("doc_id"), "left_anti").localCheckpoint(true)
+        }
+      }
+
+      // 3c. optional exact-substring gate (r19): drop any doc sharing a
+      //     >= minLen VERBATIM run with (a) the shipped corpus — probed
+      //     through the tiered anchor index, text fetched candidate-
+      //     narrowed from the shard store — or (b) a smaller-id doc in
+      //     this batch (keep-first, like every other gate). Shipped
+      //     docs' anchors append in step 4b so the index tracks exactly
+      //     the shipped corpus. Runs AFTER the near-dup gate: its
+      //     probes then only pay for docs every cheaper gate already
+      //     passed.
+      // The batch is winnowed ONCE (VERDICT r19 item 2 — the near-dup
+      // gate's "banded ONCE" discipline): this one checkpointed anchor
+      // table drives the cross-corpus probe, the in-batch self-pair
+      // check, and (after the shard write) the index append. Pre-r20
+      // each of the three re-ran the winnow kernel over the batch —
+      // measured as ≥¾ of the gate's 12.7-15.3 s/batch steady cost.
+      val batchAnchors = substr.map { sg =>
+        timed(stageLog, "substr_winnow") {
+          Dedup.winnowIndex(survivors, "doc_id", "text", sg.minLen, sg.k)
+            .localCheckpoint(true)
+        }
+      }
+      val shipping = substr.fold(survivors) { sg =>
+        val dropIds = timed(stageLog, "substr_gate") {
+          // the cross probe needs BOTH the anchor index (candidates)
+          // and the shipped text (verification), and each store needs
+          // its OWN data check: an all-dropped opening batch appends an
+          // EMPTY anchor frame — whose zero-row part files still carry
+          // a schema — while the shard store's dynamic-partition write
+          // leaves no files at all, so reading it would die in schema
+          // inference. No shipped text ⇒ no cross-batch dup is
+          // possible ⇒ skipping is exact.
+          def shardHasData: Boolean = {
+            val (sfs, sroot) = fsOf(ss, shardDir)
+            sfs.exists(sroot) && sfs.listStatus(sroot).exists(st =>
+              st.isDirectory && sfs.listStatus(st.getPath).exists(f =>
+                f.isFile && f.getPath.getName.endsWith(".parquet")))
+          }
+          // the cross-corpus probe and the in-batch self-pair check are
+          // INDEPENDENT reads of the same checkpointed anchor table, so
+          // they run as concurrent Spark actions (r20): the self check
+          // rides the probe's scheduling gaps instead of serializing
+          // ~3 s/batch behind it. Each future logs into its OWN buffer,
+          // merged into the caller's after both complete (the shared
+          // buffer is not thread-safe).
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          implicit val ec: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.global
+          def privateLog() = stageLog.map(_ =>
+            scala.collection.mutable.Buffer.empty[(String, Double)])
+          val crossLog = privateLog(); val selfLog = privateLog()
+          val crossF = Future(timed(crossLog, "substr_cross") {
+            (if (graft.sources.TieredIndex.liveNames(ss, sg.indexDir).nonEmpty
+                && shardHasData)
+              Dedup.exactSubstrPairsAgainstDir(ss, sg.indexDir,
+                  ss.read.parquet(shardDir).select("doc_id", "text"),
+                  survivors, "doc_id", "text", sg.minLen, sg.k, sg.maxDf,
+                  stageLog = crossLog, batchAnchors = batchAnchors)
+                .select(col("batch_id").as("doc_id"))
+            else survivors.select("doc_id").limit(0))
+              .localCheckpoint(true)
+          })
+          val selfF = Future(timed(selfLog, "substr_self") {
+            Dedup.exactSubstrPairsFromAnchors(survivors,
+                batchAnchors.get, "doc_id", "text", sg.minLen, sg.k, sg.maxDf)
+              .select(col("b_id").as("doc_id"))
+              .localCheckpoint(true)
+          })
+          val cross = Await.result(crossF, Duration.Inf)
+          val inBatch = Await.result(selfF, Duration.Inf)
+          stageLog.foreach(buf =>
+            Seq(crossLog, selfLog).flatten.foreach(buf ++= _))
+          cross.unionByName(inBatch).distinct().localCheckpoint(true)
+        }
+        timed(stageLog, "substr_filter") {
+          survivors.join(dropIds, Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+        }
+      }
+
+      // 4. shard append (per-batch files keep ShardSink's (rank, id)
+      //    in-file training order; resume/manifest read the union).
+      //    The shipped-row count rides the SAME job as an observed
+      //    metric — no separate count action (r15, VERDICT item 5)
+      val obs = org.apache.spark.sql.Observation()
+      val n = timed(stageLog, "shard_write") {
+        ShardSink.appendShards(
+          shipping.select("doc_id", "canon_url", "text")
+            .observe(obs, count(lit(1)).as("n")),
+          "doc_id", shardDir, numShards)
+        // a zero-row batch folds to an empty write whose plan never
+        // executes, so the metric key is simply absent — that IS n = 0
+        obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
+      }
+
+      // 4b. dedup-index appends, AFTER the shard write succeeds and
+      //     semi-joined to the final shipping set (ADVICE r19, both
+      //     findings): each persisted index holds exactly the SHIPPED
+      //     corpus's rows. Appending pre-gate (the r19 shape) persisted
+      //     band rows for substring-gate drops — content that never
+      //     shipped silently gating novel future docs — and a crash
+      //     between an append and the shard write left orphan rows the
+      //     replay could never reconcile. A crash in the remaining
+      //     window (shard write done, append pending) under-represents
+      //     the last batch until its at-least-once replay, whose
+      //     re-appended rows the probes' replay-defense distinct
+      //     already absorbs — the same window the text bloom accepts.
+      val shipIds = shipping.select("doc_id")
+      bandIdx.zip(nearDup).foreach { case (idx, nd) =>
+        timed(stageLog, "neardup_append") {
+          idx.join(shipIds, idx("doc") === shipIds("doc_id"), "left_semi")
+            .write.mode("append").parquet(nd.indexDir)
+        }
+      }
+      batchAnchors.zip(substr).foreach { case (anchors, sg) =>
+        timed(stageLog, "substr_append") {
+          // coalesced: the anchor table is 32 checkpoint partitions,
+          // and 32 small files per batch made the tail's per-probe
+          // footer cost 8x what the band index pays (measured 224 tail
+          // files by batch 7 in the gate-on endurance); tail files are
+          // read IN FULL per probe until the anchor phase folds them,
+          // so fewer, bigger appends are strictly better
+          anchors.join(shipIds, anchors("doc") === shipIds("doc_id"),
+              "left_semi")
+            .coalesce(4)
+            .write.mode("append").parquet(sg.indexDir)
+        }
+      }
+
+      // 5. fold this batch's keys into the persisted frontier state.
+      //    URL bloom learns every canonical url SEEN (kept or dropped
+      //    by quality/text-dedup — a crawled url is spent either way);
+      //    text bloom learns the hashes that actually shipped. Each
+      //    save reports the active epoch's fill ratio and the epoch
+      //    count, rolling onto a fresh epoch past `rolloverAt` (the
+      //    object scaladoc's BLOOM CAPACITY section)
+      timed(stageLog, "bloom_fold") {
+        val gauges = Seq(
+          "url_bloom" -> saveBloom(ss, urlBloomPath, urlPrev,
+            urlFresh.select("canon_url"), "canon_url", expectedItems,
+            rolloverAt),
+          "text_bloom" -> saveBloom(ss, textBloomPath, textPrev,
+            shipping.select("text_hash"), "text_hash", expectedItems,
+            rolloverAt))
+        stageLog.foreach { buf =>
+          gauges.foreach { case (name, g) =>
+            g.foreach { case (fill, epochs) =>
+              buf += s"fill:$name" -> fill
+              buf += s"epochs:$name" -> epochs.toDouble
+            }
+          }
+        }
+      }
+
+      // 6. drift monitor fold: count increments of what actually
+      //    SHIPPED (per source host) — the t36 card stays readable at
+      //    any point via [[driftCard]]. Both count tables move as ONE
+      //    kind-tagged, batch-bounded APPEND (O(batch) per fold; the
+      //    accumulated store is only ever touched by compaction)
+      timed(stageLog, "drift_fold") {
+        driftDir.foreach { dd =>
+          val src = shipping.select(hostOf(col("canon_url")).as("source"),
+            col("text"))
+          Drift.foldDocsIntoStore(dd, src, "source", "text")
+        }
+      }
+      n
     } finally {
       ss.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!rddsBefore.contains(id)) rdd.unpersist(blocking = false)
@@ -227,293 +467,20 @@ object CorpusIngest {
     }
   }
 
-  private def ingestBatchBody(batch: DataFrame, urlBloomPath: String,
-      textBloomPath: String, shardDir: String, numShards: Int,
-      expectedItems: Long, qualityGate: Option[QualityGate],
-      driftDir: Option[String], repairEncoding: Boolean,
-      nearDup: Option[NearDupGate],
-      substr: Option[SubstrGate],
-      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]],
-      rolloverAt: Double,
-      ckptPayload: DataFrame => DataFrame,
-      timed: TimedFn): Long = {
-    val ss = batch.sparkSession
-
-    // persisted frontier state is read ONCE per batch; the epoch
-    // bytes feed both the probes and the end-of-batch merges (r15 —
-    // previously each artifact was read twice)
-    val (urlPrev, textPrev) = timed("state_load") {
-      // a retired drift layout fails here, before anything is written
-      driftDir.foreach(Drift.recoverStore(ss, _))
-      (loadBloomEpochs(ss, urlBloomPath), loadBloomEpochs(ss, textBloomPath))
-    }
-
-    // 1. within-batch URL dedup (min doc_id per canonical url) + the
-    //    cross-batch URL frontier ([[keepFirstUnseen]]). The optional
-    //    t38 encoding repair is a payload column, so it runs on the
-    //    JOINED survivors — frontier-dropped docs never pay the
-    //    repair regex. Repair stays ahead of every gate and hash (its
-    //    ordering contract: a mojibake variant of a shipped page must
-    //    repair to the same bytes and fall to the exact-text dedup);
-    //    canonical urls never depended on the text.
-    //    The joined rows are the stage's single payload
-    //    materialization; the copies split stays lazy, and both
-    //    downstream consumers (gates chain, url-bloom fold) derive it
-    //    off those checkpoint blocks.
-    val urlFresh = timed("canon_frontier") {
-      val text =
-        if (repairEncoding) TextOps.repairMojibake(col("text"))
-        else col("text")
-      keepFirstUnseen(
-        batch.withColumn("canon_url", TextOps.canonicalizeUrl(col("url"))),
-        "canon_url", urlPrev.map(_._2), urlBloomPath, "url",
-        MaxBroadcastUrlRows, Seq(text.as("text")), ckptPayload, stageLog)
-    }
-
-    // 2. quality gates — the t33 heuristic composite, then (when a
-    //    model is supplied) the t35 trained filter: broadcast-weights
-    //    scoring, keep P(keep) ≥ threshold
-    val shaped = urlFresh
-      .filter(TextOps.gopherShape(col("text")).getField("keep"))
-    val gated = qualityGate.fold(shaped) { g =>
-      QualityClassifier
-        .score(shaped, "doc_id", "text", g.bias, g.weights, "__q", g.link)
-        .filter(col("__q") >= g.threshold).drop("__q")
-    }
-
-    // 3. exact-text dedup: in-batch keep-first (min doc_id per text
-    //    hash) + the cross-batch text frontier ([[keepFirstUnseen]]),
-    //    the payload joined back to the (text_hash, doc_id) winners
-    //    like the URL stage's. With this the payload crosses the
-    //    network exactly ONCE per batch — in the shard write, where
-    //    clustering requires it. Without a classifier gate the chain
-    //    feeding the winners is map-side codegen off the urlFresh
-    //    checkpoint (gopher + hash) and simply re-runs for the join
-    //    pass; WITH one, the gated rows checkpoint once so the
-    //    feature aggregation isn't paid twice (a local
-    //    materialization still moves no bytes across the network).
-    val fresh = timed("gates_exact_dedup") {
-      val hashed0 = gated.withColumn("text_hash", xxhash64(col("text")))
-      val hashed =
-        if (qualityGate.isDefined) ckptPayload(hashed0) else hashed0
-      ckptPayload( // one execution feeds sink + both blooms
-        keepFirstUnseen(hashed, "text_hash", textPrev.map(_._2),
-          textBloomPath, "text", MaxBroadcastKeyRows,
-          Seq(col("canon_url"), col("text")), identity, stageLog))
-    }
-
-    // 3b. optional near-dup stage: band the batch ONCE, then
-    //     (a) in-batch greedy keep-first — any doc colliding with a
-    //         smaller doc_id on >= minBands bands drops;
-    //     (b) cross-batch — any doc colliding with the persisted
-    //         index drops (the corpus side is touched only through
-    //         its (band, bucket) rows — no text rescan).
-    // The band append happens AFTER the substring gate and the shard
-    // write (step 4b) so the index holds exactly the SHIPPED corpus's
-    // rows (ADVICE r19: appending the near-dup survivors here would
-    // persist band rows for docs 3c then drops — never-shipped
-    // content that silently gates genuinely novel future docs).
-    val bandIdx = nearDup.map { nd =>
-      timed("neardup_band") {
-        Dedup.minhashIndex(fresh, "doc_id", "text",
-          nd.k, nd.numHashes, nd.bands).localCheckpoint(true)
-      }
-    }
-    val survivors = nearDup.fold(fresh) { nd =>
-      timed("neardup_gate") {
-        ckptPayload(fresh.join(
-          nearDupDrops(bandIdx.get,
-            narrowedCorpusIndex(ss, nd.indexDir, bandIdx.get, nd.minBands,
-              stageLog),
-            nd.minBands),
-          Seq("doc_id"), "left_anti"))
-      }
-    }
-
-    // 3c. optional exact-substring gate (r19): drop any doc sharing a
-    //     >= minLen VERBATIM run with (a) the shipped corpus — probed
-    //     through the tiered anchor index, text fetched candidate-
-    //     narrowed from the shard store — or (b) a smaller-id doc in
-    //     this batch (keep-first, like every other gate). Shipped
-    //     docs' anchors append in step 4b so the index tracks exactly
-    //     the shipped corpus. Runs AFTER the near-dup gate: its
-    //     probes then only pay for docs every cheaper gate already
-    //     passed.
-    // The batch is winnowed ONCE (VERDICT r19 item 2 — the near-dup
-    // gate's "banded ONCE" discipline): this one checkpointed anchor
-    // table drives the cross-corpus probe, the in-batch self-pair
-    // check, and (after the shard write) the index append. Pre-r20
-    // each of the three re-ran the winnow kernel over the batch —
-    // measured as ≥¾ of the gate's 12.7-15.3 s/batch steady cost.
-    val batchAnchors = substr.map { sg =>
-      timed("substr_winnow") {
-        Dedup.winnowIndex(survivors, "doc_id", "text", sg.minLen, sg.k)
-          .localCheckpoint(true)
-      }
-    }
-    val shipping = substr.fold(survivors) { sg =>
-      val dropIds = timed("substr_gate") {
-        // the cross probe needs BOTH the anchor index (candidates)
-        // and the shipped text (verification), and each store needs
-        // its OWN data check: an all-dropped opening batch appends an
-        // EMPTY anchor frame — whose zero-row part files still carry
-        // a schema — while the shard store's dynamic-partition write
-        // leaves no files at all, so reading it would die in schema
-        // inference. No shipped text ⇒ no cross-batch dup is
-        // possible ⇒ skipping is exact.
-        def shardHasData: Boolean = {
-          val (sfs, sroot) = fsOf(ss, shardDir)
-          sfs.exists(sroot) && sfs.listStatus(sroot).exists(st =>
-            st.isDirectory && sfs.listStatus(st.getPath).exists(f =>
-              f.isFile && f.getPath.getName.endsWith(".parquet")))
-        }
-        // the cross-corpus probe and the in-batch self-pair check are
-        // INDEPENDENT reads of the same checkpointed anchor table, so
-        // they run as concurrent Spark actions (r20): the self check
-        // rides the probe's scheduling gaps instead of serializing
-        // ~3 s/batch behind it. Each future logs into its OWN buffer,
-        // merged into the caller's after both complete (the shared
-        // buffer is not thread-safe).
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        def privateLog() = stageLog.map(_ =>
-          scala.collection.mutable.Buffer.empty[(String, Double)])
-        def timedInto(log: Option[scala.collection.mutable.Buffer[(String, Double)]],
-                      name: String)(f: => DataFrame): DataFrame = {
-          val t0 = System.nanoTime(); val a = f
-          log.foreach(_ += name -> (System.nanoTime() - t0) / 1e9); a
-        }
-        val crossLog = privateLog(); val selfLog = privateLog()
-        val crossF = Future(timedInto(crossLog, "substr_cross") {
-          (if (graft.sources.TieredIndex.liveNames(ss, sg.indexDir).nonEmpty
-              && shardHasData)
-            Dedup.exactSubstrPairsAgainstDir(ss, sg.indexDir,
-                ss.read.parquet(shardDir).select("doc_id", "text"),
-                survivors, "doc_id", "text", sg.minLen, sg.k, sg.maxDf,
-                stageLog = crossLog, batchAnchors = batchAnchors)
-              .select(col("batch_id").as("doc_id"))
-          else survivors.select("doc_id").limit(0))
-            .localCheckpoint(true)
-        })
-        val selfF = Future(timedInto(selfLog, "substr_self") {
-          Dedup.exactSubstrPairsFromAnchors(survivors,
-              batchAnchors.get, "doc_id", "text", sg.minLen, sg.k, sg.maxDf)
-            .select(col("b_id").as("doc_id"))
-            .localCheckpoint(true)
-        })
-        val cross = Await.result(crossF, Duration.Inf)
-        val inBatch = Await.result(selfF, Duration.Inf)
-        stageLog.foreach(buf =>
-          Seq(crossLog, selfLog).flatten.foreach(buf ++= _))
-        cross.unionByName(inBatch).distinct().localCheckpoint(true)
-      }
-      timed("substr_filter") {
-        ckptPayload(survivors.join(dropIds, Seq("doc_id"), "left_anti"))
-      }
-    }
-
-    // 4. shard append (per-batch files keep ShardSink's (rank, id)
-    //    in-file training order; resume/manifest read the union).
-    //    The shipped-row count rides the SAME job as an observed
-    //    metric — no separate count action (r15, VERDICT item 5)
-    val obs = org.apache.spark.sql.Observation()
-    val n = timed("shard_write") {
-      ShardSink.appendShards(
-        shipping.select("doc_id", "canon_url", "text")
-          .observe(obs, count(lit(1)).as("n")),
-        "doc_id", shardDir, numShards)
-      // a zero-row batch folds to an empty write whose plan never
-      // executes, so the metric key is simply absent — that IS n = 0
-      obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
-    }
-
-    // 4b. dedup-index appends, AFTER the shard write succeeds and
-    //     semi-joined to the final shipping set (ADVICE r19, both
-    //     findings): each persisted index holds exactly the SHIPPED
-    //     corpus's rows. Appending pre-gate (the r19 shape) persisted
-    //     band rows for substring-gate drops — content that never
-    //     shipped silently gating novel future docs — and a crash
-    //     between an append and the shard write left orphan rows the
-    //     replay could never reconcile. A crash in the remaining
-    //     window (shard write done, append pending) under-represents
-    //     the last batch until its at-least-once replay, whose
-    //     re-appended rows the probes' replay-defense distinct
-    //     already absorbs — the same window the text bloom accepts.
-    val shipIds = shipping.select("doc_id")
-    bandIdx.zip(nearDup).foreach { case (idx, nd) =>
-      timed("neardup_append") {
-        idx.join(shipIds, idx("doc") === shipIds("doc_id"), "left_semi")
-          .write.mode("append").parquet(nd.indexDir)
-      }
-    }
-    batchAnchors.zip(substr).foreach { case (anchors, sg) =>
-      timed("substr_append") {
-        // coalesced: the anchor table is 32 checkpoint partitions,
-        // and 32 small files per batch made the tail's per-probe
-        // footer cost 8x what the band index pays (measured 224 tail
-        // files by batch 7 in the gate-on endurance); tail files are
-        // read IN FULL per probe until the anchor phase folds them,
-        // so fewer, bigger appends are strictly better
-        anchors.join(shipIds, anchors("doc") === shipIds("doc_id"),
-            "left_semi")
-          .coalesce(4)
-          .write.mode("append").parquet(sg.indexDir)
-      }
-    }
-
-    // 5. fold this batch's keys into the persisted frontier state.
-    //    URL bloom learns every canonical url SEEN (kept or dropped
-    //    by quality/text-dedup — a crawled url is spent either way);
-    //    text bloom learns the hashes that actually shipped. Each
-    //    save reports the active epoch's fill ratio and the epoch
-    //    count, rolling onto a fresh epoch past `rolloverAt` (the
-    //    object scaladoc's BLOOM CAPACITY section)
-    timed("bloom_fold") {
-      val gauges = Seq(
-        "url_bloom" -> saveBloom(ss, urlBloomPath, urlPrev,
-          urlFresh.select("canon_url"), "canon_url", expectedItems,
-          rolloverAt),
-        "text_bloom" -> saveBloom(ss, textBloomPath, textPrev,
-          shipping.select("text_hash"), "text_hash", expectedItems,
-          rolloverAt))
-      stageLog.foreach { buf =>
-        gauges.foreach { case (name, g) =>
-          g.foreach { case (fill, epochs) =>
-            buf += s"fill:$name" -> fill
-            buf += s"epochs:$name" -> epochs.toDouble
-          }
-        }
-      }
-    }
-
-    // 6. drift monitor fold: count increments of what actually
-    //    SHIPPED (per source host) — the t36 card stays readable at
-    //    any point via [[driftCard]]. Both count tables move as ONE
-    //    kind-tagged, batch-bounded APPEND (O(batch) per fold; the
-    //    accumulated store is only ever touched by compaction)
-    timed("drift_fold") {
-      driftDir.foreach { dd =>
-        val src = shipping.select(hostOf(col("canon_url")).as("source"),
-          col("text"))
-        Drift.foldDocsIntoStore(dd, src, "source", "text")
-      }
-    }
-    n
+  /** Run `f`, logging its wall seconds under `name` into `log` — the
+    * one stage timer of [[ingestBatch]]'s `stageLog` profile. */
+  private def timed[A](
+      log: Option[scala.collection.mutable.Buffer[(String, Double)]],
+      name: String)(f: => A): A = {
+    val t0 = System.nanoTime(); val a = f
+    log.foreach(_ += name -> (System.nanoTime() - t0) / 1e9); a
   }
-
-  /** Broadcast cap for NARROW key tables — the near-dup (band,
-    * bucket) pairs and the (text_hash, doc_id) winners, ~16-20 bytes
-    * a row: 2M rows ≈ 40 MB serialized, comfortably under Spark's
-    * broadcast limits; larger batches fall back to a shuffled
-    * semi-join. */
-  private[graft] val MaxBroadcastKeyRows = 2000000L
 
   /** Broadcast cap for the URL winner table, which carries full
     * canonical-url STRINGS (~100-200 bytes a row, plus JVM string
     * overhead once deserialized): 250k rows ≈ 25-50 MB serialized —
-    * the row-count cap must be width-aware or a 2M-row URL broadcast
+    * the row-count cap must be width-aware or a 2M-row
+    * ([[Dedup.MaxBroadcastKeyRows]], the narrow-key cap) URL broadcast
     * would build a multi-hundred-MB relation on the driver (r15
     * review finding). */
   private[graft] val MaxBroadcastUrlRows = 250000L
@@ -534,12 +501,11 @@ object CorpusIngest {
     * copies are invisible to a key-equality join, so that slice —
     * normally empty — collapses to its min `payload` row, and the
     * unique bulk passes the join untouched. Returns
-    * (key, doc_id, payload...); the joined rows pass through
-    * `materialize` before that split. */
+    * (key, doc_id, payload...), checkpointed after that split: every
+    * consumer of the stage reads those blocks. */
   private def keepFirstUnseen(rows: DataFrame, key: String,
       bloom: Seq[Array[Byte]], bloomPath: String, name: String,
       broadcastCap: Long, payload: Seq[Column],
-      materialize: DataFrame => DataFrame,
       stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]])
       : DataFrame = {
     val flagged = BloomMembership.flagSeenAny(
@@ -556,11 +522,11 @@ object CorpusIngest {
     val wj =
       if (winners.count() <= broadcastCap) broadcast(winners.alias("w"))
       else winners.alias("w")
-    val joined = materialize(rows.alias("r")
+    val joined = rows.alias("r")
       .join(wj, col(s"r.$key") <=> col(s"w.$key") &&
         col("r.doc_id") === col("w.doc_id"))
       .select(Seq(col(s"r.$key"), col("r.doc_id")) ++ payload :+
-        col("w.__copies"): _*))
+        col("w.__copies"): _*)
     val payloadNames = joined.columns.slice(2, joined.columns.length - 1)
     joined.filter(col("__copies") === 1).drop("__copies")
       .unionByName(joined.filter(col("__copies") > 1)
@@ -568,56 +534,29 @@ object CorpusIngest {
         .agg(min(struct(payloadNames.map(col).toIndexedSeq: _*)).as("__r"))
         .select(Seq(col(key), col("doc_id")) ++
           payloadNames.map(n => col(s"__r.$n")): _*))
+      .localCheckpoint(true)
   }
 
   /** Near-dup drop set: batch docs colliding with a smaller-id batch
-    * doc (keep-first) or ANY corpus doc on ≥ `minBands` bands.
-    * Collisions are counted PER PARTNER PAIR (the minhashLshPairs
-    * contract) and only then reduced to a doc set — summing bands
-    * across all partners would let many sub-threshold overlaps
-    * (shared boilerplate with several docs) add up to a false drop
-    * (CorpusIngestSpec pins both directions).
-    *
-    * The corpus side is NARROWED before anything shuffles it
-    * (VERDICT r14 item 1): a broadcast semi-join on the batch's
-    * distinct (band, bucket) keys filters the persisted index
-    * map-side — the batch key set is batch-sized (≤ |batch| × bands
-    * rows), the index is corpus-sized, and only rows in a bucket the
-    * batch actually touches can ever collide. The replay-defense
-    * distinct (foreachBatch is at-least-once; a retried batch's
-    * re-appended band rows would otherwise double-count and halve the
-    * effective threshold) then runs on the collision-sized slice, not
-    * the corpus — per-batch shuffle work no longer grows with the
-    * index; the index contributes one filtered columnar scan. */
+    * doc (keep-first) or ANY corpus doc on ≥ `minBands` bands — the
+    * gate's threshold over [[Dedup.bandPairCounts]]. That core counts
+    * PER PARTNER PAIR (summing bands across partners would let several
+    * sub-threshold overlaps, e.g. shared boilerplate, add up to a
+    * false drop), narrows the corpus to the batch's (band, bucket)
+    * keys before anything shuffles it (VERDICT r14 item 1), and runs
+    * the replay-defense distinct (foreachBatch is at-least-once) on
+    * that collision-sized slice; CorpusIngestSpec pins both.
+    * `maxBroadcastKeys` moves the key table's broadcast guard (past it
+    * the semi-join runs shuffled). */
   private[graft] def nearDupDrops(batchIdx: DataFrame,
-                                  corpusIdx: DataFrame,
-                                  minBands: Int,
-                                  maxBroadcastKeys: Long = MaxBroadcastKeyRows): DataFrame = {
-    val a = batchIdx.alias("a"); val b = batchIdx.alias("b")
-    val dropIn = a.join(b, col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") && col("a.doc") < col("b.doc"))
-      .groupBy(col("a.doc").as("__a"), col("b.doc").as("doc_id"))
-      .agg(count(lit(1)).as("__nb")).filter(col("__nb") >= minBands)
-      .select("doc_id")
-    // The broadcast is size-guarded (r15 review finding): a backfill
-    // batch of 10M docs × 16 bands is a multi-GB key set no driver
-    // should collect. batchIdx is localCheckpointed, so the count is
-    // a cheap cached-block pass; past the cap the semi-join runs as a
-    // plain shuffle — the narrowing survives, only its physical form
-    // changes (and a batch that big is corpus-scale anyway).
-    val batchKeys = batchIdx.select("band", "bucket").distinct()
-    val narrowKeys =
-      if (batchIdx.count() <= maxBroadcastKeys) broadcast(batchKeys)
-      else batchKeys
-    val dropCross = corpusIdx
-      .join(narrowKeys, Seq("band", "bucket"), "left_semi")
-      .distinct().alias("c")
-      .join(batchIdx.alias("p"), col("c.band") === col("p.band") &&
-        col("c.bucket") === col("p.bucket") && col("c.doc") =!= col("p.doc"))
-      .groupBy(col("c.doc").as("__c"), col("p.doc").as("doc_id"))
-      .agg(count(lit(1)).as("__nb")).filter(col("__nb") >= minBands)
-      .select("doc_id")
-    dropIn.unionByName(dropCross).distinct()
+      corpusIdx: DataFrame, minBands: Int,
+      maxBroadcastKeys: Long = Dedup.MaxBroadcastKeyRows): DataFrame = {
+    def dropped(pairs: DataFrame, id: String) =
+      pairs.filter(col("n_bands") >= minBands).select(col(id).as("doc_id"))
+    dropped(Dedup.bandPairCounts(batchIdx), "b_id")
+      .unionByName(dropped(Dedup.bandPairCounts(batchIdx, Some(corpusIdx),
+        maxBroadcastKeys = maxBroadcastKeys), "batch_id"))
+      .distinct()
   }
 
   /** Side-store suffix where each batch's bloom-POSITIVE-dropped
@@ -758,10 +697,7 @@ object CorpusIngest {
     * every few hundred batches still compacts on schedule. Operators
     * who cannot absorb even the single-pass spike should leave
     * compactEvery = 0 and run [[runMaintenance]] off-peak while the
-    * stream is stopped.
-    *
-    * `payloadStorage` forwards to [[ingestBatch]]'s wide-payload
-    * checkpoint knob. */
+    * stream is stopped. */
   def start(stream: DataFrame, urlBloomPath: String, textBloomPath: String,
             shardDir: String, numShards: Int = 8,
             expectedItems: Long = 100000L,
@@ -771,14 +707,12 @@ object CorpusIngest {
             nearDup: Option[NearDupGate] = None,
             substrGate: Option[SubstrGate] = None,
             compactEvery: Int = 0,
-            rolloverAt: Double = BloomMembership.FillWarnAt,
-            payloadStorage: Option[org.apache.spark.storage.StorageLevel] = None): StreamingQuery = {
+            rolloverAt: Double = BloomMembership.FillWarnAt): StreamingQuery = {
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ingestBatch(batch, urlBloomPath, textBloomPath, shardDir,
           numShards, expectedItems, qualityGate, driftDir, repairEncoding,
-          nearDup, substrGate, rolloverAt = rolloverAt,
-          payloadStorage = payloadStorage)
+          nearDup, substrGate, rolloverAt = rolloverAt)
         if (compactEvery > 0)
           maintenancePhasesDue(batchId, compactEvery).foreach(k =>
             runMaintenancePhase(batch.sparkSession, k, urlBloomPath,
@@ -936,8 +870,8 @@ object CorpusIngest {
     * bounded-scan evidence the ingest log prints. */
   private[graft] def narrowedCorpusIndex(ss: SparkSession, indexDir: String,
       batchIdx: DataFrame, minBands: Int,
-      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None,
-      maxBroadcastKeys: Long = MaxBroadcastKeyRows): DataFrame = {
+      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None)
+      : DataFrame = {
     import ss.implicits._
     graft.sources.TieredIndex.probe(ss, indexDir,
         Seq.empty[(Long, Int, Long)].toDF("doc", "band", "bucket"), "ndidx",
@@ -963,7 +897,8 @@ object CorpusIngest {
       // same size guard as every other key-table broadcast in the
       // loop: a corpus-scale backfill batch's hot set falls back to
       // a shuffled semi-join, never a multi-GB driver relation
-      val hotJoin = if (nHot <= maxBroadcastKeys) broadcast(hot) else hot
+      val hotJoin =
+        if (nHot <= Dedup.MaxBroadcastKeyRows) broadcast(hot) else hot
       graft.sources.TieredIndex.Hot(nHot,
         () => hot.select(col("band").cast("long"), col("bucket"))
           .as[(Long, Long)].collect().map(t => Seq(t._1, t._2)).toIndexedSeq,

@@ -1081,39 +1081,59 @@ class CorpusIngestSpec extends SparkSpec {
       "only the shipped doc's anchors are indexed")
   }
 
-  test("payloadStorage=DISK_ONLY checkpointing is a pure physical " +
-      "knob: shards, drift card and gate decisions identical to the " +
-      "memory-first default") {
-    val dir = Files.createTempDirectory("ingest_disklvl").toString
-    // every drop class in one batch: exact dup, near-dup, plus clean
-    val docs = ((1L to 20L).map(i => (s"https://site.com/p$i", i, good(i)))
-      ++ Seq(("https://site.com/dup", 100L, good(1L)),
-             ("https://site.com/near", 101L, good(2L) + " tail9")))
-      .toDF("url", "doc_id", "text")
-    def run(tag: String,
-            lvl: Option[org.apache.spark.storage.StorageLevel]) = {
-      val (ub, tb, sh, dd, idx) = (s"$dir/$tag/ub", s"$dir/$tag/tb",
-        s"$dir/$tag/sh", s"$dir/$tag/dd", s"$dir/$tag/idx")
-      val n = CorpusIngest.ingestBatch(docs, ub, tb, sh, numShards = 2,
-        driftDir = Some(dd), repairEncoding = true,
-        nearDup = Some(CorpusIngest.NearDupGate(idx)),
-        payloadStorage = lvl)
-      (n,
-        spark.read.parquet(sh).select("shard", "rk", "doc_id", "text")
-          .orderBy("shard", "rk").collect().map(_.toSeq).toSeq,
-        CorpusIngest.driftCard(spark, dd).collect().map(_.toSeq).toSeq)
+  test("job inventory: Spark jobs per ingestBatch call and per " +
+      "maintenance pass over a fixed 3-batch sequence (near-dup gate " +
+      "and drift on)") {
+    val dir = Files.createTempDirectory("ingest_jobs").toString
+    val (ub, tb, shards, dd) =
+      (s"$dir/ub", s"$dir/tb", s"$dir/shards", s"$dir/drift")
+    val nd = Some(CorpusIngest.NearDupGate(s"$dir/ndidx"))
+    def near(i: Long) = good(1) + s" tail$i"
+    val b1 = Seq(
+      ("https://site.com/p1", 1L, good(1)),
+      ("https://WWW.site.com/p1?utm_source=x", 2L, good(2)), // URL dup
+      ("https://site.com/p3", 3L, good(1)),                  // text dup
+      ("https://site.com/p4", 4L, near(4)),                  // near-dup
+      ("https://site.com/p5", 5L, good(5)))
+    val b2 = Seq(
+      ("https://site.com/p5?ref=tw", 6L, good(6)),           // URL dup
+      ("https://site.com/p7", 7L, good(5)),                  // text dup
+      ("https://site.com/p8", 8L, near(8)),                  // near-dup
+      ("https://site.com/p9", 9L, good(9)))
+    val b3 = b2 :+ (("https://site.com/p10", 10L, good(10))) // replay + 1 new
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
     }
-    val a = run("mem", None)
-    val b = run("disk",
-      Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    assert(a == b, "DISK_ONLY payload checkpoints changed results")
-    // both planted dups dropped, the bulk shipped — the knob is
-    // physical only, so the exact count just has to MATCH across
-    // levels (asserted above)
-    val shippedIds = a._2.map(_(2).asInstanceOf[Long]).toSet
-    assert(!shippedIds.contains(100L) && !shippedIds.contains(101L),
-      "a planted dup shipped")
-    assert(a._1 >= 15L, s"unexpectedly few docs shipped: ${a._1}")
+    def withJobs[A](f: => A): (A, Int) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val a = f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (a, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (shipped, counts) = try {
+      Seq(b1, b2, b3).map { b =>
+        val (n, batchJobs) = withJobs(CorpusIngest.ingestBatch(
+          b.toDF("url", "doc_id", "text"), ub, tb, shards, numShards = 2,
+          driftDir = Some(dd), nearDup = nd))
+        val (_, maintJobs) = withJobs(CorpusIngest.runMaintenance(spark,
+          ub, tb, shards, nd, Some(dd)))
+        (n, Seq(batchJobs, maintJobs))
+      }.unzip
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(shipped == Seq(2L, 1L, 1L))
+    // (ingestBatch, runMaintenance) jobs for batches 1, 2, 3. When the
+    // URL frontier stage checkpointed its joined rows instead of its
+    // result after the verbatim-copies split, the gates chain and the
+    // url-bloom fold each re-ran that split's shuffle, two more jobs a
+    // batch: 47, 19, 69, 25, 56, 25
+    assert(counts.flatten == Seq(45, 19, 67, 25, 54, 25), counts.toString)
   }
 
   test("per-stage profile: the stage log times every driver action " +

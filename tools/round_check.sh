@@ -10,7 +10,7 @@ cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/round_check}
 
-echo "== 1/7 env reads only in Bench.scala and Session.scala =="
+echo "== 1/8 env reads only in Bench.scala and Session.scala =="
 # library behaviour is set by arguments and inputs alone; only the
 # mains' settings (Bench) and the session's core count (Session) read
 # the environment
@@ -21,7 +21,7 @@ if [ -n "$ENV_READS" ]; then
   echo "ENV READ outside Bench.scala / Session.scala"; exit 1
 fi
 
-echo "== 2/7 directory-replace protocol only in DirSwap.scala =="
+echo "== 2/8 directory-replace protocol only in DirSwap.scala =="
 # every crash-safe directory replace goes through DirSwap.replace, so
 # its twin name and its swap are spelled nowhere else
 SWAPS=$(grep -rnE '"__compact"|"__fold"|DirSwap\.swap' src/main/scala \
@@ -31,16 +31,23 @@ if [ -n "$SWAPS" ]; then
   echo "TWIN NAME or DirSwap.swap outside DirSwap.scala"; exit 1
 fi
 
-echo "== 3/7 compile =="
+echo "== 3/8 compile =="
 sbt -batch compile
 
-echo "== 4/7 scalatest =="
+echo "== 4/8 perfbench harness builds against this library =="
+# the benchmark compiles perfbench/src together with src/main/scala; a
+# library signature change that breaks the harness fails here, not in
+# the benchmark run (run.build() skips the build while the sources are
+# unchanged since its last one)
+python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run; run.build()'
+
+echo "== 5/8 scalatest =="
 # stale suite XMLs from deleted specs otherwise inflate the directory
 # aggregate vs the fresh run's true tally (VERDICT r15 item 4)
 rm -rf target/test-reports
 sbt -batch test
 
-echo "== 5/7 verify dump + DuckDB oracle compare ($SF) =="
+echo "== 6/8 verify dump + DuckDB oracle compare ($SF) =="
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT"
 python3 tools/check.py "$SF" "$OUT"
@@ -77,13 +84,13 @@ else
   echo "load guard passed: 5-min load $LOAD5 <= $LOAD_MAX"
 fi
 
-echo "== 6/7 bench smoke (sf0.001, 1 run) =="
+echo "== 7/8 bench smoke (sf0.001, 1 run) =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_RUNS=1 \
   SPARK_GRAFT_BENCH_OUT=/tmp/round_check_bench.json \
   sbt -batch "runMain graft.Bench" > /dev/null
 grep -o '"metric":"total","value":[0-9.]*' /tmp/round_check_bench.json
 
-echo "== 7/7 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
+echo "== 8/8 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
 # the 13 flagged queries are the documented 1-row-scalar broadcast
 # nested loops (global aggregates joined back); anything NEW flagged
 # here is a plan regression the golden specs didn't cover
