@@ -49,36 +49,55 @@ object BloomMembership {
     * possibly clamp) differently. */
   def sketch(corpus: DataFrame, keyCol: String,
              expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    val numBits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
-    // BloomFilterAggregate SILENTLY clamps both sizes to the runtime-
-    // bloom-filter conf ceilings (defaults: 4M items / 64M bits) —
-    // fine for Catalyst's injected join filters, catastrophic here: a
-    // clamped filter saturates and flags everything maybe_seen with no
-    // error. Raise the ceilings to cover the request for the duration
-    // of the (eager) build, then restore — a session-wide raise would
-    // also enlarge Catalyst's auto-injected runtime join filters for
-    // every later query (ADVICE r5).
     val spark = corpus.sparkSession
     import spark.implicits._
+    val bytes = withSizing(spark, expectedItems, fpp) {
+      corpus.agg(sketchOf(col(keyCol), expectedItems, fpp).as("bloom"))
+        .head().getAs[Array[Byte]](0)
+    }
+    Seq(Option(bytes)).toDF("bloom")
+  }
+
+  /** The sketch aggregate over `key` — what [[sketch]] runs, as a
+    * column, so a loop can take it as an observed metric of a job that
+    * already runs (`Dataset.observe`). The action computing it must run
+    * inside [[withSizing]] with the same sizing; a null result means
+    * no rows. */
+  def sketchOf(key: Column, expectedItems: Long,
+               fpp: Double = 0.01): Column = {
+    require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
+    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
+    call_function("graft_bloom_agg", xxhash64(key), lit(expectedItems),
+      lit(BloomFilter.optimalNumOfBits(expectedItems, fpp)))
+  }
+
+  /** Run `f` — an action computing a [[sketchOf]] aggregate — with the
+    * runtime-bloom-filter conf ceilings raised to cover the sizing,
+    * then restore them. BloomFilterAggregate SILENTLY clamps both sizes
+    * to those ceilings (defaults: 4M items / 64M bits) — fine for
+    * Catalyst's injected join filters, catastrophic here: a clamped
+    * filter saturates and flags everything maybe_seen with no error.
+    * A session-wide raise would also enlarge Catalyst's auto-injected
+    * runtime join filters for every later query (ADVICE r5), hence the
+    * scope. */
+  def withSizing[A](spark: org.apache.spark.sql.SparkSession,
+                    expectedItems: Long, fpp: Double = 0.01)(f: => A): A = {
     val conf = spark.conf
     val keys = Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
       "spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
     val saved = keys.map(k => k -> conf.getOption(k))
-    val bytes = try {
-      keys.zip(Seq(expectedItems, numBits)).foreach { case (k, needed) =>
-        if (conf.getOption(k).map(_.toLong).getOrElse(0L) < needed)
-          conf.set(k, needed.toString)
+    try {
+      keys.zip(Seq(expectedItems,
+          BloomFilter.optimalNumOfBits(expectedItems, fpp))).foreach {
+        case (k, needed) =>
+          if (conf.getOption(k).map(_.toLong).getOrElse(0L) < needed)
+            conf.set(k, needed.toString)
       }
-      corpus.agg(call_function("graft_bloom_agg",
-        xxhash64(col(keyCol)), lit(expectedItems), lit(numBits)).as("bloom"))
-        .head().getAs[Array[Byte]](0)
+      f
     } finally saved.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
-    Seq(Option(bytes)).toDF("bloom")
   }
 
   /** Flag each batch row whose key the corpus bloom (from `sketch`)

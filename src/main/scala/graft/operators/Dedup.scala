@@ -182,8 +182,11 @@ object Dedup {
         bandPairCounts(localDf(batch, rows, probePlan.schema),
           Some(corpusIndex), dedupIndex, localKeys = Some(keys))
       case None =>
-        bandPairCounts(probePlan.localCheckpoint(true), Some(corpusIndex),
-          dedupIndex)
+        val rows = org.apache.spark.sql.Observation()
+        val probe = probePlan.observe(rows, count(lit(1)).as("n"))
+          .localCheckpoint(true)
+        bandPairCounts(probe, Some(corpusIndex), dedupIndex,
+          probeRows = rows.get.get("n").map(_.asInstanceOf[Long]))
     }
   }
 
@@ -204,38 +207,66 @@ object Dedup {
     *     every row of each touched key, so the distinct slice — and
     *     therefore every pair — is unchanged, but the per-probe
     *     shuffle is collision-bounded instead of re-shuffling the full
-    *     corpus-sized index every batch. The key table is broadcast
-    *     while the probe has at most `maxBroadcastKeys` rows (a cheap
-    *     pass when the probe is checkpointed) and semi-joined shuffled
-    *     past it — the narrowing survives, only its physical form
-    *     changes.
+    *     corpus-sized index every batch. The probe's key projection is
+    *     the semi-join's build side (a semi-join needs no distinct
+    *     build): broadcast while the probe has at most
+    *     `maxBroadcastKeys` rows and semi-joined shuffled past it — the
+    *     narrowing survives, only its physical form changes;
+    *   - with `corpus` and `selfPairs`: both kinds from ONE join — the
+    *     probe's rows join the union of the narrowed corpus and the
+    *     probe itself, the probe side tagged `in_batch`, so an
+    *     in-batch pair (`corpus_id` < `batch_id`, both probe docs) and
+    *     a corpus pair are counted in the same pass →
+    *     (corpus_id, batch_id, in_batch, n_bands).
     *
-    * `localKeys` marks a probe that is a driver-side local relation:
-    * its pre-built key table replaces the guarded distinct, and both
-    * join as broadcast build sides. */
+    * `probeRows` is the probe's row count when the caller already
+    * observed it (else a count job decides the guard); under
+    * [[MaxProbeBroadcastRows]] the probe is the pair join's broadcast
+    * build side. `localKeys` marks a probe that is a driver-side local
+    * relation: its pre-built key table replaces the key projection, and
+    * both join as broadcast build sides. */
   private[graft] def bandPairCounts(probe: DataFrame,
       corpus: Option[DataFrame] = None, dedupIndex: Boolean = true,
       localKeys: Option[DataFrame] = None,
-      maxBroadcastKeys: Long = MaxBroadcastKeyRows): DataFrame = {
+      maxBroadcastKeys: Long = MaxBroadcastKeyRows,
+      probeRows: Option[Long] = None,
+      selfPairs: Boolean = false): DataFrame = {
     def pairs(l: DataFrame, r: DataFrame, docCond: (Column, Column) => Column,
-              lId: String, rId: String): DataFrame =
-      l.alias("l").join(r.alias("r"), col("l.band") === col("r.band") &&
-          col("l.bucket") === col("r.bucket") &&
+              lId: String, rId: String, tags: Seq[String] = Nil): DataFrame = {
+      val joined = l.alias("l").join(r.alias("r"),
+        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
           docCond(col("l.doc"), col("r.doc")))
-        .groupBy(col("l.doc").as(lId), col("r.doc").as(rId))
+      // tagged (gate) pairs shuffle on the probe doc: the key the gate
+      // reduces them to (its drop set)
+      (if (tags.isEmpty) joined else joined.repartition(col("r.doc")))
+        .groupBy(Seq(col("l.doc").as(lId), col("r.doc").as(rId)) ++
+          tags.map(t => col(s"l.$t").as(t)): _*)
         .agg(count(lit(1)).as("n_bands"))
+    }
     corpus match {
       case None => pairs(probe, probe, _ < _, "a_id", "b_id")
       case Some(c) =>
+        lazy val nProbe = probeRows.getOrElse(probe.count())
         val keys = localKeys.map(broadcast(_)).getOrElse {
-          val k = probe.select("band", "bucket").distinct()
-          if (probe.count() <= maxBroadcastKeys) broadcast(k) else k
+          val k = probe.select("band", "bucket")
+          if (nProbe <= maxBroadcastKeys) broadcast(k) else k
         }
         val narrowed = c.select("doc", "band", "bucket")
           .join(keys, Seq("band", "bucket"), "left_semi")
-        pairs(if (dedupIndex) narrowed.distinct() else narrowed,
-          if (localKeys.isDefined) broadcast(probe) else probe,
-          _ =!= _, "corpus_id", "batch_id")
+        val fromCorpus = if (dedupIndex) narrowed.distinct() else narrowed
+        val probeSide =
+          if (localKeys.isDefined || nProbe <= MaxProbeBroadcastRows)
+            broadcast(probe)
+          else probe
+        if (!selfPairs)
+          pairs(fromCorpus, probeSide, _ =!= _, "corpus_id", "batch_id")
+        else
+          pairs(fromCorpus.withColumn("in_batch", lit(false))
+              .unionByName(probe.select("doc", "band", "bucket")
+                .withColumn("in_batch", lit(true))),
+            probeSide,
+            (l, r) => when(col("l.in_batch"), l < r).otherwise(l =!= r),
+            "corpus_id", "batch_id", Seq("in_batch"))
     }
   }
 

@@ -92,6 +92,50 @@ private[graft] object DirSwap {
     fs.exists(dir) && fs.listStatus(dir).exists(s =>
       s.isFile && s.getPath.getName.endsWith(".parquet"))
 
+  /** The STAMP of a committed directory: its data-file names, sorted
+    * and joined. Spark names every part file uniquely per write, so a
+    * rewrite through [[replace]] — by this process or any other —
+    * changes the stamp. */
+  private def stamp(fs: FileSystem, dir: Path): String =
+    fs.listStatus(dir).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      .sorted.mkString(",")
+
+  /** Driver-side cache of values parsed from committed directories (a
+    * tiered index's sidecar, a frontier bloom's epoch bytes): a
+    * streaming loop reads them every batch, but they change only when
+    * rewritten, so the parse — a Spark job — is paid once per write
+    * instead of once per read. Entries are keyed by path and valid only
+    * under the [[stamp]] they were parsed or written at; a bounded LRU,
+    * so dirs that are gone age out. */
+  private val ParsedMax = 64
+  private val parsed =
+    new java.util.LinkedHashMap[String, (String, AnyRef)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
+        size() > ParsedMax
+    }
+
+  /** The value parsed from `dir` at its current [[stamp]]: the cached
+    * one when the stamp matches, else `parse`'s, cached when defined. */
+  def cached[V <: AnyRef](fs: FileSystem, dir: Path)(
+      parse: => Option[V]): Option[V] = {
+    val st = stamp(fs, dir)
+    parsed.synchronized {
+      val hit = parsed.get(dir.toString)
+      if (hit != null && hit._1 == st) return Some(hit._2.asInstanceOf[V])
+    }
+    val v = parse
+    v.foreach(x => parsed.synchronized { parsed.put(dir.toString, (st, x)) })
+    v
+  }
+
+  /** Cache `v` as what `dir` now holds — its writer, right after the
+    * write, so the next read parses nothing. */
+  def remember(fs: FileSystem, dir: Path, v: AnyRef): Unit = {
+    val st = stamp(fs, dir)
+    parsed.synchronized { parsed.put(dir.toString, (st, v)); () }
+  }
+
   /** Replace the directory at `target` with what `write` produces at
     * the path it is handed: after [[recover]], an absent target is
     * written directly, an existing one through the twin and the swap

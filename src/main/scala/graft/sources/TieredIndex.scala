@@ -512,7 +512,8 @@ private[graft] object TieredIndex {
   // sidecar serialization
 
   /** Serialize the generation list through [[DirSwap.replace]] and
-    * invalidate the driver cache. */
+    * hand it to the driver cache ([[DirSwap.remember]]), so the next
+    * probe parses nothing. */
   private[graft] def writeSidecar(ss: SparkSession, dir: String,
                                   gens: Seq[Gen]): Unit = {
     import ss.implicits._
@@ -525,30 +526,21 @@ private[graft] object TieredIndex {
         .coalesce(1)
         .write.mode("overwrite").parquet(out)
     }
-    cache.synchronized { cache.remove(scPath); () }
+    val (fs, root) = DirSwap.fsOf(ss, scPath)
+    DirSwap.remember(fs, root, gens.sortBy(_.id))
   }
 
-  /** Driver-side sidecar cache keyed by (path, data-file names): the
-    * sidecar is immutable between passes but a streaming loop reads
-    * it every batch — the parse should be paid once per pass, not per
-    * batch. Part names are unique per write, so a rewrite misses. */
-  private val cache = new java.util.HashMap[String, (String, Seq[Gen])]()
-
   /** Parse the sidecar rows without liveness validation (also the
-    * recovery pivot's view). Any failure — including a pre-r19
-    * single-bloom layout — degrades to None. */
+    * recovery pivot's view), through the driver cache
+    * ([[DirSwap.cached]]: the sidecar is immutable between passes but
+    * a streaming loop reads it every batch). Any failure — including
+    * a pre-r19 single-bloom layout — degrades to None. */
   private def parseRaw(ss: SparkSession, dir: String): Option[Seq[Gen]] = {
     val scPath = sidecarPath(dir)
     val (fs, root) = DirSwap.fsOf(ss, scPath)
     DirSwap.recover(fs, root)
     if (!DirSwap.hasData(fs, root)) return None
-    val stamp = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).sorted.mkString(",")
-    cache.synchronized {
-      val hit = cache.get(scPath)
-      if (hit != null && hit._1 == stamp) return Some(hit._2)
-    }
-    val parsed = scala.util.Try {
+    DirSwap.cached(fs, root)(scala.util.Try {
       ss.read.parquet(scPath).collect().map { r =>
         val files = r.getAs[scala.collection.Seq[Row]]("files").map(f =>
           FileRange(f.getString(0),
@@ -563,9 +555,7 @@ private[graft] object TieredIndex {
           r.getAs[Long]("rows"), r.getAs[Long]("pending"),
           r.getAs[scala.collection.Seq[Long]]("src_ids").toSeq)
       }.sortBy(_.id).toSeq
-    }.toOption
-    parsed.foreach(p => cache.synchronized { cache.put(scPath, (stamp, p)); () })
-    parsed
+    }.toOption)
   }
 
   /** Committed data files of the store, in listing order. */
@@ -660,10 +650,11 @@ private[graft] object TieredIndex {
     if (live.isEmpty) empty else read(ss, live, empty)
   }
 
+  /** The index's own files read with `empty`'s schema: the library
+    * wrote them, so inferring it would only cost a Spark job per read. */
   private def read(ss: SparkSession, files: Seq[Path],
                    empty: DataFrame): DataFrame =
-    ss.read.parquet(files.map(_.toString): _*)
-      .select(empty.columns.map(col).toIndexedSeq: _*)
+    ss.read.schema(empty.schema).parquet(files.map(_.toString): _*)
 
   // ---------------------------------------------------------------
   // probe-side pruning

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -84,20 +84,33 @@ import graft.sources.ShardSink
   * broadcast winner joins and crosses the network exactly ONCE per
   * batch, in the shard write, where clustering requires it. Bloom
   * probe/build are map-side + a driver-sized byte-array merge; the
-  * drift fold is a batch-bounded append. Per batch the loop runs a
-  * fixed set of driver actions: each bloom store is read once and its
-  * bytes reused for probe + merge; each frontier stage (URL, exact
-  * text, [[keepFirstUnseen]]) checkpoints its winner table and its
-  * result after the verbatim-copies split (+1 payload checkpoint with
-  * a classifier gate — all node-local, no network); the shard write
-  * carries the shipped-row count as an observed metric; then 2
-  * sketch-agg + 2 bloom writes and 1 drift append, plus the band,
-  * probe and drop-set actions of the near-dup gate when it is on.
-  * Under AQE each action runs one Spark job per shuffle stage.
-  * CorpusIngestSpec "job inventory" pins the resulting counts over a
-  * fixed 3-batch sequence with the near-dup gate and drift on: 45, 67
-  * and 54 jobs for the three batches, 19, 25 and 25 for the
-  * maintenance pass after each.
+  * drift fold is a batch-bounded append.
+  *
+  * JOB BUDGET: a small batch's cost is mostly a fixed overhead per
+  * Spark job, so the loop runs a fixed set of them, independent of the
+  * chain lengths. Bloom epoch bytes come from a driver cache
+  * ([[graft.sources.DirSwap.cached]]) filled by each write, so reading
+  * the frontier state runs no job. Each frontier stage
+  * ([[keepFirstUnseen]]) checkpoints its winner table (one exchange),
+  * and every guard it branches on (bloom positives, winner count,
+  * verbatim copies) is an observed metric of that checkpoint. The url
+  * stage's joined rows feed the gated-rows checkpoint directly, and
+  * the exact-text stage checkpoints those gated rows (it reads them
+  * twice) and its result. The near-dup gate checkpoints the
+  * batch's band rows (observing their count), collects the suspect
+  * keys and the drop set in one bounded collect each, and counts both
+  * pair kinds in one join; the drops then leave the shipped rows and
+  * the index append as an inlined filter. The url- and text-bloom
+  * increments are observed metrics of the gated-rows checkpoint and
+  * the shard write, and the driver writes the epoch files itself, so the
+  * tail is the shard write, 1 band append and 1 drift append. Under
+  * AQE each action runs one Spark job per shuffle or broadcast stage;
+  * every job carries its stage's name as its job description.
+  * CorpusIngestSpec "job inventory" pins the per-stage counts over a
+  * fixed 3-batch sequence with the near-dup gate and drift on (18, 24
+  * and 20 jobs for the three batches, 19, 25 and 25 for the
+  * maintenance pass after each), and "flat job budget" pins equal
+  * per-stage counts while both chains grow.
   *
   * MAINTENANCE: appendShards leaves one file per touched shard per
   * micro-batch, the near-dup gate and drift monitor each append one
@@ -204,7 +217,7 @@ object CorpusIngest {
       // persisted frontier state is read ONCE per batch; the epoch
       // bytes feed both the probes and the end-of-batch merges (r15 —
       // previously each artifact was read twice)
-      val (urlPrev, textPrev) = timed(stageLog, "state_load") {
+      val (urlPrev, textPrev) = timed(ss, stageLog, "state_load") {
         // a retired drift layout fails here, before anything is written
         driftDir.foreach(Drift.recoverStore(ss, _))
         (loadBloomEpochs(ss, urlBloomPath), loadBloomEpochs(ss, textBloomPath))
@@ -218,11 +231,14 @@ object CorpusIngest {
       //    ordering contract: a mojibake variant of a shipped page must
       //    repair to the same bytes and fall to the exact-text dedup);
       //    canonical urls never depended on the text.
-      //    The stage's result is its single payload materialization,
-      //    checkpointed after the verbatim-copies split, so both
-      //    downstream consumers (gates chain, url-bloom fold) read
-      //    those blocks instead of re-running the split's shuffle.
-      val urlFresh = timed(stageLog, "canon_frontier") {
+      //    The stage's result is not materialized: its one reader, the
+      //    gated-rows checkpoint of step 3, runs the join (a map-side
+      //    pass over the batch, twice with a classifier gate, which
+      //    reads its input twice) and observes this batch's url-bloom
+      //    increment (the sketch of every canonical url the stage
+      //    passes) for step 5.
+      val urlSketch = Observation()
+      val urlFresh = timed(ss, stageLog, "canon_frontier") {
         val text =
           if (repairEncoding) TextOps.repairMojibake(col("text"))
           else col("text")
@@ -230,6 +246,8 @@ object CorpusIngest {
           batch.withColumn("canon_url", TextOps.canonicalizeUrl(col("url"))),
           "canon_url", urlPrev.map(_._2), urlBloomPath, "url",
           MaxBroadcastUrlRows, Seq(text.as("text")), stageLog)
+          .observe(urlSketch, BloomMembership
+            .sketchOf(col("canon_url"), expectedItems).as("bloom"))
       }
 
       // 2. quality gates — the t33 heuristic composite, then (when a
@@ -248,21 +266,23 @@ object CorpusIngest {
       //    the payload joined back to the (text_hash, doc_id) winners
       //    like the URL stage's. With this the payload crosses the
       //    network exactly ONCE per batch — in the shard write, where
-      //    clustering requires it. Without a classifier gate the chain
-      //    feeding the winners is map-side codegen off the urlFresh
-      //    checkpoint (gopher + hash) and simply re-runs for the join
-      //    pass; WITH one, the gated rows checkpoint once so the
-      //    feature aggregation isn't paid twice (a local
-      //    materialization still moves no bytes across the network).
-      //    The stage's checkpointed result feeds the sink and both
-      //    blooms from one execution.
-      val fresh = timed(stageLog, "gates_exact_dedup") {
-        val hashed = gated.withColumn("text_hash", xxhash64(col("text")))
+      //    clustering requires it. The gated, hashed rows checkpoint
+      //    once (a local materialization, no network), so the winner
+      //    aggregation and the join pass read them instead of each
+      //    re-running the gates (Gopher + hash, and the classifier's
+      //    feature aggregation when set) over the text; that checkpoint
+      //    also computes step 1's join and its url-bloom increment. The
+      //    stage's checkpointed result feeds the sink and the text
+      //    bloom from one execution.
+      val fresh = timed(ss, stageLog, "gates_exact_dedup") {
         keepFirstUnseen(
-          if (qualityGate.isDefined) hashed.localCheckpoint(true) else hashed,
+          BloomMembership.withSizing(ss, expectedItems) {
+            gated.withColumn("text_hash", xxhash64(col("text")))
+              .localCheckpoint(true)
+          },
           "text_hash", textPrev.map(_._2), textBloomPath, "text",
           Dedup.MaxBroadcastKeyRows, Seq(col("canon_url"), col("text")),
-          stageLog)
+          stageLog).localCheckpoint(true)
       }
 
       // 3b. optional near-dup stage: band the batch ONCE, then
@@ -276,22 +296,28 @@ object CorpusIngest {
       // rows (ADVICE r19: appending the near-dup survivors here would
       // persist band rows for docs 3c then drops — never-shipped
       // content that silently gates genuinely novel future docs).
+      // The band checkpoint observes its own row count (the pair
+      // counting's broadcast guard), and the drop set comes back to the
+      // driver in one bounded collect, so removing the drops — from the
+      // shipped rows here and from the band rows appended in step 4b —
+      // is a map-side filter, not one more job per consumer.
+      val bandRows = Observation()
       val bandIdx = nearDup.map { nd =>
-        timed(stageLog, "neardup_band") {
+        timed(ss, stageLog, "neardup_band") {
           Dedup.minhashIndex(fresh, "doc_id", "text",
-            nd.k, nd.numHashes, nd.bands).localCheckpoint(true)
+              nd.k, nd.numHashes, nd.bands)
+            .observe(bandRows, count(lit(1)).as("n")).localCheckpoint(true)
         }
       }
-      val survivors = nearDup.fold(fresh) { nd =>
-        timed(stageLog, "neardup_gate") {
-          fresh.join(
-            nearDupDrops(bandIdx.get,
-              narrowedCorpusIndex(ss, nd.indexDir, bandIdx.get, nd.minBands,
-                stageLog),
-              nd.minBands),
-            Seq("doc_id"), "left_anti").localCheckpoint(true)
+      val gateDrops = bandIdx.zip(nearDup).map { case (idx, nd) =>
+        timed(ss, stageLog, "neardup_gate") {
+          dropTable(nearDupDrops(idx,
+            narrowedCorpusIndex(ss, nd.indexDir, idx, nd.minBands, stageLog),
+            nd.minBands, batchRows = Some(observed(bandRows, "n"))))
         }
       }
+      val survivors = gateDrops.fold(fresh)(d =>
+        withoutDrops(fresh, "doc_id", d))
 
       // 3c. optional exact-substring gate (r19): drop any doc sharing a
       //     >= minLen VERBATIM run with (a) the shipped corpus — probed
@@ -309,13 +335,13 @@ object CorpusIngest {
       // each of the three re-ran the winnow kernel over the batch —
       // measured as ≥¾ of the gate's 12.7-15.3 s/batch steady cost.
       val batchAnchors = substr.map { sg =>
-        timed(stageLog, "substr_winnow") {
+        timed(ss, stageLog, "substr_winnow") {
           Dedup.winnowIndex(survivors, "doc_id", "text", sg.minLen, sg.k)
             .localCheckpoint(true)
         }
       }
       val shipping = substr.fold(survivors) { sg =>
-        val dropIds = timed(stageLog, "substr_gate") {
+        val dropIds = timed(ss, stageLog, "substr_gate") {
           // the cross probe needs BOTH the anchor index (candidates)
           // and the shipped text (verification), and each store needs
           // its OWN data check: an all-dropped opening batch appends an
@@ -344,7 +370,7 @@ object CorpusIngest {
           def privateLog() = stageLog.map(_ =>
             scala.collection.mutable.Buffer.empty[(String, Double)])
           val crossLog = privateLog(); val selfLog = privateLog()
-          val crossF = Future(timed(crossLog, "substr_cross") {
+          val crossF = Future(timed(ss, crossLog, "substr_cross") {
             (if (graft.sources.TieredIndex.liveNames(ss, sg.indexDir).nonEmpty
                 && shardHasData)
               Dedup.exactSubstrPairsAgainstDir(ss, sg.indexDir,
@@ -355,7 +381,7 @@ object CorpusIngest {
             else survivors.select("doc_id").limit(0))
               .localCheckpoint(true)
           })
-          val selfF = Future(timed(selfLog, "substr_self") {
+          val selfF = Future(timed(ss, selfLog, "substr_self") {
             Dedup.exactSubstrPairsFromAnchors(survivors,
                 batchAnchors.get, "doc_id", "text", sg.minLen, sg.k, sg.maxDf)
               .select(col("b_id").as("doc_id"))
@@ -367,7 +393,7 @@ object CorpusIngest {
             Seq(crossLog, selfLog).flatten.foreach(buf ++= _))
           cross.unionByName(inBatch).distinct().localCheckpoint(true)
         }
-        timed(stageLog, "substr_filter") {
+        timed(ss, stageLog, "substr_filter") {
           survivors.join(dropIds, Seq("doc_id"), "left_anti")
             .localCheckpoint(true)
         }
@@ -377,15 +403,19 @@ object CorpusIngest {
       //    in-file training order; resume/manifest read the union).
       //    The shipped-row count rides the SAME job as an observed
       //    metric — no separate count action (r15, VERDICT item 5)
-      val obs = org.apache.spark.sql.Observation()
-      val n = timed(stageLog, "shard_write") {
-        ShardSink.appendShards(
-          shipping.select("doc_id", "canon_url", "text")
-            .observe(obs, count(lit(1)).as("n")),
-          "doc_id", shardDir, numShards)
-        // a zero-row batch folds to an empty write whose plan never
-        // executes, so the metric key is simply absent — that IS n = 0
-        obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
+      //    The text-bloom increment (the sketch of the shipped hashes)
+      //    is observed by the same job.
+      val shipped = Observation()
+      val n = timed(ss, stageLog, "shard_write") {
+        BloomMembership.withSizing(ss, expectedItems) {
+          ShardSink.appendShards(
+            shipping.observe(shipped, count(lit(1)).as("n"),
+                BloomMembership.sketchOf(col("text_hash"), expectedItems)
+                  .as("bloom"))
+              .select("doc_id", "canon_url", "text"),
+            "doc_id", shardDir, numShards)
+        }
+        observed(shipped, "n")
       }
 
       // 4b. dedup-index appends, AFTER the shard write succeeds and
@@ -400,15 +430,24 @@ object CorpusIngest {
       //     the last batch until its at-least-once replay, whose
       //     re-appended rows the probes' replay-defense distinct
       //     already absorbs — the same window the text bloom accepts.
+      //     Without the substring gate the shipped docs are exactly the
+      //     near-dup survivors, so the band rows need only the gate's
+      //     own drop filter. Files are sized by the band row count:
+      //     tail files are read in full by every probe until the next
+      //     compaction, so a small batch appends ONE.
       val shipIds = shipping.select("doc_id")
       bandIdx.zip(nearDup).foreach { case (idx, nd) =>
-        timed(stageLog, "neardup_append") {
-          idx.join(shipIds, idx("doc") === shipIds("doc_id"), "left_semi")
+        timed(ss, stageLog, "neardup_append") {
+          (if (substr.isDefined)
+            idx.join(shipIds, idx("doc") === shipIds("doc_id"), "left_semi")
+          else gateDrops.fold(idx)(d => withoutDrops(idx, "doc", d)))
+            .coalesce(math.max(1,
+              (observed(bandRows, "n") / BandRowsPerAppendFile).toInt))
             .write.mode("append").parquet(nd.indexDir)
         }
       }
       batchAnchors.zip(substr).foreach { case (anchors, sg) =>
-        timed(stageLog, "substr_append") {
+        timed(ss, stageLog, "substr_append") {
           // coalesced: the anchor table is 32 checkpoint partitions,
           // and 32 small files per batch made the tail's per-probe
           // footer cost 8x what the band index pays (measured 224 tail
@@ -428,15 +467,16 @@ object CorpusIngest {
       //    text bloom learns the hashes that actually shipped. Each
       //    save reports the active epoch's fill ratio and the epoch
       //    count, rolling onto a fresh epoch past `rolloverAt` (the
-      //    object scaladoc's BLOOM CAPACITY section)
-      timed(stageLog, "bloom_fold") {
+      //    object scaladoc's BLOOM CAPACITY section). Both increments
+      //    were observed by jobs that already ran (steps 3 and 4).
+      timed(ss, stageLog, "bloom_fold") {
+        def sketch(o: Observation) =
+          o.get.get("bloom").flatMap(b => Option(b.asInstanceOf[Array[Byte]]))
         val gauges = Seq(
           "url_bloom" -> saveBloom(ss, urlBloomPath, urlPrev,
-            urlFresh.select("canon_url"), "canon_url", expectedItems,
-            rolloverAt),
+            sketch(urlSketch), rolloverAt),
           "text_bloom" -> saveBloom(ss, textBloomPath, textPrev,
-            shipping.select("text_hash"), "text_hash", expectedItems,
-            rolloverAt))
+            sketch(shipped), rolloverAt))
         stageLog.foreach { buf =>
           gauges.foreach { case (name, g) =>
             g.foreach { case (fill, epochs) =>
@@ -452,7 +492,7 @@ object CorpusIngest {
       //    any point via [[driftCard]]. Both count tables move as ONE
       //    kind-tagged, batch-bounded APPEND (O(batch) per fold; the
       //    accumulated store is only ever touched by compaction)
-      timed(stageLog, "drift_fold") {
+      timed(ss, stageLog, "drift_fold") {
         driftDir.foreach { dd =>
           val src = shipping.select(hostOf(col("canon_url")).as("source"),
             col("text"))
@@ -461,20 +501,74 @@ object CorpusIngest {
       }
       n
     } finally {
-      ss.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!rddsBefore.contains(id)) rdd.unpersist(blocking = false)
+      // released by id, not through RDD.unpersist: that one logs a
+      // lineage-truncated warning per local checkpoint, and nothing
+      // reads these again
+      ss.sparkContext.getPersistentRDDs.keys.foreach { id =>
+        if (!rddsBefore.contains(id))
+          org.apache.spark.GraftRddRelease(ss.sparkContext, id)
       }
     }
   }
 
-  /** Run `f`, logging its wall seconds under `name` into `log` — the
-    * one stage timer of [[ingestBatch]]'s `stageLog` profile. */
-  private def timed[A](
+  /** An observed count or gauge, 0 when absent: a plan that folds to
+    * an empty relation never runs, and its observation completes
+    * without the key. */
+  private def observed(o: Observation, name: String): Long =
+    o.get.get(name).fold(0L)(_.asInstanceOf[Long])
+
+  /** Band rows per near-dup index append file: ~64 MB of
+    * (doc, band, bucket) rows at 16 bytes each, the partition size AQE
+    * coalesces a shuffle to. */
+  private val BandRowsPerAppendFile = 4000000L
+
+  /** Past this many doc ids a drop set is not inlined into the plans
+    * that filter on it (~8 bytes an id in every task binary). */
+  private val MaxLiteralDropIds = 100000
+
+  /** A (doc_id) drop set, ready to filter on. Drop sets are
+    * collision-sized, so normally ONE bounded collect brings the ids to
+    * the driver (Left), and every consumer filters them out map-side
+    * with an inlined set — no join, so no broadcast job per consumer.
+    * Past [[MaxLiteralDropIds]] the set is checkpointed (Right). */
+  private def dropTable(drops: DataFrame): Either[Array[Any], DataFrame] = {
+    val ids = drops.limit(MaxLiteralDropIds + 1).collect().map(_.get(0))
+    if (ids.length <= MaxLiteralDropIds) Left(ids)
+    else Right(drops.localCheckpoint(true))
+  }
+
+  /** `rows` minus the docs of a [[dropTable]], matched on `idCol`. The
+    * checkpointed form anti-joins and checkpoints the result, so its
+    * consumers do not each repeat that join. */
+  private def withoutDrops(rows: DataFrame, idCol: String,
+                           drops: Either[Array[Any], DataFrame]): DataFrame =
+    drops match {
+      case Left(ids) =>
+        if (ids.isEmpty) rows else rows.filter(!col(idCol).isInCollection(ids))
+      case Right(cp) =>
+        rows.join(cp, rows(idCol) === cp("doc_id"), "left_anti")
+          .localCheckpoint(true)
+    }
+
+  /** Run `f` as one stage of [[ingestBatch]]: every Spark job it
+    * launches carries `name` as its job description (AQE's query-stage
+    * jobs inherit it from the submitting thread), the caller's
+    * description is restored afterwards, and the wall seconds go into
+    * `log` — the one stage timer of the `stageLog` profile. */
+  private def timed[A](ss: SparkSession,
       log: Option[scala.collection.mutable.Buffer[(String, Double)]],
       name: String)(f: => A): A = {
-    val t0 = System.nanoTime(); val a = f
+    val sc = ss.sparkContext
+    val caller = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(name)
+    val t0 = System.nanoTime()
+    val a = try f finally sc.setLocalProperty(JobDescription, caller)
     log.foreach(_ += name -> (System.nanoTime() - t0) / 1e9); a
   }
+
+  /** The local property `SparkContext.setJobDescription` sets (Spark
+    * keeps the constant package-private). */
+  private val JobDescription = "spark.job.description"
 
   /** Broadcast cap for the URL winner table, which carries full
     * canonical-url STRINGS (~100-200 bytes a row, plus JVM string
@@ -501,32 +595,45 @@ object CorpusIngest {
     * copies are invisible to a key-equality join, so that slice —
     * normally empty — collapses to its min `payload` row, and the
     * unique bulk passes the join untouched. Returns
-    * (key, doc_id, payload...), checkpointed after that split: every
-    * consumer of the stage reads those blocks. */
+    * (key, doc_id, payload...) after that split, for the caller to
+    * checkpoint: every consumer of the stage reads those blocks.
+    *
+    * The winner table's checkpoint observes the three counts the stage
+    * branches on — bloom positives, winners, winners with copies — so
+    * no guard runs a job of its own. Both aggregation levels share ONE
+    * exchange: hash partitioning on `key` already clusters every
+    * (key, doc_id) group. */
   private def keepFirstUnseen(rows: DataFrame, key: String,
       bloom: Seq[Array[Byte]], bloomPath: String, name: String,
       broadcastCap: Long, payload: Seq[Column],
       stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]])
       : DataFrame = {
+    val counts = Observation()
     val flagged = BloomMembership.flagSeenAny(
-        rows.select(key, "doc_id")
+        rows.select(key, "doc_id").repartition(col(key))
           .groupBy(key, "doc_id").agg(count(lit(1)).as("__copies"))
           .groupBy(key)
           .agg(min(struct(col("doc_id"), col("__copies"))).as("__w"))
           .select(col(key), col("__w.doc_id").as("doc_id"),
             col("__w.__copies").as("__copies")),
         bloom, key, "__seen")
-      .localCheckpoint(true) // consumers: size guard, join, drop gauge
-    recordBloomDrops(flagged, bloomPath, key, name, stageLog)
+      .observe(counts, count_if(col("__seen")).as("seen"),
+        count_if(!col("__seen")).as("winners"),
+        count_if(!col("__seen") && col("__copies") > 1).as("copied"))
+      .localCheckpoint(true) // consumers: drop record, join
+    recordBloomDrops(flagged, observed(counts, "seen"), bloomPath, key,
+      name, stageLog)
     val winners = flagged.filter(!col("__seen")).drop("__seen")
     val wj =
-      if (winners.count() <= broadcastCap) broadcast(winners.alias("w"))
+      if (observed(counts, "winners") <= broadcastCap)
+        broadcast(winners.alias("w"))
       else winners.alias("w")
     val joined = rows.alias("r")
       .join(wj, col(s"r.$key") <=> col(s"w.$key") &&
         col("r.doc_id") === col("w.doc_id"))
       .select(Seq(col(s"r.$key"), col("r.doc_id")) ++ payload :+
         col("w.__copies"): _*)
+    if (observed(counts, "copied") == 0) return joined.drop("__copies")
     val payloadNames = joined.columns.slice(2, joined.columns.length - 1)
     joined.filter(col("__copies") === 1).drop("__copies")
       .unionByName(joined.filter(col("__copies") > 1)
@@ -534,7 +641,6 @@ object CorpusIngest {
         .agg(min(struct(payloadNames.map(col).toIndexedSeq: _*)).as("__r"))
         .select(Seq(col(key), col("doc_id")) ++
           payloadNames.map(n => col(s"__r.$n")): _*))
-      .localCheckpoint(true)
   }
 
   /** Near-dup drop set: batch docs colliding with a smaller-id batch
@@ -546,18 +652,20 @@ object CorpusIngest {
     * keys before anything shuffles it (VERDICT r14 item 1), and runs
     * the replay-defense distinct (foreachBatch is at-least-once) on
     * that collision-sized slice; CorpusIngestSpec pins both.
-    * `maxBroadcastKeys` moves the key table's broadcast guard (past it
-    * the semi-join runs shuffled). */
+    * Both pair kinds come from ONE join (the core's `selfPairs`), and
+    * both drop the batch-side doc. `maxBroadcastKeys` moves the key
+    * table's broadcast guard (past it the semi-join runs shuffled);
+    * `batchRows`, the batch index's row count when the caller already
+    * knows it, spares the guard its count job. */
   private[graft] def nearDupDrops(batchIdx: DataFrame,
       corpusIdx: DataFrame, minBands: Int,
-      maxBroadcastKeys: Long = Dedup.MaxBroadcastKeyRows): DataFrame = {
-    def dropped(pairs: DataFrame, id: String) =
-      pairs.filter(col("n_bands") >= minBands).select(col(id).as("doc_id"))
-    dropped(Dedup.bandPairCounts(batchIdx), "b_id")
-      .unionByName(dropped(Dedup.bandPairCounts(batchIdx, Some(corpusIdx),
-        maxBroadcastKeys = maxBroadcastKeys), "batch_id"))
-      .distinct()
-  }
+      maxBroadcastKeys: Long = Dedup.MaxBroadcastKeyRows,
+      batchRows: Option[Long] = None): DataFrame =
+    Dedup.bandPairCounts(batchIdx, Some(corpusIdx),
+        maxBroadcastKeys = maxBroadcastKeys, probeRows = batchRows,
+        selfPairs = true)
+      .filter(col("n_bands") >= minBands)
+      .select(col("batch_id").as("doc_id")).distinct()
 
   /** Side-store suffix where each batch's bloom-POSITIVE-dropped
     * frontier keys accumulate (see [[recordBloomDrops]]). */
@@ -575,18 +683,18 @@ object CorpusIngest {
     * shipped store — exact for the text frontier (its bloom learns
     * only shipped hashes), an upper bound for the url frontier (its
     * bloom learns every url SEEN, so a quality-dropped recrawl is a
-    * true positive that never shipped). `flagged` is a localCheckpoint,
-    * so the count and the (skipped-when-empty) append are local-block
-    * passes, not plan re-executions. */
-  private def recordBloomDrops(flagged: DataFrame, bloomPath: String,
-      keyCol: String, name: String,
+    * true positive that never shipped). `flagged` is a localCheckpoint
+    * and `positives` its observed bloom-positive count, so the
+    * (skipped-when-empty) append is a local-block pass, not a plan
+    * re-execution. */
+  private def recordBloomDrops(flagged: DataFrame, positives: Long,
+      bloomPath: String, keyCol: String, name: String,
       stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]])
       : Unit = {
-    val drops = flagged.filter(col("__seen")).select(keyCol)
-    val n = drops.count()
-    stageLog.foreach(_ += s"bloomdrop:$name" -> n.toDouble)
-    if (n > 0)
-      drops.coalesce(1).write.mode("append").parquet(bloomPath + DropsSuffix)
+    stageLog.foreach(_ += s"bloomdrop:$name" -> positives.toDouble)
+    if (positives > 0)
+      flagged.filter(col("__seen")).select(keyCol)
+        .coalesce(1).write.mode("append").parquet(bloomPath + DropsSuffix)
   }
 
   /** Split the accumulated frontier-bloom drops ([[recordBloomDrops]])
@@ -851,8 +959,9 @@ object CorpusIngest {
     *     threshold crossings are exactly the true cross-batch
     *     near-dups. No suspects → the base is not read at all;
     *     otherwise only base files whose clustered key range contains
-    *     a suspect key are read ([[graft.sources.TieredIndex.pruneFiles]])
-    *     and immediately semi-joined down to those keys.
+    *     a suspect key are read ([[graft.sources.TieredIndex.pruneFiles]]),
+    *     and [[nearDupDrops]]' pair counting semi-joins them, like the
+    *     tail, down to the batch's keys before anything shuffles them.
     *   - TAIL (files appended since the last compaction): scanned in
     *     full — bounded by compactEvery batches of survivor keys,
     *     corpus-independent.
@@ -881,28 +990,29 @@ object CorpusIngest {
       // batchIdx checkpoint — one predicate per generation in the
       // same scan), reduced to SUSPECT docs — ≥ minBands hot bands
       // (one row per (doc, band), so the per-doc row count IS the
-      // hot band count); only their keys can contribute to a drop
-      val hotRows = BloomMembership
+      // hot band count — a window over one doc-keyed exchange); only
+      // their keys can contribute to a drop. One bounded collect
+      // brings them to the driver, which distincts them; past the
+      // prune cap every base file is read and a count job gauges the
+      // distinct keys instead.
+      val suspect = BloomMembership
         .flagSeenAny(batchIdx
             .withColumn("__k", xxhash64(col("band"), col("bucket"))),
           gens.map(_.bloom), "__k", "__hot")
         .filter(col("__hot"))
-      val hot = hotRows
-        .join(hotRows.groupBy("doc").agg(count(lit(1)).as("__nb"))
-            .filter(col("__nb") >= minBands).select("doc"),
-          Seq("doc"), "left_semi")
-        .select("band", "bucket").distinct()
-        .localCheckpoint(true)
-      val nHot = hot.count()
-      // same size guard as every other key-table broadcast in the
-      // loop: a corpus-scale backfill batch's hot set falls back to
-      // a shuffled semi-join, never a multi-GB driver relation
-      val hotJoin =
-        if (nHot <= Dedup.MaxBroadcastKeyRows) broadcast(hot) else hot
-      graft.sources.TieredIndex.Hot(nHot,
-        () => hot.select(col("band").cast("long"), col("bucket"))
-          .as[(Long, Long)].collect().map(t => Seq(t._1, t._2)).toIndexedSeq,
-        _.join(hotJoin, Seq("band", "bucket"), "left_semi"))
+        .withColumn("__nb", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("doc")))
+        .filter(col("__nb") >= minBands)
+        .select(col("band").cast("long"), col("bucket"))
+      val cap = graft.sources.TieredIndex.MaxHotKeysForFilePrune
+      val keys = suspect.limit(cap.toInt + 1).collect()
+        .map(r => Seq(r.getLong(0), r.getLong(1))).distinct
+      val n = if (keys.length <= cap) keys.length.toLong
+        else suspect.distinct().count()
+      // no narrowing of the base read here: the pair counting
+      // semi-joins every corpus row, base and tail alike, to the
+      // batch's keys before anything shuffles it
+      graft.sources.TieredIndex.Hot(n, () => keys.toIndexedSeq, identity)
     }
   }
 
@@ -983,10 +1093,11 @@ object CorpusIngest {
         def rebuild(path: String, keyCol: String): Boolean =
           if (shipped > 0) {
             val expected = math.max(1L, math.ceil(shipped * headroom).toLong)
-            graft.sources.DirSwap.replace(ss, path) { out =>
-              BloomMembership.sketch(keys.select(keyCol), keyCol, expected)
-                .write.mode("overwrite").parquet(s"$out/epoch=0")
-            }
+            val bytes = BloomMembership.sketch(keys.select(keyCol), keyCol,
+              expected).head().getAs[Array[Byte]](0)
+            graft.sources.DirSwap.replace(ss, path)(out =>
+              writeEpochFile(ss, s"$out/epoch=0", bytes))
+            rememberEpoch(ss, path, 0, bytes)
             log.info(s"bloom $path: chain compacted to one epoch sized " +
               s"$expected (${headroom}x $shipped shipped keys)")
             true
@@ -1019,17 +1130,62 @@ object CorpusIngest {
 
   /** The persisted frontier's per-epoch sketch bytes, oldest first
     * (empty before the first fold). Store layout: `<path>/epoch=N/`,
-    * one 1-row parquet per epoch — frozen epochs are immutable, only
-    * the max epoch ever rewrites. Runs the twin-swap recovery on
-    * every epoch dir first, so a crash inside a previous [[saveBloom]]
-    * never loses the frontier. */
+    * one 1-row (bloom binary) parquet per epoch — frozen epochs are
+    * immutable, only the max epoch ever rewrites. Runs the twin-swap
+    * recovery on every epoch dir first, so a crash inside a previous
+    * [[saveBloom]] never loses the frontier. Bytes come from the
+    * driver cache ([[graft.sources.DirSwap.cached]]) while the epoch
+    * dir holds the part file its writer remembered; a dir rewritten
+    * since — by any process — is read again, with the known schema. */
   private def loadBloomEpochs(ss: SparkSession,
                               path: String): Seq[(Int, Array[Byte])] =
     committedEpochs(ss, path).flatMap { e =>
-      ss.read.parquet(s"$path/epoch=$e").take(1).headOption
-        .flatMap(r => Option(r.getAs[Array[Byte]](0)))
-        .map(e -> _)
+      val (fs, dir) = fsOf(ss, s"$path/epoch=$e")
+      graft.sources.DirSwap.cached(fs, dir) {
+        ss.read.schema("bloom binary").parquet(dir.toString).take(1)
+          .headOption.flatMap(r => Option(r.getAs[Array[Byte]](0)))
+      }.map(e -> _)
     }
+
+  /** Write `bytes` as one epoch's store into the directory `dir`, on
+    * the driver: the 1-row (bloom binary) parquet file a Spark write
+    * would produce, without its job. The part file is written under a
+    * hidden name and renamed into place once closed, so a crash leaves
+    * no committed data file ([[graft.sources.DirSwap.hasData]]) — what
+    * Spark's commit protocol guarantees. */
+  private def writeEpochFile(ss: SparkSession, dir: String,
+                             bytes: Array[Byte]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.io.api.Binary
+    val (fs, d) = fsOf(ss, dir)
+    fs.mkdirs(d)
+    val name = s"part-00000-${java.util.UUID.randomUUID}-c000.snappy.parquet"
+    val tmp = new org.apache.hadoop.fs.Path(d, s"_$name.inprogress")
+    val conf = ss.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(EpochSchema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try w.write(new SimpleGroupFactory(EpochSchema).newGroup()
+      .append("bloom", Binary.fromConstantByteArray(bytes)))
+    finally w.close()
+    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(d, name)),
+      s"epoch file rename into $dir failed")
+  }
+
+  private lazy val EpochSchema = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType("message spark_schema { optional binary bloom; }")
+
+  /** Cache the bytes just written to `<path>/epoch=e` for the next
+    * [[loadBloomEpochs]]. */
+  private def rememberEpoch(ss: SparkSession, path: String, e: Int,
+                            bytes: Array[Byte]): Unit = {
+    val (fs, dir) = fsOf(ss, s"$path/epoch=$e")
+    graft.sources.DirSwap.remember(fs, dir, bytes)
+  }
 
   /** Committed epoch ids (sorted), after the full recovery pass —
     * the driver-side LISTING half of [[loadBloomEpochs]], split out so
@@ -1078,26 +1234,25 @@ object CorpusIngest {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Fold this batch's keys into the epoched frontier store: sketch
-    * the keys, OR-merge into the ACTIVE (max) epoch — or, when the
-    * merged filter would pass `rolloverAt`, freeze the active epoch
-    * as-is and start the next epoch with the increment alone (the
-    * BLOOM CAPACITY contract: no epoch past design fpp, no key ever
-    * dropped). The touched epoch dir is rewritten through
+  /** Fold this batch's sketch `inc` (None: no keys) into the epoched
+    * frontier store: OR-merge into the ACTIVE (max) epoch — or, when
+    * the merged filter would pass `rolloverAt`, freeze the active
+    * epoch as-is and start the next epoch with the increment alone
+    * (the BLOOM CAPACITY contract: no epoch past design fpp, no key
+    * ever dropped). The touched epoch dir is rewritten through
     * [[graft.sources.DirSwap.replace]], so a crash at any point leaves
-    * a complete copy. Returns (active-epoch fill ratio, epoch count);
-    * None when there is no state yet (empty batch onto no store). */
+    * a complete copy, and its bytes go to the driver cache. Returns
+    * (active-epoch fill ratio, epoch count); None when there is no
+    * state yet (empty batch onto no store). */
   private def saveBloom(ss: SparkSession, path: String,
-                        prevEpochs: Seq[(Int, Array[Byte])], keys: DataFrame,
-                        keyCol: String, expectedItems: Long,
+                        prevEpochs: Seq[(Int, Array[Byte])],
+                        inc: Option[Array[Byte]],
                         rolloverAt: Double): Option[(Double, Int)] = {
-    import ss.implicits._
-    val inc = BloomMembership.sketch(keys, keyCol, expectedItems)
-      .take(1).headOption.flatMap(r => Option(r.getAs[Array[Byte]](0)))
-    def writeEpoch(e: Int, bytes: Array[Byte]): Unit =
-      graft.sources.DirSwap.replace(ss, s"$path/epoch=$e") { out =>
-        Seq(Option(bytes)).toDF("bloom").write.mode("overwrite").parquet(out)
-      }
+    def writeEpoch(e: Int, bytes: Array[Byte]): Unit = {
+      graft.sources.DirSwap.replace(ss, s"$path/epoch=$e")(
+        writeEpochFile(ss, _, bytes))
+      rememberEpoch(ss, path, e, bytes)
+    }
     def warnIfOverfull(fill: Double): Double = {
       if (fill > rolloverAt)
         log.warn(f"bloom $path: a SINGLE batch fills a fresh epoch to " +

@@ -1102,22 +1102,7 @@ class CorpusIngestSpec extends SparkSpec {
       ("https://site.com/p9", 9L, good(9)))
     val b3 = b2 :+ (("https://site.com/p10", 10L, good(10))) // replay + 1 new
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def withJobs[A](f: => A): (A, Int) = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.set(0)
-      val a = f
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (a, jobs.get)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (shipped, counts) = try {
+    val (shipped, counts) = withStageJobs { withJobs =>
       Seq(b1, b2, b3).map { b =>
         val (n, batchJobs) = withJobs(CorpusIngest.ingestBatch(
           b.toDF("url", "doc_id", "text"), ub, tb, shards, numShards = 2,
@@ -1126,14 +1111,183 @@ class CorpusIngestSpec extends SparkSpec {
           ub, tb, shards, nd, Some(dd)))
         (n, Seq(batchJobs, maintJobs))
       }.unzip
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(shipped == Seq(2L, 1L, 1L))
-    // (ingestBatch, runMaintenance) jobs for batches 1, 2, 3. When the
-    // URL frontier stage checkpointed its joined rows instead of its
-    // result after the verbatim-copies split, the gates chain and the
-    // url-bloom fold each re-ran that split's shuffle, two more jobs a
-    // batch: 47, 19, 69, 25, 56, 25
-    assert(counts.flatten == Seq(45, 19, 67, 25, 54, 25), counts.toString)
+    // (ingestBatch, runMaintenance) jobs for batches 1, 2, 3, per stage
+    // label (maintenance runs unlabelled, "-"; the epoch writes of
+    // "bloom_fold" run on the driver). Before the batch read its bloom
+    // epochs from the driver cache, took its guard counts and bloom
+    // increments as observed metrics of jobs that already ran and
+    // counted both near-dup pair kinds in one join, the totals were
+    // 45, 19, 67, 25, 54, 25
+    def stages(canon: Int, gates: Int, gate: Int) = Map(
+      "canon_frontier" -> canon, "gates_exact_dedup" -> gates,
+      "neardup_band" -> 1, "neardup_gate" -> gate, "shard_write" -> 2,
+      "neardup_append" -> 1, "drift_fold" -> 3)
+    val maint = Map("-" -> 19)
+    val maintAfter = Map("-" -> 25)
+    assert(counts.flatten == Seq(
+      stages(2, 6, 3), maint,
+      stages(3, 7, 7), maintAfter,
+      stages(3, 6, 4), maintAfter), counts.toString)
+    assert(counts.flatten.map(_.values.sum) == Seq(18, 19, 24, 25, 20, 25))
+  }
+
+  /** Run `f` with a job counter keyed by the stage label
+    * (`spark.job.description`, "-" when unset); `f` gets a wrapper that
+    * returns a block's result and its per-label job counts. */
+  private def withStageJobs[A](
+      f: ((=> Any) => (Any, Map[String, Int])) => A): A = {
+    val jobs = scala.collection.concurrent.TrieMap.empty[String, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val label = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("-")
+        jobs.synchronized { jobs(label) = jobs.getOrElse(label, 0) + 1 }
+      }
+    }
+    def withJobs(body: => Any): (Any, Map[String, Int]) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.clear()
+      val a = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (a, jobs.toMap)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try f(withJobs(_))
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("flat job budget: with both bloom chains rolling over every " +
+      "batch and no maintenance, each batch from the 2nd on runs the " +
+      "same jobs, stage by stage") {
+    val dir = Files.createTempDirectory("ingest_flat").toString
+    val (ub, tb, shards, dd) =
+      (s"$dir/ub", s"$dir/tb", s"$dir/shards", s"$dir/drift")
+    val nd = Some(CorpusIngest.NearDupGate(s"$dir/ndidx"))
+    // 40 fresh docs a batch into 60-item blooms: the chains grow an
+    // epoch about every batch. From batch 2 on each batch also recrawls
+    // one url of the previous batch and copies one of its texts under a
+    // new url, so both frontiers drop a bloom positive every batch.
+    // Texts are 40 seeded random words, far apart for the near-dup gate
+    def text(id: Long) = {
+      val r = new scala.util.Random(id)
+      (stops +: Seq.fill(40)(Seq.fill(4 + r.nextInt(5))(
+        ('a' + r.nextInt(26)).toChar).mkString)).mkString(" ")
+    }
+    def batch(b: Int) = {
+      def id(i: Int) = b * 1000L + i
+      val fresh = (1 to 40).map(i => (s"https://site.com/b$b/p$i", id(i), text(id(i))))
+      val dups = if (b == 1) Seq.empty else Seq(
+        (s"https://site.com/b${b - 1}/p1?ref=x", id(41), text(id(41))),
+        (s"https://site.com/b$b/copy", id(42), text((b - 1) * 1000L + 2)))
+      (fresh ++ dups).toDF("url", "doc_id", "text")
+    }
+    val buf = scala.collection.mutable.Buffer.empty[(String, Double)]
+    val runs = withStageJobs { withJobs =>
+      (1 to 5).map { b =>
+        buf.clear()
+        val (n, jobs) = withJobs(CorpusIngest.ingestBatch(batch(b), ub, tb,
+          shards, numShards = 2, expectedItems = 60L, driftDir = Some(dd),
+          nearDup = nd, stageLog = Some(buf)))
+        (n, jobs, buf.filter(_._1.startsWith("epochs:")).toMap)
+      }
+    }
+    // at this sizing a bloom false positive may drop a fresh doc
+    runs.foreach(r => assert(r._1.asInstanceOf[Long] >= 36L, runs.map(_._1)))
+    val epochs = runs.map(r => (r._3("epochs:url_bloom"), r._3("epochs:text_bloom")))
+    assert(epochs.last._1 >= 4 && epochs.last._2 >= 4, epochs.toString)
+    val steady = runs.drop(1).map(_._2)
+    steady.foreach(j => assert(j == steady.head,
+      s"per-stage jobs drift with the chain length: $steady"))
+  }
+
+  test("epoch cache: a bloom epoch rewritten behind the driver cache, " +
+      "and a chain replaced by compaction, are probed with their new " +
+      "bytes") {
+    val dir = Files.createTempDirectory("ingest_cache").toString
+    val (ub, tb, shards) = (s"$dir/ub", s"$dir/tb", s"$dir/shards")
+    def docs(ids: Seq[Int], text: Long => String = good) = ids
+      .map(i => (s"https://site.com/p$i", i.toLong, text(i.toLong)))
+      .toDF("url", "doc_id", "text")
+    def ingest(df: org.apache.spark.sql.DataFrame, items: Long = 1000L) = {
+      val buf = scala.collection.mutable.Buffer.empty[(String, Double)]
+      val n = CorpusIngest.ingestBatch(df, ub, tb, shards, numShards = 2,
+        expectedItems = items, stageLog = Some(buf))
+      (n, buf.toMap.apply("bloomdrop:url"))
+    }
+    assert(ingest(docs(1 to 4)) == ((4L, 0.0)))
+    // another writer learns url p9 into epoch 0 (a new part file, so a
+    // new stamp); the next batch must drop p9 as seen
+    graft.operators.BloomMembership.sketch(((1 to 4) :+ 9)
+        .map(i => s"https://site.com/p$i").toDF("url")
+        .select(graft.functions.TextOps.canonicalizeUrl(col("url")).as("u")),
+        "u", 1000L)
+      .write.mode("overwrite").parquet(s"$ub/epoch=0")
+    assert(ingest(docs(Seq(9, 10))) == ((1L, 1.0)))
+    // a Gopher-dropped url is SEEN by the url frontier; compaction
+    // rebuilds the chain from the shipped store, which never held it,
+    // so after the rebuild its recrawl (now with good text) ships —
+    // only if the rebuilt bytes, not the cached chain, are probed
+    assert(ingest(docs(Seq(20), _ => "too few words")) == ((0L, 0.0)))
+    (30 to 33).foreach(b => ingest(docs(b * 10 to b * 10 + 5), items = 4L))
+    CorpusIngest.compactFrontierBlooms(spark, ub, tb, shards)
+    assert(new java.io.File(ub).listFiles().count(_.getName.startsWith("epoch=")) == 1)
+    assert(ingest(docs(Seq(20))) == ((1L, 0.0)))
+  }
+
+  test("bloom increments taken as observed metrics are sized past the " +
+      "runtime-filter conf ceilings, not clamped") {
+    val dir = Files.createTempDirectory("ingest_sizing").toString
+    val (ub, tb, shards) = (s"$dir/ub", s"$dir/tb", s"$dir/shards")
+    val docs = (1L to 4L).map(i => (s"https://site.com/p$i", i, good(i)))
+      .toDF("url", "doc_id", "text")
+    // 10M items: optimalNumOfBits is ~95.8M, past the 64M-bit default
+    assert(CorpusIngest.ingestBatch(docs, ub, tb, shards, numShards = 2,
+      expectedItems = 10000000L) == 4L)
+    val want = org.apache.spark.util.sketch.BloomFilter
+      .optimalNumOfBits(10000000L, 0.01)
+    Seq(ub, tb).foreach { store =>
+      val bytes = spark.read.parquet(s"$store/epoch=0")
+        .as[Array[Byte]].collect().head
+      val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(bytes))
+      assert(bf.bitSize() >= want, s"$store clamped: ${bf.bitSize()} < $want")
+    }
+  }
+
+  test("degenerate batches: an empty batch and an all-bloom-positive " +
+      "batch ship 0, write no shard file, and leave the next batch " +
+      "shipping what it would have") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    val dir = Files.createTempDirectory("ingest_degenerate").toString
+    val (ub, tb, shards, dd) =
+      (s"$dir/ub", s"$dir/tb", s"$dir/shards", s"$dir/drift")
+    val nd = Some(CorpusIngest.NearDupGate(s"$dir/ndidx"))
+    def shardFiles = if (!new java.io.File(shards).exists) 0
+      else fileTree(shards).count(_.endsWith(".parquet"))
+    // bounded: a guard that blocked on an observation that never
+    // completes would hang here instead of failing
+    def ingest(rows: Seq[(String, Long, String)]) = Await.result(Future(
+      CorpusIngest.ingestBatch(rows.toDF("url", "doc_id", "text"), ub, tb,
+        shards, numShards = 2, driftDir = Some(dd), nearDup = nd)),
+      5.minutes)
+    val b1 = (1 to 6).map(i => (s"https://site.com/p$i", i.toLong, good(i.toLong)))
+    val b2 = (7 to 9).map(i => (s"https://site.com/p$i", i.toLong, good(i.toLong))) :+
+      (("https://site.com/p10", 10L, good(1L)))                   // text dup
+    assert(ingest(Seq.empty) == 0L)
+    assert(shardFiles == 0)
+    assert(ingest(b1) == 6L)
+    val afterB1 = shardFiles
+    // every url already seen: all bloom-positive at the url frontier
+    assert(ingest(b1.map { case (u, i, _) => (u, i + 100L, good(i + 100L)) }) == 0L)
+    assert(shardFiles == afterB1)
+    assert(ingest(b2) == 3L)
   }
 
   test("per-stage profile: the stage log times every driver action " +
