@@ -179,14 +179,14 @@ object Dedup {
           rows.map(r => org.apache.spark.sql.Row(
             r.getAs[Any]("band"), r.getAs[Any]("bucket"))).distinct.toSeq,
           keySchema)
-        bandPairCounts(localDf(batch, rows, probePlan.schema),
-          Some(corpusIndex), dedupIndex, localKeys = Some(keys))
+        bandPairCountsAgainst(localDf(batch, rows, probePlan.schema),
+          rows.length.toLong, corpusIndex, dedupIndex, localKeys = Some(keys))
       case None =>
         val rows = org.apache.spark.sql.Observation()
         val probe = probePlan.observe(rows, count(lit(1)).as("n"))
           .localCheckpoint(true)
-        bandPairCounts(probe, Some(corpusIndex), dedupIndex,
-          probeRows = rows.get.get("n").map(_.asInstanceOf[Long]))
+        bandPairCountsAgainst(probe, rows.get("n").asInstanceOf[Long],
+          corpusIndex, dedupIndex)
     }
   }
 
@@ -194,80 +194,78 @@ object Dedup {
     * frames — the one counting core of [[minhashLshPairs]],
     * [[minhashLshPairsAgainst]] and the ingest near-dup gate
     * (`CorpusIngest.nearDupDrops`). Bands are counted PER PARTNER
-    * PAIR; callers threshold `n_bands` themselves.
+    * PAIR; callers threshold `n_bands` themselves. This form counts
+    * the probe's own pairs, `a_id < b_id` → (a_id, b_id, n_bands);
+    * [[bandPairCountsAgainst]] counts them against a corpus. */
+  private[graft] def bandPairCounts(probe: DataFrame): DataFrame =
+    pairCounts(probe, probe, _ < _, "a_id", "b_id")
+
+  /** [[bandPairCounts]] of probe docs against corpus docs, `doc <> doc`
+    * (a probe whose rows were already appended to the index — replay
+    * after a partial failure, overlapping loads — must not pair every
+    * doc with itself) → (corpus_id, batch_id, n_bands). The corpus is
+    * narrowed to the probe's (band, bucket) keys BEFORE the
+    * replay-dedup distinct (r18): a semi-join keeps every row of each
+    * touched key, so the distinct slice — and therefore every pair —
+    * is unchanged, but the per-probe shuffle is collision-bounded
+    * instead of re-shuffling the full corpus-sized index every batch.
+    * The probe's key projection is the semi-join's build side (a
+    * semi-join needs no distinct build): broadcast while the probe has
+    * at most `maxBroadcastKeys` rows and semi-joined shuffled past it —
+    * the narrowing survives, only its physical form changes.
     *
-    *   - no `corpus`: the probe's own pairs, `a_id < b_id` →
-    *     (a_id, b_id, n_bands);
-    *   - with `corpus`: probe docs against corpus docs, `doc <> doc`
-    *     (a probe whose rows were already appended to the index —
-    *     replay after a partial failure, overlapping loads — must not
-    *     pair every doc with itself) → (corpus_id, batch_id, n_bands).
-    *     The corpus is narrowed to the probe's (band, bucket) keys
-    *     BEFORE the replay-dedup distinct (r18): a semi-join keeps
-    *     every row of each touched key, so the distinct slice — and
-    *     therefore every pair — is unchanged, but the per-probe
-    *     shuffle is collision-bounded instead of re-shuffling the full
-    *     corpus-sized index every batch. The probe's key projection is
-    *     the semi-join's build side (a semi-join needs no distinct
-    *     build): broadcast while the probe has at most
-    *     `maxBroadcastKeys` rows and semi-joined shuffled past it — the
-    *     narrowing survives, only its physical form changes;
-    *   - with `corpus` and `selfPairs`: both kinds from ONE join — the
-    *     probe's rows join the union of the narrowed corpus and the
-    *     probe itself, the probe side tagged `in_batch`, so an
-    *     in-batch pair (`corpus_id` < `batch_id`, both probe docs) and
-    *     a corpus pair are counted in the same pass →
-    *     (corpus_id, batch_id, in_batch, n_bands).
+    * With `selfPairs` both kinds come from ONE join: the probe's rows
+    * join the union of the narrowed corpus and the probe itself, the
+    * probe side tagged `in_batch`, so an in-batch pair (`corpus_id` <
+    * `batch_id`, both probe docs) and a corpus pair are counted in the
+    * same pass → (corpus_id, batch_id, in_batch, n_bands).
     *
-    * `probeRows` is the probe's row count when the caller already
-    * observed it (else a count job decides the guard); under
-    * [[MaxProbeBroadcastRows]] the probe is the pair join's broadcast
-    * build side. `localKeys` marks a probe that is a driver-side local
-    * relation: its pre-built key table replaces the key projection, and
-    * both join as broadcast build sides. */
-  private[graft] def bandPairCounts(probe: DataFrame,
-      corpus: Option[DataFrame] = None, dedupIndex: Boolean = true,
+    * `probeRows` is the probe's row count, which every caller already
+    * holds (an observed metric of the probe's checkpoint, or the length
+    * of its local rows); under [[MaxProbeBroadcastRows]] the probe is
+    * the pair join's broadcast build side. `localKeys` marks a probe
+    * that is a driver-side local relation: its pre-built key table
+    * replaces the key projection, and both join as broadcast build
+    * sides. */
+  private[graft] def bandPairCountsAgainst(probe: DataFrame, probeRows: Long,
+      corpus: DataFrame, dedupIndex: Boolean = true,
       localKeys: Option[DataFrame] = None,
       maxBroadcastKeys: Long = MaxBroadcastKeyRows,
-      probeRows: Option[Long] = None,
       selfPairs: Boolean = false): DataFrame = {
-    def pairs(l: DataFrame, r: DataFrame, docCond: (Column, Column) => Column,
-              lId: String, rId: String, tags: Seq[String] = Nil): DataFrame = {
-      val joined = l.alias("l").join(r.alias("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          docCond(col("l.doc"), col("r.doc")))
-      // tagged (gate) pairs shuffle on the probe doc: the key the gate
-      // reduces them to (its drop set)
-      (if (tags.isEmpty) joined else joined.repartition(col("r.doc")))
-        .groupBy(Seq(col("l.doc").as(lId), col("r.doc").as(rId)) ++
-          tags.map(t => col(s"l.$t").as(t)): _*)
-        .agg(count(lit(1)).as("n_bands"))
+    val keys = localKeys.map(broadcast(_)).getOrElse {
+      val k = probe.select("band", "bucket")
+      if (probeRows <= maxBroadcastKeys) broadcast(k) else k
     }
-    corpus match {
-      case None => pairs(probe, probe, _ < _, "a_id", "b_id")
-      case Some(c) =>
-        lazy val nProbe = probeRows.getOrElse(probe.count())
-        val keys = localKeys.map(broadcast(_)).getOrElse {
-          val k = probe.select("band", "bucket")
-          if (nProbe <= maxBroadcastKeys) broadcast(k) else k
-        }
-        val narrowed = c.select("doc", "band", "bucket")
-          .join(keys, Seq("band", "bucket"), "left_semi")
-        val fromCorpus = if (dedupIndex) narrowed.distinct() else narrowed
-        val probeSide =
-          if (localKeys.isDefined || nProbe <= MaxProbeBroadcastRows)
-            broadcast(probe)
-          else probe
-        if (!selfPairs)
-          pairs(fromCorpus, probeSide, _ =!= _, "corpus_id", "batch_id")
-        else
-          pairs(fromCorpus.withColumn("in_batch", lit(false))
-              .unionByName(probe.select("doc", "band", "bucket")
-                .withColumn("in_batch", lit(true))),
-            probeSide,
-            (l, r) => when(col("l.in_batch"), l < r).otherwise(l =!= r),
-            "corpus_id", "batch_id", Seq("in_batch"))
-    }
+    val narrowed = corpus.select("doc", "band", "bucket")
+      .join(keys, Seq("band", "bucket"), "left_semi")
+    val fromCorpus = if (dedupIndex) narrowed.distinct() else narrowed
+    val probeSide =
+      if (localKeys.isDefined || probeRows <= MaxProbeBroadcastRows)
+        broadcast(probe)
+      else probe
+    if (!selfPairs)
+      pairCounts(fromCorpus, probeSide, _ =!= _, "corpus_id", "batch_id")
+    else
+      pairCounts(fromCorpus.withColumn("in_batch", lit(false))
+          .unionByName(probe.select("doc", "band", "bucket")
+            .withColumn("in_batch", lit(true))),
+        probeSide,
+        (l, r) => when(col("l.in_batch"), l < r).otherwise(l =!= r),
+        "corpus_id", "batch_id", Seq("in_batch"))
+  }
+
+  private def pairCounts(l: DataFrame, r: DataFrame,
+      docCond: (Column, Column) => Column, lId: String, rId: String,
+      tags: Seq[String] = Nil): DataFrame = {
+    val joined = l.alias("l").join(r.alias("r"),
+      col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
+        docCond(col("l.doc"), col("r.doc")))
+    // tagged (gate) pairs shuffle on the probe doc: the key the gate
+    // reduces them to (its drop set)
+    (if (tags.isEmpty) joined else joined.repartition(col("r.doc")))
+      .groupBy(Seq(col("l.doc").as(lId), col("r.doc").as(rId)) ++
+        tags.map(t => col(s"l.$t").as(t)): _*)
+      .agg(count(lit(1)).as("n_bands"))
   }
 
   /** 64-bit SimHash over whitespace tokens: per-bit signed vote of

@@ -156,8 +156,8 @@ private[graft] object TieredIndex {
 
   /** Past this many hot keys the driver-side per-file range pruning
     * is skipped (the collect would be the bottleneck) and every base
-    * file is read — the bloom narrowing still applies through the hot
-    * semi-join. ~1M keys ≈ 16 MB collected. */
+    * file is read — the caller's `Hot.narrow` still applies. ~1M
+    * keys ≈ 16 MB collected. */
   private[graft] val MaxHotKeysForFilePrune: Long = 1000000L
 
   /** Staging-dir suffix and commit-manifest name (see the commit
@@ -598,7 +598,8 @@ private[graft] object TieredIndex {
     * TAIL files (appended since the last [[compact]]) are scanned in
     * full — bounded by the appends, corpus-independent. BASE files
     * are read only when `hotOf`, given the generations, reports hot
-    * keys: with at most [[MaxHotKeysForFilePrune]] of them only the
+    * keys: with at most `maxPruneKeys` (default
+    * [[MaxHotKeysForFilePrune]]) of them only the
     * files whose clustered key range holds one ([[pruneFiles]]),
     * otherwise all of them, each read narrowed by the caller's
     * `Hot.narrow`. A missing, stale or unparsable sidecar degrades
@@ -610,7 +611,8 @@ private[graft] object TieredIndex {
     * (`base_files_read` is 0 without generations). */
   def probe(ss: SparkSession, dir: String, empty: DataFrame,
             gaugePrefix: String,
-            stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]])(
+            stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]],
+            maxPruneKeys: Long = MaxHotKeysForFilePrune)(
       hotOf: Seq[Gen] => Hot): DataFrame = {
     recover(ss, dir)
     val live = liveFiles(ss, dir)
@@ -633,7 +635,7 @@ private[graft] object TieredIndex {
     gauge("hot_keys", hot.n.toDouble)
     if (hot.n == 0) { gauge("base_files_read", 0); return tailDf }
     val toRead =
-      if (hot.n <= MaxHotKeysForFilePrune) pruneFiles(baseFiles, hot.keys())
+      if (hot.n <= maxPruneKeys) pruneFiles(baseFiles, hot.keys())
       else baseFiles.map(_.name)
     gauge("base_files_read", toRead.length.toDouble)
     val baseDf =

@@ -94,9 +94,10 @@ import graft.sources.ShardSink
   * ([[keepFirstUnseen]]) checkpoints its winner table (one exchange),
   * and every guard it branches on (bloom positives, winner count,
   * verbatim copies) is an observed metric of that checkpoint. The url
-  * stage's joined rows feed the gated-rows checkpoint directly, and
-  * the exact-text stage checkpoints those gated rows (it reads them
-  * twice) and its result. The near-dup gate checkpoints the
+  * stage's joined rows feed the gated-rows checkpoint directly (with
+  * a classifier gate, which reads them twice, they are checkpointed
+  * first), and the exact-text stage checkpoints those gated rows (it
+  * reads them twice) and its result. The near-dup gate checkpoints the
   * batch's band rows (observing their count), collects the suspect
   * keys and the drop set in one bounded collect each, and counts both
   * pair kinds in one join; the drops then leave the shipped rows and
@@ -231,23 +232,29 @@ object CorpusIngest {
       //    ordering contract: a mojibake variant of a shipped page must
       //    repair to the same bytes and fall to the exact-text dedup);
       //    canonical urls never depended on the text.
-      //    The stage's result is not materialized: its one reader, the
-      //    gated-rows checkpoint of step 3, runs the join (a map-side
-      //    pass over the batch, twice with a classifier gate, which
-      //    reads its input twice) and observes this batch's url-bloom
-      //    increment (the sketch of every canonical url the stage
-      //    passes) for step 5.
+      //    Without a classifier gate the stage's result is not
+      //    materialized: its one reader, the gated-rows checkpoint of
+      //    step 3, runs the join (a map-side pass over the batch) and
+      //    observes this batch's url-bloom increment (the sketch of
+      //    every canonical url the stage passes) for step 5. A
+      //    classifier gate reads its input twice (features, then the
+      //    join back), so with one the stage is checkpointed, and the
+      //    join, the copies split and the repair regex run once.
       val urlSketch = Observation()
       val urlFresh = timed(ss, stageLog, "canon_frontier") {
         val text =
           if (repairEncoding) TextOps.repairMojibake(col("text"))
           else col("text")
-        keepFirstUnseen(
+        val stage = keepFirstUnseen(
           batch.withColumn("canon_url", TextOps.canonicalizeUrl(col("url"))),
           "canon_url", urlPrev.map(_._2), urlBloomPath, "url",
           MaxBroadcastUrlRows, Seq(text.as("text")), stageLog)
           .observe(urlSketch, BloomMembership
             .sketchOf(col("canon_url"), expectedItems).as("bloom"))
+        if (qualityGate.isEmpty) stage
+        else BloomMembership.withSizing(ss, expectedItems) {
+          stage.localCheckpoint(true)
+        }
       }
 
       // 2. quality gates — the t33 heuristic composite, then (when a
@@ -311,9 +318,9 @@ object CorpusIngest {
       }
       val gateDrops = bandIdx.zip(nearDup).map { case (idx, nd) =>
         timed(ss, stageLog, "neardup_gate") {
-          dropTable(nearDupDrops(idx,
+          dropTable(nearDupDrops(idx, observed(bandRows, "n"),
             narrowedCorpusIndex(ss, nd.indexDir, idx, nd.minBands, stageLog),
-            nd.minBands, batchRows = Some(observed(bandRows, "n"))))
+            nd.minBands))
         }
       }
       val survivors = gateDrops.fold(fresh)(d =>
@@ -645,7 +652,7 @@ object CorpusIngest {
 
   /** Near-dup drop set: batch docs colliding with a smaller-id batch
     * doc (keep-first) or ANY corpus doc on ≥ `minBands` bands — the
-    * gate's threshold over [[Dedup.bandPairCounts]]. That core counts
+    * gate's threshold over [[Dedup.bandPairCountsAgainst]]. That core counts
     * PER PARTNER PAIR (summing bands across partners would let several
     * sub-threshold overlaps, e.g. shared boilerplate, add up to a
     * false drop), narrows the corpus to the batch's (band, bucket)
@@ -653,17 +660,15 @@ object CorpusIngest {
     * the replay-defense distinct (foreachBatch is at-least-once) on
     * that collision-sized slice; CorpusIngestSpec pins both.
     * Both pair kinds come from ONE join (the core's `selfPairs`), and
-    * both drop the batch-side doc. `maxBroadcastKeys` moves the key
-    * table's broadcast guard (past it the semi-join runs shuffled);
-    * `batchRows`, the batch index's row count when the caller already
-    * knows it, spares the guard its count job. */
-  private[graft] def nearDupDrops(batchIdx: DataFrame,
+    * both drop the batch-side doc. `batchRows` is the batch index's
+    * row count (the band checkpoint observes it); `maxBroadcastKeys`
+    * moves the key table's broadcast guard (past it the semi-join runs
+    * shuffled). */
+  private[graft] def nearDupDrops(batchIdx: DataFrame, batchRows: Long,
       corpusIdx: DataFrame, minBands: Int,
-      maxBroadcastKeys: Long = Dedup.MaxBroadcastKeyRows,
-      batchRows: Option[Long] = None): DataFrame =
-    Dedup.bandPairCounts(batchIdx, Some(corpusIdx),
-        maxBroadcastKeys = maxBroadcastKeys, probeRows = batchRows,
-        selfPairs = true)
+      maxBroadcastKeys: Long = Dedup.MaxBroadcastKeyRows): DataFrame =
+    Dedup.bandPairCountsAgainst(batchIdx, batchRows, corpusIdx,
+        maxBroadcastKeys = maxBroadcastKeys, selfPairs = true)
       .filter(col("n_bands") >= minBands)
       .select(col("batch_id").as("doc_id")).distinct()
 
@@ -976,15 +981,18 @@ object CorpusIngest {
     * The tail/base split, file pruning and gauges are
     * [[graft.sources.TieredIndex.probe]]'s; the gauges are `ndidx:*`
     * (`ndidx:hot_keys` counts the suspect docs' keys) — the
-    * bounded-scan evidence the ingest log prints. */
+    * bounded-scan evidence the ingest log prints. `maxPruneKeys` is
+    * the probe's per-file pruning cap (specs lower it to reach the
+    * past-the-cap branch). */
   private[graft] def narrowedCorpusIndex(ss: SparkSession, indexDir: String,
       batchIdx: DataFrame, minBands: Int,
-      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None)
+      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None,
+      maxPruneKeys: Long = graft.sources.TieredIndex.MaxHotKeysForFilePrune)
       : DataFrame = {
     import ss.implicits._
     graft.sources.TieredIndex.probe(ss, indexDir,
         Seq.empty[(Long, Int, Long)].toDF("doc", "band", "bucket"), "ndidx",
-        stageLog) { gens =>
+        stageLog, maxPruneKeys) { gens =>
       // hot rows = batch (doc, band, bucket) rows whose key ANY
       // generation's bloom claims to contain (map-side off the
       // batchIdx checkpoint — one predicate per generation in the
@@ -992,9 +1000,7 @@ object CorpusIngest {
       // (one row per (doc, band), so the per-doc row count IS the
       // hot band count — a window over one doc-keyed exchange); only
       // their keys can contribute to a drop. One bounded collect
-      // brings them to the driver, which distincts them; past the
-      // prune cap every base file is read and a count job gauges the
-      // distinct keys instead.
+      // brings them to the driver, which distincts them.
       val suspect = BloomMembership
         .flagSeenAny(batchIdx
             .withColumn("__k", xxhash64(col("band"), col("bucket"))),
@@ -1004,15 +1010,24 @@ object CorpusIngest {
           org.apache.spark.sql.expressions.Window.partitionBy("doc")))
         .filter(col("__nb") >= minBands)
         .select(col("band").cast("long"), col("bucket"))
-      val cap = graft.sources.TieredIndex.MaxHotKeysForFilePrune
-      val keys = suspect.limit(cap.toInt + 1).collect()
-        .map(r => Seq(r.getLong(0), r.getLong(1))).distinct
-      val n = if (keys.length <= cap) keys.length.toLong
-        else suspect.distinct().count()
-      // no narrowing of the base read here: the pair counting
-      // semi-joins every corpus row, base and tail alike, to the
-      // batch's keys before anything shuffles it
-      graft.sources.TieredIndex.Hot(n, () => keys.toIndexedSeq, identity)
+      // The cap bounds the collected ROWS, and a key repeats once per
+      // suspect doc holding it (in-batch near-dups, a recrawl), so
+      // only a complete collect may be distincted on the driver: past
+      // the cap a count job gauges the distinct keys, and when they
+      // still fit it a second bounded collect brings them all. No
+      // narrowing of the base read here: the pair counting semi-joins
+      // every corpus row, base and tail alike, to the batch's keys
+      // before anything shuffles it.
+      def key(r: org.apache.spark.sql.Row) = Seq(r.getLong(0), r.getLong(1))
+      val rows = suspect.limit(maxPruneKeys.toInt + 1).collect()
+      if (rows.length <= maxPruneKeys) {
+        val keys = rows.map(key).distinct.toIndexedSeq
+        graft.sources.TieredIndex.Hot(keys.length.toLong, () => keys, identity)
+      } else {
+        val keys = suspect.distinct()
+        graft.sources.TieredIndex.Hot(keys.count(),
+          () => keys.collect().map(key).toIndexedSeq, identity)
+      }
     }
   }
 

@@ -285,13 +285,14 @@ class CorpusIngestSpec extends SparkSpec {
       doc(98L, b => if (b < 4) 500L + b else uniq(98L)(b)) ++
       doc(98L, b => if (b < 4) 500L + b else uniq(98L)(b))
     ).toDF("doc", "band", "bucket")
-    val drops = CorpusIngest.nearDupDrops(batch, corpus, minBands = 8)
+    val drops = CorpusIngest.nearDupDrops(batch, batch.count(), corpus,
+        minBands = 8)
       .as[Long].collect().toSet
     assert(drops == Set(20L, 30L))
     // over the broadcast cap the narrowing falls back to a shuffled
     // semi-join — same drop set, only the physical form changes
-    val dropsShuffled = CorpusIngest.nearDupDrops(batch, corpus,
-        minBands = 8, maxBroadcastKeys = 0L)
+    val dropsShuffled = CorpusIngest.nearDupDrops(batch, batch.count(),
+        corpus, minBands = 8, maxBroadcastKeys = 0L)
       .as[Long].collect().toSet
     assert(dropsShuffled == drops)
   }
@@ -681,6 +682,49 @@ class CorpusIngestSpec extends SparkSpec {
     assert(n3 == 1L, s"fallback probe must gate identically, got $n3")
     assert(g3("ndidx:base_files") == 0.0 && g3("ndidx:tail_files") > 0.0,
       "without a sidecar every file is tail (the pre-r17 full scan)")
+  }
+
+  test("suspect keys past the prune cap: keys repeated across suspect " +
+      "docs still prune to every base file a suspect key lands in") {
+    val dir = Files.createTempDirectory("ingest_prunecap").toString
+    val (ub, tb, shards, idx) =
+      (s"$dir/ub", s"$dir/tb", s"$dir/shards", s"$dir/ndidx")
+    CorpusIngest.ingestBatch(
+      (1L to 600L).map(i => (s"https://site.com/p$i", i, good(i)))
+        .toDF("url", "doc_id", "text"),
+      ub, tb, shards, numShards = 2,
+      nearDup = Some(CorpusIngest.NearDupGate(idx)))
+    CorpusIngest.compactNearDupIndex(spark, idx, targetFileBytes = 1024)
+    val corpus = spark.read.parquet(idx)
+    val Array(a, b) = corpus.groupBy("doc").count()
+      .filter(col("count") === 16).select("doc").as[Long]
+      .orderBy("doc").limit(2).collect()
+    // 50 batch copies of corpus doc a and one of doc b: 816 suspect
+    // rows over at most 32 distinct keys. With the cap at the distinct
+    // count the keys fit it, but the first cap + 1 rows hold doc b's
+    // keys only if its copy comes first, so distincting a capped
+    // collect would prune away the base files holding doc b's keys
+    def rowsOf(d: Long) = corpus.filter(col("doc") === d)
+      .select("band", "bucket")
+    val batchIdx = (1L to 50L).map(c => rowsOf(a).withColumn("doc", lit(10000L + c)))
+      .reduce(_ unionByName _)
+      .unionByName(rowsOf(b).withColumn("doc", lit(20000L)))
+      .select("doc", "band", "bucket").localCheckpoint(true)
+    val nKeys = batchIdx.select("band", "bucket").distinct().count()
+    assert(nKeys > 16L)
+    val buf = scala.collection.mutable.Buffer.empty[(String, Double)]
+    val narrowed = CorpusIngest.narrowedCorpusIndex(spark, idx, batchIdx,
+      minBands = 8, stageLog = Some(buf), maxPruneKeys = nKeys)
+    val g = buf.filter(_._1.startsWith("ndidx:")).toMap
+    assert(g("ndidx:hot_keys") == nKeys.toDouble)
+    assert(g("ndidx:base_files_read") < g("ndidx:base_files"),
+      "the suspect keys fit the cap, so the base read is pruned")
+    for (d <- Seq(a, b))
+      assert(narrowed.filter(col("doc") === d).count() == 16L,
+        s"corpus doc $d lost rows to the pruned base read")
+    val drops = CorpusIngest.nearDupDrops(batchIdx, batchIdx.count(),
+        narrowed, minBands = 8).as[Long].collect().toSet
+    assert(drops == ((10001L to 10050L).toSet + 20000L))
   }
 
   test("generation-tiered index compaction: each pass clusters only " +

@@ -9,7 +9,9 @@ seed. Per op, in run order, it prints the Spark jobs each side ran:
 for a batch the jobs launched inside the batch span, for a maintenance
 op the jobs of each phase span. It then compares what each batch did:
 `shipped`, every `ndidx:*`, `bloomdrop:*`, `fill:*` and `epochs:*` gauge,
-and the stage (phase) names. Any difference is listed, and the exit
+and the stage (phase) names. A run repeats its op sequence once per
+timed pass, so every op is named by its pass, and a different number
+of passes is a difference. Any difference is listed, and the exit
 code is 1; equal work exits 0. Job counts are reported, not judged.
 """
 import json
@@ -37,28 +39,34 @@ def jobs_by_span(art):
 
 def job_rows(art):
     """(row name, jobs) in run order: one row per batch op, one per
-    maintenance phase."""
+    maintenance phase, each named `pass<p>/<op>`."""
     jobs = jobs_by_span(art)
     spans = sorted((s for s in art["spans"] if s["kind"] != "job"),
                    key=lambda s: s["start_ms"])
+    pass_of = {s["id"]: s["name"] for s in spans if s["kind"] == "pass"}
     rows = []
     for op in (s for s in spans if s["kind"] == "op"):
+        name = f"{pass_of.get(op['parent'], 'untimed')}/{op['name']}"
         phases = [s for s in spans if s["parent"] == op["id"] and s["kind"] == "phase"]
         if phases:
-            rows += [(f"{op['name']}.{p['name']}", jobs.get(p["id"], 0)) for p in phases]
+            rows += [(f"{name}.{p['name']}", jobs.get(p["id"], 0)) for p in phases]
         else:
-            rows.append((op["name"], jobs.get(op["id"], 0)))
+            rows.append((name, jobs.get(op["id"], 0)))
     return rows
 
 
 def work(art):
-    """Per op name: the gauges and stage names that must not differ."""
-    out = {}
+    """Per `pass<p>/<op>`: the gauges and stage names that must not
+    differ. `ops` lists every pass's ops in run order, so an op's pass
+    is the number of times its name came before."""
+    out, seen = {}, {}
     for op in art["ops"]:
+        p = seen.get(op["op"], 0)
+        seen[op["op"]] = p + 1
         info = op.get("info", {})
         w = {k: v for k, v in info.items() if k == "shipped" or k.startswith(GAUGES)}
         w["stages"] = sorted(op.get("phases", {}))
-        out[op["op"]] = w
+        out[f"pass{p}/{op['op']}"] = w
     return out
 
 
@@ -76,6 +84,8 @@ def main(argv):
         print(f"{n:<{width}}  {fa:>6}  {fb:>6}{mark}")
     wa, wb = work(a), work(b)
     diffs = []
+    if a["passes"] != b["passes"]:
+        diffs.append(f"passes: A={a['passes']} B={b['passes']}")
     for op in sorted(set(wa) | set(wb)):
         if op not in wa or op not in wb:
             diffs.append(f"{op}: only in {'A' if op in wa else 'B'}")
