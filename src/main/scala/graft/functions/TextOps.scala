@@ -352,8 +352,19 @@ object TextOps {
     * bullet/ellipsis line fractions, alphabetic-word floor, stop-word
     * floor, plus the composite `keep`. One map-side pass, no shuffle;
     * shared verbatim by the t33 catalog query (whose DuckDB oracle
-    * replays each field) and the streaming ingest quality gate. */
-  def gopherShape(text: Column): Column = {
+    * replays each field), `CorpusStats` and the streaming ingest
+    * quality gate. Native codegen'd expression (graft.plans.GopherShape):
+    * one byte walk per row instead of [[gopherShapeHof]]'s three splits,
+    * per-word regex lambdas and twelve whole-text `replace` copies.
+    * Requires GraftExtensions (Verify/Bench/tests set it). */
+  def gopherShape(text: Column): Column =
+    call_function("graft_gopher", text)
+
+  /** Column form of [[gopherShape]] — identical struct, doubles bit for
+    * bit (TextKernelsPropSpec, EdgeCasesSpec); the native expression's
+    * spec oracle and the formula its DuckDB mirror follows field by
+    * field (`TextQueries.gopherFieldsSql`). */
+  def gopherShapeHof(text: Column): Column = {
     val words = split(trim(text), " +")
     val nWords = size(words).cast("long")
     val denomW = greatest(nWords, lit(1L)).cast("double")

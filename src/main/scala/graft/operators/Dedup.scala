@@ -44,9 +44,11 @@ object Dedup {
     * ~4 extra Spark jobs per probe, a fixed driver cost that dominated
     * small batches). Under the cap ONE bounded collect replaces them
     * all: the size guard is the array length, the key table and the
-    * pair-join build side derive from the same local rows (broadcast
-    * exchanges over a local relation build driver-side, zero jobs),
-    * and snapshot consistency is strict — one collect, one evaluation
+    * pair-join build side derive from the same local rows, and no
+    * checkpoint or count job runs for them. A broadcast exchange over
+    * such a local relation is NOT free: under AQE each query that
+    * broadcasts one runs one parallelize job for it (one task per
+    * core on local[n]). Snapshot consistency is strict — one collect, one evaluation
     * (stronger than the localCheckpoint it replaces). ~1M rows of
     * (doc, pos, h) is the same tens-of-MB driver footprint the
     * broadcast hash table paid anyway. Past the cap the operators
@@ -58,8 +60,10 @@ object Dedup {
     * the rows when within the cap, None past it (the caller falls
     * back to the distributed path — the limit stopped the oversize
     * collect early). Key tables and size guards derive from the
-    * array driver-side, so no further job or exchange runs for them
-    * ([[localDf]] builds frozen LocalRelations to join against). */
+    * array driver-side, so no count or checkpoint job runs for them
+    * ([[localDf]] builds frozen LocalRelations to join against; a
+    * broadcast of one still runs a parallelize job under AQE — see
+    * [[MaxLocalProbeRows]]). */
   private def localRows(df: DataFrame,
                         cap: Int): Option[Array[org.apache.spark.sql.Row]] = {
     val rows = df.limit(cap + 1).collect()
@@ -125,8 +129,12 @@ object Dedup {
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
     val r = numHashes / bands
     // docs shorter than k have no k-shingle — exclude rather than give
-    // them identical empty-set signatures (which would all-collide)
-    val sig = spread(df.filter(length(col(textCol)) >= k))
+    // them identical empty-set signatures (which would all-collide).
+    // No spread() pin: with the one-pass signature kernel the pinned
+    // repartition bought nothing measurable (ingest_loop neardup_band
+    // median 0.445 s pinned vs 0.459 s unpinned over 5 traced pairs on
+    // 4 cores, inside the runs' spread) and cost a shuffle of the text
+    val sig = df.filter(length(col(textCol)) >= k)
       .select(col(idCol).as("doc"),
         minhashSignature(col(textCol), k, numHashes).as("sig"))
     sig.select(col("doc"), explode(lshBands(col("sig"), bands, r)).as("b"))
@@ -165,8 +173,9 @@ object Dedup {
                              bands: Int = 16,
                              dedupIndex: Boolean = true): DataFrame = {
     // one bounded collect snapshots the probe (size guard, key table
-    // and pair-join build side all derive from the same local rows,
-    // zero further driver jobs — see [[MaxLocalProbeRows]]); an
+    // and pair-join build side all derive from the same local rows, no
+    // checkpoint or count job; each broadcast of them still runs one
+    // parallelize job under AQE — see [[MaxLocalProbeRows]]); an
     // oversize batch falls back to the checkpointed distributed path.
     // On the local path the key distinct happens DRIVER-SIDE (no
     // exchange under the broadcast build).
@@ -742,8 +751,9 @@ object Dedup {
                               dedupIndex: Boolean = true,
                               hotHashes: Option[DataFrame] = None): DataFrame = {
     // one bounded collect snapshots the probe (size guard, key table
-    // and pair-join build side all derive from the same local rows,
-    // zero further driver jobs — see [[MaxLocalProbeRows]]); an
+    // and pair-join build side all derive from the same local rows, no
+    // checkpoint or count job; each broadcast of them still runs one
+    // parallelize job under AQE — see [[MaxLocalProbeRows]]); an
     // oversize batch falls back to the checkpointed distributed path
     val probePlan = winnowIndex(batch, idCol, textCol, minLen, k)
     val probeOpt = localRows(probePlan, MaxLocalProbeRows)

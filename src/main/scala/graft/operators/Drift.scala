@@ -31,11 +31,14 @@ import org.apache.spark.sql.functions._
   *     argmax by combinable max-struct (ties toward the DESC-greater
   *     token — p11's argmax convention). Vocabulary-bounded state.
   *
-  * Scale shape: one corpus-sized explode feeding two combinable
-  * count aggregations (bucket-keyed ≤ nBuckets·|sources| rows,
-  * token-keyed vocab-bounded); the corpus-side tables re-join on
-  * bucket/token keys; the 1-row corpus total enters by broadcast (the
-  * documented scalar-BNLJ family). No windows, no corpus-keyed sort.
+  * Scale shape: one corpus-sized explode feeding ONE combinable count
+  * aggregation (token-keyed, vocab-bounded); the bucket side
+  * (≤ nBuckets·|sources| rows) is DERIVED from it —
+  * `graft_fingerprint(w) % nBuckets` per token, integer sums — which
+  * is exact, since a bucket's count is the sum of its tokens' counts.
+  * The corpus-side tables re-join on bucket/token keys; the 1-row
+  * corpus total enters by broadcast (the documented scalar-BNLJ
+  * family). No windows, no corpus-keyed sort.
   */
 object Drift {
 
@@ -46,23 +49,31 @@ object Drift {
     .filter(length(col("w")) > 0)
 
   /** (source, b, cnt) hashed-bucket token counts — the TV side's
-    * state. MERGEABLE: counts from two corpus slices union and re-sum
-    * to the counts of the union (plain + on a keyed table), so a
-    * stream can fold per-batch increments into a persisted store and
-    * the card stays exactly the batch card (StreamingDriftSpec). */
+    * state, [[bucketsOfTokens]] over [[tokenCounts]]. MERGEABLE:
+    * counts from two corpus slices union and re-sum to the counts of
+    * the union (plain + on a keyed table), so a stream can fold
+    * per-batch increments into a persisted store and the card stays
+    * exactly the batch card (StreamingDriftSpec). */
   def bucketCounts(docs: DataFrame, srcCol: String, textCol: String,
                    nBuckets: Int = 4096): DataFrame =
-    tokens(docs, srcCol, textCol)
-      .select(col("source"),
-        (call_function("graft_fingerprint", col("w")) % nBuckets).as("b"))
-      .groupBy("source", "b").agg(count(lit(1)).as("cnt"))
+    bucketsOfTokens(tokenCounts(docs, srcCol, textCol), nBuckets)
 
-  /** (source, w, c) per-token counts — the argmax side's state;
-    * mergeable the same way (vocab-bounded). */
+  /** (source, w, c) per-token counts — the argmax side's state and the
+    * only one a store keeps; mergeable the same way (vocab-bounded). */
   def tokenCounts(docs: DataFrame, srcCol: String,
                   textCol: String): DataFrame =
     tokens(docs, srcCol, textCol)
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
+
+  /** The (source, b, cnt) bucket side of a (source, w, c) token-count
+    * table: each token's count lands in bucket
+    * `graft_fingerprint(w) % nBuckets` (the fingerprint is a
+    * non-negative long), summed per bucket in integers — exactly the
+    * per-occurrence bucket count of the docs the tokens came from. */
+  def bucketsOfTokens(srcT: DataFrame, nBuckets: Int = 4096): DataFrame =
+    srcT.groupBy(col("source"),
+        (call_function("graft_fingerprint", col("w")) % nBuckets).as("b"))
+      .agg(sum(col("c")).cast("long").as("cnt"))
 
   /** Merge two count-table increments: union + re-sum on the key —
     * exact whatever the split (counts are a commutative monoid). */
@@ -120,10 +131,11 @@ object Drift {
   }
 
   /** CorpusIngest's per-batch drift transition — APPEND-ONLY (r15b):
-    * both count tables — (source, bucket) and (source, token) — move
-    * as ONE kind-tagged, batch-bounded increment (`kind='b'|'t'`, key
-    * stringified; bucket ids survive the round trip exactly —
-    * non-negative longs) APPENDED to the store. Nothing reads or
+    * the batch's (source, token) counts move as ONE batch-bounded
+    * increment APPENDED to the store, tagged `kind='t'` with the token
+    * in `k`. The bucket side is not stored: every reader derives it
+    * from the token rows ([[bucketsOfTokens]], exact), so a fold
+    * tokenizes once and writes only token rows. Nothing reads or
     * rewrites the accumulated state inside the hot loop, so per-batch
     * drift work is O(batch), not O(store) — the previous
     * read-merge-rewrite of the whole bounded store was the ingest
@@ -134,7 +146,12 @@ object Drift {
     * the accumulated files back to one row per key on the maintenance
     * cadence (CorpusIngest.start's compactEvery — without it the
     * store grows one small file set per batch, though never beyond
-    * O(batches × grid+vocab) rows).
+    * O(batches × vocab) rows).
+    *
+    * OLDER STORES also hold `kind='b'` bucket rows (stores written
+    * before the bucket side was derived). They stay readable: every
+    * reader keeps only the `kind='t'` rows, and the next
+    * [[compactStore]] drops the bucket rows for good.
     *
     * Crash safety needs no twin here: parquet's commit protocol keeps
     * a half-written append invisible (`_temporary` is skipped by
@@ -142,69 +159,75 @@ object Drift {
     * double-appends an increment — the same bounded overcount the
     * previous merge form had, documented monitor semantics. */
   def foldDocsIntoStore(store: String, docs: DataFrame, srcCol: String,
-                        textCol: String, nBuckets: Int = 4096): Unit = {
+                        textCol: String): Unit = {
     recoverStore(docs.sparkSession, store)
-    bucketCounts(docs, srcCol, textCol, nBuckets)
-      .select(lit("b").as("kind"), col("source"),
-        col("b").cast("string").as("k"), col("cnt"))
-      .unionByName(tokenCounts(docs, srcCol, textCol)
-        .select(lit("t").as("kind"), col("source"),
-          col("w").as("k"), col("c").as("cnt")))
+    storeRows(tokenCounts(docs, srcCol, textCol))
       .write.mode("append").parquet(store)
   }
 
+  /** A (source, w, c) token table as store rows (kind, source, k, cnt). */
+  private def storeRows(srcT: DataFrame): DataFrame =
+    srcT.select(lit("t").as("kind"), col("source"), col("w").as("k"),
+      col("c").as("cnt"))
+
+  /** A store's token rows summed per (source, token), as the
+    * (source, w, c) table [[cardFromCounts]] reads; the bucket rows
+    * of an older store are left out. */
+  private def storeTokens(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): DataFrame =
+    spark.read.parquet(dir).filter(col("kind") === "t")
+      .groupBy(col("source"), col("k").as("w"))
+      .agg(sum(col("cnt")).cast("long").as("c"))
+
   /** Maintenance for the append-only drift store: fold the
-    * accumulated increments back to one row per (kind, source, key) —
+    * accumulated increments back to one token row per (source, key) —
     * card-invariant by the counts monoid — through the same
     * [[graft.sources.DirSwap.replace]] the shard and index compactors
-    * use. */
+    * use. An older store's bucket rows are dropped here. */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    dir: String): Unit = {
     val (fs, target) = recoverStore(spark, dir)
     if (!fs.exists(target)) return
     graft.sources.DirSwap.replace(spark, dir) { out =>
-      spark.read.parquet(dir)
-        .groupBy("kind", "source", "k")
-        .agg(sum(col("cnt")).cast("long").as("cnt"))
-        .write.mode("overwrite").parquet(out)
+      storeRows(storeTokens(spark, dir)).write.mode("overwrite").parquet(out)
     }
   }
 
   /** Read a drift card off a store directory written by
     * [[foldDocsIntoStore]]: recover any interrupted swap, reject a
-    * retired layout, sum the appended increments per key (a no-op on a
-    * freshly compacted store), split by kind. The summed table is
-    * checkpointed — bounded (grid + vocab rows), and cardFromCounts
-    * fans each side into several consumers, which without the
-    * materialization would each re-run the store-wide scan + shuffle
-    * (the same reason sourceDrift checkpoints its count tables). */
+    * retired layout, sum the appended token increments per key (a
+    * no-op on a freshly compacted store) and derive the bucket side.
+    * Both count tables are checkpointed — bounded (vocab and grid
+    * rows), and cardFromCounts fans each into several consumers, which
+    * without the materialization would each re-run the store-wide
+    * scan + shuffle (the same reason sourceDrift checkpoints them).
+    * `nBuckets` must be the bucket count the card is compared under
+    * ([[sourceDrift]]'s default). */
   def cardFromStore(spark: org.apache.spark.sql.SparkSession,
-                    dir: String, smoothing: Int = 4096): DataFrame = {
+                    dir: String, smoothing: Int = 4096,
+                    nBuckets: Int = 4096): DataFrame = {
     recoverStore(spark, dir)
-    val all = spark.read.parquet(dir)
-      .groupBy("kind", "source", "k")
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-      .localCheckpoint(true)
-    cardFromCounts(
-      all.filter(col("kind") === "b")
-        .select(col("source"), col("k").cast("long").as("b"), col("cnt")),
-      all.filter(col("kind") === "t")
-        .select(col("source"), col("k").as("w"), col("cnt").as("c")),
-      smoothing)
+    cardFromTokens(storeTokens(spark, dir).localCheckpoint(true),
+      nBuckets, smoothing)
   }
 
   def sourceDrift(docs: DataFrame, srcCol: String, textCol: String,
                   nBuckets: Int = 4096, smoothing: Int = 4096): DataFrame =
-    cardFromCounts(
-      bucketCounts(docs, srcCol, textCol, nBuckets).localCheckpoint(true),
-      tokenCounts(docs, srcCol, textCol).localCheckpoint(true),
-      smoothing)
+    cardFromTokens(tokenCounts(docs, srcCol, textCol).localCheckpoint(true),
+      nBuckets, smoothing)
 
-  /** The drift card derived purely from the two count tables (the
-    * form the streaming monitor reads back from its store). Both
-    * inputs are bounded state and feed three consumers each —
-    * sourceDrift checkpoints them so the corpus-sized aggregation
-    * runs once, not per consumer. */
+  /** The card from a checkpointed (source, w, c) token table, its
+    * bucket side derived ([[bucketsOfTokens]]) and checkpointed too. */
+  private def cardFromTokens(srcT: DataFrame, nBuckets: Int,
+                             smoothing: Int): DataFrame =
+    cardFromCounts(bucketsOfTokens(srcT, nBuckets).localCheckpoint(true),
+      srcT, smoothing)
+
+  /** The drift card derived purely from the two count tables
+    * ([[sourceDrift]] and [[cardFromStore]] pass the bucket table
+    * derived from the token table). Both inputs are bounded state and
+    * feed three consumers each — the callers checkpoint them so the
+    * corpus-sized aggregation runs once, not per consumer. */
   def cardFromCounts(srcB: DataFrame, srcT: DataFrame,
                      smoothing: Int = 4096): DataFrame = {
     val srcTot = srcB.groupBy("source").agg(sum("cnt").as("tot"))

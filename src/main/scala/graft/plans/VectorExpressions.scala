@@ -240,6 +240,7 @@ case class VecUnit(child: Expression)
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => RewriteDotProduct)
+    ext.injectOptimizerRule(_ => FuseMinHashShingles)
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[VecDot].getName, "graft_dot"),
@@ -302,6 +303,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_simhash"),
       new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
       (children: Seq[Expression]) => SimHash64(children.head)))
+    ext.injectFunction((
+      FunctionIdentifier("graft_gopher"),
+      new ExpressionInfo(classOf[GopherShape].getName, "graft_gopher"),
+      (children: Seq[Expression]) => GopherShape(children.head)))
     ext.injectFunction((
       FunctionIdentifier("graft_fingerprint"),
       new ExpressionInfo(classOf[Fingerprint].getName, "graft_fingerprint"),

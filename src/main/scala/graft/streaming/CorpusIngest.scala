@@ -31,11 +31,11 @@ import graft.sources.ShardSink
   * item 1): the classifier gate scores each Gopher survivor against a
   * broadcast weight vector (map-side per partition; the one shuffle
   * is the doc-keyed feature aggregation) and keeps score ≥ threshold;
-  * the drift stage folds the SHIPPED docs' (source, bucket) and
-  * (source, token) count increments into a persisted bounded store —
-  * counts are a commutative monoid, so the card read off the store at
-  * any point equals the one-shot batch card over everything shipped
-  * so far ([[driftCard]]).
+  * the drift stage folds the SHIPPED docs' (source, token) count
+  * increments into a persisted bounded store (the bucket side is
+  * derived from them on read) — counts are a commutative monoid, so
+  * the card read off the store at any point equals the one-shot batch
+  * card over everything shipped so far ([[driftCard]]).
   *
   * The batch body is a PURE DataFrame function ([[ingestBatch]]), so
   * the streaming pipeline and its batch twin are the same code — the
@@ -104,12 +104,20 @@ import graft.sources.ShardSink
   * the index append as an inlined filter. The url- and text-bloom
   * increments are observed metrics of the gated-rows checkpoint and
   * the shard write, and the driver writes the epoch files itself, so the
-  * tail is the shard write, 1 band append and 1 drift append. Under
+  * tail is the shard write, 1 band append and 1 drift append.
+  * Writes nothing later in the batch reads run as CONCURRENT actions
+  * ([[SideActions]]), each under its stage's label: the two bloom-drop
+  * record appends start inside `canon_frontier` and
+  * `gates_exact_dedup`, and the drift fold starts once the shipped set
+  * is known, beside the shard write and the index appends. All three
+  * are awaited before the bloom fold, so the band append still
+  * follows the shard write and the bloom fold still follows both, and
+  * nothing is left running when the batch returns. Under
   * AQE each action runs one Spark job per shuffle or broadcast stage;
   * every job carries its stage's name as its job description.
   * CorpusIngestSpec "job inventory" pins the per-stage counts over a
-  * fixed 3-batch sequence with the near-dup gate and drift on (18, 24
-  * and 20 jobs for the three batches, 19, 25 and 25 for the
+  * fixed 3-batch sequence with the near-dup gate and drift on (17, 23
+  * and 19 jobs for the three batches, 19, 25 and 25 for the
   * maintenance pass after each), and "flat job budget" pins equal
   * per-stage counts while both chains grow.
   *
@@ -214,6 +222,7 @@ object CorpusIngest {
     // The caller's own persisted frames (e.g. a checkpointed source
     // batch) predate the snapshot and are spared.
     val rddsBefore = ss.sparkContext.getPersistentRDDs.keySet
+    val sides = new SideActions(ss, stageLog)
     try {
       // persisted frontier state is read ONCE per batch; the epoch
       // bytes feed both the probes and the end-of-batch merges (r15 —
@@ -248,7 +257,7 @@ object CorpusIngest {
         val stage = keepFirstUnseen(
           batch.withColumn("canon_url", TextOps.canonicalizeUrl(col("url"))),
           "canon_url", urlPrev.map(_._2), urlBloomPath, "url",
-          MaxBroadcastUrlRows, Seq(text.as("text")), stageLog)
+          MaxBroadcastUrlRows, Seq(text.as("text")), sides, "canon_frontier")
           .observe(urlSketch, BloomMembership
             .sketchOf(col("canon_url"), expectedItems).as("bloom"))
         if (qualityGate.isEmpty) stage
@@ -289,7 +298,7 @@ object CorpusIngest {
           },
           "text_hash", textPrev.map(_._2), textBloomPath, "text",
           Dedup.MaxBroadcastKeyRows, Seq(col("canon_url"), col("text")),
-          stageLog).localCheckpoint(true)
+          sides, "gates_exact_dedup").localCheckpoint(true)
       }
 
       // 3b. optional near-dup stage: band the batch ONCE, then
@@ -367,17 +376,8 @@ object CorpusIngest {
           // INDEPENDENT reads of the same checkpointed anchor table, so
           // they run as concurrent Spark actions (r20): the self check
           // rides the probe's scheduling gaps instead of serializing
-          // ~3 s/batch behind it. Each future logs into its OWN buffer,
-          // merged into the caller's after both complete (the shared
-          // buffer is not thread-safe).
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.global
-          def privateLog() = stageLog.map(_ =>
-            scala.collection.mutable.Buffer.empty[(String, Double)])
-          val crossLog = privateLog(); val selfLog = privateLog()
-          val crossF = Future(timed(ss, crossLog, "substr_cross") {
+          // ~3 s/batch behind it
+          val cross = sides("substr_cross") { crossLog =>
             (if (graft.sources.TieredIndex.liveNames(ss, sg.indexDir).nonEmpty
                 && shardHasData)
               Dedup.exactSubstrPairsAgainstDir(ss, sg.indexDir,
@@ -387,22 +387,37 @@ object CorpusIngest {
                 .select(col("batch_id").as("doc_id"))
             else survivors.select("doc_id").limit(0))
               .localCheckpoint(true)
-          })
-          val selfF = Future(timed(ss, selfLog, "substr_self") {
+          }
+          val inBatch = sides("substr_self") { _ =>
             Dedup.exactSubstrPairsFromAnchors(survivors,
                 batchAnchors.get, "doc_id", "text", sg.minLen, sg.k, sg.maxDf)
               .select(col("b_id").as("doc_id"))
               .localCheckpoint(true)
-          })
-          val cross = Await.result(crossF, Duration.Inf)
-          val inBatch = Await.result(selfF, Duration.Inf)
-          stageLog.foreach(buf =>
-            Seq(crossLog, selfLog).flatten.foreach(buf ++= _))
-          cross.unionByName(inBatch).distinct().localCheckpoint(true)
+          }
+          cross.result.unionByName(inBatch.result).distinct().localCheckpoint(true)
         }
         timed(ss, stageLog, "substr_filter") {
           survivors.join(dropIds, Seq("doc_id"), "left_anti")
             .localCheckpoint(true)
+        }
+      }
+
+      // 6. drift monitor fold: count increments of what SHIPS (per
+      //    source host) — the t36 card stays readable at any point via
+      //    [[driftCard]]. The token counts move as ONE batch-bounded
+      //    APPEND (O(batch) per fold; the accumulated store is only
+      //    ever touched by compaction). Nothing in the batch reads the
+      //    drift store, so the fold starts as soon as the shipped set
+      //    is known and runs as a concurrent action beside the shard
+      //    write and the index appends (steps 4 and 4b), awaited before
+      //    the bloom fold. A batch that fails after its fold landed
+      //    re-folds on replay: the bounded overcount
+      //    [[Drift.foldDocsIntoStore]] documents for replays.
+      driftDir.foreach { dd =>
+        sides("drift_fold") { _ =>
+          Drift.foldDocsIntoStore(dd,
+            shipping.select(hostOf(col("canon_url")).as("source"), col("text")),
+            "source", "text")
         }
       }
 
@@ -468,6 +483,10 @@ object CorpusIngest {
         }
       }
 
+      // the side actions (the bloom-drop records of steps 1 and 3, the
+      // drift fold) end here, so the bloom fold follows them
+      sides.awaitAll()
+
       // 5. fold this batch's keys into the persisted frontier state.
       //    URL bloom learns every canonical url SEEN (kept or dropped
       //    by quality/text-dedup — a crawled url is spent either way);
@@ -493,24 +512,14 @@ object CorpusIngest {
           }
         }
       }
-
-      // 6. drift monitor fold: count increments of what actually
-      //    SHIPPED (per source host) — the t36 card stays readable at
-      //    any point via [[driftCard]]. Both count tables move as ONE
-      //    kind-tagged, batch-bounded APPEND (O(batch) per fold; the
-      //    accumulated store is only ever touched by compaction)
-      timed(ss, stageLog, "drift_fold") {
-        driftDir.foreach { dd =>
-          val src = shipping.select(hostOf(col("canon_url")).as("source"),
-            col("text"))
-          Drift.foldDocsIntoStore(dd, src, "source", "text")
-        }
-      }
       n
     } finally {
-      // released by id, not through RDD.unpersist: that one logs a
-      // lineage-truncated warning per local checkpoint, and nothing
-      // reads these again
+      // a side action still running reads this batch's checkpoints;
+      // after a failure it is waited for (its own outcome aside) before
+      // they are released. Released by id, not through RDD.unpersist:
+      // that one logs a lineage-truncated warning per local checkpoint,
+      // and nothing reads these again
+      sides.settle()
       ss.sparkContext.getPersistentRDDs.keys.foreach { id =>
         if (!rddsBefore.contains(id))
           org.apache.spark.GraftRddRelease(ss.sparkContext, id)
@@ -577,6 +586,55 @@ object CorpusIngest {
     * keeps the constant package-private). */
   private val JobDescription = "spark.job.description"
 
+  /** The concurrent Spark actions of one [[ingestBatch]] call: writes
+    * and probes that no later step of the batch waits on until a
+    * known point. `apply(stage)(f)` starts `f` on a new thread as one
+    * [[timed]] stage — its jobs carry the stage label, and it logs
+    * into a private buffer, since `stageLog` is not thread-safe. Its
+    * `result` awaits it, rethrows its failure and merges its log into
+    * `stageLog` (once); `awaitAll` takes the result of every action
+    * started so far, and `settle` only waits for them, for the
+    * failure path. The thread is created by the caller's, so the
+    * action's jobs inherit the caller's Spark local properties as they
+    * are at the start (job group, scheduler pool); a pooled thread
+    * would carry whatever its creator had set, and cancelling the
+    * caller's job group would miss them. */
+  private final class SideActions(ss: SparkSession,
+      val stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]]) {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor {
+      (r: Runnable) =>
+        val t = new Thread(r, "ingest-side-action")
+        t.setDaemon(true)
+        t.start()
+    }
+    private val started = scala.collection.mutable.Buffer.empty[Action[_]]
+
+    final class Action[A](fut: Future[A],
+        log: Option[scala.collection.mutable.Buffer[(String, Double)]]) {
+      lazy val result: A = {
+        val a = Await.result(fut, Duration.Inf)
+        stageLog.foreach(_ ++= log.get)
+        a
+      }
+      def settle(): Unit = Await.ready(fut, Duration.Inf)
+    }
+
+    def apply[A](stage: String)(
+        f: Option[scala.collection.mutable.Buffer[(String, Double)]] => A): Action[A] = {
+      val log = stageLog.map(_ =>
+        scala.collection.mutable.Buffer.empty[(String, Double)])
+      val a = new Action(Future(timed(ss, log, stage)(f(log))), log)
+      started += a
+      a
+    }
+
+    def awaitAll(): Unit = started.foreach(_.result)
+
+    def settle(): Unit = started.foreach(_.settle())
+  }
+
   /** Broadcast cap for the URL winner table, which carries full
     * canonical-url STRINGS (~100-200 bytes a row, plus JVM string
     * overhead once deserialized): 250k rows ≈ 25-50 MB serialized —
@@ -612,9 +670,8 @@ object CorpusIngest {
     * (key, doc_id) group. */
   private def keepFirstUnseen(rows: DataFrame, key: String,
       bloom: Seq[Array[Byte]], bloomPath: String, name: String,
-      broadcastCap: Long, payload: Seq[Column],
-      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]])
-      : DataFrame = {
+      broadcastCap: Long, payload: Seq[Column], sides: SideActions,
+      stage: String): DataFrame = {
     val counts = Observation()
     val flagged = BloomMembership.flagSeenAny(
         rows.select(key, "doc_id").repartition(col(key))
@@ -629,7 +686,7 @@ object CorpusIngest {
         count_if(!col("__seen") && col("__copies") > 1).as("copied"))
       .localCheckpoint(true) // consumers: drop record, join
     recordBloomDrops(flagged, observed(counts, "seen"), bloomPath, key,
-      name, stageLog)
+      name, sides, stage)
     val winners = flagged.filter(!col("__seen")).drop("__seen")
     val wj =
       if (observed(counts, "winners") <= broadcastCap)
@@ -691,15 +748,17 @@ object CorpusIngest {
     * true positive that never shipped). `flagged` is a localCheckpoint
     * and `positives` its observed bloom-positive count, so the
     * (skipped-when-empty) append is a local-block pass, not a plan
-    * re-execution. */
+    * re-execution. Nothing in the batch reads the record, so the
+    * append is a side action under the caller's `stage` label
+    * ([[SideActions]]), awaited before the bloom fold. */
   private def recordBloomDrops(flagged: DataFrame, positives: Long,
-      bloomPath: String, keyCol: String, name: String,
-      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]])
-      : Unit = {
-    stageLog.foreach(_ += s"bloomdrop:$name" -> positives.toDouble)
-    if (positives > 0)
+      bloomPath: String, keyCol: String, name: String, sides: SideActions,
+      stage: String): Unit = {
+    sides.stageLog.foreach(_ += s"bloomdrop:$name" -> positives.toDouble)
+    if (positives > 0) sides(stage) { _ =>
       flagged.filter(col("__seen")).select(keyCol)
         .coalesce(1).write.mode("append").parquet(bloomPath + DropsSuffix)
+    }
   }
 
   /** Split the accumulated frontier-bloom drops ([[recordBloomDrops]])

@@ -1163,18 +1163,20 @@ class CorpusIngestSpec extends SparkSpec {
     // epochs from the driver cache, took its guard counts and bloom
     // increments as observed metrics of jobs that already ran and
     // counted both near-dup pair kinds in one join, the totals were
-    // 45, 19, 67, 25, 54, 25
+    // 45, 19, 67, 25, 54, 25. The drift fold ran 3 jobs (18, 19, 24,
+    // 25, 20, 25) while it counted buckets and tokens separately; it
+    // now counts tokens only
     def stages(canon: Int, gates: Int, gate: Int) = Map(
       "canon_frontier" -> canon, "gates_exact_dedup" -> gates,
       "neardup_band" -> 1, "neardup_gate" -> gate, "shard_write" -> 2,
-      "neardup_append" -> 1, "drift_fold" -> 3)
+      "neardup_append" -> 1, "drift_fold" -> 2)
     val maint = Map("-" -> 19)
     val maintAfter = Map("-" -> 25)
     assert(counts.flatten == Seq(
       stages(2, 6, 3), maint,
       stages(3, 7, 7), maintAfter,
       stages(3, 6, 4), maintAfter), counts.toString)
-    assert(counts.flatten.map(_.values.sum) == Seq(18, 19, 24, 25, 20, 25))
+    assert(counts.flatten.map(_.values.sum) == Seq(17, 19, 23, 25, 19, 25))
   }
 
   /** Run `f` with a job counter keyed by the stage label

@@ -111,4 +111,33 @@ class EdgeCasesSpec extends SparkSpec {
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(pairs == Set((2L, 3L)))
   }
+
+  /** Texts a single-pass byte kernel can get wrong at its edges. */
+  private val degenerateTexts: Seq[Option[String]] = Seq(
+    None, Some(""), Some("   "), Some("ab"), Some("a"),
+    Some("é"), Some("日本語"), Some("😀😀 🎉"), Some("naïve café 日本 😀x"),
+    Some("...."), Some("......."), Some(". . ..."), Some("end....\n...."),
+    Some(" the the "), Some(" the  the of of and that have with "),
+    Some("a\tb\tthe\tc"), Some("line\r\nnext\r\n"),
+    Some("  lead and trail  "), Some("one line\n"), Some("\n"),
+    Some("- bullet\n* star\n  - indented ...\n...\n  \n"),
+    Some("##### ### #"))
+
+  test("graft_gopher and the fused MinHash equal their Column/HOF forms " +
+      "on degenerate texts") {
+    val diffs = TextKernelsPropSpec.gopherDiffs(spark, degenerateTexts) ++
+      Seq(1, 3, 5).flatMap(k =>
+        TextKernelsPropSpec.minhashDiffs(spark, degenerateTexts, k)
+          .map(d => s"minhash k=$k: $d"))
+    assert(diffs.isEmpty, diffs.mkString("\n"))
+  }
+
+  test("drift bucket side derived from token counts equals per-occurrence " +
+      "bucket counts on degenerate texts") {
+    val docs = degenerateTexts.map(t => (t.orNull, "s")).toDF("text", "source")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("source", "b").collect().map(_.toSeq).toSeq
+    assert(rows(graft.operators.Drift.bucketCounts(docs, "source", "text")) ==
+      rows(TextKernelsPropSpec.occurrenceBuckets(docs)))
+  }
 }

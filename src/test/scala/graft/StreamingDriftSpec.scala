@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.Drift
@@ -127,6 +128,32 @@ class StreamingDriftSpec extends SparkSpec {
       Seq(("web text common alpha", "b")).toDF("text", "source"),
       "source", "text")
     assert(card() != before)
+  }
+
+  test("an older store's bucket rows are ignored on read and dropped by " +
+      "the next compaction; folds keep landing on it") {
+    val dir = Files.createTempDirectory("driftstore5").toString
+    val store = s"$dir/store"
+    val b1 = Seq(("web text common alpha beta", "a"),
+      ("spamword spamword web", "c")).toDF("text", "source")
+    val b2 = Seq(("web text common beta", "a")).toDF("text", "source")
+    // an increment in the older two-kind layout: bucket rows beside the
+    // token rows, both tagged by kind
+    Drift.bucketCounts(b1, "source", "text")
+      .select(lit("b").as("kind"), col("source"),
+        col("b").cast("string").as("k"), col("cnt"))
+      .write.parquet(store)
+    Drift.foldDocsIntoStore(store, b1, "source", "text")
+    Drift.foldDocsIntoStore(store, b2, "source", "text")
+    def card() = Drift.cardFromStore(spark, store).collect().map(_.toSeq).toSeq
+    val expect = Drift.sourceDrift(b1.unionByName(b2), "source", "text")
+      .collect().map(_.toSeq).toSeq
+    assert(card() == expect)
+    Drift.compactStore(spark, store)
+    assert(card() == expect, "compaction must not move the card")
+    val kinds = spark.read.parquet(store).select("kind").distinct()
+      .as[String].collect().toSeq
+    assert(kinds == Seq("t"), s"compaction left kinds $kinds")
   }
 
   test("retired two-subdir drift store fails loudly: the error names " +
