@@ -55,7 +55,7 @@ object Drift {
     * per-batch increments into a persisted store and the card stays
     * exactly the batch card (StreamingDriftSpec). */
   def bucketCounts(docs: DataFrame, srcCol: String, textCol: String,
-                   nBuckets: Int = 4096): DataFrame =
+                   nBuckets: Int = GridBuckets): DataFrame =
     bucketsOfTokens(tokenCounts(docs, srcCol, textCol), nBuckets)
 
   /** (source, w, c) per-token counts — the argmax side's state and the
@@ -65,12 +65,16 @@ object Drift {
     tokens(docs, srcCol, textCol)
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
 
+  /** The bucket grid a store's card is derived under — t36's, and
+    * [[sourceDrift]]'s default. */
+  private val GridBuckets = 4096
+
   /** The (source, b, cnt) bucket side of a (source, w, c) token-count
     * table: each token's count lands in bucket
     * `graft_fingerprint(w) % nBuckets` (the fingerprint is a
     * non-negative long), summed per bucket in integers — exactly the
     * per-occurrence bucket count of the docs the tokens came from. */
-  def bucketsOfTokens(srcT: DataFrame, nBuckets: Int = 4096): DataFrame =
+  private def bucketsOfTokens(srcT: DataFrame, nBuckets: Int): DataFrame =
     srcT.groupBy(col("source"),
         (call_function("graft_fingerprint", col("w")) % nBuckets).as("b"))
       .agg(sum(col("c")).cast("long").as("cnt"))
@@ -153,16 +157,53 @@ object Drift {
     * reader keeps only the `kind='t'` rows, and the next
     * [[compactStore]] drops the bucket rows for good.
     *
-    * Crash safety needs no twin here: parquet's commit protocol keeps
-    * a half-written append invisible (`_temporary` is skipped by
-    * readers), so a crashed fold simply re-runs. foreachBatch replay
+    * Crash safety needs no twin here: the increment is written where
+    * no reader sees it and then renamed into the store file by file
+    * ([[Increment]]), as the parquet committer's own job commit moves
+    * task files, so a crashed fold simply re-runs. foreachBatch replay
     * double-appends an increment — the same bounded overcount the
     * previous merge form had, documented monitor semantics. */
   def foldDocsIntoStore(store: String, docs: DataFrame, srcCol: String,
                         textCol: String): Unit = {
-    recoverStore(docs.sparkSession, store)
-    storeRows(tokenCounts(docs, srcCol, textCol))
-      .write.mode("append").parquet(store)
+    val inc = increment(docs.sparkSession, store)
+    inc.write(docs, srcCol, textCol)
+    inc.publish()
+  }
+
+  /** [[foldDocsIntoStore]] in two steps, for a writer whose increment
+    * must not land before some other write has succeeded (CorpusIngest
+    * writes it beside its shard write and publishes it after its bloom
+    * fold, so a failed batch leaves the store as it was). */
+  def increment(spark: org.apache.spark.sql.SparkSession,
+                store: String): Increment = {
+    val (fs, target) = recoverStore(spark, store)
+    new Increment(fs, target)
+  }
+
+  /** One batch's increment, written under `<store>/_staged-<id>`,
+    * where no reader sees it (parquet listing skips `_`-prefixed
+    * names). `publish` renames its part files into the store on the
+    * driver (no job); `discard` deletes it and is a no-op once
+    * published. A crash in between leaves an invisible staged dir that
+    * the next [[compactStore]] drops with the old store dir. */
+  final class Increment private[Drift] (fs: org.apache.hadoop.fs.FileSystem,
+                                        target: org.apache.hadoop.fs.Path) {
+    private val dir = new org.apache.hadoop.fs.Path(target,
+      s"_staged-${java.util.UUID.randomUUID()}")
+
+    def write(docs: DataFrame, srcCol: String, textCol: String): Unit =
+      storeRows(tokenCounts(docs, srcCol, textCol)).write.parquet(dir.toString)
+
+    def publish(): Unit = {
+      fs.listStatus(dir).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).foreach { f =>
+          val to = new org.apache.hadoop.fs.Path(target, f.getName)
+          require(fs.rename(f, to), s"rename $f -> $to failed")
+        }
+      discard()
+    }
+
+    def discard(): Unit = { fs.delete(dir, true); () }
   }
 
   /** A (source, w, c) token table as store rows (kind, source, k, cnt). */
@@ -187,7 +228,8 @@ object Drift {
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    dir: String): Unit = {
     val (fs, target) = recoverStore(spark, dir)
-    if (!fs.exists(target)) return
+    // a store whose only increment was discarded is an empty dir
+    if (!graft.sources.DirSwap.hasData(fs, target)) return
     graft.sources.DirSwap.replace(spark, dir) { out =>
       storeRows(storeTokens(spark, dir)).write.mode("overwrite").parquet(out)
     }
@@ -201,18 +243,16 @@ object Drift {
     * rows), and cardFromCounts fans each into several consumers, which
     * without the materialization would each re-run the store-wide
     * scan + shuffle (the same reason sourceDrift checkpoints them).
-    * `nBuckets` must be the bucket count the card is compared under
-    * ([[sourceDrift]]'s default). */
+    * The bucket side is derived on t36's 4096-bucket grid. */
   def cardFromStore(spark: org.apache.spark.sql.SparkSession,
-                    dir: String, smoothing: Int = 4096,
-                    nBuckets: Int = 4096): DataFrame = {
+                    dir: String, smoothing: Int = 4096): DataFrame = {
     recoverStore(spark, dir)
     cardFromTokens(storeTokens(spark, dir).localCheckpoint(true),
-      nBuckets, smoothing)
+      GridBuckets, smoothing)
   }
 
   def sourceDrift(docs: DataFrame, srcCol: String, textCol: String,
-                  nBuckets: Int = 4096, smoothing: Int = 4096): DataFrame =
+                  nBuckets: Int = GridBuckets, smoothing: Int = 4096): DataFrame =
     cardFromTokens(tokenCounts(docs, srcCol, textCol).localCheckpoint(true),
       nBuckets, smoothing)
 

@@ -31,8 +31,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * (TextKernelsPropSpec checks doubles bitwise; EdgeCasesSpec covers the
   * degenerate texts). NULL text gives a struct of NULL fields, the
   * Column form's result in an ANSI session (`graft.Session` pins ANSI).
-  * Strings are valid UTF-8 (Spark builds them from Java strings); a
-  * code point is a non-continuation byte.
+  *
+  * The Column form's counts are `length` differences, and `length`
+  * counts chars as Spark steps them: each lead byte spans
+  * `UTF8String.numBytesForFirstByte` bytes, whatever follows it. Spark
+  * does not validate the bytes it reads (parquet crawl text), so a
+  * truncated lead byte can swallow the ASCII bytes after it, and
+  * removing a counted substring then shifts what it swallows. The walk
+  * checks that every lead byte is followed by its continuation bytes;
+  * then no ASCII byte is ever swallowed and each count is a byte count.
+  * A text that fails the check gets those five counts from the same
+  * `replace` and `length` primitives the Column form runs.
   */
 case class GopherShape(child: Expression) extends UnaryExpression {
 
@@ -77,9 +86,10 @@ object GopherShape {
     StructField("n_stops", LongType), StructField("keep", BooleanType)))
 
   /** The counted stop words, each between spaces (t33's list). */
-  private val Stops: Array[Array[Byte]] =
+  private val StopWords: Array[String] =
     Array(" the ", " be ", " to ", " of ", " and ", " that ", " have ",
-      " with ").map(_.getBytes("UTF-8"))
+      " with ")
+  private val Stops: Array[Array[Byte]] = StopWords.map(_.getBytes("UTF-8"))
 
   def nullRow(): InternalRow = new GenericInternalRow(Schema.length)
 
@@ -122,6 +132,9 @@ object GopherShape {
     var words = 0L; var alphaWords = 0L; var stops = 0L
     var lines = 1L; var bullets = 0L; var ellipsisLines = 0L
     var dotRun = 0
+    // continuation bytes the last lead byte still spans; `whole` while
+    // every lead byte is followed by all of them
+    var pending = 0; var whole = true
     var inWord = false; var wordAlpha = false
     // the current line's first and last non-space byte (-1: none yet)
     var lineFirst = -1; var lineLast = -1
@@ -130,7 +143,10 @@ object GopherShape {
     var i = 0
     while (i < n) {
       val b = Platform.getByte(base, off + i)
-      if ((b & 0xC0) != 0x80) chars += 1
+      if (pending == 0) {
+        chars += 1; pending = UTF8String.numBytesForFirstByte(b) - 1
+      } else if ((b & 0xC0) == 0x80) pending -= 1
+      else whole = false
       if (b == '.') dotRun += 1
       else { ellipses += dotRun / 3; dotRun = 0 }
       if (b == ' ') {
@@ -159,6 +175,17 @@ object GopherShape {
     if (inWord && wordAlpha) alphaWords += 1
     val k = lineKind(base, off, lineFirst, lineLast)
     bullets += k & 1; ellipsisLines += k >> 1
+    if (pending > 0 || !whole) {
+      // the Column form's length differences, run as it runs them
+      val total = s.numChars()
+      def removed(sub: String): Int =
+        total - s.replace(UTF8String.fromString(sub), UTF8String.EMPTY_UTF8).numChars()
+      def occurrences(sub: String): Long = (removed(sub).toDouble / sub.length).toLong
+      spaces = removed(" "); lines = removed("\n") + 1L
+      hashes = occurrences("#"); ellipses = occurrences("...")
+      stops = StopWords.map(occurrences).sum
+      chars = total
+    }
 
     // an empty trimmed text is split into one empty piece
     val nWords = math.max(words, 1L)

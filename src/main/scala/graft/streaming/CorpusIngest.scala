@@ -108,11 +108,14 @@ import graft.sources.ShardSink
   * Writes nothing later in the batch reads run as CONCURRENT actions
   * ([[SideActions]]), each under its stage's label: the two bloom-drop
   * record appends start inside `canon_frontier` and
-  * `gates_exact_dedup`, and the drift fold starts once the shipped set
-  * is known, beside the shard write and the index appends. All three
-  * are awaited before the bloom fold, so the band append still
-  * follows the shard write and the bloom fold still follows both, and
-  * nothing is left running when the batch returns. Under
+  * `gates_exact_dedup` and run beside the gates, awaited before the
+  * shard write, so a failed record append still stops the batch
+  * before anything ships. The drift increment is written beside the
+  * shard write, the index appends and the bloom fold, staged where no
+  * reader sees it, and published after the bloom fold, so a failed
+  * batch leaves the drift store as it was; nothing is left running
+  * when the batch returns. The band append still follows the shard
+  * write and the bloom fold still follows both. Under
   * AQE each action runs one Spark job per shuffle or broadcast stage;
   * every job carries its stage's name as its job description.
   * CorpusIngestSpec "job inventory" pins the per-stage counts over a
@@ -223,13 +226,15 @@ object CorpusIngest {
     // batch) predate the snapshot and are spared.
     val rddsBefore = ss.sparkContext.getPersistentRDDs.keySet
     val sides = new SideActions(ss, stageLog)
+    // the batch's drift increment, staged until the batch has succeeded
+    var driftInc = Option.empty[Drift.Increment]
     try {
       // persisted frontier state is read ONCE per batch; the epoch
       // bytes feed both the probes and the end-of-batch merges (r15 —
       // previously each artifact was read twice)
       val (urlPrev, textPrev) = timed(ss, stageLog, "state_load") {
         // a retired drift layout fails here, before anything is written
-        driftDir.foreach(Drift.recoverStore(ss, _))
+        driftInc = driftDir.map(Drift.increment(ss, _))
         (loadBloomEpochs(ss, urlBloomPath), loadBloomEpochs(ss, textBloomPath))
       }
 
@@ -402,20 +407,24 @@ object CorpusIngest {
         }
       }
 
+      // the bloom-drop records of steps 1 and 3 land before anything
+      // ships: a failed record append stops the batch here
+      sides.awaitAll()
+
       // 6. drift monitor fold: count increments of what SHIPS (per
       //    source host) — the t36 card stays readable at any point via
       //    [[driftCard]]. The token counts move as ONE batch-bounded
-      //    APPEND (O(batch) per fold; the accumulated store is only
+      //    increment (O(batch) per fold; the accumulated store is only
       //    ever touched by compaction). Nothing in the batch reads the
-      //    drift store, so the fold starts as soon as the shipped set
-      //    is known and runs as a concurrent action beside the shard
-      //    write and the index appends (steps 4 and 4b), awaited before
-      //    the bloom fold. A batch that fails after its fold landed
-      //    re-folds on replay: the bounded overcount
-      //    [[Drift.foldDocsIntoStore]] documents for replays.
-      driftDir.foreach { dd =>
+      //    drift store, so the increment is written as a concurrent
+      //    action beside the shard write, the index appends and the
+      //    bloom fold (steps 4, 4b and 5), but STAGED where no reader
+      //    sees it ([[Drift.increment]]): it is published after the
+      //    bloom fold, and a batch that fails before then discards it,
+      //    so its replay folds it once.
+      val driftWrite = driftInc.map { inc =>
         sides("drift_fold") { _ =>
-          Drift.foldDocsIntoStore(dd,
+          inc.write(
             shipping.select(hostOf(col("canon_url")).as("source"), col("text")),
             "source", "text")
         }
@@ -483,10 +492,6 @@ object CorpusIngest {
         }
       }
 
-      // the side actions (the bloom-drop records of steps 1 and 3, the
-      // drift fold) end here, so the bloom fold follows them
-      sides.awaitAll()
-
       // 5. fold this batch's keys into the persisted frontier state.
       //    URL bloom learns every canonical url SEEN (kept or dropped
       //    by quality/text-dedup — a crawled url is spent either way);
@@ -512,14 +517,20 @@ object CorpusIngest {
           }
         }
       }
+      // the drift increment is written by now: publish it, and nothing
+      // is left running on return
+      driftWrite.foreach(_.result)
+      driftInc.foreach(_.publish())
       n
     } finally {
       // a side action still running reads this batch's checkpoints;
       // after a failure it is waited for (its own outcome aside) before
-      // they are released. Released by id, not through RDD.unpersist:
-      // that one logs a lineage-truncated warning per local checkpoint,
-      // and nothing reads these again
+      // they are released, and an unpublished drift increment is
+      // dropped. Released by id, not through RDD.unpersist: that one
+      // logs a lineage-truncated warning per local checkpoint, and
+      // nothing reads these again
       sides.settle()
+      driftInc.foreach(_.discard())
       ss.sparkContext.getPersistentRDDs.keys.foreach { id =>
         if (!rddsBefore.contains(id))
           org.apache.spark.GraftRddRelease(ss.sparkContext, id)
@@ -750,7 +761,7 @@ object CorpusIngest {
     * (skipped-when-empty) append is a local-block pass, not a plan
     * re-execution. Nothing in the batch reads the record, so the
     * append is a side action under the caller's `stage` label
-    * ([[SideActions]]), awaited before the bloom fold. */
+    * ([[SideActions]]), awaited before the shard write. */
   private def recordBloomDrops(flagged: DataFrame, positives: Long,
       bloomPath: String, keyCol: String, name: String, sides: SideActions,
       stage: String): Unit = {

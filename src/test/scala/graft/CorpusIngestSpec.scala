@@ -1336,6 +1336,32 @@ class CorpusIngestSpec extends SparkSpec {
     assert(ingest(b2) == 3L)
   }
 
+  test("a failed shard write leaves the drift store's card unmoved and no " +
+      "staged increment; the replay folds the batch once") {
+    val dir = Files.createTempDirectory("ingest_drift_fail").toString
+    val (ub, tb, shards, dd) =
+      (s"$dir/ub", s"$dir/tb", s"$dir/shards", s"$dir/drift")
+    def docs(ids: Seq[Long]) =
+      ids.map(i => (s"https://site.com/p$i", i, good(i))).toDF("url", "doc_id", "text")
+    def ingest(ids: Seq[Long], shardDir: String) =
+      CorpusIngest.ingestBatch(docs(ids), ub, tb, shardDir, numShards = 2,
+        driftDir = Some(dd))
+    def card() = CorpusIngest.driftCard(spark, dd).collect().map(_.toSeq).toSeq
+    assert(ingest(1L to 4L, shards) == 4L)
+    val before = card()
+    // a plain file where the shard store should be: the shard write fails
+    val blocked = s"$dir/blocked"
+    Files.write(java.nio.file.Paths.get(blocked), Array[Byte](1))
+    intercept[Exception](ingest(5L to 8L, blocked))
+    assert(card() == before)
+    assert(!new java.io.File(dd).list().exists(_.startsWith("_staged")),
+      "the failed batch's staged increment was not discarded")
+    assert(ingest(5L to 8L, shards) == 4L)
+    assert(card() == graft.operators.Drift.sourceDrift(
+      docs(1L to 8L).select(lit("site.com").as("source"), col("text")),
+      "source", "text").collect().map(_.toSeq).toSeq)
+  }
+
   test("per-stage profile: the stage log times every driver action " +
       "and carries both bloom fill gauges") {
     val dir = Files.createTempDirectory("ingest_prof").toString

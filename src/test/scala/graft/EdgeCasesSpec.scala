@@ -132,6 +132,39 @@ class EdgeCasesSpec extends SparkSpec {
     assert(diffs.isEmpty, diffs.mkString("\n"))
   }
 
+  /** Malformed UTF-8, hex-coded: stray continuation bytes, invalid
+    * lead bytes, and truncated lead bytes that Spark's char stepping
+    * lets swallow the spaces, newlines, '#', dots and stop words after
+    * them — plus a long text the Gopher gate keeps, one such byte in. */
+  private val malformedHex: Seq[String] = {
+    def hex(t: String) = t.getBytes("UTF-8").map("%02X".format(_)).mkString
+    val long = hex("the river and the stone of the lake " * 10)
+    Seq("80E36120", "E3202020616263", "E30A0A61", "F0232341",
+      "E32E2E2E2E2E", "E3207468652074686520", "C3", "61E3", "E382",
+      "808080", "F8FF20FE", "C3A92080", "2D20E30A2D20782E2E2E",
+      "E0A0" + hex("...\n* b"), long + "E32020" + long, long + "80" + long)
+  }
+
+  test("graft_gopher and the fused MinHash equal their Column/HOF forms " +
+      "on malformed UTF-8") {
+    val texts = TextKernelsPropSpec.hexFrame(spark, malformedHex)
+    assert(texts.filter(col("text").isNull).isEmpty)
+    // Spark's `substr` copies a cut-short LAST lead byte's full width,
+    // reading past the string's end, so the HOF shingles are no oracle
+    // for those texts; the native Shingles (which the fusion replaces)
+    // ends that window at the last byte
+    val cutTail = Set("C3", "61E3", "E382")
+    val whole = TextKernelsPropSpec.hexFrame(spark, malformedHex.filterNot(cutTail))
+    val diffs = TextKernelsPropSpec.gopherDiffs(texts) ++
+      Seq(1, 3, 5).flatMap(k =>
+        (TextKernelsPropSpec.minhashDiffs(whole, k) ++
+          TextKernelsPropSpec.unfusedMinhashDiffs(texts, k))
+          .map(d => s"minhash k=$k: $d"))
+    assert(diffs.isEmpty, diffs.mkString("\n"))
+    assert(texts.filter(graft.functions.TextOps.gopherShapeHof(col("text"))
+      .getField("keep")).count() > 0, "no malformed text reaches keep = true")
+  }
+
   test("drift bucket side derived from token counts equals per-occurrence " +
       "bucket counts on degenerate texts") {
     val docs = degenerateTexts.map(t => (t.orNull, "s")).toDF("text", "source")

@@ -141,10 +141,22 @@ object TextKernelsPropSpec {
     in.toDF("text").repartition(2)
   }
 
+  /** Hex-coded byte strings as a distributed `text` frame, bytes kept
+    * as they are: Spark does not validate UTF-8 it reads, so a kernel
+    * sees malformed text from parquet, not only from Java strings. */
+  def hexFrame(spark: SparkSession, hexes: Seq[String]): DataFrame = {
+    import spark.implicits._
+    hexes.toDF("h").repartition(2)
+      .select(expr("cast(unhex(h) as string)").as("text"))
+  }
+
+  def gopherDiffs(spark: SparkSession, in: Seq[Option[String]]): Seq[String] =
+    gopherDiffs(frame(spark, in))
+
   /** Texts whose `graft_gopher` and Column-form structs differ on any
     * field (doubles by bits). */
-  def gopherDiffs(spark: SparkSession, in: Seq[Option[String]]): Seq[String] =
-    frame(spark, in).select(col("text"),
+  def gopherDiffs(texts: DataFrame): Seq[String] =
+    texts.select(col("text"),
         TextOps.gopherShape(col("text")).as("a"),
         TextOps.gopherShapeHof(col("text")).as("b"))
       .collect().toSeq.flatMap { r =>
@@ -165,8 +177,11 @@ object TextKernelsPropSpec {
     * `minhashSignatureHof`; a plan without the fused kernel is a
     * difference too. */
   def minhashDiffs(spark: SparkSession, in: Seq[Option[String]],
-                   k: Int): Seq[String] = {
-    val q = frame(spark, in).select(col("text"),
+                   k: Int): Seq[String] =
+    minhashDiffs(frame(spark, in), k)
+
+  def minhashDiffs(texts: DataFrame, k: Int): Seq[String] = {
+    val q = texts.select(col("text"),
       Dedup.minhashSignature(col("text"), k, 32).as("a"),
       Dedup.minhashSignatureHof(col("text"), k, 32).as("b"))
     val fused = q.queryExecution.optimizedPlan.expressions
@@ -175,6 +190,17 @@ object TextKernelsPropSpec {
       q.filter(!(col("a") <=> col("b"))).collect().toSeq
         .map(r => s"${Option(r.getString(0)).map(_.take(80))}")
   }
+
+  /** Texts whose fused MinHash signature differs from the unfused
+    * native one (`graft_minhash` over checkpointed `graft_shingles`,
+    * out of the fusion's reach). */
+  def unfusedMinhashDiffs(texts: DataFrame, k: Int): Seq[String] =
+    texts.select(col("text"), TextOps.shingles(col("text"), k).as("sh"))
+      .localCheckpoint()
+      .select(col("text"), Dedup.minhashSignature(col("text"), k, 32).as("a"),
+        call_function("graft_minhash", col("sh"), lit(32)).as("b"))
+      .filter(!(col("a") <=> col("b"))).collect().toSeq
+      .map(r => s"unfused: ${Option(r.getString(0)).map(_.take(80))}")
 
   /** (source, b, cnt) bucket counts of (source, text) docs, one count
     * per token occurrence: how drift stores counted buckets before the
