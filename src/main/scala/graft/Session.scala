@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession every graft main and spec runs on, so the
-  * plans that tests, audits and Verify inspect are the plans Bench and
-  * the benchmark time. The confs are fixed; only the core count varies. */
+  * plans that tests, audits and Verify inspect are the plans the
+  * benchmark (`perfbench/`) times. The confs are fixed; only the core
+  * count varies. */
 object Session {
   /** Core count for the dev mains: `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt

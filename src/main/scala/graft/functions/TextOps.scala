@@ -140,7 +140,7 @@ object TextOps {
     * Native codegen'd expression (graft.plans.Fingerprint): one
     * code-point walk per row instead of an interpreted lambda +
     * substring + ascii per character. Requires GraftExtensions
-    * (Verify/Bench/tests set it). */
+    * (`Session.local` sets it). */
   def fingerprint(c: Column): Column =
     call_function("graft_fingerprint", c)
 
@@ -160,7 +160,7 @@ object TextOps {
     * expression (graft.plans.Shingles): one char-offset walk + hash-set
     * dedup per row instead of an interpreted lambda per character —
     * profiled as the dominant cost of the n-gram suite. Requires
-    * GraftExtensions (Verify/Bench/tests set it). */
+    * GraftExtensions (`Session.local` sets it). */
   def shingles(c: Column, k: Int): Column =
     call_function("graft_shingles", c, lit(k))
 
@@ -356,7 +356,7 @@ object TextOps {
     * quality gate. Native codegen'd expression (graft.plans.GopherShape):
     * one byte walk per row instead of [[gopherShapeHof]]'s three splits,
     * per-word regex lambdas and twelve whole-text `replace` copies.
-    * Requires GraftExtensions (Verify/Bench/tests set it). */
+    * Requires GraftExtensions (`Session.local` sets it). */
   def gopherShape(text: Column): Column =
     call_function("graft_gopher", text)
 

@@ -17,7 +17,7 @@ object VectorOps {
 
   /** Native codegen'd dot product (graft.plans.VecDot) — identical
     * result (same summation order), ~no allocation. Requires
-    * GraftExtensions on the session (Verify/Bench/tests set it). */
+    * GraftExtensions on the session (`Session.local` sets it). */
   def fastDot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -46,7 +46,7 @@ object VectorOps {
     * (graft.plans.LshBucketSig): the ±1 signs are cached per JVM, each
     * row pays one primitive multiply-add loop. `bitOffset` selects an
     * independent hash table for multi-table LSH. Requires
-    * GraftExtensions (Verify/Bench/tests set it). */
+    * GraftExtensions (`Session.local` sets it). */
   def lshBucket(v: Column, nBits: Int, bitOffset: Int = 0): Column =
     call_function("graft_lsh_bucket", v, lit(nBits), lit(bitOffset))
 

@@ -280,8 +280,8 @@ object Dedup {
   /** 64-bit SimHash over whitespace tokens: per-bit signed vote of
     * token hashes, map-side only. Native codegen'd expression
     * (graft.plans.SimHash64): each token hashed once, all 64 bits
-    * voting in one pass. Requires GraftExtensions (Verify/Bench/tests
-    * set it). */
+    * voting in one pass. Requires GraftExtensions (`Session.local`
+    * sets it). */
   def simhash64(text: Column): Column =
     call_function("graft_simhash", split(trim(text), " +"))
 

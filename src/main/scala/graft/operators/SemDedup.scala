@@ -88,7 +88,7 @@ object SemDedup {
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
     // assignment feeds three consumers (both pair-join sides + the
     // final label join); eager localCheckpoint so the scan + argmax
-    // pass runs once (blocks released by Bench/caller hygiene)
+    // pass runs once (blocks released by the caller)
     val assigned = assignCells(df, idCol, vecCol, model).localCheckpoint(true)
     val p = pairs(assigned, threshold, blocks)
     // per-id pair stats: greater-id appearances mark drops; pair

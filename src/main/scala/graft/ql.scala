@@ -38,7 +38,7 @@ object ql {
   /** events table with its `ts` surfaced as a proper session-tz
     * timestamp, whatever the file encodes: TIMESTAMP(NANOS) arrives as
     * long under spark.sql.legacy.parquet.nanosAsLong=true (set in
-    * Verify/Bench/test sessions) and floor-divides ns → µs — the same
+    * `Session.local`) and floor-divides ns → µs — the same
     * truncation DuckDB applies reading the same file — while
     * TIMESTAMP(MICROS) arrives as TIMESTAMP_NTZ and needs only the
     * NTZ → TIMESTAMP cast (value-preserving under the UTC session tz).

@@ -81,4 +81,40 @@ class LshBucketSpec extends SparkSpec {
         s"id=${r.getLong(0)}: native=${r.getLong(1)} hof=${r.getLong(2)}")
     }
   }
+
+  test("lshTopK: planted twins come back at rank 1, and clustered " +
+      "recall@3 holds, with one probe and with four") {
+    import graft.operators.SimilaritySearch
+    val rnd = new Random(73)
+    // twins: the first 20 corpus vectors with coordinate 0 scaled by
+    // 1.001 (cosine ~1), queried against the corpus
+    val corpus = (1 to 400).map(i =>
+      (i.toLong, Array.fill(24)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+    val twins = corpus.filter(col("vec_id") <= 20).select(
+      (col("vec_id") + 10000).as("vec_id"),
+      transform(col("embedding"), (x, i) => when(i === 0, x * 1.001f).otherwise(x))
+        .as("embedding"))
+    // clustered: 30 centers uniform in [-1,1]^32, 10 members each at
+    // +-0.05 noise, so a query's exact top-3 is in its own cluster
+    val centers = (0 until 30).map(_ => Array.fill(32)(rnd.nextDouble() * 2 - 1))
+    val clustered = (0 until 300).map { i =>
+      (i.toLong, centers(i % 30).map(x => (x + (rnd.nextDouble() * 2 - 1) * 0.05).toFloat))
+    }.toDF("vec_id", "embedding")
+    val cq = clustered.filter(col("vec_id") < 10)
+    val exact = SimilaritySearch.bruteForceTopK(cq, clustered, "vec_id", "embedding", 3)
+      .select("q_id", "c_id").as[(Long, Long)].collect().toSet
+    val recalls = Seq(1, 4).map { probes =>
+      val top1 = SimilaritySearch.lshTopK(twins, corpus, "vec_id", "embedding",
+          k = 1, nBits = 8, nProbes = probes)
+        .filter(col("rk") === 1 && col("c_id") === col("q_id") - 10000).count()
+      assert(top1 >= 19, s"nProbes=$probes: $top1/20 twins at rank 1")
+      val got = SimilaritySearch.lshTopK(cq, clustered, "vec_id", "embedding",
+          k = 3, nBits = 8, nProbes = probes)
+        .select("q_id", "c_id").as[(Long, Long)].collect().toSet
+      val recall = got.intersect(exact).size.toDouble / exact.size
+      assert(recall >= 0.8, s"nProbes=$probes: clustered recall@3 $recall")
+      recall
+    }
+    assert(recalls(1) >= recalls(0), s"probing lost recall: $recalls")
+  }
 }

@@ -51,4 +51,28 @@ class MinHashFamilySpec extends SparkSpec {
       s"16-bit blocking should prune candidates: $cand16 vs $cand8")
     df.unpersist()
   }
+
+  test("simhash mild twins: a one-token append stays within 3 bits " +
+      "for most docs, and 16-bit blocking pairs every such twin") {
+    // SimHash's regime is the tiny edit: long docs whose per-bit votes
+    // one more token rarely flips. 100 docs of 60-100 tokens over a
+    // 200-word vocabulary; each twin appends one unseen token.
+    val rnd = new Random(67)
+    val docs = (1 to 100).map { i =>
+      (i.toLong, Seq.fill(60 + rnd.nextInt(41))(s"w${rnd.nextInt(200)}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val twins = docs.select(($"doc_id" + 10000).as("doc_id"),
+      concat($"text", lit(" zq")).as("text"))
+    val df = docs.union(twins).cache()
+    val bits = df.select($"doc_id", Dedup.simhash64($"text").as("h"))
+      .as[(Long, Long)].collect().toMap
+    val near = (1L to 100L).filter(i =>
+      java.lang.Long.bitCount(bits(i) ^ bits(i + 10000)) <= 3)
+    assert(near.size >= 60, s"only ${near.size}/100 mild twins within 3 bits")
+    val pairs = Dedup.simhashPairs(df, "doc_id", "text", maxDist = 3, blocks = 4)
+      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    near.foreach(i =>
+      assert(pairs.contains((i, i + 10000)), s"twin of $i lost by 16-bit blocking"))
+    df.unpersist()
+  }
 }

@@ -158,4 +158,35 @@ class QualityClassifierSpec extends SparkSpec {
       .select("p").head().getDouble(0)
     assert(!out.isNaN && out == 1.0 / (1.0 + math.exp(-bias)))
   }
+
+  test("one-vs-rest learns five planted languages and beats the " +
+      "marker heuristic, which has no rule for the fifth") {
+    // language-independent filler plus ten copies of a per-language
+    // marker: the heuristic's own markers for de/en/fr/es, an unknown
+    // one for zh, so the heuristic tops out at 4 of 5 languages
+    val markers = Map("de" -> "der", "en" -> "the", "fr" -> "le",
+      "es" -> "el", "zh" -> "zhong")
+    val filler = Seq("data", "model", "token", "corpus", "river", "stone")
+    val langs = markers.keys.toSeq.sorted
+    def doc(i: Int): (Long, String, String) = {
+      val rnd = new scala.util.Random(i * 131)
+      val lang = langs(i % langs.size)
+      val words = Seq.fill(20)(filler(rnd.nextInt(filler.size))) ++
+        Seq.fill(10)(markers(lang))
+      (i.toLong, words.mkString(" "), lang)
+    }
+    val rows = (1 to 500).map(doc).toDF("doc_id", "text", "lang")
+    val heldOut = rows.filter(col("doc_id") % 4 =!= 0)
+    val models = QualityClassifier.trainOneVsRest(
+      rows.filter(col("doc_id") % 4 === 0), "doc_id", "text", "lang", langs,
+      nBuckets = 128, epochs = 3, lr = 0.5, link = "algebraic")
+    def acc(df: org.apache.spark.sql.DataFrame, pred: org.apache.spark.sql.Column) =
+      df.agg(avg(when(pred === col("lang"), 1.0).otherwise(0.0))).head().getDouble(0)
+    val trained = acc(QualityClassifier.classifyOneVsRest(heldOut, "doc_id",
+      "text", models, "pred", "score", link = "algebraic"), col("pred"))
+    val heuristic = acc(heldOut, graft.functions.TextOps.langId(col("text")))
+    assert(trained >= 0.95, s"held-out accuracy $trained")
+    assert(heuristic <= 0.8 + 1e-9 && trained > heuristic,
+      s"trained $trained vs heuristic $heuristic")
+  }
 }

@@ -90,4 +90,23 @@ class VecSumAggSpec extends SparkSpec {
       assert(cId % 3 == qId % 3, s"candidate $cId outside cell")
     }
   }
+
+  test("ivfTopK: label-partitioned clusters, recall@3 vs the exact search") {
+    // the label IS the cluster, so confining each query to its label's
+    // cell must keep the exact top-3, which is all in-cluster
+    val rnd = new scala.util.Random(71)
+    val centers = (0 until 6).map(_ => Array.fill(16)(rnd.nextGaussian() * 5))
+    val base = (for {
+      (c, ci) <- centers.zipWithIndex
+      i <- 0 until 40
+    } yield ((ci * 40 + i).toLong, ci, c.map(x => (x + rnd.nextGaussian() * 0.3).toFloat)))
+      .toDF("vec_id", "label", "embedding")
+    val q = base.filter(col("vec_id") % 40 === 0)
+    val exact = SimilaritySearch.bruteForceTopK(q, base, "vec_id", "embedding", 3)
+      .select("q_id", "c_id").as[(Long, Long)].collect().toSet
+    val got = SimilaritySearch.ivfTopK(q, base, "vec_id", "embedding", "label", 3)
+      .select("q_id", "c_id").as[(Long, Long)].collect().toSet
+    val recall = got.intersect(exact).size.toDouble / exact.size
+    assert(exact.size == 18 && recall >= 0.95, s"recall@3 $recall")
+  }
 }
