@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ql.spread
 
 /** BM25 ranked retrieval (Robertson & Zaragoza 2009, "The
   * Probabilistic Relevance Framework: BM25 and Beyond") — the lexical
@@ -43,7 +42,7 @@ object Bm25 {
   /** The whitespace tokenizer every Bm25 entry point shares (and the
     * oracle mirrors): split on \s+, drop empties. */
   private def tokenize(docs: DataFrame, idCol: String, textCol: String) =
-    spread(docs).select(
+    docs.select(
       col(idCol).as("doc_id"),
       explode(filter(split(trim(col(textCol)), "\\s+"),
         w => length(w) > 0)).as("w"))
@@ -59,7 +58,7 @@ object Bm25 {
     * exact explode-count semantics under duplicate doc ids, and
     * zero-token docs drop out exactly as rowless explodes did. */
   private def docLengths(docs: DataFrame, idCol: String, textCol: String) =
-    spread(docs).select(
+    docs.select(
         col(idCol).as("doc_id"),
         size(filter(split(trim(col(textCol)), "\\s+"),
           w => length(w) > 0)).cast("long").as("dl0"))

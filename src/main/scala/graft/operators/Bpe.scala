@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ql.spread
 
 /** Distributed BPE tokenizer training (Sennrich et al. 2016, "Neural
   * Machine Translation of Rare Words with Subword Units") — the
@@ -66,8 +65,7 @@ object Bpe {
   /** Distinct-word frequencies: (w, cnt). One corpus-sized shuffle
     * with map-side combine; everything downstream runs on this table. */
   private def wordCounts(corpus: DataFrame, textCol: String): DataFrame =
-    spread(corpus)
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
+    corpus.select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
 

@@ -84,15 +84,6 @@ object CutOut {
       abs(col("y").cast("double") - cy) / hy,
       abs(col("z").cast("double") - cz) / hz)
     val bands = typedlit(densityBands.map { case (n, lo, hi) => (n, lo, hi) })
-    // r22 note: a spread()/spreadKeyed() ahead of the band explode was
-    // MEASURED and REJECTED (profiled k10 at sf0.1/32c): the fused
-    // scan+explode+partial-agg map stage costs 545 ms CPU on 3 tasks,
-    // and fanning it means shuffling the RAW point rows first —
-    // round-robin pays sortBeforeRepartition (map stage 545 → 748 ms
-    // CPU) and keyed pays 9 MB of shuffle + deser/GC (total task time
-    // 563 → 4279 ms) for a WORSE wall either way. Map-side fusion over
-    // the scan is the efficient shape; at scale the scan supplies the
-    // parallelism.
     points
       .withColumn("band_d", d)
       .withColumn("__band", explode(filter(bands, b =>

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
-import graft.ql.spread
 
 /** Benchmark decontamination — the training-data pipeline step that
   * flags corpus documents overlapping an evaluation set, so eval
@@ -32,8 +31,7 @@ object Decontaminate {
         .withColumn("__hit", lit(1)))
     // graft_shingles emits DISTINCT grams per document, so count(*) per
     // doc is the distinct-gram count and count(__hit) the shared count
-    spread(corpus)
-      .select(col(idCol).as("doc_id"), explode(TextOps.shingles(col(textCol), k)).as("g"))
+    corpus.select(col(idCol).as("doc_id"), explode(TextOps.shingles(col(textCol), k)).as("g"))
       .join(evalGrams, Seq("g"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"), count(col("__hit")).as("n_shared"))

@@ -130,10 +130,6 @@ object Dedup {
     val r = numHashes / bands
     // docs shorter than k have no k-shingle — exclude rather than give
     // them identical empty-set signatures (which would all-collide).
-    // No spread() pin: with the one-pass signature kernel the pinned
-    // repartition bought nothing measurable (ingest_loop neardup_band
-    // median 0.445 s pinned vs 0.459 s unpinned over 5 traced pairs on
-    // 4 cores, inside the runs' spread) and cost a shuffle of the text
     val sig = df.filter(length(col(textCol)) >= k)
       .select(col(idCol).as("doc"),
         minhashSignature(col(textCol), k, numHashes).as("sig"))
@@ -320,7 +316,7 @@ object Dedup {
       s"blocks must divide 64, got $blocks")
     val width = 64 / blocks
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val sh = spread(df).select(col(idCol).as("doc"), simhash64(col(textCol)).as("sh"))
+    val sh = df.select(col(idCol).as("doc"), simhash64(col(textCol)).as("sh"))
     val chunked = sh.select(col("doc"), col("sh"),
       explode(array((0 until blocks).map(i =>
         struct(lit(i).as("chunk"),
@@ -360,6 +356,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.7,
                         maxDf: Long = 0L, minCommon: Long = 1L): DataFrame = {
+    // pin kept: p6 2.94 -> 4.10 s unpinned (medians, 5 pairs, pinned IQR 0.36 s, 4 cores)
     val all = spread(df).select(col(idCol).as("doc"),
       explode(TextOps.shingles(col(textCol), k)).as("s"))
     // ONE aggregation by shingle replaces the old df-cap groupBy + cap
@@ -423,7 +420,7 @@ object Dedup {
     // keep the storage element type (array<float> stays float): the
     // native dot kernel widens per element — bit-identical to casting
     // the array up front, and the grid join shuffles half the bytes
-    val base = spread(df).select(col(idCol).as("id"), col(vecCol).as("v"))
+    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("nrm", VectorOps.fastNorm(col("v")))
       .filter(col("nrm") > 0) // zero-norm: no direction (NaN vs NULL divergence)
     gridCosinePairs(base, Nil, threshold, blocks)
@@ -453,26 +450,7 @@ object Dedup {
         col("id").as("idb"), col("v").as("vb"), col("nrm").as("nrmb")): _*)
     val keyEq = (extraKeys.map(k => col(k) === col(s"__b_$k")) ++
       Seq(col("bi") === col("bi2"), col("bj") === col("bj2"))).reduce(_ && _)
-    // r22 (VERDICT r21 item 2 — the m5 pattern, inside the operator):
-    // the O(n²/B) cosine scoring runs in the join's reduce stage, whose
-    // input is KB-sized at catalog SF — AQE coalesced it to 1-2 tasks
-    // and the dot-product CPU (the d5/d7/d10/d12 hot kernel, ~0.7 s
-    // serial, profiled) ran on 2 cores. Pin both join inputs with a
-    // keyed user repartition on the block-pair keys: it satisfies the
-    // join's required distribution (so EnsureRequirements inserts NO
-    // second exchange — same bytes moved as before), but AQE does not
-    // coalesce user-specified partitioning, so the scoring stage keeps
-    // the session's task count. Source-guarded: at scale the inputs
-    // already carry >= target scan partitions and both sides pass
-    // through untouched — plain AQE behavior where bytes, not CPU,
-    // dominate.
-    // guard on the scan-rooted `base` (a/b carry the broadcast bp leaf,
-    // which would swamp the leaf-parallelism sum)
-    val aPin = graft.ql.spreadKeyed(a, base,
-      extraKeys.map(col) ++ Seq(col("bi"), col("bj")): _*)
-    val bPin = graft.ql.spreadKeyed(b, base,
-      extraKeys.map(k => col(s"__b_$k")) ++ Seq(col("bi2"), col("bj2")): _*)
-    aPin.join(bPin, keyEq && (col("blka") < col("blkb") || col("ida") < col("idb")))
+    a.join(b, keyEq && (col("blka") < col("blkb") || col("ida") < col("idb")))
       .withColumn("cos", VectorOps.cosinePre(col("va"), col("vb"), col("nrma"), col("nrmb")))
       .filter(col("cos") >= threshold)
       .select(extraKeys.map(col) ++ Seq(
@@ -494,7 +472,7 @@ object Dedup {
                            tables: Int = 8): DataFrame = {
     // storage element type preserved (float stays float): bucket and
     // verify kernels widen per element — see embeddingNearDups
-    val base = spread(df).select(col(idCol).as("id"), col(vecCol).as("v"))
+    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("nrm", VectorOps.fastNorm(col("v")))
       .filter(col("nrm") > 0)
       .localCheckpoint(true) // reused by candidate gen + both verify sides
@@ -604,12 +582,8 @@ object Dedup {
     // is inside the noise band for d15 (3.08 s → 3.17 s median) and
     // costs d16's fixpoint loop 25 % (3.11 s → 3.87 s) — the trade
     // stays as documented.
-    // spread() wraps only the winnow side (kernel parallelism); the
-    // verify sides feed key-partitioned join exchanges, where an extra
-    // round-robin repartition underneath is pure cost.
     val raw = df.select(col(idCol).as("doc"), col(textCol).as("txt"))
-    val docs = spread(raw)
-    val anchors = docs.select(col("doc"),
+    val anchors = raw.select(col("doc"),
         explode(call_function("graft_winnow", col("txt"), lit(k), lit(w))).as("a"))
       .select(col("doc"), col("a.pos").as("pos"), col("a.h").as("h"))
     exactSubstrRunsCore(raw, anchors, anchorsMaterialized = false,
@@ -647,31 +621,15 @@ object Dedup {
       } else anchors
     // per-fingerprint (doc, pos) lists; sorted so the HOF pair
     // expansion below yields a < b without a join.
-    // spreadKeyed (r22, VERDICT r21 item 2): the agg output is KB-sized
-    // so AQE coalesces it to 1-2 tasks — but the HOF pair expansion
-    // ABOVE it is CPU-dense (sum(df²) struct builds). The keyed
-    // repartition replaces the agg's ENSURE_REQUIREMENTS exchange 1:1
-    // (same bytes, same key) with one AQE won't coalesce; guarded
-    // no-op at scale (raw's scan parallelism ≥ target).
-    val kept = graft.ql.spreadKeyed(capped, raw, col("h")).groupBy("h")
+    val kept = capped.groupBy("h")
       .agg(array_sort(collect_list(struct(col("doc"), col("pos")))).as("ds"))
     val pairCol = flatten(transform(col("ds"), (a, i) =>
       transform(slice(col("ds"), i + lit(2), size(col("ds"))),
         b => struct(a.getField("doc").as("a_id"), a.getField("pos").as("pa"),
           b.getField("doc").as("b_id"), b.getField("pos").as("pb")))))
-    // spreadKeyed before the distinct (r22, VERDICT r21 item 2): the
-    // candidate set is KB-sized so AQE coalesces the distinct's
-    // exchange to 1-2 tasks — but the stage ABOVE it runs the
-    // graft_lcp_ext verify kernel over every candidate (the profiled
-    // d15/d16 pinch: ~0.6 s on one core at sf0.1). The keyed
-    // repartition on (a_id, b_id) — a subset of the distinct keys —
-    // replaces the ENSURE_REQUIREMENTS exchange 1:1 and keeps the
-    // verify stage at session task count; guarded no-op at scale.
-    val cand = graft.ql.spreadKeyed(
-        kept.select(explode(pairCol).as("p"))
-          .select(col("p.a_id"), col("p.pa"), col("p.b_id"), col("p.pb"))
-          .filter(col("a_id") =!= col("b_id")), // same-doc repeats are not pairs
-        raw, col("a_id"), col("b_id"))
+    val cand = kept.select(explode(pairCol).as("p"))
+      .select(col("p.a_id"), col("p.pa"), col("p.b_id"), col("p.pb"))
+      .filter(col("a_id") =!= col("b_id")) // same-doc repeats are not pairs
       .distinct()
     // verify + extend with the FUSED zero-copy kernel (r22, guide §1.2
     // step 2): graft_lcp_ext does the anchor content check (killing
@@ -708,6 +666,7 @@ object Dedup {
   def winnowIndex(df: DataFrame, idCol: String, textCol: String,
                   minLen: Int = 50, k: Int = 16): DataFrame = {
     require(minLen > k, s"minLen ($minLen) must exceed k ($k)")
+    // pin kept: d17 1.38 -> 2.03 s unpinned (medians, 5 pairs, pinned IQR 0.46 s, 4 cores)
     spread(df).select(col(idCol).as("doc"),
         explode(call_function("graft_winnow", col(textCol),
           lit(k), lit(minLen - k + 1))).as("a"))
@@ -902,18 +861,20 @@ object Dedup {
     // the text-fetch I/O then tracks the candidates, not the corpus.
     // Long ids only (the persisted-table convention); anything else
     // keeps the semi-join alone, same results.
+    // pins kept on both text sides: d17 1.38 -> 2.03 s unpinned (as winnowIndex's)
+    val pinned = spread(corpusDocs)
     val corpusBase = candIds match {
       case Some(ids) if ids.nonEmpty && ids.size <= MaxAnchorInLiterals &&
           ids.forall(_.isInstanceOf[Long]) =>
-        spread(corpusDocs).filter(ScanPrune.chunkedIn(col(idCol),
+        pinned.filter(ScanPrune.chunkedIn(col(idCol),
           ids.map(_.asInstanceOf[Long]),
           ScanPrune.inThreshold(batch.sparkSession)))
-      case _ => spread(corpusDocs)
+      case _ => pinned
     }
     val at = corpusBase
       .select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
       .join(cj, Seq("corpus_id"), "left_semi")
-    val bt = spread(batch)
+    val bt = spread(batch) // pin kept: d17, as above
       .select(col(idCol).as("batch_id"), col(textCol).as("tb"))
     // fused zero-copy verify kernel (see exactSubstrRunsCore): anchor
     // mismatches yield run = 0, which can never clear the final

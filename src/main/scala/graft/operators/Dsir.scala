@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ql.spread
 
 /** Data Selection via Importance Resampling (Xie et al. 2023,
   * arXiv:2302.03169) — the domain-targeting selection stage of a
@@ -51,8 +50,7 @@ object Dsir {
       zip_with(words, slice(words, lit(2), greatest(size(words) - 1, lit(0))),
         (x, y) => when(y.isNotNull, concat(x, lit(" "), y))),
       p => p.isNotNull)
-    spread(df)
-      .select(col(idCol), targetPred.as("is_t"),
+    df.select(col(idCol), targetPred.as("is_t"),
         explode(concat(words, bigrams)).as("f"))
       .select(col(idCol), col("is_t"),
         (call_function("graft_fingerprint", col("f")) % nBuckets).as("b"))

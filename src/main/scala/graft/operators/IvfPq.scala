@@ -99,7 +99,7 @@ object IvfPq {
     // PqEncode) in one projection — same cell ids and codes
     // bit-for-bit (PqKernelSpec), a fraction of the plan to analyze
     // and a running max per row instead of CASE ladders.
-    val u = ProductQuantizer.unitPrep(candidates, idCol, vecCol, "c", doSpread = true)
+    val u = ProductQuantizer.unitPrep(candidates, idCol, vecCol, "c")
     u.select(col("c_id"),
       KMeans.cellArgmax(coarse, col("c_v"), lit(1.0)).as("cell"),
       ProductQuantizer.pqEncodeCol(model, col("c_v")).as("codes"))
@@ -135,7 +135,7 @@ object IvfPq {
   def quantizationSelfScorePpm(batch: DataFrame, idCol: String,
                                vecCol: String, model: PqModel): DataFrame = {
     val sd = model.subDim
-    val u = ProductQuantizer.unitPrep(batch, idCol, vecCol, "c", doSpread = true)
+    val u = ProductQuantizer.unitPrep(batch, idCol, vecCol, "c")
     val perSub = (0 until model.m).map { j =>
       val scores = ProductQuantizer
         .subScores(model, j, slice(col("c_v"), j * sd + 1, sd)).map(_._2)
@@ -198,7 +198,7 @@ object IvfPq {
 
     // query side: rank cells by unit-centroid dot (desc, then asc cell),
     // explode the top nProbe, carry the precomputed flat ADC LUT
-    val qp = ProductQuantizer.unitPrep(queries, idCol, vecCol, "q", doSpread = false)
+    val qp = ProductQuantizer.unitPrep(queries, idCol, vecCol, "q")
     val qScores = KMeans.centroidScores(coarse, col("q_v"), lit(1.0))
     val scoreArr = array(qScores.map { case (cell, cc) =>
       struct(cc.as("cc"), lit(cell).as("cell")) }: _*)

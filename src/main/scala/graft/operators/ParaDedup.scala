@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ql.spread
 
 /** Paragraph-level dedup (C4/CCNet's middle layer between doc-level
   * exact dedup and substring dedup), in both batch (t30) and
@@ -45,7 +44,7 @@ object ParaDedup {
     val segArr = transform(
       sequence(lit(0), ceil(size(words) / width.toDouble).cast("int") - 1),
       i => array_join(slice(words, i * width + 1, lit(width)), " "))
-    spread(df).select(col(idCol),
+    df.select(col(idCol),
       posexplode(segArr).as(Seq("seg_idx", "seg")))
   }
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
-import graft.ql.spread
 
 /** Product-quantization ANN (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the memory-compressed index
@@ -58,13 +57,10 @@ object ProductQuantizer {
     * element); null marks the dropped zero-norm/null-element rows the
     * old `nrm > 0` filter removed — row set and values bit-identical
     * (VecUnitSpec). */
-  private[operators] def unitPrep(df: DataFrame, idCol: String, vecCol: String, as: String,
-                                  doSpread: Boolean) = {
-    val base = if (doSpread) spread(df) else df
-    base.select(col(idCol).as(s"${as}_id"),
+  private[operators] def unitPrep(df: DataFrame, idCol: String, vecCol: String, as: String) =
+    df.select(col(idCol).as(s"${as}_id"),
         VectorOps.unit(col(vecCol)).as(s"${as}_v"))
       .filter(col(s"${as}_v").isNotNull)
-  }
 
   /** Train per-subspace codebooks on a bounded deterministic sample.
     * One Spark job (the TakeOrdered sample); Lloyd runs driver-side —
@@ -76,7 +72,7 @@ object ProductQuantizer {
     require(ks <= 256, s"ks must fit a byte code (<= 256), got $ks")
     val s = candidates.sparkSession
     import s.implicits._
-    val sampled = unitPrep(candidates, idCol, vecCol, "s", doSpread = true)
+    val sampled = unitPrep(candidates, idCol, vecCol, "s")
       .withColumn("__h", xxhash64(col("s_id")))
       .orderBy(col("__h"), col("s_id")).limit(maxSample)
       .select("s_v").as[Seq[Double]].collect().map(_.toArray)
@@ -170,7 +166,7 @@ object ProductQuantizer {
     // three-select pipeline — same codes bit-for-bit (PqKernelSpec),
     // ~500 plan nodes fewer to analyze per run, a running max per
     // row instead of ks CASE comparisons per subspace.
-    unitPrep(df, idCol, vecCol, "c", doSpread = true)
+    unitPrep(df, idCol, vecCol, "c")
       .select(col("c_id"), pqEncodeCol(model, col("c_v")).as("codes"))
 
   /** Flat m·ks LUT column for a (query) unit-vector: entry j·ks + c =
@@ -197,7 +193,7 @@ object ProductQuantizer {
              index: Option[DataFrame] = None): DataFrame = {
     val mdl = model.getOrElse(fit(candidates, idCol, vecCol, m, ks, iters, maxSample))
     val enc = index.getOrElse(encode(candidates, idCol, vecCol, mdl))
-    val q = broadcast(unitPrep(queries, idCol, vecCol, "q", doSpread = false)
+    val q = broadcast(unitPrep(queries, idCol, vecCol, "q")
       .select(col("q_id"), col("q_v"), lutCol(mdl, col("q_v")).as("__lut")))
     adcRank(q.join(enc), candidates, idCol, vecCol, k, refine, mdl)
   }
@@ -229,7 +225,7 @@ object ProductQuantizer {
         .select("q_id", "q_v", "c_id")
       // exact re-rank: the broadcast shortlist joins the corpus scan
       // map-side; unit vectors, so cosine is a plain dot
-      val c = unitPrep(candidates, idCol, vecCol, "c", doSpread = true)
+      val c = unitPrep(candidates, idCol, vecCol, "c")
       val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("c_id"))
       broadcast(shortlist).join(c, "c_id")
         .withColumn("cos", round(VectorOps.fastDot(col("q_v"), col("c_v")), 6))

@@ -73,18 +73,11 @@ object QualityClassifier {
       s"unknown link '$other' (logistic | algebraic)")
   }
 
-  /** (doc → bucket occurrence counts); one row per (id, bucket).
-    * spread (r22, the m5 pattern / VERDICT r21 item 2): the
-    * explode+fingerprint kernel is the CPU-dense pass here, and a
-    * few-MB corpus arrives as ONE scan partition — without the guarded
-    * repartition the whole feature extraction (train AND the full-
-    * corpus scoring paths) ran on one core. At scale the scan already
-    * has the parallelism and spread is a no-op. */
+  /** (doc → bucket occurrence counts); one row per (id, bucket). */
   def features(df: DataFrame, idCol: String, textCol: String,
                nBuckets: Int): DataFrame = {
     val words = filter(split(trim(col(textCol)), "\\s+"), w => length(w) > 0)
-    graft.ql.spread(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), explode(words).as("f"))
+    df.select(col(idCol), explode(words).as("f"))
       .select(col(idCol),
         (call_function("graft_fingerprint", col("f")) % nBuckets).as("b"))
       .groupBy(idCol, "b").agg(count(lit(1)).cast("double").as("x"))
@@ -112,16 +105,11 @@ object QualityClassifier {
     // id-keyed aggregation per epoch (3 exchanges → 1). Values are
     // bit-identical: decimal addition is order-independent, so the
     // array fold equals the old sum() whatever the collect_list order.
-    // spread before the checkpoint (r22): AQE coalesces the KB-sized
-    // agg output to 1 partition, and EVERY epoch's decimal dot-product
-    // fold then runs on one core against the 1-partition checkpoint —
-    // the guarded repartition keeps the per-epoch map pass parallel
-    // locally and no-ops at scale (leaf parallelism already ≥ target).
-    val grouped = graft.ql.spread(features(df, idCol, textCol, nBuckets)
+    val grouped = features(df, idCol, textCol, nBuckets)
       .unionByName(docs.select(col(idCol), lit(-1L).as("b"), lit(1.0).as("x")))
       .groupBy(idCol)
       .agg(collect_list(struct(col("b"), col("x"))).as("fs"))
-      .join(docs, idCol)).localCheckpoint(true)
+      .join(docs, idCol).localCheckpoint(true)
 
     var bias = 0.0
     val w = Array.fill(nBuckets)(0.0)
@@ -210,13 +198,11 @@ object QualityClassifier {
     require(n > 0, "empty training set")
     // same grouped-array epoch shape as [[train]] (r21): one map-side
     // pass + one bucket aggregation per epoch for ALL K classes.
-    // spread before the checkpoint (r22): see train() — keeps the
-    // K-fold epoch pass parallel against the small checkpoint.
-    val grouped = graft.ql.spread(features(df, idCol, textCol, nBuckets)
+    val grouped = features(df, idCol, textCol, nBuckets)
       .unionByName(docs.select(col(idCol), lit(-1L).as("b"), lit(1.0).as("x")))
       .groupBy(idCol)
       .agg(collect_list(struct(col("b"), col("x"))).as("fs"))
-      .join(docs, idCol)).localCheckpoint(true)
+      .join(docs, idCol).localCheckpoint(true)
 
     val bias = Array.fill(k)(0.0)
     val w = Array.fill(k)(Array.fill(nBuckets)(0.0))

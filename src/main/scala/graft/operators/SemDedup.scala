@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ql.spread
 import graft.functions.VectorOps
 
 /** Semantic deduplication (SemDeDup, Abbas et al. 2023,
@@ -44,8 +43,7 @@ object SemDedup {
     * be "semantically similar" to anything). */
   def assignCells(df: DataFrame, idCol: String, vecCol: String,
                   model: Seq[(Long, Seq[Double])]): DataFrame = {
-    val base = spread(df)
-      .select(col(idCol).as("id"), VectorOps.toDouble(col(vecCol)).as("v"))
+    val base = df.select(col(idCol).as("id"), VectorOps.toDouble(col(vecCol)).as("v"))
       .withColumn("nrm", VectorOps.fastNorm(col("v")))
       .filter(col("nrm") > 0)
     // one native argmax kernel node (r22, KMeans.cellArgmax) instead

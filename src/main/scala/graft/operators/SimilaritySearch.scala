@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
-import graft.ql.spread
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY §2.4).
@@ -24,8 +23,6 @@ import graft.ql.spread
   */
 object SimilaritySearch {
 
-  /** doSpread only for the corpus side: spreading a query set that is
-    * about to be broadcast would add a pointless shuffle stage. */
   /** `widen=false` keeps the storage element type (float stays float —
     * the native dot/bucket kernels widen per element, bit-identical
     * results, half the probe-join bytes; used by the brute-force/LSH
@@ -34,8 +31,7 @@ object SimilaritySearch {
     * ~2× slower against float inputs (mixed-type kernels are fine in
     * steady state, but these operators re-plan per quantizer). */
   private def prep(df: DataFrame, idCol: String, vecCol: String, as: String,
-                   doSpread: Boolean = true, widen: Boolean = false) = {
-    val base = if (doSpread) spread(df) else df
+                   widen: Boolean = false) = {
     val v = if (widen) VectorOps.toDouble(col(vecCol)) else col(vecCol)
     // r22: the norm rides the RAW stored column (graft_dot widens
     // float per element — bit-identical to norming the widened copy),
@@ -43,7 +39,7 @@ object SimilaritySearch {
     // condition it evaluates one native dot instead of re-running the
     // boxed `transform(cast)` widen chain per row (twice, once per dot
     // argument — measured in the s3 scan Condition).
-    base.select(col(idCol).as(s"${as}_id"), v.as(s"${as}_v"),
+    df.select(col(idCol).as(s"${as}_id"), v.as(s"${as}_v"),
         VectorOps.fastNorm(col(vecCol)).as(s"${as}_nrm"))
       // zero-norm vectors have no direction: cosine would be 0/0, and
       // Spark's NaN (ranks first DESC) vs DuckDB's NULL (ranks last)
@@ -55,7 +51,7 @@ object SimilaritySearch {
     * ranking, ties broken by candidate id (deterministic output). */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(prep(queries, idCol, vecCol, "q", doSpread = false))
+    val q = broadcast(prep(queries, idCol, vecCol, "q"))
     val c = prep(candidates, idCol, vecCol, "c")
     val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("c_id"))
     q.join(c)
@@ -76,7 +72,7 @@ object SimilaritySearch {
   def lshTopK(queries: DataFrame, candidates: DataFrame,
               idCol: String, vecCol: String, k: Int, nBits: Int = 8,
               nProbes: Int = 1): DataFrame = {
-    val q = broadcast(prep(queries, idCol, vecCol, "q", doSpread = false)
+    val q = broadcast(prep(queries, idCol, vecCol, "q")
       .withColumn("bucket",
         explode(VectorOps.lshProbeBuckets(col("q_v"), nBits, nProbes))))
     val c = prep(candidates, idCol, vecCol, "c")
@@ -124,7 +120,7 @@ object SimilaritySearch {
     val assigned = c.select(col("c_id"), col("c_v"), col("c_nrm"),
       KMeans.cellArgmax(model, col("c_v"), col("c_nrm")).as("cell"))
     // query probes: rank cells by (desc score, asc cell), take nProbe
-    val q = prep(queries, idCol, vecCol, "q", doSpread = false, widen = true)
+    val q = prep(queries, idCol, vecCol, "q", widen = true)
     val qScores = KMeans.centroidScores(model, col("q_v"), col("q_nrm"))
     val scoreArr = array(qScores.map { case (cell, cc) =>
       struct(cc.as("cc"), lit(cell).as("cell")) }: _*)
@@ -157,7 +153,7 @@ object SimilaritySearch {
     * queries. */
   def ivfLabelIndex(candidates: DataFrame, idCol: String, vecCol: String,
                     cellCol: String): DataFrame =
-    spread(candidates)
+    candidates
       .select(col(cellCol).cast("long").as("cell"),
         VectorOps.toDouble(col(vecCol)).as("v"))
       .withColumn("nrm", VectorOps.fastNorm(col("v")))
@@ -189,14 +185,14 @@ object SimilaritySearch {
     val cent = broadcast(
       centroids.getOrElse(ivfLabelIndex(candidates, idCol, vecCol, cellCol))
         .withColumn("cent_nrm", VectorOps.fastNorm(col("cent_v"))))
-    val c = spread(candidates).select(col(idCol).as("c_id"),
+    val c = candidates.select(col(idCol).as("c_id"),
         VectorOps.toDouble(col(vecCol)).as("c_v"),
         col(cellCol).cast("long").as("cell"))
       .withColumn("c_nrm", VectorOps.fastNorm(col("c_v")))
       .filter(col("c_nrm") > 0)
     // assign each query to its nearest centroid (broadcast centroids;
     // ties break toward the lowest cell id)
-    val q = prep(queries, idCol, vecCol, "q", doSpread = false)
+    val q = prep(queries, idCol, vecCol, "q")
     val wq = Window.partitionBy("q_id").orderBy(desc("qc_cos"), asc("cell"))
     val assigned = q.join(cent)
       .withColumn("qc_cos",

@@ -64,13 +64,16 @@ object ql {
     dec(price) * (lit(1.0).cast("decimal(18,2)") - dec(discount))
 
   /** Spread a small-file scan across the cluster before a CPU-dense
-    * per-row kernel. A few-MB parquet arrives as ONE partition, so
-    * minhash/simhash/vector kernels would otherwise run on one core —
-    * the round-trip shuffle of the (small) input is noise next to the
-    * kernel cost. GUARDED: a source that already has that much
-    * parallelism (the 100 TB case — thousands of scan partitions) is
-    * returned untouched; unconditional repartition would inject a
-    * full-corpus shuffle exactly where it hurts most.
+    * per-row kernel. A few-MB parquet arrives as ONE partition, so the
+    * kernel would otherwise run on one core — the round-trip shuffle
+    * of the (small) input is noise next to the kernel cost. A call
+    * stays only where its query measured slower without it by more
+    * than the pinned code's run-to-run spread (each call names its
+    * figures); the others measured inside noise and were deleted.
+    * GUARDED: a source that already has that much parallelism (the
+    * 100 TB case — thousands of scan partitions) is returned
+    * untouched; unconditional repartition would inject a full-corpus
+    * shuffle exactly where it hurts most.
     *
     * Parallelism is read from the LEAF scans of the physical plan
     * (their RDDs exist to be partition-counted: file listing + split
@@ -92,28 +95,4 @@ object ql {
     * silently add a repartition. */
   private[graft] def leafParallelism(df: DataFrame): Int =
     df.queryExecution.sparkPlan.collectLeaves().map(_.execute().getNumPartitions).sum
-
-  /** spread()'s sibling for CPU-dense stages ABOVE a key-partitioned
-    * exchange (r22, VERDICT r21 item 2 — the operator-level replacement
-    * for the rejected session-wide AQE floor): a keyed
-    * `repartition(target, keys)` whose shuffle AQE will NOT coalesce
-    * (user-specified partitioning, not ENSURE_REQUIREMENTS), applied
-    * ONLY when the frame's source parallelism says the data is
-    * scheduling-floor small. Where EnsureRequirements would have
-    * inserted the same exchange for a downstream join/agg on `keys`,
-    * this replaces it 1:1 — same bytes moved, but the CPU-dense stage
-    * above keeps `target` tasks instead of the 1-2 AQE coalesces a
-    * KB-sized-but-CPU-heavy stage into. At scale the guard returns the
-    * frame untouched and AQE behavior is unchanged. */
-  def spreadKeyed(df: DataFrame, keys: Column*): DataFrame =
-    spreadKeyed(df, df, keys: _*)
-
-  /** spreadKeyed with an explicit GUARD frame: frames that already
-    * carry broadcast-side leaves (a tiny LocalTableScan can be sliced
-    * up to defaultParallelism ways and swamp the sum) pass the
-    * scan-rooted source they are derived from as `guard`. */
-  def spreadKeyed(df: DataFrame, guard: DataFrame, keys: Column*): DataFrame = {
-    val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    if (leafParallelism(guard) >= target) df else df.repartition(target, keys: _*)
-  }
 }

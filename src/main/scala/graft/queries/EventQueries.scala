@@ -268,11 +268,9 @@ object EventQueries {
     "m5_image_pipeline" -> { (s, d) =>
       import graft.multimodal.{ImageIoCodec, ImageOps}
       val n = lit((8 * 6 * 255).toDouble)
-      // spread BEFORE the codec kernels (r21): the documents scan is
-      // one task (single row group), and synthesize/resize are
-      // per-row javax.imageio encode+decode work — unspread, the whole
-      // pipeline ran on 1 core (profiled: 4 tasks, 1.7 s single-file
-      // task time at local[32])
+      // spread BEFORE the codec kernels: the documents scan is one
+      // task, and synthesize/resize are per-row javax.imageio work
+      // pin kept: m5 0.63 -> 0.77 s unpinned (medians, 5 pairs, pinned IQR 0.08 s, 4 cores)
       val png = ImageOps.synthesize(
         graft.ql.spread(t(s, d, "documents").select(col("doc_id").as("media_id"))),
         16, 12)

@@ -310,13 +310,6 @@ object RelationalExt {
       // The per-part aggregate materializes once (eager checkpoint,
       // ~|parts| rows) and feeds both the threshold scalar and the
       // filter — ONE lineitem scan instead of two.
-      // r22 note: a raw spreadKeyed(l_partkey) ahead of this agg (the
-      // q20 pattern) was MEASURED and REJECTED: it cut local wall
-      // ~0.3 s by parallelizing the hash agg, but the partial agg here
-      // is 30x-effective (600k rows -> 20k parts), so the raw shuffle
-      // ballooned task time 1.1 s -> 9.4 s CPU+GC and shuffle bytes
-      // 337 KB -> 8.5 MB — the scale-wrong trade (guide §2.3,
-      // aggregate before you shuffle).
       val perPart = li.groupBy(col("l_partkey"))
         .agg(sum(revenue(col("l_extendedprice"), col("l_discount")))
           .as("dval"))
@@ -376,8 +369,6 @@ object RelationalExt {
       // (hash partitioning on a subset of the grouping keys clusters
       // the groups) and the window — one wide shuffle instead of two.
       // Values identical: decimal sums are order-independent.
-      // (The earlier r22 note stands: a round-robin spread() was also
-      // measured and rejected — 32 partial hash maps tripled task time.)
       val perPartSupp = t(s, d, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
         .repartition(col("l_partkey"))

@@ -104,7 +104,7 @@ object TextQueries {
     // deterministic even though the sketch itself is order-sensitive.
     "t12_heavy_hitters" -> { (s, d) =>
       val K = 32
-      def toks = spread(t(s, d, "documents"))
+      def toks = t(s, d, "documents")
         .select(explode(split(col("text"), "\\s+")).as("token"))
         .filter(length(col("token")) > 0)
       val sk = toks.agg(
@@ -125,7 +125,7 @@ object TextQueries {
     // global-window trap).
     "t13_keywords" -> { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val toks = spread(t(s, d, "documents"))
+      val toks = t(s, d, "documents")
         .select(col("doc_id"),
           explode(split(col("text"), "\\s+")).as("token"))
         .filter(length(col("token")) > 0)
@@ -310,7 +310,7 @@ object TextQueries {
     // doc-cardinality tables. Exact integers + one division.
     "t25_novelty" -> { (s, d) =>
       // graft_shingles dedups per doc, so (doc_id, g) is already unique
-      val grams = spread(t(s, d, "documents"))
+      val grams = t(s, d, "documents")
         .select(col("doc_id"),
           explode(TextOps.shingles(col("text"), 8)).as("g"))
       val perDoc = grams.groupBy("doc_id")
@@ -493,7 +493,7 @@ object TextQueries {
     // doc-keyed join — map-side combine everywhere, partitioned by
     // doc, no global state.
     "t17_repetition" -> { (s, d) =>
-      val toks = spread(t(s, d, "documents"))
+      val toks = t(s, d, "documents")
         .select(col("doc_id"),
           explode(split(trim(col("text")), " +")).as("w"))
       val tokStats = toks.groupBy("doc_id", "w").agg(count(lit(1)).as("cnt"))
@@ -501,7 +501,7 @@ object TextQueries {
           sum(col("cnt")).as("n_tok"),
           count(lit(1)).as("n_distinct"),
           max(col("cnt")).as("top_cnt"))
-      val bigStats = bigramPairs(spread(t(s, d, "documents")))
+      val bigStats = bigramPairs(t(s, d, "documents"))
         .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("cnt"))
         .groupBy("doc_id").agg(
           sum(col("cnt")).as("n_big"),
@@ -528,7 +528,7 @@ object TextQueries {
     // double division. The LM table is vocab²-bounded (a model
     // artifact, like KenLM): at 100 TB it is the small join side.
     "t18_lm_score" -> { (s, d) =>
-      def bigrams = bigramPairs(spread(t(s, d, "documents")))
+      def bigrams = bigramPairs(t(s, d, "documents"))
       val lm = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("gcnt"))
       val docIds = t(s, d, "documents").select("doc_id")
       docIds.join(
@@ -612,6 +612,7 @@ object TextQueries {
     "t27_bpe_encode" -> { (s, d) =>
       val (steps, _) =
         graft.operators.Bpe.trainDetailed(t(s, d, "documents"), "text", 5)
+      // pin kept: t27 1.14 -> 2.33 s unpinned (medians, 5 pairs, pinned IQR 0.08 s, 4 cores)
       graft.operators.Bpe.encode(spread(t(s, d, "documents")), "text",
           steps.map(st => (st.a, st.b)))
         .select(col("doc_id"), col("bpe_tokens"))

@@ -115,7 +115,7 @@ object VectorQueries {
         col("embedding").as("q_v"),
         VectorOps.fastNorm(col("embedding")).as("q_nrm"),
         VectorOps.fastDot(col("embedding"), col("embedding")).as("d_qq")))
-      val scored = spread(e).crossJoin(qv)
+      val scored = e.crossJoin(qv)
         .select(col("q_id"), col("vec_id").as("c_id"),
           VectorOps.fastDot(col("q_v"), col("embedding")).as("d_qc"),
           VectorOps.fastDot(col("embedding"), col("embedding")).as("d_cc"),

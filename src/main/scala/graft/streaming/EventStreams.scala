@@ -42,14 +42,6 @@ object EventStreams {
   private def sessionLabeled(events: DataFrame, gapMs: Long): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // r22 note: a spreadKeyed(user_id) pin ahead of this window was
-    // MEASURED and REJECTED: the AQE-coalesced single-task window
-    // costs only ~204 ms (profiled in e6), and pinning it to 32 tasks
-    // multiplied the stage's total CPU 14x (per-task sort setup + GC
-    // on 5k-row tasks) and widened every downstream pass — e6 1.22 s
-    // -> 1.83 s. AQE's collapse is the right call below ~0.5 s of
-    // single-task work; at scale the exchange is byte-large and AQE
-    // keeps it wide on its own.
     events
       .withColumn("__prev", lag(col("ts"), 1).over(w))
       .withColumn("__new", when(col("__prev").isNull ||

@@ -4,16 +4,14 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
-/** The guard behind every `ql.spread` / `ql.spreadKeyed` pin: a source
+/** The guard behind every `ql.spread` pin: a source
   * with fewer leaf partitions than `spark.sql.shuffle.partitions` gets
   * exactly one REPARTITION_BY_NUM exchange into that many partitions;
   * a source with at least that many is returned untouched, so at scale
   * the pins change no plan. */
 class PinGuardSpec extends SparkSpec {
-  import spark.implicits._
-
   private lazy val target =
     spark.conf.get("spark.sql.shuffle.partitions").toInt
 
@@ -45,31 +43,16 @@ class PinGuardSpec extends SparkSpec {
       in.queryExecution.sparkPlan.treeString)
   }
 
-  // a 7-row lookup side: its LocalTableScan slices into up to
-  // defaultParallelism partitions, enough to swamp the leaf sum
-  private def lookup = (0 until 7).map(k => (k.toLong, s"tag$k")).toDF("k", "tag")
-
-  test("1-file parquet: spread, spreadKeyed and the guard-frame " +
-      "overload each add exactly one REPARTITION_BY_NUM exchange") {
+  test("1-file parquet: spread adds exactly one REPARTITION_BY_NUM exchange") {
     val small = parquetOf(1)
     assert(ql.leafParallelism(small) < target)
     assertOnePin(small, ql.spread(small))
-    assertOnePin(small, ql.spreadKeyed(small, col("k")))
-    // the joined frame's own leaves (scan + sliced LocalTableScan)
-    // reach the target, so only the scan-rooted guard sees it is small
-    val joined = small.join(broadcast(lookup), "k")
-    assert(ql.leafParallelism(joined) >= target)
-    assertUnchanged(joined, ql.spreadKeyed(joined, col("k")))
-    assertOnePin(joined, ql.spreadKeyed(joined, small, col("k")))
   }
 
-  test("parquet with shuffle.partitions files: spread, spreadKeyed and " +
-      "the guard-frame overload leave the physical plan unchanged") {
+  test("parquet with shuffle.partitions files: spread leaves the " +
+      "physical plan unchanged") {
     val big = parquetOf(target)
     assert(ql.leafParallelism(big) >= target)
     assertUnchanged(big, ql.spread(big))
-    assertUnchanged(big, ql.spreadKeyed(big, col("k")))
-    val joined = big.join(broadcast(lookup), "k")
-    assertUnchanged(joined, ql.spreadKeyed(joined, big, col("k")))
   }
 }

@@ -47,9 +47,14 @@ class PlanShapeSpec extends SparkSpec {
   private val golden: Map[String, (Int, Int, Int, Int)] = Map(
     // ---- the five r11 keep-first fixes: windows MUST stay 0.
     // (broadcast joins here are sf0.001 size decisions on the agg
-    // side; at scale AQE plans the same joins as shuffle joins)
-    "t30_paragraph_dedup" -> (5, 1, 0, 2),
-    "t25_novelty" -> (6, 1, 0, 2),
+    // side; at scale AQE plans the same joins as shuffle joins).
+    // Re-pinned DOWN when the ql.spread pins that measured inside
+    // noise were deleted; each deleted pin was one REPARTITION_BY_NUM
+    // exchange (parent values: t30 (5,1,0,2), t25 (6,1,0,2), t17
+    // (7,1,0,2), t18 (5,2,0,3), d15 (5,2,0,3), d16 (7,3,0,5), s11
+    // (6,3,2,2)).
+    "t30_paragraph_dedup" -> (3, 1, 0, 2),
+    "t25_novelty" -> (4, 1, 0, 2),
     "p1_corpus_pipeline" -> (3, 0, 0, 1),
     "p7_crawl_pipeline" -> (4, 1, 0, 2),
     // r11/r14 fixes. t15/t17/t18: bigrams are formed map-side on the
@@ -65,12 +70,11 @@ class PlanShapeSpec extends SparkSpec {
     // offset prefix over ≤ numBuckets tiny rows); the lang-keyed
     // mega-stratum window is gone.
     "t15_bigram_lm" -> (3, 1, 0, 2),
-    // t17: 7 = spread repartition ×2 (token + bigram branch) +
-    // (doc,w) and (doc,w1,w2) count aggs + the two per-doc rollups +
-    // output sort; windows 0. t18: bigram-count agg feeds both the LM
+    // t17: 5 = (doc,w) and (doc,w1,w2) count aggs + the two per-doc
+    // rollups + output sort; windows 0. t18: bigram-count agg feeds both the LM
     // table (broadcast) and the per-doc probe branch; windows 0.
-    "t17_repetition" -> (7, 1, 0, 2),
-    "t18_lm_score" -> (5, 2, 0, 3),
+    "t17_repetition" -> (5, 1, 0, 2),
+    "t18_lm_score" -> (3, 2, 0, 3),
     // t10 (r12): autoBuckets picks numBuckets=1 at spec SF (50 docs),
     // so the plan IS the cheap single per-lang prefix window + the
     // report agg — the bucketed (6,1,3,2) shape only engages past
@@ -83,8 +87,8 @@ class PlanShapeSpec extends SparkSpec {
     // CONSTRUCTION and read localCheckpointed blocks, so their scan
     // count reflects the final assembly stage, not the per-round
     // scans; the pin still catches added shuffles/windows there.
-    "d15_exact_substr" -> (5, 2, 0, 3),
-    "d16_substr_remove" -> (7, 3, 0, 5),
+    "d15_exact_substr" -> (4, 2, 0, 3),
+    "d16_substr_remove" -> (6, 3, 0, 5),
     // r18: probe narrowing re-pinned this DOWN from (7,3,0,4) — the
     // candidate localCheckpoint feeds the verify join from cached
     // blocks (2 fewer exchanges) and the semi-narrowed text fetch
@@ -129,7 +133,7 @@ class PlanShapeSpec extends SparkSpec {
     // BM25 corpus passes now run at checkpoint build and the static
     // plan consumes their blocks: 10 shuffles, 2 broadcasts and 5
     // corpus scans fall out of the fusion plan.
-    "s11_hybrid_fusion" -> (6, 3, 2, 2),
+    "s11_hybrid_fusion" -> (5, 3, 2, 2),
     // ---- r12: the last two hub-keyed windows, converted. q_cdc:
     // latest-wins is a combinable max-struct agg — 0 windows (3
     // shuffles = latest agg + anti-join side + output sort; the

@@ -113,9 +113,12 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("lshBucket: identical vectors share a bucket") {
-    val b = vecs.select(VectorOps.lshBucket(VectorOps.toDouble($"embedding"), 8))
+    // row 4 holds row 0's vector under another id
+    val b = vecs.unionByName(vecs.filter($"vec_id" === 0).withColumn("vec_id", lit(4L)))
+      .orderBy("vec_id")
+      .select(VectorOps.lshBucket(VectorOps.toDouble($"embedding"), 8))
       .collect().map(_.getLong(0))
-    assert(b(0) == b(0))
+    assert(b.length == 5 && b(0) == b(4))
     // near-identical vectors should usually collide on 8 hyperplanes
     assert(b(2) == b(3))
   }
