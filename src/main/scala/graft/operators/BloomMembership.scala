@@ -14,49 +14,45 @@ import org.apache.spark.util.sketch.BloomFilter
   * `Dedup.minhashLshPairsAgainst`, so precision costs candidates, not
   * correctness).
   *
-  * Spark-first: both sides ride Spark's own bloom machinery — the
-  * SAME `BloomFilterAggregate` / `BloomFilterMightContain` expressions
-  * Catalyst injects for runtime join filters (exposed here as
-  * `graft_bloom_agg` / `graft_bloom_contains` via GraftExtensions), so
-  * the sketch build is a map-side-combining TypedImperativeAggregate
-  * (fixed numBits state per task, merged by OR) and the probe is a
-  * codegen'd predicate. Keys enter as xxhash64 on BOTH sides — one
-  * hash family, any key type.
+  * Spark-first: the build is Spark's own `BloomFilterAggregate` —
+  * the aggregate Catalyst injects for runtime join filters, exposed as
+  * `graft_bloom_agg` via GraftExtensions — a map-side-combining
+  * TypedImperativeAggregate (fixed numBits state per task, merged by
+  * OR). Keys enter as xxhash64 on BOTH sides — one hash family, any
+  * key type.
   *
-  * The probe inlines the serialized sketch as a binary LITERAL:
-  * `might_contain` requires a constant bloom by contract, and this is
-  * exactly what Catalyst's InjectRuntimeFilter does with its executed
-  * bloom subquery. The sketch is a bounded MODEL artifact (like the
-  * k-means centroids / PQ codebooks): optimalNumOfBits(n, fpp) ≈
-  * 150 MB at 10⁸ keys / 1% fpp — driver-sized by construction; size
-  * the key domain (e.g. per-shard blooms) rather than streaming a
-  * multi-GB filter through one plan.
+  * Serialized sketch bytes are the one currency: [[sketch]] returns
+  * them, the probes take them, [[merge]] / [[fillRatio]] /
+  * [[sizingOf]] read them. The probe is the codegen'd
+  * [[graft.plans.BloomContainsBc]] over a content-keyed cached
+  * broadcast of the filter, at every sketch size. The sketch is a
+  * bounded MODEL artifact (like the k-means centroids / PQ
+  * codebooks): optimalNumOfBits(n, fpp) ≈ 150 MB at 10⁸ keys / 1%
+  * fpp — driver-sized by construction; size the key domain (e.g.
+  * per-shard blooms) rather than streaming a multi-GB filter through
+  * one plan.
   *
   * The 100 TB shape: the serialized sketch is a persistable artifact
-  * (write the 1-row frame as parquet; a daily crawl rebuilds it from
-  * the corpus scan once, every batch reuses it). Probing is map-side
-  * only: no shuffle, no join — one codegen'd predicate per row. */
+  * (write the bytes; a daily crawl rebuilds it from the corpus scan
+  * once, every batch reuses it). Probing is map-side only: no
+  * shuffle, no join — one codegen'd predicate per row. */
 object BloomMembership {
 
-  /** Serialized corpus-key bloom as a 1-row (bloom: binary) frame.
-    * `expectedItems` sizes the filter (overestimate is safe, only
-    * costs bits); persist the result to reuse across batches.
+  /** Serialized corpus-key bloom, `None` for an empty corpus (the
+    * aggregate evaluates null at cardinality 0). `expectedItems` sizes
+    * the filter (overestimate is safe, only costs bits); persist the
+    * bytes to reuse them across batches.
     *
     * EAGER by contract (ADVICE r5): the aggregation runs inside this
-    * call and the result returns as a literal local frame, because the
-    * sizing depends on session conf raised only for the build — a lazy
-    * plan collected after a later conf change would silently size (and
-    * possibly clamp) differently. */
+    * call, because the sizing depends on session conf raised only for
+    * the build — a lazy plan collected after a later conf change would
+    * silently size (and possibly clamp) differently. */
   def sketch(corpus: DataFrame, keyCol: String,
-             expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bytes = withSizing(spark, expectedItems, fpp) {
-      corpus.agg(sketchOf(col(keyCol), expectedItems, fpp).as("bloom"))
-        .head().getAs[Array[Byte]](0)
+             expectedItems: Long, fpp: Double = 0.01): Option[Array[Byte]] =
+    withSizing(corpus.sparkSession, expectedItems, fpp) {
+      Option(corpus.agg(sketchOf(col(keyCol), expectedItems, fpp))
+        .head().getAs[Array[Byte]](0))
     }
-    Seq(Option(bytes)).toDF("bloom")
-  }
 
   /** The sketch aggregate over `key` — what [[sketch]] runs, as a
     * column, so a loop can take it as an observed metric of a job that
@@ -100,82 +96,55 @@ object BloomMembership {
     }
   }
 
-  /** Flag each batch row whose key the corpus bloom (from `sketch`)
-    * probably contains. Adds `flagCol` (true = maybe seen — route to
-    * exact verification; false = DEFINITELY new). The 1-row sketch
-    * frame is materialized once and inlined as a constant (see
-    * scaladoc above). */
-  def flagSeen(batch: DataFrame, bloom: DataFrame, keyCol: String,
-               flagCol: String = "maybe_seen"): DataFrame = {
-    // an EMPTY corpus aggregates to a null bloom (BloomFilterAggregate
-    // evals null at cardinality 0); might_contain(null, _) would
-    // return null and a downstream !flag filter would drop every row —
-    // the correct answer is "nothing has been seen". A ZERO-row bloom
-    // frame (empty/corrupt persisted artifact) gets the same treatment
-    // instead of a bare head() NoSuchElementException (ADVICE r5).
-    val rows = bloom.take(1)
-    val bytes = if (rows.isEmpty) None
-      else Option(rows.head.getAs[Array[Byte]](0))
-    flagSeen(batch, bytes, keyCol, flagCol)
-  }
-
-  /** [[flagSeen]] on an already-materialized serialized sketch — the
-    * form a loop that holds the bytes anyway uses (CorpusIngest loads
-    * each persisted bloom ONCE per batch and reuses the bytes for
-    * probe and merge instead of re-reading the artifact). Large
-    * sketches take the broadcast probe path here too (r16 review
-    * finding: the ADVICE-r15 plan-literal fix originally covered only
-    * the epoch-chain probe, leaving the single-sketch API embedding
-    * 100 MB+ filters in the plan). */
-  def flagSeen(batch: DataFrame, bloom: Option[Array[Byte]], keyCol: String,
-               flagCol: String): DataFrame = bloom match {
-    case None => batch.withColumn(flagCol, lit(false))
-    case Some(bytes) => batch.withColumn(flagCol,
-      containsPred(batch.sparkSession, bytes, xxhash64(col(keyCol)),
-        MaxLiteralBloomBytes))
-  }
+  /** Flag each batch row whose key ANY of `blooms` (serialized
+    * sketches from [[sketch]]) probably contains. Adds `flagCol` (true
+    * = maybe seen — route to exact verification; false = DEFINITELY
+    * new); no blooms (an empty corpus) flags nothing.
+    *
+    * Several blooms are the per-epoch re-shard path a saturating
+    * frontier rolls onto (see CorpusIngest's BLOOM CAPACITY scaladoc)
+    * and the band index's generation filters. The key hashes ONCE;
+    * each bloom is one map-side [[graft.plans.BloomContainsBc]]
+    * predicate on that hash, so k blooms cost k predicates inside the
+    * same scan — no extra pass, no shuffle. Chained probes flag a
+    * SUBSET of probing the OR-merged filter (cross-epoch bit mixes only
+    * ever add false positives — the containment case in
+    * BloomMembershipSpec) and false negatives stay impossible per
+    * epoch; overall fpp is ≤ the SUM of per-epoch fpps, linear in the
+    * epoch count — the visible, bounded trade of rolling instead of
+    * saturating. */
+  def flagSeen(batch: DataFrame, blooms: Seq[Array[Byte]], keyCol: String,
+               flagCol: String): DataFrame =
+    batch.withColumn("__bm_h", xxhash64(col(keyCol)))
+      .withColumn(flagCol, blooms.foldLeft(lit(false)) { (acc, b) =>
+        acc || containsPred(batch.sparkSession, b, col("__bm_h"))
+      })
+      .drop("__bm_h")
 
   /** The frontier filter composed: only batch rows whose key is
-    * DEFINITELY absent from the corpus (guaranteed-new work). */
-  def definitelyNew(batch: DataFrame, bloom: DataFrame, keyCol: String): DataFrame =
-    flagSeen(batch, bloom, keyCol, "__seen")
-      .filter(!col("__seen")).drop("__seen")
-
-  /** [[definitelyNew]] on sketch bytes (see the bytes [[flagSeen]]). */
-  def definitelyNew(batch: DataFrame, bloom: Option[Array[Byte]],
+    * DEFINITELY absent from every bloom (guaranteed-new work). */
+  def definitelyNew(batch: DataFrame, blooms: Seq[Array[Byte]],
                     keyCol: String): DataFrame =
-    flagSeen(batch, bloom, keyCol, "__seen")
+    flagSeen(batch, blooms, keyCol, "__seen")
       .filter(!col("__seen")).drop("__seen")
 
-  /** Past this serialized size a probe sketch ships as a BROADCAST
-    * instead of a plan literal (ADVICE r15): a lit(bytes) probe embeds
-    * the whole sketch in the query plan and every task binary — fine
-    * at the few-hundred-KB sketches a 100k-key epoch serializes to,
-    * plan-bloating at production sizing (10⁸ keys ≈ 150 MB, times the
-    * epoch count per batch). Broadcast blocks ship once per executor
-    * over the torrent protocol and deserialize once per executor
-    * (Spark caches broadcast values), so the probe cost stays one
-    * in-memory bit test per row; the trade is a non-codegen predicate
-    * (a deterministic closure over the broadcast), which is why small
-    * sketches keep the codegen'd literal path. */
-  val MaxLiteralBloomBytes: Long = 4L * 1024 * 1024
-
-  /** Broadcast cache for large probe sketches, keyed by content
-    * digest (epoch bytes are immutable, but a loop RE-READS them every
-    * batch, so identity-keying would re-broadcast ~150 MB per epoch
-    * per micro-batch; r16 review finding). Bounded LRU; capacity
-    * covers a compaction-bounded epoch chain with room for a
-    * rebuild's new bytes, so max-size eviction only triggers when
-    * many distinct large sketches are probed in one process — exactly
-    * when freeing the oldest is wanted. Eviction UNPERSISTS (not
-    * destroys): executor copies — the memory that actually
+  /** Broadcast cache for probe sketches, keyed by content digest
+    * (epoch bytes are immutable, but a loop RE-READS them every batch,
+    * so identity-keying would re-broadcast every epoch per
+    * micro-batch; r16 review finding). Bounded LRU; capacity holds
+    * what one ingest batch probes — the two frontier epoch chains plus
+    * the band index's generations, 7 sketches at the peak of an
+    * `ingest_loop` pass — so max-size eviction only triggers when many
+    * distinct sketches are probed in one process — exactly when
+    * freeing the oldest is wanted. Eviction UNPERSISTS
+    * (not destroys): executor copies — the memory that actually
     * accumulates — are dropped eagerly, while the handle stays valid
     * for any lazily-held plan that still references it (a destroyed
     * broadcast would throw there; a later execution of such a plan
     * just re-fetches the driver-side block — the re-probe case in
     * BloomMembershipSpec); the driver-side block then falls to the
     * ContextCleaner with the handle. */
-  private val BcCacheMax = 16
+  private[graft] val BcCacheMax = 16
   private lazy val bcCache =
     new java.util.LinkedHashMap[String,
         org.apache.spark.broadcast.Broadcast[BloomFilter]](16, 0.75f, true) {
@@ -206,54 +175,18 @@ object BloomMembership {
     }
   }
 
-  /** One epoch's probe predicate on a precomputed xxhash64 column:
-    * codegen'd literal `might_contain` below [[MaxLiteralBloomBytes]],
-    * codegen'd broadcast-backed [[graft.plans.BloomContainsBc]] above
-    * (semantically identical — BloomMembershipSpec pins flag-equality
-    * across the threshold). Broadcasts are cached by content digest
-    * and reused across batches ([[broadcastOf]]) — and because the
-    * cache hands back the same Broadcast instance, repeated probes of
-    * the same sketch build expressions that canonicalize EQUAL, batch
-    * over batch (ADVICE r16). */
+  /** One bloom's probe predicate on a precomputed xxhash64 column. The
+    * filter ships once per executor as a cached broadcast
+    * ([[broadcastOf]]) — and because the cache hands back the same
+    * Broadcast instance, repeated probes of the same sketch build
+    * expressions that canonicalize EQUAL, batch over batch (ADVICE
+    * r16). */
   private def containsPred(spark: org.apache.spark.sql.SparkSession,
-                           bytes: Array[Byte], hashCol: Column,
-                           maxLiteralBytes: Long): Column =
-    if (bytes.length <= maxLiteralBytes)
-      call_function("graft_bloom_contains", lit(bytes), hashCol)
-    else
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.plans.BloomContainsBc(
-          org.apache.spark.sql.GraftColumnBridge.expression(hashCol),
-          broadcastOf(spark, bytes)))
-
-  /** [[flagSeen]] chained over PER-EPOCH sketches (the re-shard path a
-    * saturating frontier rolls onto — see CorpusIngest's BLOOM
-    * CAPACITY scaladoc): a key is seen if ANY epoch's filter contains
-    * it. The key hashes ONCE; each probe is a map-side predicate on
-    * that hash (codegen'd literal or broadcast-backed past
-    * [[MaxLiteralBloomBytes]] — see [[containsPred]]), so k epochs
-    * cost k predicates inside the same scan — no extra pass, no
-    * shuffle. Chained probes flag a SUBSET of probing the OR-merged
-    * filter (cross-epoch bit mixes only ever add false positives —
-    * the containment case in BloomMembershipSpec) and false negatives
-    * stay impossible per epoch; overall fpp is ≤ the SUM of per-epoch
-    * fpps, linear in the epoch count — the visible, bounded trade of
-    * rolling instead of saturating. */
-  def flagSeenAny(batch: DataFrame, blooms: Seq[Array[Byte]],
-                  keyCol: String, flagCol: String,
-                  maxLiteralBytes: Long = MaxLiteralBloomBytes): DataFrame =
-    batch.withColumn("__bm_h", xxhash64(col(keyCol)))
-      .withColumn(flagCol, blooms.foldLeft(lit(false)) { (acc, b) =>
-        acc || containsPred(batch.sparkSession, b, col("__bm_h"),
-          maxLiteralBytes)
-      })
-      .drop("__bm_h")
-
-  /** [[definitelyNew]] over per-epoch sketches (see [[flagSeenAny]]). */
-  def definitelyNewAny(batch: DataFrame, blooms: Seq[Array[Byte]],
-                       keyCol: String): DataFrame =
-    flagSeenAny(batch, blooms, keyCol, "__seen")
-      .filter(!col("__seen")).drop("__seen")
+                           bytes: Array[Byte], hashCol: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      graft.plans.BloomContainsBc(
+        org.apache.spark.sql.GraftColumnBridge.expression(hashCol),
+        broadcastOf(spark, bytes)))
 
   /** Set-bit fraction of a serialized sketch — the SATURATION GAUGE
     * (VERDICT r14 item 2): a bloom sized once and merged forever
@@ -314,9 +247,10 @@ object BloomMembership {
   def sameSizing(a: Array[Byte], b: Array[Byte]): Boolean =
     sizingOf(a) == sizingOf(b)
 
-  /** Driver-side twin of [[containsPred]] for an already-`xxhash64`-
-    * hashed key — no Spark job; the caller hashes its raw key exactly
-    * as the build side did (see TieredIndex.mightContainKey).
+  /** Driver-side twin of the [[flagSeen]] probe for an already-
+    * `xxhash64`-hashed key — no Spark job; the caller hashes its raw
+    * key exactly as the build side did (see
+    * TieredIndex.mightContainKey).
     * Deserialized filters are cached WEAKLY by byte-array identity:
     * sidecar caches keep the arrays reference-stable between
     * compactions, so a production-size filter parses once per

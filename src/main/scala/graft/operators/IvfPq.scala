@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
@@ -199,18 +199,10 @@ object IvfPq {
     // query side: rank cells by unit-centroid dot (desc, then asc cell),
     // explode the top nProbe, carry the precomputed flat ADC LUT
     val qp = ProductQuantizer.unitPrep(queries, idCol, vecCol, "q")
-    val qScores = KMeans.centroidScores(coarse, col("q_v"), lit(1.0))
-    val scoreArr = array(qScores.map { case (cell, cc) =>
-      struct(cc.as("cc"), lit(cell).as("cell")) }: _*)
-    val ranked = array_sort(scoreArr, (l: Column, r: Column) =>
-      when(l.getField("cc") > r.getField("cc"), -1)
-        .when(l.getField("cc") < r.getField("cc"), 1)
-        .otherwise(when(l.getField("cell") < r.getField("cell"), -1)
-          .when(l.getField("cell") > r.getField("cell"), 1).otherwise(0)))
     val probeFrame =
       qp.withColumn("__lut", ProductQuantizer.lutCol(mdl, col("q_v")))
-        .withColumn("cell",
-          explode(transform(slice(ranked, 1, nProbe), p => p.getField("cell"))))
+        .withColumn("cell", explode(
+          KMeans.probeCells(coarse, col("q_v"), lit(1.0), nProbe)))
         .select("q_id", "q_v", "__lut", "cell")
     // persisted path: materialize the (broadcast-sized) probe frame
     // so the cell-literal collect below and the ADC join read ONE

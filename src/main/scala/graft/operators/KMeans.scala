@@ -66,6 +66,22 @@ object KMeans {
         greatest(nrm, lit(java.lang.Double.MIN_VALUE)))
     }
 
+  /** The `nProbe` cells a query probes, as an array column: cells
+    * ranked by [[centroidScores]] descending, ties to the lower cell.
+    * Shared by the IVF and IVF-PQ query sides so both rank alike. */
+  private[operators] def probeCells(model: Seq[(Long, Seq[Double])],
+                                    v: Column, nrm: Column,
+                                    nProbe: Int): Column = {
+    val scoreArr = array(centroidScores(model, v, nrm).map { case (cell, cc) =>
+      struct(cc.as("cc"), lit(cell).as("cell")) }: _*)
+    val ranked = array_sort(scoreArr, (l: Column, r: Column) =>
+      when(l.getField("cc") > r.getField("cc"), -1)
+        .when(l.getField("cc") < r.getField("cc"), 1)
+        .otherwise(when(l.getField("cell") < r.getField("cell"), -1)
+          .when(l.getField("cell") > r.getField("cell"), 1).otherwise(0)))
+    transform(slice(ranked, 1, nProbe), p => p.getField("cell"))
+  }
+
   /** One-node native form of `argmaxCell(centroidScores(model, v,
     * nrm))` (r22, [[graft.plans.CellArgmax]] — guide §1.2 step 2): the
     * legacy form built nCells literal-dot columns + an nCells-branch

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
@@ -121,17 +121,9 @@ object SimilaritySearch {
       KMeans.cellArgmax(model, col("c_v"), col("c_nrm")).as("cell"))
     // query probes: rank cells by (desc score, asc cell), take nProbe
     val q = prep(queries, idCol, vecCol, "q", widen = true)
-    val qScores = KMeans.centroidScores(model, col("q_v"), col("q_nrm"))
-    val scoreArr = array(qScores.map { case (cell, cc) =>
-      struct(cc.as("cc"), lit(cell).as("cell")) }: _*)
-    val ranked = array_sort(scoreArr, (l: Column, r: Column) =>
-      when(l.getField("cc") > r.getField("cc"), -1)
-        .when(l.getField("cc") < r.getField("cc"), 1)
-        .otherwise(when(l.getField("cell") < r.getField("cell"), -1)
-          .when(l.getField("cell") > r.getField("cell"), 1).otherwise(0)))
     val probes = broadcast(
-      q.withColumn("cell",
-          explode(transform(slice(ranked, 1, nProbe), p => p.getField("cell"))))
+      q.withColumn("cell", explode(
+          KMeans.probeCells(model, col("q_v"), col("q_nrm"), nProbe)))
         .select("q_id", "q_v", "q_nrm", "cell"))
     val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("c_id"))
     probes.join(assigned, "cell")

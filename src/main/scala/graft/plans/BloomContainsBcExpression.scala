@@ -7,20 +7,16 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Bloom-membership probe against a BROADCAST filter — the
-  * production-sized twin of `graft_bloom_contains` (VERDICT r16 item
-  * 3). The literal expression embeds the serialized sketch in the
-  * query plan, which is exactly right below a few MB and plan-bloating
-  * at production sizing (10⁸ keys ≈ 150 MB per epoch, shipped inside
-  * every task binary); the previous large-sketch path probed through a
-  * Scala UDF closure over the broadcast — correct, but a non-codegen
-  * per-row call that boxes every hash. This expression keeps the
-  * broadcast economics (the filter ships once per executor over the
-  * torrent protocol and deserializes once, `Broadcast.value` is
-  * process-cached) AND stays inside whole-stage codegen: the generated
-  * code holds the deserialized `BloomFilter` in a lazily-initialized
-  * reference slot and calls `mightContainLong` on the unboxed hash —
-  * one virtual call per row, no boxing, no interpreted eval.
+/** Bloom-membership probe against a BROADCAST filter — the one probe
+  * predicate `BloomMembership` builds, at every sketch size. The
+  * filter ships once per executor over the torrent protocol and
+  * deserializes once (`Broadcast.value` is process-cached), instead of
+  * riding inside the query plan and every task binary (10⁸ keys ≈
+  * 150 MB per epoch at production sizing); and the probe stays inside
+  * whole-stage codegen: the generated code holds the deserialized
+  * `BloomFilter` in a lazily-initialized reference slot and calls
+  * `mightContainLong` on the unboxed hash — one virtual call per row,
+  * no boxing, no interpreted eval.
   *
   * The broadcast handle participates in case-class equality by
   * IDENTITY, which is the semantics the plan cache wants:
@@ -30,10 +26,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * equal batch over batch (ADVICE r16: the per-call `udf(...)`
   * instances never did).
   *
-  * Null contract mirrors `BloomFilterMightContain`: null hash → null
+  * Null contract mirrors Spark's `might_contain`: null hash → null
   * (UnaryExpression's default null propagation). The child must be the
   * precomputed xxhash64 long — the same one-hash-family contract as
-  * the literal path. */
+  * the build side. */
 case class BloomContainsBc(child: Expression,
                            bloom: Broadcast[BloomFilter])
     extends UnaryExpression {
@@ -41,11 +37,11 @@ case class BloomContainsBc(child: Expression,
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_bloom_contains_bc expects a LONG hash (xxhash64), got " +
+      s"graft_bloom_probe expects a LONG hash (xxhash64), got " +
         child.dataType.simpleString)
 
   override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_bloom_contains_bc"
+  override def prettyName: String = "graft_bloom_probe"
 
   // the handle is driver-constant for the expression's lifetime; the
   // VALUE is fetched lazily per executor (and memoized by Spark's

@@ -238,6 +238,21 @@ case class VecUnit(child: Expression)
 /** Session extension registering graft's native expressions; enable
   * with `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  /** The Int value of a constant function argument, or an
+    * IllegalArgumentException naming `fn` and its argument `what`: the
+    * native expressions take these as Scala parameters, fixed at plan
+    * time. */
+  private def intLit(fn: String, what: String, e: Expression): Int = e match {
+    case c if c.foldable => c.eval() match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case other => throw new IllegalArgumentException(
+        s"$fn $what must be an int literal, got $other")
+    }
+    case _ => throw new IllegalArgumentException(
+      s"$fn $what must be a literal")
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectOptimizerRule(_ => FuseMinHashShingles)
@@ -252,53 +267,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       FunctionIdentifier("graft_minhash"),
       new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        val n = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_minhash numHashes must be an int literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_minhash numHashes must be a literal")
-        }
-        MinHashSig(children.head, n)
-      }))
+      (children: Seq[Expression]) =>
+        MinHashSig(children.head,
+          intLit("graft_minhash", "numHashes", children(1)))))
     ext.injectFunction((
       FunctionIdentifier("graft_lsh_bucket"),
       new ExpressionInfo(classOf[LshBucketSig].getName, "graft_lsh_bucket"),
       (children: Seq[Expression]) => {
-        def intLit(e: Expression, what: String): Int = e match {
-          case l if l.foldable => l.eval() match {
-            case i: Int => i
-            case l2: Long => l2.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_lsh_bucket $what must be an int literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            s"graft_lsh_bucket $what must be a literal")
-        }
-        val nBits = intLit(children(1), "nBits")
-        val offset = if (children.length > 2) intLit(children(2), "bitOffset") else 0
+        val nBits = intLit("graft_lsh_bucket", "nBits", children(1))
+        val offset =
+          if (children.length > 2) intLit("graft_lsh_bucket", "bitOffset", children(2))
+          else 0
         LshBucketSig(children.head, nBits, offset)
       }))
     ext.injectFunction((
       FunctionIdentifier("graft_shingles"),
       new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
-      (children: Seq[Expression]) => {
-        val k = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_shingles k must be an int literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_shingles k must be a literal")
-        }
-        Shingles(children.head, k)
-      }))
+      (children: Seq[Expression]) =>
+        Shingles(children.head, intLit("graft_shingles", "k", children(1)))))
     ext.injectFunction((
       FunctionIdentifier("graft_simhash"),
       new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
@@ -314,83 +300,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       FunctionIdentifier("graft_kmv_distinct"),
       new ExpressionInfo(classOf[KmvSketch].getName, "graft_kmv_distinct"),
-      (children: Seq[Expression]) => {
-        val k = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_kmv_distinct k must be an int literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_kmv_distinct k must be a literal")
-        }
-        KmvSketch(children.head, k).toAggregateExpression()
-      }))
+      (children: Seq[Expression]) =>
+        KmvSketch(children.head, intLit("graft_kmv_distinct", "k", children(1)))
+          .toAggregateExpression()))
     ext.injectFunction((
       FunctionIdentifier("graft_freq_items"),
       new ExpressionInfo(classOf[FreqItemsSketch].getName, "graft_freq_items"),
-      (children: Seq[Expression]) => {
-        val k = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_freq_items k must be an int literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_freq_items k must be a literal")
-        }
-        FreqItemsSketch(children.head, k).toAggregateExpression()
-      }))
+      (children: Seq[Expression]) =>
+        FreqItemsSketch(children.head, intLit("graft_freq_items", "k", children(1)))
+          .toAggregateExpression()))
     ext.injectFunction((
       FunctionIdentifier("graft_kmv_sketch"),
       new ExpressionInfo(classOf[KmvSketchValues].getName, "graft_kmv_sketch"),
-      (children: Seq[Expression]) => {
-        val k = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_kmv_sketch k must be an int literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_kmv_sketch k must be a literal")
-        }
-        KmvSketchValues(children.head, k).toAggregateExpression()
-      }))
+      (children: Seq[Expression]) =>
+        KmvSketchValues(children.head, intLit("graft_kmv_sketch", "k", children(1)))
+          .toAggregateExpression()))
     ext.injectFunction((
       FunctionIdentifier("graft_winnow"),
       new ExpressionInfo(classOf[Winnow].getName, "graft_winnow"),
-      (children: Seq[Expression]) => {
-        def intLit(e: Expression, what: String): Int = e match {
-          case l if l.foldable => l.eval() match {
-            case i: Int => i
-            case l2: Long => l2.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_winnow $what must be an int literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            s"graft_winnow $what must be a literal")
-        }
-        Winnow(children.head, intLit(children(1), "k"), intLit(children(2), "w"))
-      }))
+      (children: Seq[Expression]) =>
+        Winnow(children.head, intLit("graft_winnow", "k", children(1)),
+          intLit("graft_winnow", "w", children(2)))))
     ext.injectFunction((
       FunctionIdentifier("graft_deflate_size"),
       new ExpressionInfo(classOf[DeflateSize].getName, "graft_deflate_size"),
       (children: Seq[Expression]) => {
         val level =
           if (children.length < 2) 6
-          else children(1) match {
-            case e if e.foldable => e.eval() match {
-              case i: Int => i
-              case l: Long => l.toInt
-              case other => throw new IllegalArgumentException(
-                s"graft_deflate_size level must be an int literal, got $other")
-            }
-            case _ => throw new IllegalArgumentException(
-              "graft_deflate_size level must be a literal")
-          }
+          else intLit("graft_deflate_size", "level", children(1))
         DeflateSize(children.head, level)
       }))
     ext.injectFunction((
@@ -401,29 +338,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       FunctionIdentifier("graft_lcp_ext"),
       new ExpressionInfo(classOf[LcpExtend].getName, "graft_lcp_ext"),
-      (children: Seq[Expression]) => {
-        val k = children(4) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_lcp_ext k must be an int literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_lcp_ext k must be a literal")
-        }
-        LcpExtend(children.head, children(1), children(2), children(3), k)
-      }))
+      (children: Seq[Expression]) =>
+        LcpExtend(children.head, children(1), children(2), children(3),
+          intLit("graft_lcp_ext", "k", children(4)))))
     ext.injectFunction((
       FunctionIdentifier("graft_vec_dsum"),
       new ExpressionInfo(classOf[VecDecimalSum].getName, "graft_vec_dsum"),
       (children: Seq[Expression]) =>
         VecDecimalSum(children.head).toAggregateExpression()))
-    // Spark's OWN bloom-filter expressions (the pair Catalyst injects
-    // for runtime join filters), surfaced as session functions for the
-    // BloomMembership operator: build = map-side-combining typed
-    // aggregate, probe = codegen'd predicate. Values are xxhash64
-    // longs on both sides (BloomMembership applies the hash).
+    // Spark's OWN bloom-filter aggregate (the one Catalyst injects for
+    // runtime join filters), surfaced as a session function for the
+    // BloomMembership sketch build: a map-side-combining typed
+    // aggregate over xxhash64 longs (BloomMembership applies the hash;
+    // its probe is graft.plans.BloomContainsBc).
     ext.injectFunction((
       FunctionIdentifier("graft_bloom_agg"),
       new ExpressionInfo(
@@ -432,13 +359,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) =>
         new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
           children.head, children(1), children(2)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1))))
   }
 }

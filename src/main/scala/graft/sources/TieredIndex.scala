@@ -182,7 +182,7 @@ private[graft] object TieredIndex {
     * [[graft.operators.BloomMembership.sketch]] hashes that once more
     * with the same `xxhash64` before inserting the long.
     * TieredIndexSpec pins the mirror against the distributed
-    * [[graft.operators.BloomMembership.flagSeenAny]] predicate. */
+    * [[graft.operators.BloomMembership.flagSeen]] predicate. */
   def mightContainKey(gen: Gen, key: Long): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     BloomMembership.mightContainHash(gen.bloom,
@@ -339,9 +339,8 @@ private[graft] object TieredIndex {
       commit(ss, dir, Seq.empty, consumed.map(_.name), newGens)
       return newGens
     }
-    val sliceBloom = BloomMembership.sketch(
-      staged.select(keyHash(spec).as("__k")), "__k", totalRows, spec.fpp)
-      .head().getAs[Array[Byte]](0)
+    val sliceBloom = BloomMembership.sketch( // n > 0 rows: never empty
+      staged.select(keyHash(spec).as("__k")), "__k", totalRows, spec.fpp).get
     val newTarget = target match {
       case Some(t) => t.copy(
         bloom = BloomMembership.merge(t.bloom, sliceBloom),
@@ -417,9 +416,8 @@ private[graft] object TieredIndex {
       fs.delete(staging, true)
       return gens
     }
-    val bloom = BloomMembership.sketch(
-      staged.select(keyHash(spec).as("__k")), "__k", n, spec.fpp)
-      .head().getAs[Array[Byte]](0)
+    val bloom = BloomMembership.sketch( // n > 0 rows: never empty
+      staged.select(keyHash(spec).as("__k")), "__k", n, spec.fpp).get
     val gen = Gen(gens.map(_.id).foldLeft(-1L)(math.max) + 1, bloom, ranges, n)
     commit(ss, dir, ranges.map(_.name), srcNames, kept :+ gen)
     kept :+ gen

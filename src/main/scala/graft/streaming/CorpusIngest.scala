@@ -66,7 +66,7 @@ import graft.sources.ShardSink
   * capacity), the active epoch is FROZEN as-is and the increment
   * starts epoch N+1 — no key is ever dropped and no epoch ever
   * exceeds its design fpp. The probe is "seen in ANY epoch"
-  * ([[BloomMembership.flagSeenAny]]: the key hashes once, k epochs =
+  * ([[BloomMembership.flagSeen]]: the key hashes once, k epochs =
   * k map-side codegen'd predicates in the same scan); chained probes
   * flag a SUBSET of the OR-merged filter (containment pinned in
   * BloomMembershipSpec) and overall fpp grows ≤ linearly in the epoch
@@ -684,7 +684,7 @@ object CorpusIngest {
       broadcastCap: Long, payload: Seq[Column], sides: SideActions,
       stage: String): DataFrame = {
     val counts = Observation()
-    val flagged = BloomMembership.flagSeenAny(
+    val flagged = BloomMembership.flagSeen(
         rows.select(key, "doc_id").repartition(col(key))
           .groupBy(key, "doc_id").agg(count(lit(1)).as("__copies"))
           .groupBy(key)
@@ -1072,7 +1072,7 @@ object CorpusIngest {
       // their keys can contribute to a drop. One bounded collect
       // brings them to the driver, which distincts them.
       val suspect = BloomMembership
-        .flagSeenAny(batchIdx
+        .flagSeen(batchIdx
             .withColumn("__k", xxhash64(col("band"), col("bucket"))),
           gens.map(_.bloom), "__k", "__hot")
         .filter(col("__hot"))
@@ -1178,8 +1178,9 @@ object CorpusIngest {
         def rebuild(path: String, keyCol: String): Boolean =
           if (shipped > 0) {
             val expected = math.max(1L, math.ceil(shipped * headroom).toLong)
+            // shipped > 0 rows, so the sketch is never empty
             val bytes = BloomMembership.sketch(keys.select(keyCol), keyCol,
-              expected).head().getAs[Array[Byte]](0)
+              expected).get
             graft.sources.DirSwap.replace(ss, path)(out =>
               writeEpochFile(ss, s"$out/epoch=0", bytes))
             rememberEpoch(ss, path, 0, bytes)

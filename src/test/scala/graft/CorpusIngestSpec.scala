@@ -1270,7 +1270,7 @@ class CorpusIngestSpec extends SparkSpec {
     graft.operators.BloomMembership.sketch(((1 to 4) :+ 9)
         .map(i => s"https://site.com/p$i").toDF("url")
         .select(graft.functions.TextOps.canonicalizeUrl(col("url")).as("u")),
-        "u", 1000L)
+        "u", 1000L).toSeq.toDF("bloom")
       .write.mode("overwrite").parquet(s"$ub/epoch=0")
     assert(ingest(docs(Seq(9, 10))) == ((1L, 1.0)))
     // a Gopher-dropped url is SEEN by the url frontier; compaction

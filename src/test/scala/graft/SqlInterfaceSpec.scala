@@ -47,4 +47,32 @@ class SqlInterfaceSpec extends SparkSpec {
     assert(r2.getLong(0) >= 0L && r2.getLong(0) < 256L)
     assert(r2.getInt(1) == 16)
   }
+
+  test("extension fns reject a column-valued or non-integer constant " +
+      "argument, naming the function and the argument") {
+    // (call with ? in the checked argument's place, function, argument)
+    val calls = Seq(
+      ("graft_minhash(array('a'), ?)", "graft_minhash", "numHashes"),
+      ("graft_lsh_bucket(array(1.0D), ?)", "graft_lsh_bucket", "nBits"),
+      ("graft_lsh_bucket(array(1.0D), 8, ?)", "graft_lsh_bucket", "bitOffset"),
+      ("graft_shingles('a b', ?)", "graft_shingles", "k"),
+      ("graft_kmv_distinct(id, ?)", "graft_kmv_distinct", "k"),
+      ("graft_freq_items(id, ?)", "graft_freq_items", "k"),
+      ("graft_kmv_sketch(id, ?)", "graft_kmv_sketch", "k"),
+      ("graft_winnow('a b', ?, 4)", "graft_winnow", "k"),
+      ("graft_winnow('a b', 4, ?)", "graft_winnow", "w"),
+      ("graft_deflate_size('a b', ?)", "graft_deflate_size", "level"),
+      ("graft_lcp_ext('a', 'b', 0, 0, ?)", "graft_lcp_ext", "k"))
+    def rejection(call: String): String = {
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM range(1)"))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i.getMessage }
+        .getOrElse(fail(s"$call: no IllegalArgumentException in $e"))
+    }
+    calls.foreach { case (call, fn, what) =>
+      assert(rejection(call.replace("?", "id")) == s"$fn $what must be a literal")
+      assert(rejection(call.replace("?", "1.5")) ==
+        s"$fn $what must be an int literal, got 1.5")
+    }
+  }
 }

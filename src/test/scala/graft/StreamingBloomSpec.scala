@@ -26,8 +26,7 @@ class StreamingBloomSpec extends SparkSpec {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val ss = batch.sparkSession
-        val bb = BloomMembership.sketch(batch, "key", n)
-          .head().getAs[Array[Byte]](0)
+        val bb = BloomMembership.sketch(batch, "key", n).get
         val merged =
           if (new java.io.File(idxPath).exists())
             BloomMembership.merge(
@@ -50,13 +49,12 @@ class StreamingBloomSpec extends SparkSpec {
     } finally q.stop()
 
     val streamed = spark.read.parquet(idxPath).head().getAs[Array[Byte]](0)
-    val batchMode = BloomMembership.sketch(all.toDF("id", "key"), "key", n)
-      .head().getAs[Array[Byte]](0)
+    val batchMode = BloomMembership.sketch(all.toDF("id", "key"), "key", n).get
     assert(java.util.Arrays.equals(streamed, batchMode),
       "merged bloom must equal the batch bloom of the union")
     // and the maintained index answers the frontier question
     val probe = (550L to 650L).map(i => (i, s"url-$i")).toDF("id", "key")
-    val seen = BloomMembership.flagSeen(probe, spark.read.parquet(idxPath), "key")
+    val seen = BloomMembership.flagSeen(probe, Seq(streamed), "key", "maybe_seen")
       .filter($"maybe_seen").select("id").as[Long].collect().toSet
     assert((550L to 600L).toSet.subsetOf(seen), "every ingested key must probe true")
   }

@@ -35,26 +35,18 @@ class StreamingFrontierSpec extends SparkSpec {
         val canon = batch
           .select(TextOps.canonicalizeUrl(col("url")).as("canon_url"))
           .dropDuplicates("canon_url") // within-batch chrome variants
-        val bloom =
-          if (new java.io.File(bloomPath).exists()) ss.read.parquet(bloomPath)
-          else canon.limit(0).select(lit(null).cast("binary").as("bloom"))
+        val prevBytes =
+          if (new java.io.File(bloomPath).exists())
+            Some(ss.read.parquet(bloomPath).as[Array[Byte]].head())
+          else None
         val fresh = BloomMembership
-          .definitelyNew(canon, bloom, "canon_url")
+          .definitelyNew(canon, prevBytes.toSeq, "canon_url")
           .localCheckpoint(true)
         fresh.write.mode("append").parquet(outPath)
-        val prevBytes = bloom.take(1).headOption
-          .flatMap(r => Option(r.getAs[Array[Byte]](0)))
         val newBytes = BloomMembership.sketch(fresh, "canon_url", 10000L)
-          .take(1).headOption.flatMap(r => Option(r.getAs[Array[Byte]](0)))
-        val merged = (prevBytes, newBytes) match {
-          case (Some(a), Some(b)) => BloomMembership.merge(a, b)
-          case (Some(a), None) => a
-          case (None, Some(b)) => b
-          case _ => null
-        }
-        if (merged != null)
-          Seq(Option(merged)).toDF("bloom")
-            .write.mode("overwrite").parquet(bloomPath)
+        (prevBytes ++ newBytes).reduceOption(BloomMembership.merge)
+          .foreach(merged => Seq(merged).toDF("bloom")
+            .write.mode("overwrite").parquet(bloomPath))
         ()
       }
       .start()

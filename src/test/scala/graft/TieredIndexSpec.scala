@@ -230,8 +230,7 @@ class TieredIndexSpec extends SparkSpec {
     }
     def names = TieredIndex.liveNames(spark, dir)
     def bloomOf(rows: Seq[Long]) = graft.operators.BloomMembership
-      .sketch(rows.toDF("k"), "k", math.max(rows.size.toLong, 1L))
-      .head().getAs[Array[Byte]](0)
+      .sketch(rows.toDF("k"), "k", math.max(rows.size.toLong, 1L)).get
     val staging = dir + TieredIndex.StageSuffix
     def manifest(body: String): Unit = {
       val w = new java.io.FileWriter(s"$staging/_COMMIT")

@@ -4,10 +4,11 @@
 # red HEAD can never reach the driver gate (the r9 failure mode:
 # BENCH_r09 rc=1, CORRECTNESS_r09 = {}).
 #
-# Seven steps: env reads, the DirSwap protocol, compile, the perfbench
-# harness build, scalatest, the Verify dump against the DuckDB oracle,
-# and the plan audit. A failing catalog query fails step 6: Verify
-# materializes every result, names each failed query and exits 1.
+# Eight steps: env reads, the DirSwap protocol, the one bloom probe
+# path, compile, the perfbench harness build, scalatest, the Verify
+# dump against the DuckDB oracle, and the plan audit. A failing
+# catalog query fails step 7: Verify materializes every result, names
+# each failed query and exits 1.
 # Timing is not checked here; `perfbench/run.py` is the one timing
 # path (see BENCHMARK.json).
 #
@@ -17,7 +18,7 @@ cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/round_check}
 
-echo "== 1/7 env reads only in Session.scala =="
+echo "== 1/8 env reads only in Session.scala =="
 # library behaviour is set by arguments and inputs alone; only the
 # session's core count (SPARK_GRAFT_CPUS) reads the environment
 ENV_READS=$(grep -rnE 'sys\.env|System\.getenv' src/main/scala \
@@ -27,7 +28,7 @@ if [ -n "$ENV_READS" ]; then
   echo "ENV READ outside Session.scala"; exit 1
 fi
 
-echo "== 2/7 directory-replace protocol only in DirSwap.scala =="
+echo "== 2/8 directory-replace protocol only in DirSwap.scala =="
 # every crash-safe directory replace goes through DirSwap.replace, so
 # its twin name and its swap are spelled nowhere else
 SWAPS=$(grep -rnE '"__compact"|"__fold"|DirSwap\.swap' src/main/scala \
@@ -37,28 +38,39 @@ if [ -n "$SWAPS" ]; then
   echo "TWIN NAME or DirSwap.swap outside DirSwap.scala"; exit 1
 fi
 
-echo "== 3/7 compile =="
+echo "== 3/8 bloom membership probes only in BloomMembership.scala =="
+# every bloom probe is BloomMembership's broadcast BloomContainsBc; a
+# second probe path (Spark's might_contain, a plan-literal function,
+# a hand-built BloomContainsBc) is spelled nowhere else
+PROBES=$(grep -rnE 'BloomFilterMightContain|graft_bloom_contains|BloomContainsBc\(' src/main/scala \
+  | grep -vE '^src/main/scala/graft/(operators/BloomMembership|plans/BloomContainsBcExpression)\.scala:' || true)
+if [ -n "$PROBES" ]; then
+  echo "$PROBES"
+  echo "BLOOM PROBE outside BloomMembership.scala"; exit 1
+fi
+
+echo "== 4/8 compile =="
 sbt -batch compile
 
-echo "== 4/7 perfbench harness builds against this library =="
+echo "== 5/8 perfbench harness builds against this library =="
 # the benchmark compiles perfbench/src together with src/main/scala; a
 # library signature change that breaks the harness fails here, not in
 # the benchmark run (run.build() skips the build while the sources are
 # unchanged since its last one)
 python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run; run.build()'
 
-echo "== 5/7 scalatest =="
+echo "== 6/8 scalatest =="
 # stale suite XMLs from deleted specs otherwise inflate the directory
 # aggregate vs the fresh run's true tally (VERDICT r15 item 4)
 rm -rf target/test-reports
 sbt -batch test
 
-echo "== 6/7 verify dump + DuckDB oracle compare ($SF) =="
+echo "== 7/8 verify dump + DuckDB oracle compare ($SF) =="
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT"
 python3 tools/check.py "$SF" "$OUT"
 
-echo "== 7/7 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
+echo "== 8/8 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
 # the 15 flagged queries are the documented 1-row-scalar broadcast
 # nested loops (global aggregates joined back); anything NEW flagged
 # here is a plan regression the golden specs didn't cover
