@@ -16,10 +16,6 @@ object SketchOps {
   def kmvSketch(c: Column, k: Int): Column =
     call_function("graft_kmv_sketch", c, lit(k))
 
-  /** The distinct estimate as a Column (groupBy agg). */
-  def kmvDistinct(c: Column, k: Int): Column =
-    call_function("graft_kmv_distinct", c, lit(k))
-
   /** k smallest values of the union of two sketches (a KMV sketch of
     * the union of the underlying sets). */
   def kmvUnion(a: Column, b: Column, k: Int): Column =

@@ -144,15 +144,6 @@ object TextOps {
   def fingerprint(c: Column): Column =
     call_function("graft_fingerprint", c)
 
-  /** Portable higher-order-function form of `fingerprint` — identical
-    * result (FingerprintSpec asserts it); for sessions without
-    * GraftExtensions and as the native expression's oracle. */
-  def fingerprintHof(c: Column): Column =
-    aggregate(
-      sequence(lit(1), length(c)),
-      lit(0L),
-      (acc, i) => (acc * 31 + ascii(c.substr(i, lit(1)))) % 1000000007L)
-
   /** Distinct character k-shingles of a string (dedup primitive).
     * Texts shorter than k have no k-shingle → empty array (mirrors the
     * SQL-oracle formulation; callers that can't handle empty sets —
@@ -163,15 +154,6 @@ object TextOps {
     * GraftExtensions (`Session.local` sets it). */
   def shingles(c: Column, k: Int): Column =
     call_function("graft_shingles", c, lit(k))
-
-  /** Portable higher-order-function form of `shingles` — identical
-    * result (ShinglesSpec asserts it); for sessions without
-    * GraftExtensions and as the native expression's oracle. */
-  def shinglesHof(c: Column, k: Int): Column =
-    when(length(c) < k, array().cast("array<string>")).otherwise(
-      array_distinct(transform(
-        sequence(lit(1), length(c) - (k - 1)),
-        i => c.substr(i, lit(k)))))
 
   /** Canonical URL — a crawled page's identity for frontier dedup and
     * recrawl detection (t32's cascade as a library function, r11):
@@ -354,45 +336,11 @@ object TextOps {
     * shared verbatim by the t33 catalog query (whose DuckDB oracle
     * replays each field), `CorpusStats` and the streaming ingest
     * quality gate. Native codegen'd expression (graft.plans.GopherShape):
-    * one byte walk per row instead of [[gopherShapeHof]]'s three splits,
-    * per-word regex lambdas and twelve whole-text `replace` copies.
+    * one byte walk per row instead of the Column form's three splits,
+    * per-word regex lambdas and twelve whole-text `replace` copies
+    * (the Column form is the spec oracle
+    * `graft.KernelOracles.gopherShapeHof`).
     * Requires GraftExtensions (`Session.local` sets it). */
   def gopherShape(text: Column): Column =
     call_function("graft_gopher", text)
-
-  /** Column form of [[gopherShape]] — identical struct, doubles bit for
-    * bit (TextKernelsPropSpec, EdgeCasesSpec); the native expression's
-    * spec oracle and the formula its DuckDB mirror follows field by
-    * field (`TextQueries.gopherFieldsSql`). */
-  def gopherShapeHof(text: Column): Column = {
-    val words = split(trim(text), " +")
-    val nWords = size(words).cast("long")
-    val denomW = greatest(nWords, lit(1L)).cast("double")
-    val nLines = (length(text) -
-      length(replace(text, lit("\n"), lit(""))) + 1).cast("long")
-    val meanWlen =
-      length(replace(text, lit(" "), lit(""))).cast("double") / denomW
-    val hashRatio = countOccurrences(text, "#").cast("double") / denomW
-    val ellipsisRatio = countOccurrences(text, "...").cast("double") / denomW
-    val alphaFrac = size(filter(words, w => w.rlike("[A-Za-z]")))
-      .cast("long").cast("double") / denomW
-    val bulletFrac = size(filter(split(text, "\n"),
-        l => trim(l).startsWith("-") || trim(l).startsWith("*")))
-      .cast("long").cast("double") / nLines.cast("double")
-    val ellipsisLineFrac = size(filter(split(text, "\n"),
-        l => trim(l).endsWith("...")))
-      .cast("long").cast("double") / nLines.cast("double")
-    val nStops = Seq(" the ", " be ", " to ", " of ", " and ", " that ",
-      " have ", " with ").map(countOccurrences(text, _)).reduce(_ + _)
-    val keep = nWords >= 50 && nWords <= 100000 &&
-      meanWlen >= 3.0 && meanWlen <= 10.0 &&
-      hashRatio <= 0.1 && ellipsisRatio <= 0.1 &&
-      bulletFrac <= 0.9 && ellipsisLineFrac <= 0.3 &&
-      alphaFrac >= 0.8 && nStops >= 2
-    struct(nWords.as("n_words"), meanWlen.as("mean_wlen"),
-      hashRatio.as("hash_ratio"), ellipsisRatio.as("ellipsis_ratio"),
-      alphaFrac.as("alpha_frac"), bulletFrac.as("bullet_frac"),
-      ellipsisLineFrac.as("ellipsis_line_frac"), nStops.as("n_stops"),
-      keep.as("keep"))
-  }
 }

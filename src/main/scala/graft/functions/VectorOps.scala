@@ -4,37 +4,30 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Embedding-vector kernel (SURVEY §2.4). Vectors are array<float>
-  * columns widened to double at the edge; math is higher-order-function
-  * based (`zip_with`/`aggregate`) so it stays columnar and codegen-
-  * friendly — no UDF serialization per row.
+  * columns widened to double at the edge; the per-row math is graft's
+  * native codegen'd expressions (`graft_dot`, `graft_unit`,
+  * `graft_lsh_bucket`, registered by GraftExtensions, which
+  * `Session.local` installs) — columnar, no UDF serialization per row.
   */
 object VectorOps {
 
-  /** Sequential left-to-right dot product in double (higher-order-
-    * function form — portable, but interpreted per element). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Native codegen'd dot product (graft.plans.VecDot) — identical
-    * result (same summation order), ~no allocation. Requires
-    * GraftExtensions on the session (`Session.local` sets it). */
-  def fastDot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  /** Sequential left-to-right dot product in double: the native
+    * codegen'd graft.plans.VecDot, ~no allocation. */
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
-  def fastNorm(a: Column): Column = sqrt(fastDot(a, a))
 
   /** Native fused unit-normalize (graft.plans.VecUnit): widen + norm +
     * divide in ONE codegen pass, null on zero-norm/null-element rows —
-    * bit-identical to `transform(toDouble(v), x / fastNorm)` with the
+    * bit-identical to `transform(toDouble(v), x / norm)` with the
     * `nrm > 0` filter expressed as `isNotNull` (VecUnitSpec asserts
-    * it). Requires GraftExtensions on the session. */
+    * it). */
   def unit(a: Column): Column = call_function("graft_unit", a)
 
-  /** Cosine similarity with optional precomputed norms (precompute per
-    * row before a pair join: O(n) norms instead of O(n²)). */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Cosine similarity over precomputed norms (precompute per row
+    * before a pair join: O(n) norms instead of O(n²)). */
   def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
-    fastDot(a, b) / (na * nb)
+    dot(a, b) / (na * nb)
 
   /** Widen an array<float> to array<double> once, at the scan edge. */
   def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
@@ -45,8 +38,7 @@ object VectorOps {
     * Packs to a long bucket id. Native codegen'd expression
     * (graft.plans.LshBucketSig): the ±1 signs are cached per JVM, each
     * row pays one primitive multiply-add loop. `bitOffset` selects an
-    * independent hash table for multi-table LSH. Requires
-    * GraftExtensions (`Session.local` sets it). */
+    * independent hash table for multi-table LSH. */
   def lshBucket(v: Column, nBits: Int, bitOffset: Int = 0): Column =
     call_function("graft_lsh_bucket", v, lit(nBits), lit(bitOffset))
 
@@ -75,20 +67,5 @@ object VectorOps {
       case p => primary.bitwiseXOR(
         element_at(powers, element_at(ranked, p).getField("i") + 1))
     }: _*)
-  }
-
-  /** Portable higher-order-function form of `lshBucket` — same result
-    * bit-for-bit (LshBucketSpec asserts it), interpreted per element:
-    * keep for sessions without GraftExtensions and as the differential
-    * oracle for the native expression. */
-  def lshBucketHof(v: Column, nBits: Int, bitOffset: Int = 0): Column = {
-    val bits = (0 until nBits).map { i =>
-      val d = aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, j) => x * when(xxhash64(lit(bitOffset + i), j) % 2 === 0, 1.0).otherwise(-1.0)),
-        lit(0.0), (acc, x) => acc + x)
-      when(d > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
   }
 }

@@ -69,12 +69,6 @@ object Bpe {
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
 
-  /** The vocab-bounded training table: (syms = single-char symbol
-    * array, cnt = word frequency). */
-  def wordTable(corpus: DataFrame, textCol: String): DataFrame =
-    wordCounts(corpus, textCol)
-      .select(split(col("w"), "").as("syms"), col("cnt"))
-
   /** One learned merge: the pair, its weighted adjacency count at
     * selection time, and the corpus token count after applying it.
     * (`n` can exceed the applied-merge count on overlap chains —

@@ -96,7 +96,7 @@ object CorpusStats {
                 model: Seq[(Long, Seq[Double])]): DataFrame = {
     val base = emb
       .select(col(embIdCol).as("__id"), VectorOps.toDouble(col(vecCol)).as("__v"))
-      .withColumn("__nrm", VectorOps.fastNorm(col("__v")))
+      .withColumn("__nrm", VectorOps.norm(col("__v")))
       .filter(col("__nrm") > 0)
     val scores = KMeans.centroidScores(model, col("__v"), col("__nrm"))
     // two-step select: scores land in attributes first (the codegen

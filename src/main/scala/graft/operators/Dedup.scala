@@ -88,30 +88,6 @@ object Dedup {
   def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
     call_function("graft_minhash", TextOps.shingles(text, k), lit(numHashes))
 
-  /** Portable higher-order-function fallback for sessions without
-    * GraftExtensions — SAME hash family as the native expression
-    * (murmur3: h1 = hash(s), h2 = hash(s, s) i.e. murmur3 of s seeded
-    * by h1), so both paths produce identical signatures
-    * (MinHashFamilySpec asserts it; VERDICT r1 item 5 — results must
-    * not silently change with session config). Single fold with an
-    * elementwise-min accumulator: the per-lane formulation
-    * (numHashes × array_min(transform(...))) re-inlines the shingle
-    * expression into every lane — Catalyst does not CSE across array
-    * lambdas; measured 128× slower. Built on `shinglesHof` (not the
-    * native `shingles`) so the whole column works in a plain session —
-    * a fallback that itself needed the extension would be no fallback
-    * (HofFallbackSpec asserts no graft_* call in the tree). */
-  def minhashSignatureHof(text: Column, k: Int, numHashes: Int): Column = {
-    val p = 1000000007L // keep h1 + i*h2 far from long overflow (ANSI mode)
-    val hs = transform(TextOps.shinglesHof(text, k),
-      s => struct(pmod(hash(s).cast("long"), lit(p)).as("h1"),
-        pmod(hash(s, s).cast("long"), lit(p)).as("h2")))
-    aggregate(hs,
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, h) => transform(acc,
-        (a, i) => least(a, pmod(h.getField("h1") + i * h.getField("h2"), lit(p)))))
-  }
-
   /** LSH banding: split the signature into `bands` rows-per-band
     * chunks, hash each chunk → array<struct<band, bucket>>. */
   def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
@@ -281,21 +257,6 @@ object Dedup {
   def simhash64(text: Column): Column =
     call_function("graft_simhash", split(trim(text), " +"))
 
-  /** Portable higher-order-function form of `simhash64` — identical
-    * result (SimHashExprSpec asserts it), but each of the 64 bit
-    * lambdas re-hashes every token (no cross-lambda CSE in Catalyst);
-    * keep for sessions without GraftExtensions and as the native
-    * expression's differential oracle. */
-  def simhash64Hof(text: Column): Column = {
-    val th = transform(split(trim(text), " +"), t => xxhash64(t))
-    val bits = (0 until 64).map { b =>
-      val vote = aggregate(th, lit(0L),
-        (acc, h) => acc + (shiftright(h, b).bitwiseAND(lit(1L)) * 2 - 1))
-      when(vote > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -421,7 +382,7 @@ object Dedup {
     // native dot kernel widens per element — bit-identical to casting
     // the array up front, and the grid join shuffles half the bytes
     val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("nrm", VectorOps.fastNorm(col("v")))
+      .withColumn("nrm", VectorOps.norm(col("v")))
       .filter(col("nrm") > 0) // zero-norm: no direction (NaN vs NULL divergence)
     gridCosinePairs(base, Nil, threshold, blocks)
   }
@@ -473,7 +434,7 @@ object Dedup {
     // storage element type preserved (float stays float): bucket and
     // verify kernels widen per element — see embeddingNearDups
     val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("nrm", VectorOps.fastNorm(col("v")))
+      .withColumn("nrm", VectorOps.norm(col("v")))
       .filter(col("nrm") > 0)
       .localCheckpoint(true) // reused by candidate gen + both verify sides
     val bucketed = base.select(col("id"), explode(array((0 until tables).map(t =>

@@ -28,11 +28,11 @@ import graft.functions.VectorOps
   * decimal sums over per-(cell, pos) groups, so refits are
   * bit-identical under any partitioning (cf. ql.dsum). The literal
   * centroid norm is sqrt of a left-to-right sum of squares — the same
-  * IEEE sequence `fastNorm` produces — so scores match the join-based
-  * formulation bit-for-bit. */
+  * IEEE sequence `VectorOps.norm` produces — so scores match the
+  * join-based formulation bit-for-bit. */
 object KMeans {
 
-  /** Driver-side norm matching `VectorOps.fastNorm`'s summation order. */
+  /** Driver-side norm matching `VectorOps.norm`'s summation order. */
   private def seqNorm(v: Seq[Double]): Double =
     math.sqrt(v.foldLeft(0.0)((acc, x) => acc + x * x))
 
@@ -62,7 +62,7 @@ object KMeans {
       // predicate it evaluates EAGERLY on rows the nrm > 0 filter has
       // not yet removed (ConvertToLocalRelation does), and a raw /0
       // there aborts the query
-      cell -> (VectorOps.fastDot(v, typedlit(unit)) /
+      cell -> (VectorOps.dot(v, typedlit(unit)) /
         greatest(nrm, lit(java.lang.Double.MIN_VALUE)))
     }
 
@@ -137,7 +137,7 @@ object KMeans {
     val s = df.sparkSession
     import s.implicits._
     val base = df.select(col(idCol).as("id"), VectorOps.toDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", VectorOps.fastNorm(col("v")))
+      .withColumn("nrm", VectorOps.norm(col("v")))
       .filter(col("nrm") > 0)
     val sampled = (if (sampleMod > 1)
       base.filter(pmod(xxhash64(col("id")), lit(sampleMod.toLong)) === 0L)
@@ -191,7 +191,7 @@ object KMeans {
     val s = df.sparkSession
     import s.implicits._
     val all = df.select(col(idCol).as("id"), VectorOps.toDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", VectorOps.fastNorm(col("v")))
+      .withColumn("nrm", VectorOps.norm(col("v")))
       .filter(col("nrm") > 0)
     // persist (not localCheckpoint): scanned iters+1 times, and the
     // blocks are released eagerly below instead of waiting for the

@@ -130,7 +130,7 @@ object ProductQuantizer {
   private[operators] def subScores(model: PqModel, j: Int, sub: Column): Seq[(Long, Column)] =
     model.codebooks(j).zipWithIndex.map { case (c, code) =>
       val n2 = c.foldLeft(0.0)((acc, x) => acc + x * x)
-      code.toLong -> (VectorOps.fastDot(sub, typedlit(c.toSeq)) - lit(n2 / 2))
+      code.toLong -> (VectorOps.dot(sub, typedlit(c.toSeq)) - lit(n2 / 2))
     }.toSeq
 
   /** Driver-folded n2/2 per (subspace, code) — the EXACT double the
@@ -228,7 +228,7 @@ object ProductQuantizer {
       val c = unitPrep(candidates, idCol, vecCol, "c")
       val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("c_id"))
       broadcast(shortlist).join(c, "c_id")
-        .withColumn("cos", round(VectorOps.fastDot(col("q_v"), col("c_v")), 6))
+        .withColumn("cos", round(VectorOps.dot(col("q_v"), col("c_v")), 6))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= k)
         .select(col("q_id"), col("c_id"), col("cos"), col("rk"))

@@ -44,7 +44,7 @@ object SemDedup {
   def assignCells(df: DataFrame, idCol: String, vecCol: String,
                   model: Seq[(Long, Seq[Double])]): DataFrame = {
     val base = df.select(col(idCol).as("id"), VectorOps.toDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", VectorOps.fastNorm(col("v")))
+      .withColumn("nrm", VectorOps.norm(col("v")))
       .filter(col("nrm") > 0)
     // one native argmax kernel node (r22, KMeans.cellArgmax) instead
     // of the two-select literal-score + CASE-chain pipeline — same

@@ -40,7 +40,7 @@ object SimilaritySearch {
     // boxed `transform(cast)` widen chain per row (twice, once per dot
     // argument — measured in the s3 scan Condition).
     df.select(col(idCol).as(s"${as}_id"), v.as(s"${as}_v"),
-        VectorOps.fastNorm(col(vecCol)).as(s"${as}_nrm"))
+        VectorOps.norm(col(vecCol)).as(s"${as}_nrm"))
       // zero-norm vectors have no direction: cosine would be 0/0, and
       // Spark's NaN (ranks first DESC) vs DuckDB's NULL (ranks last)
       // diverge — excluded by contract
@@ -148,7 +148,7 @@ object SimilaritySearch {
     candidates
       .select(col(cellCol).cast("long").as("cell"),
         VectorOps.toDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", VectorOps.fastNorm(col("v")))
+      .withColumn("nrm", VectorOps.norm(col("v")))
       .filter(col("nrm") > 0)
       .groupBy("cell")
       .agg(call_function("graft_vec_dsum", col("v")).as("sv"),
@@ -176,11 +176,11 @@ object SimilaritySearch {
               centroids: Option[DataFrame] = None): DataFrame = {
     val cent = broadcast(
       centroids.getOrElse(ivfLabelIndex(candidates, idCol, vecCol, cellCol))
-        .withColumn("cent_nrm", VectorOps.fastNorm(col("cent_v"))))
+        .withColumn("cent_nrm", VectorOps.norm(col("cent_v"))))
     val c = candidates.select(col(idCol).as("c_id"),
         VectorOps.toDouble(col(vecCol)).as("c_v"),
         col(cellCol).cast("long").as("cell"))
-      .withColumn("c_nrm", VectorOps.fastNorm(col("c_v")))
+      .withColumn("c_nrm", VectorOps.norm(col("c_v")))
       .filter(col("c_nrm") > 0)
     // assign each query to its nearest centroid (broadcast centroids;
     // ties break toward the lowest cell id)

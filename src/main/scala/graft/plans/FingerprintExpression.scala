@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native rolling polynomial hash fingerprint (base 31, mod 1e9+7)
-  * over a string's code points — bit-identical to the HOF form
-  * `TextOps.fingerprintHof` (`aggregate(sequence(1, length), 0,
+  * over a string's code points — bit-identical to the HOF form, the
+  * spec oracle `graft.KernelOracles.fingerprintHof`
+  * (`aggregate(sequence(1, length), 0,
   * (acc, i) => (acc*31 + ascii(substr(c, i, 1))) % p)`), which pays an
   * interpreted lambda + a substring allocation + an ascii() per
   * character. `ascii(substr(c, i, 1))` is the i-th code point (both

@@ -10,7 +10,8 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Gopher document-shape struct (`graft_gopher`): all nine
-  * fields of `TextOps.gopherShapeHof` from ONE pass over the text's
+  * fields of the Column form (the spec oracle
+  * `graft.KernelOracles.gopherShapeHof`) from ONE pass over the text's
   * UTF-8 bytes. The Column form splits the text three times (words,
   * lines twice), runs a regex lambda per word and copies the whole
   * text twelve times through `replace` (one per counted substring);

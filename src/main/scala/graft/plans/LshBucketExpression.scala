@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
 /** Native random-hyperplane LSH bucket id over an array<double> vector:
   * bit i of the result is the sign of the dot product with a
   * pseudo-random ±1 hyperplane, hyperplane (i, j) sign derived from
-  * xxhash64(bitOffset + i, j) — bit-identical to the portable
-  * higher-order-function formulation in `VectorOps.lshBucketHof`
-  * (asserted by LshBucketSpec on random vectors).
+  * xxhash64(bitOffset + i, j) — bit-identical to the
+  * higher-order-function formulation, the spec oracle
+  * `graft.KernelOracles.lshBucketHof` (asserted by LshBucketSpec on
+  * random vectors).
   *
   * Why native: the HOF form evaluates nBits × dim interpreted lambda
   * dispatches with an xxhash64 call per element per bit — measured as

@@ -19,10 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * dispatch per (shingle × lane) plus one boxed accumulator array
   * allocation per shingle; this expression is two murmur hashes per
   * shingle and a primitive long[] nested loop — the whole signature in
-  * one codegen'd pass. Hash family is IDENTICAL to the HOF fallback
-  * (`Dedup.minhashSignatureHof`): h1 = murmur3(s, 42) = `hash(s)`,
-  * h2 = murmur3(s, h1) = `hash(s, s)` — so signatures do not depend on
-  * whether GraftExtensions is registered (MinHashFamilySpec).
+  * one codegen'd pass. Hash family is IDENTICAL to the HOF form (the
+  * spec oracle `graft.KernelOracles.minhashSignatureHof`):
+  * h1 = murmur3(s, 42) = `hash(s)`, h2 = murmur3(s, h1) = `hash(s, s)`
+  * (MinHashFamilySpec).
   */
 case class MinHashSig(child: Expression, numHashes: Int)
     extends UnaryExpression {

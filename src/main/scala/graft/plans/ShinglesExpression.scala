@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Distinct character k-shingles of a string — native form of
-  * `TextOps.shinglesHof` (same result: first-occurrence order, char —
-  * not byte — windows, empty array below k chars; ShinglesSpec
-  * asserts equality).
+/** Distinct character k-shingles of a string — native form of the
+  * HOF spec oracle `graft.KernelOracles.shinglesHof` (same result:
+  * first-occurrence order, char — not byte — windows, empty array
+  * below k chars; ShinglesSpec asserts equality).
   *
   * Why native: the HOF form pays an interpreted lambda dispatch and a
   * substr allocation per character, then array_distinct — profiled as

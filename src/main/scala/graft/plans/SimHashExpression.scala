@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native 64-bit SimHash over an array<string> of tokens: per-bit
   * signed vote of xxhash64(token), packed to a long — bit-identical
-  * to the HOF formulation (`Dedup.simhash64Hof`, SimHashExprSpec).
+  * to the HOF formulation (the spec oracle
+  * `graft.KernelOracles.simhash64Hof`, SimHashExprSpec).
   *
   * Why native: the HOF form evaluates 64 separate `aggregate()`
   * lambdas — Catalyst does not CSE the token-hash array across array

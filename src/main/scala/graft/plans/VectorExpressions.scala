@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * pair joins. This expression generates a tight primitive loop inside
   * whole-stage codegen: no allocation, no boxing, same left-to-right
   * summation order (so results — and the DuckDB oracle hashes — are
-  * bit-identical to the HOF version).
+  * bit-identical to the HOF form, the spec oracle
+  * `graft.KernelOracles.dotHof`; VecDotSpec).
   *
   * Preference order per SURVEY §4: built-in ops first; custom
   * `Expression` with doGenCode only where the built-ins can't express
@@ -57,9 +58,7 @@ case class VecDot(left: Expression, right: Expression)
   /** Length mismatch OR any null element → null, matching the HOF
     * formulation exactly (zip_with pads with null and a null product
     * nulls the whole sum) — a silently truncated or garbage-slotted
-    * dot would corrupt similarity rankings undetectably. The null
-    * parity is also what makes the RewriteDotProduct optimizer rule a
-    * sound substitution on nullable-element arrays. */
+    * dot would corrupt similarity rankings undetectably. */
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -254,7 +253,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectOptimizerRule(_ => FuseMinHashShingles)
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),

@@ -96,7 +96,7 @@ object DedupQueries {
     "d7_dup_clusters" -> { (s, d) =>
       val e = t(s, d, "embeddings")
       val nodes = e
-        .filter(VectorOps.fastNorm(col("embedding")) > 0)
+        .filter(VectorOps.norm(col("embedding")) > 0)
         .select("vec_id")
       val pairs = Dedup.embeddingNearDups(e, "vec_id", "embedding", 0.4)
       Components.connectedComponents(pairs, "a_id", "b_id", nodes = Some(nodes))

@@ -107,18 +107,18 @@ object VectorQueries {
       // with three windows over the SAME shuffled frame (identical
       // hashpartitioning(q_id) exchange → Spark reuses it across the
       // list branches), and fuse. Cosine is bit-identical to s1's
-      // machinery: round(fastDot/(q_nrm·sqrt(d_cc)), 6), zero-norm
+      // machinery: round(dot/(q_nrm·sqrt(d_cc)), 6), zero-norm
       // candidates AND a zero-norm query excluded (null → ranked last
       // → filtered; ungated, a zero query gives 0/0 = NaN, which Spark
       // desc-sorts ABOVE every double), ranks of valid rows unchanged.
       val qv = broadcast(q0.select(col("vec_id").as("q_id"),
         col("embedding").as("q_v"),
-        VectorOps.fastNorm(col("embedding")).as("q_nrm"),
-        VectorOps.fastDot(col("embedding"), col("embedding")).as("d_qq")))
+        VectorOps.norm(col("embedding")).as("q_nrm"),
+        VectorOps.dot(col("embedding"), col("embedding")).as("d_qq")))
       val scored = e.crossJoin(qv)
         .select(col("q_id"), col("vec_id").as("c_id"),
-          VectorOps.fastDot(col("q_v"), col("embedding")).as("d_qc"),
-          VectorOps.fastDot(col("embedding"), col("embedding")).as("d_cc"),
+          VectorOps.dot(col("q_v"), col("embedding")).as("d_qc"),
+          VectorOps.dot(col("embedding"), col("embedding")).as("d_cc"),
           col("q_nrm"), col("d_qq"))
         .withColumn("cos", when(col("q_nrm") > 0 && col("d_cc") > 0,
           round(col("d_qc") / (col("q_nrm") * sqrt(col("d_cc"))), 6)))

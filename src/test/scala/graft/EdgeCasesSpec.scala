@@ -151,8 +151,9 @@ class EdgeCasesSpec extends SparkSpec {
     assert(texts.filter(col("text").isNull).isEmpty)
     // Spark's `substr` copies a cut-short LAST lead byte's full width,
     // reading past the string's end, so the HOF shingles are no oracle
-    // for those texts; the native Shingles (which the fusion replaces)
-    // ends that window at the last byte
+    // for those texts (KernelOracles.shinglesHof's precondition); the
+    // native Shingles (which the fusion replaces) ends that window at
+    // the last byte
     val cutTail = Set("C3", "61E3", "E382")
     val whole = TextKernelsPropSpec.hexFrame(spark, malformedHex.filterNot(cutTail))
     val diffs = TextKernelsPropSpec.gopherDiffs(texts) ++
@@ -161,7 +162,7 @@ class EdgeCasesSpec extends SparkSpec {
           TextKernelsPropSpec.unfusedMinhashDiffs(texts, k))
           .map(d => s"minhash k=$k: $d"))
     assert(diffs.isEmpty, diffs.mkString("\n"))
-    assert(texts.filter(graft.functions.TextOps.gopherShapeHof(col("text"))
+    assert(texts.filter(KernelOracles.gopherShapeHof(col("text"))
       .getField("keep")).count() > 0, "no malformed text reaches keep = true")
   }
 

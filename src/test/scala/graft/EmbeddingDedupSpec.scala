@@ -22,7 +22,7 @@ class EmbeddingDedupSpec extends SparkSpec {
     * differential oracle for the grid join (VERDICT r1 item 2). */
   private def naivePairs(df: org.apache.spark.sql.DataFrame, threshold: Double) = {
     val v = df.select(col("id"), VectorOps.toDouble(col("v")).as("v"))
-      .withColumn("nrm", VectorOps.fastNorm(col("v")))
+      .withColumn("nrm", VectorOps.norm(col("v")))
       .filter(col("nrm") > 0)
     val a = v.alias("a"); val b = v.alias("b")
     a.join(b, col("a.id") < col("b.id"))
@@ -79,8 +79,8 @@ class EmbeddingDedupSpec extends SparkSpec {
   test("graft_dot on float arrays equals toDouble-then-dot bit-for-bit") {
     val df = randomCorpus(200, 24, seed = 11)
     val both = df.select(
-        VectorOps.fastDot(col("v"), col("v")).as("f"),
-        VectorOps.fastDot(VectorOps.toDouble(col("v")), VectorOps.toDouble(col("v"))).as("d"))
+        VectorOps.dot(col("v"), col("v")).as("f"),
+        VectorOps.dot(VectorOps.toDouble(col("v")), VectorOps.toDouble(col("v"))).as("d"))
       .collect()
     both.foreach { r =>
       assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==

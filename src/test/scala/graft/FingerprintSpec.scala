@@ -3,10 +3,12 @@ package graft
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
+import graft.plans.Fingerprint
 
 /** Differential test: native graft_fingerprint must equal the HOF
-  * rolling-hash fold code-point-for-code-point, including multi-byte
-  * text and the empty string. */
+  * rolling-hash fold (`KernelOracles.fingerprintHof`)
+  * code-point-for-code-point, including multi-byte text and the empty
+  * string. */
 class FingerprintSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,18 +18,18 @@ class FingerprintSpec extends SparkSpec {
     val docs = (1 to 300).map { i =>
       (i.toLong, Seq.fill(rnd.nextInt(300))(alpha(rnd.nextInt(alpha.length))).mkString)
     }.toDF("id", "text")
-    val n = docs.select(TextOps.fingerprint($"text").as("a"),
-        TextOps.fingerprintHof($"text").as("b"))
-      .filter($"a" =!= $"b").count()
-    assert(n == 0, s"$n rows diverge")
+    val d = KernelOracles.diffs(docs, TextOps.fingerprint($"text"),
+      KernelOracles.fingerprintHof($"text"), classOf[Fingerprint])
+    assert(d.isEmpty, d.mkString("\n"))
   }
 
   test("multi-byte and empty text match the HOF") {
     val docs = Seq((1L, "héllo wörld"), (2L, "日本語テキスト"), (3L, ""), (4L, "a"))
       .toDF("id", "text")
-    val rows = docs.select($"id", TextOps.fingerprint($"text").as("a"),
-        TextOps.fingerprintHof($"text").as("b")).collect()
-    rows.foreach(r => assert(r.getLong(1) == r.getLong(2), s"id=${r.getLong(0)}"))
-    assert(rows.find(_.getLong(0) == 3L).get.getLong(1) == 0L)
+    val d = KernelOracles.diffs(docs, TextOps.fingerprint($"text"),
+      KernelOracles.fingerprintHof($"text"), classOf[Fingerprint])
+    assert(d.isEmpty, d.mkString("\n"))
+    assert(docs.filter($"id" === 3L).select(TextOps.fingerprint($"text"))
+      .head().getLong(0) == 0L)
   }
 }

@@ -4,23 +4,21 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.{TextOps, VectorOps}
 import graft.operators.Dedup
+import graft.KernelOracles._
 
-/** The portable higher-order-function fallbacks exist for sessions
-  * WITHOUT GraftExtensions — so none of them may reference a graft_*
-  * native function anywhere in their expression tree (a fallback that
-  * needs the extension is no fallback; this regression appeared when
-  * minhashSignatureHof was rebound onto the native shingles kernel).
-  * The shared test session registers the extensions, so the guarantee
-  * is asserted structurally: the unresolved tree of every fallback
-  * column must be free of graft_* calls. Result equivalence with the
-  * native kernels is covered by the per-kernel differential specs
-  * (MinHashFamilySpec, SimHashExprSpec, ShinglesSpec, FingerprintSpec,
-  * LshBucketSpec).
+/** The kernel oracles (KernelOracles) must not reference a graft_*
+  * native function anywhere in their expression tree: an oracle built
+  * on the kernel it checks proves nothing (this regression appeared
+  * when minhashSignatureHof was rebound onto the native shingles
+  * kernel). Their agreement with the native kernels is covered by the
+  * per-kernel differential specs (MinHashFamilySpec, SimHashExprSpec,
+  * ShinglesSpec, FingerprintSpec, LshBucketSpec, VecDotSpec,
+  * TextKernelsPropSpec).
   *
-  * Detection: in THIS session the extensions ARE registered, so any
-  * graft_* reference resolves to its native expression class — the
-  * analyzed plan of a clean fallback must contain no expression from
-  * the graft.plans package. */
+  * Detection: the shared test session registers GraftExtensions, so
+  * any graft_* reference resolves to its native expression class — the
+  * analyzed plan of a clean oracle must contain no expression from the
+  * graft.plans package. */
 class HofFallbackSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,46 +31,33 @@ class HofFallbackSpec extends SparkSpec {
     })
   }
 
-  private val fallbacks: Seq[(String, Column)] = Seq(
-    "minhashSignatureHof" -> Dedup.minhashSignatureHof(col("t"), 3, 16),
-    "simhash64Hof" -> Dedup.simhash64Hof(col("t")),
-    "fingerprintHof" -> TextOps.fingerprintHof(col("t")),
-    "shinglesHof" -> TextOps.shinglesHof(col("t"), 3),
-    "lshBucketHof" -> VectorOps.lshBucketHof(col("v"), 8),
-    "dot" -> VectorOps.dot(col("v"), col("v")),
-    "cosine" -> VectorOps.cosine(col("v"), col("v")))
+  private val oracles: Seq[(String, Column)] = Seq(
+    "minhashSignatureHof" -> minhashSignatureHof(col("t"), 3, 16),
+    "simhash64Hof" -> simhash64Hof(col("t")),
+    "fingerprintHof" -> fingerprintHof(col("t")),
+    "shinglesHof" -> shinglesHof(col("t"), 3),
+    "gopherShapeHof" -> gopherShapeHof(col("t")),
+    "lshBucketHof" -> lshBucketHof(col("v"), 8),
+    "dotHof" -> dotHof(col("v"), col("v")))
 
   test("detector self-check: native columns ARE detected") {
     assert(graftCalls(TextOps.shingles(col("t"), 3)).nonEmpty)
     val dv = VectorOps.toDouble(col("v"))
-    assert(graftCalls(VectorOps.fastDot(dv, dv)).nonEmpty)
+    assert(graftCalls(VectorOps.dot(dv, dv)).nonEmpty)
   }
 
   test("no HOF fallback references a graft_* native function") {
-    val offenders = fallbacks.flatMap { case (name, c) =>
+    val offenders = oracles.flatMap { case (name, c) =>
       graftCalls(c).map(fn => s"$name -> $fn")
     }
     assert(offenders.isEmpty,
-      s"fallbacks must work without GraftExtensions, found: ${offenders.mkString(", ")}")
-  }
-
-  test("fallbacks evaluate end-to-end (sanity)") {
-    val df = Seq(("the quick brown fox", Seq(1.0f, -2.0f, 0.5f, 3.0f)))
-      .toDF("t", "v")
-    val row = df.select(
-      Dedup.minhashSignatureHof(col("t"), 3, 16).as("mh"),
-      Dedup.simhash64Hof(col("t")).as("sh"),
-      TextOps.fingerprintHof(col("t")).as("fp"),
-      TextOps.shinglesHof(col("t"), 3).as("sg"),
-      VectorOps.lshBucketHof(col("v"), 8).as("lb")).head()
-    assert(row.getSeq[Long](0).length == 16)
-    assert(row.getSeq[String](3).nonEmpty)
+      s"oracles must not use the kernels they check, found: ${offenders.mkString(", ")}")
   }
 
   test("minhashSignatureHof matches the native signature (regression)") {
     val df = Seq("abcdefgh", "the quick brown fox", "aaaa").toDF("t")
     val native = df.select(Dedup.minhashSignature(col("t"), 3, 32)).as[Seq[Long]].collect()
-    val hof = df.select(Dedup.minhashSignatureHof(col("t"), 3, 32)).as[Seq[Long]].collect()
+    val hof = df.select(minhashSignatureHof(col("t"), 3, 32)).as[Seq[Long]].collect()
     assert(native.toSeq == hof.toSeq)
   }
 }

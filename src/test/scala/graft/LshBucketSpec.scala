@@ -3,11 +3,13 @@ package graft
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
+import graft.plans.LshBucketSig
 
 /** Differential test: the native graft_lsh_bucket expression must be
-  * bit-identical to the portable HOF formulation it replaces (same
-  * xxhash64-derived hyperplane family), across dims, nBits, offsets,
-  * and the null-element / empty-vector edge cases. */
+  * bit-identical to the HOF formulation it replaces
+  * (`KernelOracles.lshBucketHof`, the same xxhash64-derived hyperplane
+  * family), across dims, nBits, offsets, and the null-element /
+  * empty-vector edge cases. */
 class LshBucketSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,16 +17,13 @@ class LshBucketSpec extends SparkSpec {
     val rnd = new Random(7)
     val dims = Seq(1, 3, 64)
     for (dim <- dims) {
-      val vecs = (1 to 200).map(i => (i.toLong, Array.fill(dim)(rnd.nextGaussian())))
-      val df = vecs.toDF("id", "v").cache()
+      val df = (1 to 200).map(i => (i.toLong, Array.fill(dim)(rnd.nextGaussian())))
+        .toDF("id", "v")
       for ((nBits, off) <- Seq((8, 0), (16, 0), (12, 48), (1, 63))) {
-        val got = df.select(col("id"),
-            VectorOps.lshBucket(col("v"), nBits, off).as("n"),
-            VectorOps.lshBucketHof(col("v"), nBits, off).as("h"))
-          .filter(col("n") =!= col("h")).count()
-        assert(got == 0, s"dim=$dim nBits=$nBits off=$off: $got rows diverge")
+        val d = KernelOracles.diffs(df, VectorOps.lshBucket(col("v"), nBits, off),
+          KernelOracles.lshBucketHof(col("v"), nBits, off), classOf[LshBucketSig])
+        assert(d.isEmpty, s"dim=$dim nBits=$nBits off=$off: ${d.mkString("\n")}")
       }
-      df.unpersist()
     }
   }
 
@@ -72,13 +71,11 @@ class LshBucketSpec extends SparkSpec {
       (2L, Array[java.lang.Double]())
     ).toDF("id", "v")
       .select(col("id"), col("v").cast("array<double>").as("v"))
-    val rows = df.select(col("id"),
-        VectorOps.lshBucket(col("v"), 8).as("n"),
-        VectorOps.lshBucketHof(col("v"), 8).as("h"))
-      .collect()
-    rows.foreach { r =>
-      assert(r.getLong(1) == 0L && r.getLong(2) == 0L,
-        s"id=${r.getLong(0)}: native=${r.getLong(1)} hof=${r.getLong(2)}")
+    val d = KernelOracles.diffs(df, VectorOps.lshBucket(col("v"), 8),
+      KernelOracles.lshBucketHof(col("v"), 8), classOf[LshBucketSig])
+    assert(d.isEmpty, d.mkString("\n"))
+    df.select(col("id"), VectorOps.lshBucket(col("v"), 8)).collect().foreach { r =>
+      assert(r.getLong(1) == 0L, s"id=${r.getLong(0)}: native=${r.getLong(1)}")
     }
   }
 

@@ -3,11 +3,12 @@ package graft
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.plans.MinHashShingles
 
-/** The native graft_minhash expression and the portable HOF fallback
-  * must produce IDENTICAL signatures (same murmur3 double-hashing
-  * family) — otherwise results silently change with whether
-  * GraftExtensions is registered (VERDICT r1 item 5). Also pins the
+/** The native MinHash signature (`Dedup.minhashSignature`, fused into
+  * MinHashShingles) and its HOF oracle
+  * (`KernelOracles.minhashSignatureHof`) must produce IDENTICAL
+  * signatures (same murmur3 double-hashing family). Also pins the
   * blocked-simhash candidate contract: 16-bit blocks lose no pair
   * within the maxDist bound and generate far fewer candidates than
   * 8-bit chunks on a random corpus. */
@@ -24,12 +25,14 @@ class MinHashFamilySpec extends SparkSpec {
   }
 
   test("native and HOF minhash signatures are identical") {
-    val df = corpus(120, seed = 23)
-    val n = df.filter(length($"text") >= 5)
-      .select(Dedup.minhashSignature($"text", 5, 64).as("a"),
-        Dedup.minhashSignatureHof($"text", 5, 64).as("b"))
-      .filter($"a" =!= $"b").count()
-    assert(n == 0, s"$n rows diverge between native and HOF signatures")
+    def diffs(df: org.apache.spark.sql.DataFrame, k: Int, numHashes: Int) =
+      KernelOracles.diffs(df, Dedup.minhashSignature($"text", k, numHashes),
+        KernelOracles.minhashSignatureHof($"text", k, numHashes),
+        classOf[MinHashShingles]).map(d => s"k=$k: $d")
+    val d = diffs(corpus(120, seed = 23).filter(length($"text") >= 5), 5, 64) ++
+      // short texts and a repeated shingle ("aaaa"), 3-shingles, 32 lanes
+      diffs(Seq("abcdefgh", "the quick brown fox", "aaaa").toDF("text"), 3, 32)
+    assert(d.isEmpty, d.mkString("\n"))
   }
 
   test("16-bit simhash blocks: lossless within bound, fewer candidates than 8-bit") {

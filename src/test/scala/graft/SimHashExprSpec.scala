@@ -3,10 +3,12 @@ package graft
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.plans.SimHash64
 
 /** Differential test: native graft_simhash must equal the 64-lambda
-  * HOF formulation bit-for-bit (same xxhash64 token family, same vote
-  * rule), including empty and whitespace-only text. */
+  * HOF formulation (`KernelOracles.simhash64Hof`) bit-for-bit (same
+  * xxhash64 token family, same vote rule), including empty and
+  * whitespace-only text. */
 class SimHashExprSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,17 +19,16 @@ class SimHashExprSpec extends SparkSpec {
     val docs = (1 to 250).map { i =>
       (i.toLong, Seq.fill(1 + rnd.nextInt(30))(words(rnd.nextInt(words.size))).mkString(" "))
     }.toDF("id", "text")
-    val n = docs.select(Dedup.simhash64($"text").as("a"),
-        Dedup.simhash64Hof($"text").as("b"))
-      .filter($"a" =!= $"b").count()
-    assert(n == 0, s"$n rows diverge")
+    val d = KernelOracles.diffs(docs, Dedup.simhash64($"text"),
+      KernelOracles.simhash64Hof($"text"), classOf[SimHash64])
+    assert(d.isEmpty, d.mkString("\n"))
   }
 
   test("edge cases: empty, single token, whitespace padding") {
     val docs = Seq((1L, ""), (2L, "one"), (3L, "  padded   tokens  "))
       .toDF("id", "text")
-    val rows = docs.select($"id", Dedup.simhash64($"text").as("a"),
-        Dedup.simhash64Hof($"text").as("b")).collect()
-    rows.foreach(r => assert(r.getLong(1) == r.getLong(2), s"id=${r.getLong(0)}"))
+    val d = KernelOracles.diffs(docs, Dedup.simhash64($"text"),
+      KernelOracles.simhash64Hof($"text"), classOf[SimHash64])
+    assert(d.isEmpty, d.mkString("\n"))
   }
 }

@@ -14,10 +14,10 @@ import graft.operators.{Dedup, Drift}
   * forms they replace, over ScalaCheck-generated texts (each sample is
   * a whole batch of texts, so one Spark query checks many at once):
   *
-  *   - `graft_gopher` equals `TextOps.gopherShapeHof` on all nine
-  *     fields, doubles compared bit for bit;
+  *   - `graft_gopher` equals `KernelOracles.gopherShapeHof` on all
+  *     nine fields, doubles compared bit for bit;
   *   - the fused MinHash kernel (`MinHashShingles`, swapped in by plan
-  *     shape) equals `Dedup.minhashSignatureHof`;
+  *     shape) equals `KernelOracles.minhashSignatureHof`;
   *   - the drift card read from a token-only store equals the one-shot
   *     `sourceDrift` card and the card of the two-kind store (bucket
   *     rows counted per token occurrence, as stores used to be
@@ -154,42 +154,22 @@ object TextKernelsPropSpec {
     gopherDiffs(frame(spark, in))
 
   /** Texts whose `graft_gopher` and Column-form structs differ on any
-    * field (doubles by bits). */
+    * field (doubles by bits), through the kernel's generated code. */
   def gopherDiffs(texts: DataFrame): Seq[String] =
-    texts.select(col("text"),
-        TextOps.gopherShape(col("text")).as("a"),
-        TextOps.gopherShapeHof(col("text")).as("b"))
-      .collect().toSeq.flatMap { r =>
-        val (a, b) = (r.getStruct(1), r.getStruct(2))
-        val same = a.schema.fieldNames.toSeq == b.schema.fieldNames.toSeq &&
-          (0 until a.length).forall { i =>
-            if (a.isNullAt(i) || b.isNullAt(i)) a.isNullAt(i) && b.isNullAt(i)
-            else a.get(i) match {
-              case d: Double => java.lang.Double.doubleToRawLongBits(d) ==
-                java.lang.Double.doubleToRawLongBits(b.getDouble(i))
-              case v => v == b.get(i)
-            }
-          }
-        if (same) None else Some(s"${Option(r.getString(0)).map(_.take(80))}: $a vs $b")
-      }
+    KernelOracles.diffs(texts.select("text"), TextOps.gopherShape(col("text")),
+      KernelOracles.gopherShapeHof(col("text")), classOf[graft.plans.GopherShape])
 
   /** Texts whose fused MinHash signature differs from
-    * `minhashSignatureHof`; a plan without the fused kernel is a
-    * difference too. */
+    * `minhashSignatureHof`; a plan in which no codegen stage runs the
+    * fused kernel is a difference too. */
   def minhashDiffs(spark: SparkSession, in: Seq[Option[String]],
                    k: Int): Seq[String] =
     minhashDiffs(frame(spark, in), k)
 
-  def minhashDiffs(texts: DataFrame, k: Int): Seq[String] = {
-    val q = texts.select(col("text"),
-      Dedup.minhashSignature(col("text"), k, 32).as("a"),
-      Dedup.minhashSignatureHof(col("text"), k, 32).as("b"))
-    val fused = q.queryExecution.optimizedPlan.expressions
-      .exists(_.exists(_.isInstanceOf[graft.plans.MinHashShingles]))
-    (if (fused) Nil else Seq("plan holds no MinHashShingles")) ++
-      q.filter(!(col("a") <=> col("b"))).collect().toSeq
-        .map(r => s"${Option(r.getString(0)).map(_.take(80))}")
-  }
+  def minhashDiffs(texts: DataFrame, k: Int): Seq[String] =
+    KernelOracles.diffs(texts.select("text"), Dedup.minhashSignature(col("text"), k, 32),
+      KernelOracles.minhashSignatureHof(col("text"), k, 32),
+      classOf[graft.plans.MinHashShingles])
 
   /** Texts whose fused MinHash signature differs from the unfused
     * native one (`graft_minhash` over checkpointed `graft_shingles`,

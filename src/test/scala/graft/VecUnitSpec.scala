@@ -17,7 +17,7 @@ class VecUnitSpec extends SparkSpec {
   /** The pre-r22 unitPrep chain, verbatim. */
   private def hofUnit(df: org.apache.spark.sql.DataFrame) =
     df.select(col("id"), VectorOps.toDouble(col("v")).as("__v"))
-      .withColumn("__nrm", VectorOps.fastNorm(col("__v")))
+      .withColumn("__nrm", VectorOps.norm(col("__v")))
       .filter(col("__nrm") > 0)
       .select(col("id"), transform(col("__v"), x => x / col("__nrm")).as("u"))
 

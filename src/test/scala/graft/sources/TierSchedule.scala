@@ -38,13 +38,6 @@ object TierSchedule {
   final case class SimResult(stats: Seq[PassStat],
                              rewrites: Map[Int, Int], totalRows: Long) {
     def maxRewrites: Int = if (rewrites.isEmpty) 0 else rewrites.values.max
-    def meanRewrites: Double =
-      if (rewrites.isEmpty) 0.0
-      else rewrites.values.sum.toDouble / rewrites.size
-    def maxPauseRows: Long =
-      if (stats.isEmpty) 0L else stats.map(_.rewrittenRows).max
-    def maxGenCount: Int =
-      if (stats.isEmpty) 0 else stats.map(_.gens.size).max
     def finalGens: Seq[SimGen] = if (stats.isEmpty) Seq.empty
       else stats.last.gens
   }

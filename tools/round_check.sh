@@ -4,11 +4,11 @@
 # red HEAD can never reach the driver gate (the r9 failure mode:
 # BENCH_r09 rc=1, CORRECTNESS_r09 = {}).
 #
-# Eight steps: env reads, the DirSwap protocol, the one bloom probe
+# Nine steps: env reads, the DirSwap protocol, the one bloom probe
 # path, compile, the perfbench harness build, scalatest, the Verify
-# dump against the DuckDB oracle, and the plan audit. A failing
-# catalog query fails step 7: Verify materializes every result, names
-# each failed query and exits 1.
+# dump against the DuckDB oracle, the plan audit, and the public defs
+# only specs reach. A failing catalog query fails step 7: Verify
+# materializes every result, names each failed query and exits 1.
 # Timing is not checked here; `perfbench/run.py` is the one timing
 # path (see BENCHMARK.json).
 #
@@ -18,7 +18,7 @@ cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/round_check}
 
-echo "== 1/8 env reads only in Session.scala =="
+echo "== 1/9 env reads only in Session.scala =="
 # library behaviour is set by arguments and inputs alone; only the
 # session's core count (SPARK_GRAFT_CPUS) reads the environment
 ENV_READS=$(grep -rnE 'sys\.env|System\.getenv' src/main/scala \
@@ -28,7 +28,7 @@ if [ -n "$ENV_READS" ]; then
   echo "ENV READ outside Session.scala"; exit 1
 fi
 
-echo "== 2/8 directory-replace protocol only in DirSwap.scala =="
+echo "== 2/9 directory-replace protocol only in DirSwap.scala =="
 # every crash-safe directory replace goes through DirSwap.replace, so
 # its twin name and its swap are spelled nowhere else
 SWAPS=$(grep -rnE '"__compact"|"__fold"|DirSwap\.swap' src/main/scala \
@@ -38,7 +38,7 @@ if [ -n "$SWAPS" ]; then
   echo "TWIN NAME or DirSwap.swap outside DirSwap.scala"; exit 1
 fi
 
-echo "== 3/8 bloom membership probes only in BloomMembership.scala =="
+echo "== 3/9 bloom membership probes only in BloomMembership.scala =="
 # every bloom probe is BloomMembership's broadcast BloomContainsBc; a
 # second probe path (Spark's might_contain, a plan-literal function,
 # a hand-built BloomContainsBc) is spelled nowhere else
@@ -49,28 +49,28 @@ if [ -n "$PROBES" ]; then
   echo "BLOOM PROBE outside BloomMembership.scala"; exit 1
 fi
 
-echo "== 4/8 compile =="
+echo "== 4/9 compile =="
 sbt -batch compile
 
-echo "== 5/8 perfbench harness builds against this library =="
+echo "== 5/9 perfbench harness builds against this library =="
 # the benchmark compiles perfbench/src together with src/main/scala; a
 # library signature change that breaks the harness fails here, not in
 # the benchmark run (run.build() skips the build while the sources are
 # unchanged since its last one)
 python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run; run.build()'
 
-echo "== 6/8 scalatest =="
+echo "== 6/9 scalatest =="
 # stale suite XMLs from deleted specs otherwise inflate the directory
 # aggregate vs the fresh run's true tally (VERDICT r15 item 4)
 rm -rf target/test-reports
 sbt -batch test
 
-echo "== 7/8 verify dump + DuckDB oracle compare ($SF) =="
+echo "== 7/9 verify dump + DuckDB oracle compare ($SF) =="
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT"
 python3 tools/check.py "$SF" "$OUT"
 
-echo "== 8/8 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
+echo "== 8/9 plan audit (unpartitioned windows / cartesians / BNLJ drift) =="
 # the 15 flagged queries are the documented 1-row-scalar broadcast
 # nested loops (global aggregates joined back); anything NEW flagged
 # here is a plan regression the golden specs didn't cover
@@ -96,6 +96,73 @@ AUDIT t36_source_drift: BroadcastNestedLoopJoin
 ALLOW
 if ! diff -u /tmp/plan_audit_allow.txt /tmp/plan_audit_now.txt; then
   echo "PLAN AUDIT DRIFT (see diff above)"; exit 1
+fi
+
+echo "== 9/9 public defs in src/main that no main or perfbench code references =="
+# src/main holds what a session, a query or a workload runs; the defs
+# below are SparkEntry.entry (called from outside the build) and
+# spec-gated capabilities (SURVEY §2) that only specs reach.
+# A new test-only def in main (e.g. a HOF twin of a native kernel,
+# whose place is the spec oracles in src/test) fails here until it is
+# deleted, moved to src/test, or added below on purpose
+python3 tools/test_only_defs.py > /tmp/test_only_defs_now.txt
+cat > /tmp/test_only_defs_allow.txt <<'ALLOW'
+graft/SparkEntry.scala entry
+graft/Tables.scala registerAll
+graft/functions/Geometry.scala bboxEdgeSegments
+graft/functions/Geometry.scala inImage
+graft/functions/Geometry.scala planeCorners
+graft/functions/Geometry.scala projectToImage
+graft/functions/SketchOps.scala kmvIntersectEstimate
+graft/functions/SketchOps.scala kmvSketch
+graft/operators/Analysis.scala labelCornerExtents
+graft/operators/Analysis.scala zNormalize
+graft/operators/BloomMembership.scala definitelyNew
+graft/operators/Bm25.scala mergeIndexes
+graft/operators/Bm25.scala readIndex
+graft/operators/Bm25.scala topKFromIndex
+graft/operators/Bm25.scala topKQueriesFromIndex
+graft/operators/Bm25.scala writeIndex
+graft/operators/Cdc.scala latestState
+graft/operators/Components.scala clusterSummary
+graft/operators/Dedup.scala embeddingNearDupsLsh
+graft/operators/Dedup.scala exactSubstrRemoveFixpoint
+graft/operators/Dedup.scala simhashPairs
+graft/operators/Drift.scala bucketCounts
+graft/operators/Drift.scala foldDocsIntoStore
+graft/operators/Drift.scala foldIntoStore
+graft/operators/ExactQuantile.scala quantileAt
+graft/operators/IvfPq.scala appendBatch
+graft/operators/IvfPq.scala quantizationSelfScorePpm
+graft/operators/IvfPq.scala writeIndex
+graft/operators/ParaDedup.scala cleanAgainstIndex
+graft/operators/PrefixSum.scala runningSumLongKeyed
+graft/operators/QualityClassifier.scala linkScalar
+graft/operators/QuantileSketch.scala buildWeighted
+graft/operators/Sampling.scala weightedSample
+graft/sources/Jsonl.scala inferFromSample
+graft/sources/KittiSources.scala alignFrames
+graft/sources/ShardSink.scala manifestsFromDisk
+graft/sources/ShardSink.scala resumeShard
+graft/sources/ShardSink.scala writeShards
+graft/streaming/CdcStream.scala cdcLatestStreaming
+graft/streaming/CorpusIngest.scala driftCard
+graft/streaming/CorpusIngest.scala runMaintenance
+graft/streaming/EventStreams.scala dedupStreaming
+graft/streaming/EventStreams.scala enrichStreaming
+graft/streaming/EventStreams.scala intervalJoinStreaming
+graft/streaming/EventStreams.scala intervalJoinStreamingOuter
+graft/streaming/EventStreams.scala sessionWindowsStreaming
+graft/streaming/EventStreams.scala sessionize
+graft/streaming/EventStreams.scala sessionizeStreaming
+graft/streaming/EventStreams.scala slidingWindowStreaming
+graft/streaming/EventStreams.scala tumblingHourlyStreaming
+graft/streaming/FreqStream.scala heavyHitterCandidates
+graft/streaming/NearDupStream.scala nearDupCandidates
+graft/streaming/StreamConfs.scala applyRocksDb
+ALLOW
+if ! diff -u /tmp/test_only_defs_allow.txt /tmp/test_only_defs_now.txt; then
+  echo "TEST-ONLY DEF DRIFT (see diff above)"; exit 1
 fi
 
 echo "ROUND CHECK GREEN (incl. plan audit)"
