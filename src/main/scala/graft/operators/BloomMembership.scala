@@ -247,26 +247,6 @@ object BloomMembership {
   def sameSizing(a: Array[Byte], b: Array[Byte]): Boolean =
     sizingOf(a) == sizingOf(b)
 
-  /** Driver-side twin of the [[flagSeen]] probe for an already-
-    * `xxhash64`-hashed key — no Spark job; the caller hashes its raw
-    * key exactly as the build side did (see
-    * TieredIndex.mightContainKey).
-    * Deserialized filters are cached WEAKLY by byte-array identity:
-    * sidecar caches keep the arrays reference-stable between
-    * compactions, so a production-size filter parses once per
-    * compaction, not once per probe. */
-  def mightContainHash(bytes: Array[Byte], hashed: Long): Boolean = {
-    var bf = driverFilters.get(bytes)
-    if (bf == null) {
-      bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-      driverFilters.put(bytes, bf)
-    }
-    bf.mightContainLong(hashed)
-  }
-
-  private val driverFilters = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[Array[Byte], BloomFilter]())
-
   /** OR-merge two serialized blooms built with the SAME sizing (the
     * mergeable-summaries property that makes the sketch an incremental
     * ingest index: bloom(A) ∪ bloom(B) == bloom(A ∪ B) bit-for-bit —

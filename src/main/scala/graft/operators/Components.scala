@@ -1,8 +1,5 @@
 package graft.operators
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
-
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -86,13 +83,6 @@ object Components {
     // empty jobs and then throw). isEmpty is one cheap action on the
     // checkpointed label frame.
     var converged = labels.isEmpty
-    // Observation wiring is dropped for the rest of the run after a
-    // single miss: each .observe registers a QueryExecutionListener
-    // that only unregisters when its metric is consumed, so re-arming
-    // it after a timeout would leak one listener + one 30 s stall per
-    // remaining round (ADVICE r4).
-    var useObserve = true
-    val sc = edges.sparkSession.sparkContext
     // one propagation step: every endpoint takes the min label over its
     // graph neighbors PLUS its own label's label (the pointer jump).
     // Label edges (v, c(v)): v sees labels[c(v)] = c(c(v)) — the jump
@@ -116,7 +106,6 @@ object Components {
     while (!converged && round < maxIters) {
       round += 1
       val tRound = System.nanoTime()
-      sc.setJobDescription(s"cc: round $round")
       // k steps per materialized round (r22, guide §1.2 step 1 /
       // §2.4): the iteration's local cost is per-ACTION fixed overhead
       // (checkpoint materialization + AQE stage jobs + the convergence
@@ -132,66 +121,28 @@ object Components {
       // of overshoot past it — overshoot steps recompute the converged
       // labels bit-identically, so results never depend on k; see
       // ChainSteps for why k = 2).
-      val chainObs = scala.collection.mutable.Buffer[Observation]()
-      var chained = labels
-      for (_ <- 1 to ChainSteps) {
-        val s = step(chained)
-        chained = if (useObserve) {
-          val o = Observation(); chainObs += o
-          s.observe(o, sum(col("comp").cast("decimal(38,0)")).as("s"))
-        } else s
+      val chainObs = Seq.fill(ChainSteps)(Observation())
+      // the checkpoint materialization IS the round's only job; the
+      // observations collected the step sums during it
+      labels = graft.ql.withJobDescription(edges.sparkSession,
+          s"cc: round $round") {
+        chainObs.foldLeft(labels)((lb, o) => step(lb)
+            .observe(o, sum(col("comp").cast("decimal(38,0)")).as("s")))
+          .localCheckpoint(true)
       }
-      val next = chained.localCheckpoint(true)
-      // the checkpoint materialization IS the round's only job; observe
-      // collected the label sum during it. Defensive timeout: if the
-      // metric ever failed to fire (its future would never complete), fall
-      // back to an explicit aggregation over the checkpointed blocks —
-      // and stop observing for the rest of the run (see useObserve).
-      // Only the TIMEOUT falls back: a real failure inside the metric
-      // computation propagates rather than being silently converted
-      // into a second job.
-      val checkpointSum = () => next.agg(sum(col("comp").cast("decimal(38,0)")))
-        .head().getDecimal(0)
-      def observed(o: Observation): java.math.BigDecimal =
-        try Await.result(o.future, 30.seconds).getAs[java.math.BigDecimal]("s")
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            log.warn(s"connectedComponents: observe metric missed in round " +
-              s"$round; falling back to explicit aggregation for remaining rounds")
-            useObserve = false
-            null
-        }
-      // in-chain sums: only meaningful on the observe path (a second
-      // aggregation job per step would defeat the point; without them
-      // convergence is still detected, one round later). Guard each
-      // wait on useObserve so ONE missed metric doesn't serialize k
-      // 30 s timeouts — after the first miss the rest are skipped and
-      // the round falls back to the explicit aggregation.
-      val chainSums: Seq[java.math.BigDecimal] =
-        chainObs.toSeq.map(o => if (useObserve) observed(o) else null)
-      val labelSum = chainSums.lastOption.filter(_ != null)
-        .getOrElse(checkpointSum())
-      labels = next
+      val chainSums = chainObs.map(o =>
+        o.get.getOrElse("s", null).asInstanceOf[java.math.BigDecimal])
       log.info(s"connectedComponents round $round: steps=$ChainSteps " +
-        s"labelSum=$labelSum " +
+        s"labelSum=${chainSums.last} " +
         f"wall=${(System.nanoTime() - tRound) / 1e6}%.0fms")
       // value compare, not object equals: BigDecimal.equals is
-      // scale-sensitive (2 != 2.0), and the observe vs fallback paths
-      // could legally disagree on result scale (ADVICE r4). Labels only
-      // ever decrease, so ANY unchanged step boundary certifies the
-      // fixpoint: compare every adjacent pair along
-      // prev, s1, ..., sk (with the explicit-agg labelSum standing in
-      // for the chain tail when observe fell back).
-      val boundary: Seq[java.math.BigDecimal] =
-        if (chainSums.lastOption.exists(_ != null)) prevSum +: chainSums
-        else (prevSum +: chainSums) :+ labelSum
-      converged = boundary.sliding(2).exists {
+      // scale-sensitive (2 != 2.0)
+      converged = (prevSum +: chainSums).sliding(2).exists {
         case Seq(a, b) => a != null && b != null && a.compareTo(b) == 0
         case _ => false
       }
-      prevSum = labelSum
+      prevSum = chainSums.last
     }
-    sc.setJobDescription(null)
     if (!converged && round == maxIters)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds — " +

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextOps, VectorOps}
-import graft.ql.spread
+import graft.ql.{countedCheckpoint, spread}
 
 /** Deduplication suite (SURVEY §2.3): exact, MinHash+LSH banding,
   * SimHash, exact n-gram Jaccard, embedding-cosine near-dup.
@@ -26,54 +26,18 @@ object Dedup {
     * it the join runs shuffled — only its physical form changes. */
   private[graft] val MaxBroadcastKeyRows = 2000000L
 
-  /** Row cap for forcing a locally-snapshotted PROBE (doc, pos, h)
-    * frame onto the broadcast side of the candidate join (r20): the
-    * probe table is ~24 bytes/row, the narrowed index side is
-    * collision-bounded and usually far smaller, so past ~100k probe
+  /** Row cap for forcing a PROBE (doc, pos, h) or (doc, band,
+    * bucket) frame onto the broadcast side of the candidate join
+    * (r20): the probe table is ~24 bytes/row, the narrowed index side
+    * is collision-bounded and usually far smaller, so past ~100k probe
     * rows the forced broadcast builds the join's hash relation from
     * the WRONG side (the ingest gate's 35k-doc batches winnow to
     * ~800k anchors ≈ 20 MB). Past the cap the probe joins as its
-    * checkpointed distributed frame and AQE picks the build side from
-    * measured sizes; driver-side key tables still come from the local
-    * snapshot either way. */
+    * checkpointed frame and AQE picks the build side from measured
+    * sizes. The guard reads the row count the probe's checkpoint
+    * observed ([[graft.ql.countedCheckpoint]]), like every size guard
+    * of the cross-corpus probes: none runs a count job of its own. */
   private[graft] val MaxProbeBroadcastRows = 100000
-
-  /** Row cap for pulling a probe-side frame to the DRIVER as a local
-    * relation — the cross-corpus probes' fast path (VERDICT r18
-    * item 3: the checkpoint + three size-guard `count()` actions were
-    * ~4 extra Spark jobs per probe, a fixed driver cost that dominated
-    * small batches). Under the cap ONE bounded collect replaces them
-    * all: the size guard is the array length, the key table and the
-    * pair-join build side derive from the same local rows, and no
-    * checkpoint or count job runs for them. A broadcast exchange over
-    * such a local relation is NOT free: under AQE each query that
-    * broadcasts one runs one parallelize job for it (one task per
-    * core on local[n]). Snapshot consistency is strict — one collect, one evaluation
-    * (stronger than the localCheckpoint it replaces). ~1M rows of
-    * (doc, pos, h) is the same tens-of-MB driver footprint the
-    * broadcast hash table paid anyway. Past the cap the operators
-    * fall back to the checkpointed distributed path with the
-    * [[MaxBroadcastKeyRows]] guards. */
-  private[graft] val MaxLocalProbeRows = 1000000
-
-  /** One-action bounded snapshot: collect up to cap+1 rows of `df`;
-    * the rows when within the cap, None past it (the caller falls
-    * back to the distributed path — the limit stopped the oversize
-    * collect early). Key tables and size guards derive from the
-    * array driver-side, so no count or checkpoint job runs for them
-    * ([[localDf]] builds frozen LocalRelations to join against; a
-    * broadcast of one still runs a parallelize job under AQE — see
-    * [[MaxLocalProbeRows]]). */
-  private def localRows(df: DataFrame,
-                        cap: Int): Option[Array[org.apache.spark.sql.Row]] = {
-    val rows = df.limit(cap + 1).collect()
-    if (rows.length > cap) None else Some(rows)
-  }
-
-  private def localDf(df: DataFrame, rows: Seq[org.apache.spark.sql.Row],
-                      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
 
   /** Exact dedup: hash-groupBy, keep the smallest id per content hash. */
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -144,31 +108,12 @@ object Dedup {
                              k: Int = 3, numHashes: Int = 128,
                              bands: Int = 16,
                              dedupIndex: Boolean = true): DataFrame = {
-    // one bounded collect snapshots the probe (size guard, key table
-    // and pair-join build side all derive from the same local rows, no
-    // checkpoint or count job; each broadcast of them still runs one
-    // parallelize job under AQE — see [[MaxLocalProbeRows]]); an
-    // oversize batch falls back to the checkpointed distributed path.
-    // On the local path the key distinct happens DRIVER-SIDE (no
-    // exchange under the broadcast build).
-    val probePlan = minhashIndex(batch, idCol, textCol, k, numHashes, bands)
-    localRows(probePlan, MaxLocalProbeRows) match {
-      case Some(rows) =>
-        val keySchema = org.apache.spark.sql.types.StructType(
-          probePlan.schema.filter(f => f.name == "band" || f.name == "bucket"))
-        val keys = localDf(batch,
-          rows.map(r => org.apache.spark.sql.Row(
-            r.getAs[Any]("band"), r.getAs[Any]("bucket"))).distinct.toSeq,
-          keySchema)
-        bandPairCountsAgainst(localDf(batch, rows, probePlan.schema),
-          rows.length.toLong, corpusIndex, dedupIndex, localKeys = Some(keys))
-      case None =>
-        val rows = org.apache.spark.sql.Observation()
-        val probe = probePlan.observe(rows, count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        bandPairCountsAgainst(probe, rows.get("n").asInstanceOf[Long],
-          corpusIndex, dedupIndex)
-    }
+    // the probe is checkpointed ONCE with its row count observed —
+    // the near-dup gate's form, at any batch size: the pair counting's
+    // broadcast guards read that count
+    val (probe, probeRows) = countedCheckpoint(
+      minhashIndex(batch, idCol, textCol, k, numHashes, bands))
+    bandPairCountsAgainst(probe, probeRows, corpusIndex, dedupIndex)
   }
 
   /** Per-pair band-collision counts over (doc, band, bucket) band-index
@@ -202,28 +147,20 @@ object Dedup {
     * same pass → (corpus_id, batch_id, in_batch, n_bands).
     *
     * `probeRows` is the probe's row count, which every caller already
-    * holds (an observed metric of the probe's checkpoint, or the length
-    * of its local rows); under [[MaxProbeBroadcastRows]] the probe is
-    * the pair join's broadcast build side. `localKeys` marks a probe
-    * that is a driver-side local relation: its pre-built key table
-    * replaces the key projection, and both join as broadcast build
-    * sides. */
+    * holds as an observed metric of the probe's checkpoint; under
+    * [[MaxProbeBroadcastRows]] the probe is the pair join's broadcast
+    * build side. */
   private[graft] def bandPairCountsAgainst(probe: DataFrame, probeRows: Long,
       corpus: DataFrame, dedupIndex: Boolean = true,
-      localKeys: Option[DataFrame] = None,
       maxBroadcastKeys: Long = MaxBroadcastKeyRows,
       selfPairs: Boolean = false): DataFrame = {
-    val keys = localKeys.map(broadcast(_)).getOrElse {
-      val k = probe.select("band", "bucket")
-      if (probeRows <= maxBroadcastKeys) broadcast(k) else k
-    }
+    val k = probe.select("band", "bucket")
+    val keys = if (probeRows <= maxBroadcastKeys) broadcast(k) else k
     val narrowed = corpus.select("doc", "band", "bucket")
       .join(keys, Seq("band", "bucket"), "left_semi")
     val fromCorpus = if (dedupIndex) narrowed.distinct() else narrowed
     val probeSide =
-      if (localKeys.isDefined || probeRows <= MaxProbeBroadcastRows)
-        broadcast(probe)
-      else probe
+      if (probeRows <= MaxProbeBroadcastRows) broadcast(probe) else probe
     if (!selfPairs)
       pairCounts(fromCorpus, probeSide, _ =!= _, "corpus_id", "batch_id")
     else
@@ -474,7 +411,7 @@ object Dedup {
     *     document the lever before flipping it) expand to aligned
     *     anchor pairs HOF-side, like ngramJaccardPairs;
     *  3. verification joins the two texts and extends each anchor to
-    *     its maximal run with the fused `graft_lcp` kernel (right:
+    *     its maximal run with the fused `graft_lcp_ext` kernel (right:
     *     lcp of suffixes; left: lcp of reversed prefixes) after a
     *     content check kills hash collisions — max over anchors IS the
     *     longest-common-substring length whenever it reaches minLen,
@@ -634,20 +571,6 @@ object Dedup {
       .select(col("doc"), col("a.pos").as("pos"), col("a.h").as("h"))
   }
 
-  /** Cross-corpus exact-substring pairs: a NEW batch probed against an
-    * EXISTING corpus anchor index (`winnowIndex` output, typically
-    * read back from parquet) — the ingest shape: only the batch is
-    * winnowed; the corpus is touched through (1) its anchor index for
-    * candidate generation and (2) a candidate-NARROWED text fetch for
-    * verification (substring extension needs real text on both sides —
-    * the honest difference from MinHash, whose signatures suffice; the
-    * fetch is bounded by candidate docs, not the corpus).
-    * Returns (corpus_id, batch_id, lcs_len ≥ minLen); within-batch /
-    * within-corpus pairs are not produced (run `exactSubstrPairs` on
-    * the batch for those). `dedupIndex` mirrors minhashLshPairsAgainst:
-    * replayed index appends would re-verify duplicated anchors —
-    * harmless for correctness here (spans dedup) but wasted work;
-    * distinct it unless the index is known append-once. */
   /** Boilerplate fingerprints of a winnow anchor index: hashes whose
     * doc-frequency exceeds `maxDf` — the df-cap table
     * [[exactSubstrPairsAgainst]] applies. One combinable aggregation
@@ -664,53 +587,59 @@ object Dedup {
       .filter(col("df") > maxDf).select("h")
   }
 
+  /** Cross-corpus exact-substring pairs: a NEW batch probed against an
+    * EXISTING corpus anchor index (`winnowIndex` output, typically
+    * read back from parquet) — the ingest shape: only the batch is
+    * winnowed; the corpus is touched through (1) its anchor index for
+    * candidate generation and (2) a candidate-NARROWED text fetch for
+    * verification (substring extension needs real text on both sides —
+    * the honest difference from MinHash, whose signatures suffice; the
+    * fetch is bounded by candidate docs, not the corpus).
+    * Returns (corpus_id, batch_id, lcs_len ≥ minLen); within-batch /
+    * within-corpus pairs are not produced (run `exactSubstrPairs` on
+    * the batch for those). `dedupIndex` mirrors minhashLshPairsAgainst:
+    * replayed index appends would re-verify duplicated anchors —
+    * harmless for correctness here (spans dedup) but wasted work;
+    * distinct it unless the index is known append-once. */
   def exactSubstrPairsAgainst(corpusIndex: DataFrame, corpusDocs: DataFrame,
                               batch: DataFrame, idCol: String, textCol: String,
                               minLen: Int = 50, k: Int = 16,
                               maxDf: Long = 0L,
                               dedupIndex: Boolean = true,
                               hotHashes: Option[DataFrame] = None): DataFrame = {
-    // one bounded collect snapshots the probe (size guard, key table
-    // and pair-join build side all derive from the same local rows, no
-    // checkpoint or count job; each broadcast of them still runs one
-    // parallelize job under AQE — see [[MaxLocalProbeRows]]); an
-    // oversize batch falls back to the checkpointed distributed path
-    val probePlan = winnowIndex(batch, idCol, textCol, minLen, k)
-    val probeOpt = localRows(probePlan, MaxLocalProbeRows)
-    exactSubstrPairsCore(corpusIndex, corpusDocs, batch, probePlan,
-      probeOpt, idCol, textCol, minLen, k, maxDf, dedupIndex, hotHashes)
+    val (probe, probeRows) =
+      countedCheckpoint(winnowIndex(batch, idCol, textCol, minLen, k))
+    exactSubstrPairsCore(corpusIndex, corpusDocs, batch, probe, probeRows,
+      idCol, textCol, minLen, k, maxDf, dedupIndex, hotHashes.map(hubSide))
   }
 
-  /** [[exactSubstrPairsAgainst]] past the probe snapshot — shared by
+  /** A precomputed hot-hash table ([[winnowHotHashes]] — index
+    * metadata) ready to anti-join: broadcast while a bounded existence
+    * probe (limit early-exits the scan) finds it within
+    * [[MaxBroadcastKeyRows]] — no full count per batch (VERDICT r18
+    * item 3, the Bm25/IvfPq guard pattern). */
+  private def hubSide(hot: DataFrame): DataFrame = {
+    val h = hot.select("h")
+    if (h.limit(MaxBroadcastKeyRows.toInt + 1).count() <= MaxBroadcastKeyRows)
+      broadcast(h)
+    else h
+  }
+
+  /** [[exactSubstrPairsAgainst]] past the probe checkpoint — shared by
     * the DataFrame entry above and the persisted-index entry
-    * ([[exactSubstrPairsAgainstDir]]), which winnows the batch ONCE
-    * and reuses the same snapshot for index narrowing and the probe
-    * join. */
+    * ([[exactSubstrPairsAgainstDir]]). `probe` is the batch's
+    * materialized anchor table and `probeRows` its observed row
+    * count; the candidate table is checkpointed the same way, and
+    * every size guard reads those two counts. `hubs`: a
+    * [[hubSide]]-guarded precomputed hot table, else the df-cap
+    * aggregates inline. Gauges `anchor:probe_rows` and
+    * `anchor:cand_rows` go to `stageLog`. */
   private def exactSubstrPairsCore(corpusIndex: DataFrame,
-      corpusDocs: DataFrame, batch: DataFrame, probePlan: DataFrame,
-      probeOpt: Option[Array[org.apache.spark.sql.Row]],
-      idCol: String, textCol: String, minLen: Int, k: Int,
-      maxDf: Long, dedupIndex: Boolean,
-      hotHashes: Option[DataFrame],
-      probeMaterialized: Boolean = false,
+      corpusDocs: DataFrame, batch: DataFrame, probe: DataFrame,
+      probeRows: Long, idCol: String, textCol: String, minLen: Int,
+      k: Int, maxDf: Long, dedupIndex: Boolean, hubs: Option[DataFrame],
       stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None)
       : DataFrame = {
-    // The local snapshot serves two roles with DIFFERENT size sweet
-    // spots (r20): driver-side key tables (bloom tests, hot
-    // subtraction, semi-join keys) are worth collecting up to
-    // [[MaxLocalProbeRows]], but FORCING the probe to the broadcast
-    // side of the candidate join inverts past ~100k anchor rows — an
-    // ingest-sized batch (35k docs ≈ 800k anchors) would broadcast a
-    // ~20 MB build side against a collision-bounded (usually KB-sized)
-    // narrowed index. Past [[MaxProbeBroadcastRows]] the probe joins
-    // as the checkpointed distributed frame and the planner/AQE picks
-    // the build side from real sizes; the collected rows still feed
-    // every driver-side key structure, so no extra jobs appear.
-    val probeBig = probeOpt.exists(_.length > MaxProbeBroadcastRows)
-    val probe = probeOpt.filter(_ => !probeBig)
-      .map(localDf(batch, _, probePlan.schema))
-      .getOrElse(
-        if (probeMaterialized) probePlan else probePlan.localCheckpoint(true))
     // the anchor index is narrowed to the batch's winnow hashes
     // BEFORE the dedup distinct AND the df-cap aggregation (VERDICT
     // r17 item 2 — both previously re-shuffled the full corpus-sized
@@ -719,21 +648,13 @@ object Dedup {
     // therefore every candidate and every df-cap decision — are
     // unchanged, while the per-batch shuffle is collision-bounded.
     // Hashes the batch never touches can't produce candidates and
-    // their df never matters. Broadcast under the cap, shuffled past.
-    // On the local path the key distinct happens DRIVER-SIDE (no
-    // exchange under the broadcast build).
-    val hSchema = org.apache.spark.sql.types.StructType(
-      probePlan.schema.filter(_.name == "h"))
-    val keys = probeOpt match {
-      case Some(rows) => broadcast(localDf(batch,
-        rows.map(r => org.apache.spark.sql.Row(r.getAs[Any]("h")))
-          .distinct.toSeq, hSchema))
-      case None =>
-        val hKeys = probe.select("h").distinct()
-        if (probe.count() <= MaxBroadcastKeyRows) broadcast(hKeys) else hKeys
-    }
+    // their df never matters. The probe's h projection is the
+    // semi-join's build side (a semi-join needs no distinct build):
+    // broadcast under the cap, shuffled past.
+    val hKeys = probe.select("h")
     val idx0 = corpusIndex.select(col("doc"), col("pos"), col("h"))
-      .join(keys, Seq("h"), "left_semi")
+      .join(if (probeRows <= MaxBroadcastKeyRows) broadcast(hKeys) else hKeys,
+        Seq("h"), "left_semi")
     // the df-cap is applied BEFORE the dedup distinct (r18): shared
     // boilerplate means hub hashes ARE in every batch's key set, and
     // distinct-ing their rows first would shuffle O(corpus) per probe
@@ -748,100 +669,67 @@ object Dedup {
       // the drop must be MAP-SIDE: a shuffled anti-join moves every
       // hub row across the network before discarding it — the exact
       // cost the cap exists to avoid (measured: shuffle tracked the
-      // index, not the batch, until this broadcast). Hot tables are
-      // boilerplate fingerprints, bounded small; a pathological one
-      // falls back to the shuffled form past the guard.
-      val hotJ = hotHashes match {
-        case Some(h) =>
-          // precomputed index metadata: a bounded existence probe
-          // (limit early-exits the scan) instead of a full count per
-          // batch (VERDICT r18 item 3 — the Bm25/IvfPq guard pattern)
-          if (h.limit(MaxBroadcastKeyRows.toInt + 1).count()
-              <= MaxBroadcastKeyRows) broadcast(h) else h
-        case None if probeOpt.isDefined =>
-          // inline hot hashes are ⊆ the batch's own hash set (idx0 is
-          // h-narrowed), which the local snapshot already bounds under
-          // MaxLocalProbeRows — under the broadcast cap by
-          // construction: no count, no checkpoint (single consumer)
-          broadcast(winnowHotHashes(idx0, maxDf))
-        case None =>
-          val hot = winnowHotHashes(idx0, maxDf).localCheckpoint(true)
-          if (hot.count() <= MaxBroadcastKeyRows) broadcast(hot) else hot
+      // index, not the batch, until this broadcast). Inline hot
+      // hashes are ⊆ the batch's own hash set (idx0 is h-narrowed),
+      // so the probe's row count bounds them: no count, no checkpoint
+      // (single consumer)
+      val hotJ = hubs.getOrElse {
+        val hot = winnowHotHashes(idx0, maxDf)
+        if (probeRows <= MaxBroadcastKeyRows) broadcast(hot) else hot
       }
       idx0.join(hotJ, Seq("h"), "left_anti")
     } else idx0
     val idx = if (dedupIndex) kept.distinct() else kept
     val probeJ =
-      if (probeOpt.isDefined && !probeBig) broadcast(probe) else probe
-    val candPlan = idx.alias("c")
+      if (probeRows <= MaxProbeBroadcastRows) broadcast(probe) else probe
+    // candidates are collision-bounded by the narrowing above;
+    // checkpointed once (consumers: the text-fetch narrowing and the
+    // verify join), their count observed for the guards below
+    val (cand, candRows) = countedCheckpoint(idx.alias("c")
       .join(probeJ.alias("p"), col("c.h") === col("p.h") &&
         col("c.doc") =!= col("p.doc"))
       .select(col("c.doc").as("corpus_id"), col("c.pos").as("pa"),
         col("p.doc").as("batch_id"), col("p.pos").as("pb"))
-      .distinct()
-    // candidates are collision-bounded by the narrowing above, so a
-    // small probe's candidate set snapshots locally too (guard +
-    // id table + verify-join build from one collect). Only attempted
-    // under a local probe: an oversize snapshot would re-execute the
-    // candidate generation on the fallback, and a big batch is the
-    // case the distributed path exists for.
-    val tCand = System.nanoTime()
-    val candOpt =
-      if (probeOpt.isDefined) localRows(candPlan, MaxLocalProbeRows)
-      else None
+      .distinct())
     stageLog.foreach { buf =>
-      buf += "anchor:cand_collect_s" -> ((System.nanoTime() - tCand) / 1e9)
-      buf += "anchor:cand_rows" ->
-        candOpt.map(_.length).getOrElse(-1).toDouble
+      buf += "anchor:probe_rows" -> probeRows.toDouble
+      buf += "anchor:cand_rows" -> candRows.toDouble
     }
-    val cand = candOpt.map(localDf(batch, _, candPlan.schema)).getOrElse(
-      candPlan.localCheckpoint(true)) // consumers: id narrowing + verify join
     // the verification text fetch must be PHYSICALLY narrowed before
     // it joins (r18): the scaladoc's "bounded by candidate docs"
     // claim was only logical — planned as a plain equi-join, the
     // corpus text table shuffled IN FULL per probe (measured: the
     // probe's shuffle tracked the corpus, not the candidates). A
-    // broadcast-guarded semi-join on the candidate ids drops
-    // non-candidate docs at the scan, so only collision-bounded text
-    // rows ever move.
-    val idSchema = org.apache.spark.sql.types.StructType(
-      Seq(candPlan.schema("corpus_id")))
-    val candIds = candOpt.map(rows =>
-      rows.map(_.getAs[Any]("corpus_id")).distinct.toSeq)
-    val cj = candIds match {
-      case Some(ids) => broadcast(localDf(batch,
-        ids.map(org.apache.spark.sql.Row(_)), idSchema))
-      case None =>
-        val cIds = cand.select("corpus_id").distinct()
-        if (cand.count() <= MaxBroadcastKeyRows) broadcast(cIds) else cIds
-    }
-    // literal-sized candidate sets ALSO push into the corpus scan as
-    // a chunked In (r19): the semi-join narrows rows after they are
-    // read, but on a parquet-backed corpus whose files/row-groups
-    // carry id stats the pushed predicate skips the bytes themselves —
-    // the text-fetch I/O then tracks the candidates, not the corpus.
-    // Long ids only (the persisted-table convention); anything else
-    // keeps the semi-join alone, same results.
+    // literal-sized candidate set pushes into the corpus scan as a
+    // chunked In (r19): on a parquet-backed corpus whose
+    // files/row-groups carry id stats the pushed predicate skips the
+    // bytes themselves — the text-fetch I/O then tracks the
+    // candidates, not the corpus. The In is exact, so it replaces the
+    // id semi-join; one bounded collect (at most MaxAnchorInLiterals
+    // rows) reads the ids off the candidate checkpoint. Larger sets,
+    // or non-Long ids, semi-join on the candidate ids instead
+    // (broadcast-guarded), dropping non-candidate docs at the scan.
     // pins kept on both text sides: d17 1.38 -> 2.03 s unpinned (as winnowIndex's)
     val pinned = spread(corpusDocs)
-    val corpusBase = candIds match {
-      case Some(ids) if ids.nonEmpty && ids.size <= MaxAnchorInLiterals &&
-          ids.forall(_.isInstanceOf[Long]) =>
+    val ids = cand.select("corpus_id")
+    val at =
+      if (candRows <= MaxAnchorInLiterals &&
+          ids.schema.head.dataType == org.apache.spark.sql.types.LongType)
         pinned.filter(ScanPrune.chunkedIn(col(idCol),
-          ids.map(_.asInstanceOf[Long]),
-          ScanPrune.inThreshold(batch.sparkSession)))
-      case _ => pinned
-    }
-    val at = corpusBase
-      .select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
-      .join(cj, Seq("corpus_id"), "left_semi")
+            ids.collect().map(_.getLong(0)).distinct.toSeq,
+            ScanPrune.inThreshold(batch.sparkSession)))
+          .select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
+      else pinned.select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
+        .join(if (candRows <= MaxBroadcastKeyRows) broadcast(ids) else ids,
+          Seq("corpus_id"), "left_semi")
     val bt = spread(batch) // pin kept: d17, as above
       .select(col(idCol).as("batch_id"), col(textCol).as("tb"))
     // fused zero-copy verify kernel (see exactSubstrRunsCore): anchor
     // mismatches yield run = 0, which can never clear the final
     // lcs_len >= minLen gate — same pairs as the old substr-equality
-    // filter + two-lcp chain, none of its per-row substring copies
-    (if (candOpt.isDefined) broadcast(cand) else cand)
+    // filter + two-lcp chain, none of its per-row substring copies.
+    // Candidate rows are the probe's width, a narrow build side
+    (if (candRows <= MaxBroadcastKeyRows) broadcast(cand) else cand)
       .join(at, "corpus_id").join(bt, "batch_id")
       .select(col("corpus_id"), col("batch_id"),
         call_function("graft_lcp_ext", col("ta"), col("pa"),
@@ -929,103 +817,51 @@ object Dedup {
     * row-eval cost of the OR-of-In dominated a 30-file probe. */
   private[graft] val MaxAnchorInLiterals = 256
 
-  /** The tiered per-batch view of a persisted anchor index
-    * ([[graft.sources.TieredIndex.probe]], gauges `anchor:*`): a key
-    * is hot when some generation's bloom claims it. The bloom tests
-    * run DRIVER-SIDE on the already-collected probe keys (no extra
-    * Spark job — the r18-item-3 discipline): winnow fingerprints are
-    * uniform hashes, so range pruning alone would match every file;
-    * only the bloom's "actually in the index" signal (true
-    * cross-corpus collisions, rare by construction) makes the hot set
-    * small enough to prune. */
-  private[graft] def narrowedAnchorIndex(ss: org.apache.spark.sql.SparkSession,
-      indexDir: String, batchHs: Seq[Long],
-      stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None)
-      : DataFrame = {
-    import graft.sources.TieredIndex
-    TieredIndex.probe(ss, indexDir, emptyAnchorIdx(ss), "anchor",
-        stageLog) { gens =>
-      val hot = batchHs.filter(h =>
-        gens.exists(g => TieredIndex.mightContainKey(g, h)))
-      // narrow fingerprints at the SCAN when the hot set is
-      // literal-sized (exact row-group pruning on the clustered
-      // layout); the core's probe-key semi-join still narrows either
-      // way, so this is purely physical
-      TieredIndex.Hot(hot.length.toLong, () => hot.map(Seq(_)),
-        read =>
-          if (hot.length <= MaxAnchorInLiterals)
-            read.filter(ScanPrune.chunkedIn(col("h"), hot,
-              ScanPrune.inThreshold(ss)))
-          else read)
-    }
-  }
-
   private def emptyAnchorIdx(ss: org.apache.spark.sql.SparkSession) = {
     import ss.implicits._
     Seq.empty[(Long, Int, Long)].toDF("doc", "pos", "h")
   }
 
   /** [[exactSubstrPairsAgainst]] against a PERSISTED anchor-index dir
-    * (the streaming-twin / ingest shape): the batch is winnowed ONCE
-    * and its snapshot drives both the tiered index narrowing
-    * ([[narrowedAnchorIndex]] — file pruning via the compaction-built
-    * generation sidecar) and the probe join; with `maxDf` > 0 the
-    * persisted hot-hash metadata is used when a compaction has built
-    * it (falling back to the inline per-batch aggregation until
-    * then). An oversize batch (past [[MaxLocalProbeRows]]) reads
-    * tail + all base files and relies on the distributed semi-join —
-    * the case the narrowing exists to avoid is exactly the small-
-    * probe case. */
+    * (the streaming-twin / ingest shape): the batch is winnowed and
+    * checkpointed ONCE, and that checkpoint drives both the tiered
+    * index narrowing and the probe join. The narrowing is
+    * [[graft.sources.TieredIndex.probe]] (gauges `anchor:*`) over the
+    * batch's anchors: a fingerprint is hot when some generation's
+    * bloom claims it — winnow fingerprints are uniform hashes, so
+    * range pruning alone would match every file; only the bloom's
+    * "actually in the index" signal (true cross-corpus collisions,
+    * rare by construction) makes the hot set small enough to prune.
+    * With `maxDf` > 0 the persisted hot-hash metadata is used when a
+    * compaction has built it (falling back to the inline per-batch
+    * aggregation until then), and its hubs are also filtered out of
+    * the hot set: boilerplate fingerprints are excluded from
+    * candidates by the df-cap's anti-join anyway, so their index rows
+    * are never worth READING — results identical, but the per-batch
+    * hot set shrinks to TRUE content collisions, which is what keeps
+    * the file bound tight on boilerplate-heavy corpora (every real
+    * crawl shares headers with every doc). */
   def exactSubstrPairsAgainstDir(ss: org.apache.spark.sql.SparkSession,
       indexDir: String, corpusDocs: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       minLen: Int = 50, k: Int = 16, maxDf: Long = 0L,
       dedupIndex: Boolean = true,
       stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]] = None,
-      batchAnchors: Option[DataFrame] = None): DataFrame = {
-    // `batchAnchors`: a PRECOMPUTED (and materialized) winnowIndex of
-    // the batch — the ingest gate pays the winnow once and shares it
-    // with the self-pair check and the index append (r19 item 2); the
-    // probe snapshot below then collects cached blocks instead of
-    // re-running the kernel.
-    val probePlan = batchAnchors
-      .map(_.select(col("doc"), col("pos"), col("h")))
-      .getOrElse(winnowIndex(batch, idCol, textCol, minLen, k))
-    val t0 = System.nanoTime()
-    val probeOpt = localRows(probePlan, MaxLocalProbeRows)
-    stageLog.foreach { buf =>
-      buf += "anchor:probe_collect_s" -> ((System.nanoTime() - t0) / 1e9)
-      buf += "anchor:probe_rows" ->
-        probeOpt.map(_.length).getOrElse(-1).toDouble
-    }
-    val hot = if (maxDf > 0) loadAnchorHotHashes(ss, indexDir) else None
-    val idx = probeOpt match {
-      case Some(rows) =>
-        val hs = rows.map(_.getAs[Long]("h")).distinct.toSeq
-        // boilerplate fingerprints are excluded from candidates by
-        // the df-cap's anti-join anyway, so their index rows are
-        // never worth READING: subtract the persisted hot set from
-        // the keys that drive the bloom tests and file pruning —
-        // results identical (the core drops the same rows), but the
-        // per-batch hot set shrinks to TRUE content collisions, which
-        // is what keeps the file bound tight on boilerplate-heavy
-        // corpora (every real crawl shares headers with every doc)
-        val tN = System.nanoTime()
-        val probeKeys = hot.flatMap(h =>
-          localRows(h.select("h"), MaxLocalProbeRows).map { hubRows =>
-            val hubs = hubRows.map(_.getLong(0)).toSet
-            hs.filterNot(hubs)
-          }).getOrElse(hs)
-        val narrowed = narrowedAnchorIndex(ss, indexDir, probeKeys, stageLog)
-        stageLog.foreach(_ +=
-          "anchor:narrow_s" -> ((System.nanoTime() - tN) / 1e9))
-        narrowed
-      case None => // oversize probe: read everything (tail + base)
-        graft.sources.TieredIndex.readAll(ss, indexDir, emptyAnchorIdx(ss))
-    }
-    exactSubstrPairsCore(idx, corpusDocs, batch, probePlan, probeOpt,
-      idCol, textCol, minLen, k, maxDf, dedupIndex, hot,
-      probeMaterialized = batchAnchors.isDefined, stageLog = stageLog)
+      batchAnchors: Option[(DataFrame, Long)] = None): DataFrame = {
+    // `batchAnchors`: a PRECOMPUTED, checkpointed winnowIndex of the
+    // batch with its observed row count — the ingest gate pays the
+    // winnow once and shares it with the self-pair check and the
+    // index append (r19 item 2); it is not checkpointed again here
+    val (probe, probeRows) = batchAnchors
+      .map { case (a, n) => (a.select(col("doc"), col("pos"), col("h")), n) }
+      .getOrElse(countedCheckpoint(winnowIndex(batch, idCol, textCol, minLen, k)))
+    val hubs = (if (maxDf > 0) loadAnchorHotHashes(ss, indexDir) else None)
+      .map(hubSide)
+    val idx = graft.sources.TieredIndex.probe(ss, indexDir, anchorIndexSpec(),
+        emptyAnchorIdx(ss), "anchor", stageLog)(probe.select("h"),
+      hot => hubs.fold(hot)(hot.join(_, Seq("h"), "left_anti")))
+    exactSubstrPairsCore(idx, corpusDocs, batch, probe, probeRows,
+      idCol, textCol, minLen, k, maxDf, dedupIndex, hubs, stageLog)
   }
 
   /** `exactSubstrRemove` iterated to FIXPOINT: cutting a span can

@@ -329,11 +329,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         DeflateSize(children.head, level)
       }))
     ext.injectFunction((
-      FunctionIdentifier("graft_lcp"),
-      new ExpressionInfo(classOf[LongestCommonPrefix].getName, "graft_lcp"),
-      (children: Seq[Expression]) =>
-        LongestCommonPrefix(children.head, children(1))))
-    ext.injectFunction((
       FunctionIdentifier("graft_lcp_ext"),
       new ExpressionInfo(classOf[LcpExtend].getName, "graft_lcp_ext"),
       (children: Seq[Expression]) =>

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -105,53 +105,6 @@ object Winnow {
       }
     }
     new GenericArrayData(out.toArray)
-  }
-}
-
-/** Longest common prefix LENGTH of two strings, in code points — the
-  * match-extension primitive of exact-substring verification (extend a
-  * shared anchor right with lcp, left with lcp over reversed
-  * prefixes). Single fused loop; the HOF equivalent pays a lambda +
-  * two substrings per compared character. */
-case class LongestCommonPrefix(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_lcp expects (string, string), got $other")
-    }
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_lcp"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    LongestCommonPrefix.compute(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.LongestCommonPrefix.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object LongestCommonPrefix {
-  /** Shared by interpreted eval and generated code. */
-  def compute(a: UTF8String, b: UTF8String): Int = {
-    val sa = a.toString; val sb = b.toString
-    val na = sa.length; val nb = sb.length
-    var i = 0; var cp = 0
-    while (i < na && i < nb) {
-      val ca = sa.codePointAt(i)
-      if (ca != sb.codePointAt(i)) return cp
-      cp += 1
-      i += Character.charCount(ca)
-    }
-    cp
   }
 }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared helpers for the query layer.
@@ -95,4 +95,34 @@ object ql {
     * silently add a repartition. */
   private[graft] def leafParallelism(df: DataFrame): Int =
     df.queryExecution.sparkPlan.collectLeaves().map(_.execute().getNumPartitions).sum
+
+  /** `df` materialized once (eager localCheckpoint), with its row
+    * count observed during that one job — the size every broadcast
+    * guard downstream reads instead of running a count of its own. */
+  private[graft] def countedCheckpoint(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val cp = df.observe(rows, count(lit(1)).as("n")).localCheckpoint(true)
+    (cp, observed(rows, "n"))
+  }
+
+  /** An observed count or gauge, 0 when absent: a plan that folds to
+    * an empty relation never runs, and its observation completes
+    * without the key. */
+  private[graft] def observed(o: Observation, name: String): Long =
+    o.get.get(name).fold(0L)(_.asInstanceOf[Long])
+
+  /** Run `f` with every Spark job it launches labelled `label` (the
+    * `spark.job.description` local property; AQE's query-stage jobs
+    * inherit it from the submitting thread). The caller's label is
+    * restored afterwards, also when `f` throws. */
+  private[graft] def withJobDescription[A](ss: SparkSession, label: String)(f: => A): A = {
+    val sc = ss.sparkContext
+    val caller = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try f finally sc.setLocalProperty(JobDescription, caller)
+  }
+
+  /** The local property `SparkContext.setJobDescription` sets (Spark
+    * keeps the constant package-private). */
+  private val JobDescription = "spark.job.description"
 }

@@ -13,7 +13,9 @@ import graft.operators.BloomMembership
   * probe wants (a) a key-summary bloom to decide whether the store
   * must be read at all and (b) per-file clustered key ranges so only
   * the files a hot key lands in are opened. Both indexes read through
-  * one [[probe]] and pass in only their hot-key policy ([[Hot]]).
+  * one [[probe]], which derives the hot keys the same way for both:
+  * the caller passes its probe-key rows and, optionally, a filter
+  * over the flagged ones.
   *
   * The store is a flat parquet dir; a SIDECAR at `<dir>_keys` (one
   * row per GENERATION: right-sized key bloom + per-file lexicographic
@@ -156,8 +158,7 @@ private[graft] object TieredIndex {
 
   /** Past this many hot keys the driver-side per-file range pruning
     * is skipped (the collect would be the bottleneck) and every base
-    * file is read — the caller's `Hot.narrow` still applies. ~1M
-    * keys ≈ 16 MB collected. */
+    * file is read. ~1M keys ≈ 16 MB collected. */
   private[graft] val MaxHotKeysForFilePrune: Long = 1000000L
 
   /** Staging-dir suffix and commit-manifest name (see the commit
@@ -173,21 +174,6 @@ private[graft] object TieredIndex {
     * more internally — consistent on both sides). */
   def keyHash(spec: Spec): org.apache.spark.sql.Column =
     xxhash64(spec.keyCols.map(col): _*)
-
-  /** Driver-side membership test against one generation's bloom for a
-    * SINGLE-Long-key spec (the anchor index's shape) — bounded hot-set
-    * filtering on already-collected probe keys, NO Spark job. Must
-    * mirror the build chain exactly: [[keyHash]] is Spark's `xxhash64`
-    * over the key column (XXH64 seed 42), and
-    * [[graft.operators.BloomMembership.sketch]] hashes that once more
-    * with the same `xxhash64` before inserting the long.
-    * TieredIndexSpec pins the mirror against the distributed
-    * [[graft.operators.BloomMembership.flagSeen]] predicate. */
-  def mightContainKey(gen: Gen, key: Long): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    BloomMembership.mightContainHash(gen.bloom,
-      XXH64.hashLong(XXH64.hashLong(key, 42L), 42L))
-  }
 
   // ---------------------------------------------------------------
   // compaction
@@ -585,34 +571,39 @@ private[graft] object TieredIndex {
   // ---------------------------------------------------------------
   // probe
 
-  /** An index's hot keys for one probe ([[probe]]): how many there
-    * are, the keys Long-normalized like [[FileRange]] (collected only
-    * when per-file pruning runs), and the narrowing applied to the
-    * base files that are read. */
-  final case class Hot(n: Long, keys: () => Seq[Seq[Long]],
-                       narrow: DataFrame => DataFrame)
-
   /** The tiered per-batch view of a persisted index, projected to
     * `empty`'s columns (`empty` itself for an absent or empty store).
     * TAIL files (appended since the last [[compact]]) are scanned in
     * full — bounded by the appends, corpus-independent. BASE files
-    * are read only when `hotOf`, given the generations, reports hot
-    * keys: with at most `maxPruneKeys` (default
-    * [[MaxHotKeysForFilePrune]]) of them only the
-    * files whose clustered key range holds one ([[pruneFiles]]),
-    * otherwise all of them, each read narrowed by the caller's
-    * `Hot.narrow`. A missing, stale or unparsable sidecar degrades
-    * every file to tail — the full scan, same semantics.
+    * are read only for HOT keys: the `keys` rows (carrying the spec's
+    * key columns) are flagged map-side against every generation's
+    * bloom ([[BloomMembership.flagSeen]] on [[keyHash]] — one
+    * predicate per generation in the same scan, a key is hot if ANY
+    * generation may hold it), `hotFilter` reduces the flagged rows
+    * (the caller's policy: which hot rows can still matter), and one
+    * bounded collect brings their keys to the driver. With at most
+    * `maxPruneKeys` (default [[MaxHotKeysForFilePrune]]) distinct hot
+    * keys only the files whose clustered key range holds one are read
+    * ([[pruneFiles]]), otherwise all of them. The collect bounds ROWS
+    * and a key may repeat across rows, so only a complete collect is
+    * distincted on the driver: past the cap a count job gauges the
+    * distinct keys, and when they still fit a second collect brings
+    * them all. A single-column key whose hot set is literal-sized
+    * (≤ [[graft.operators.Dedup.MaxAnchorInLiterals]]) is also pushed
+    * into the base scan as a chunked `In` — exact row-group pruning on
+    * the clustered layout. A missing, stale or unparsable sidecar
+    * degrades every file to tail — the full scan, same semantics.
     *
     * Gauges (`stageLog`), named `<gaugePrefix>:<name>`: `generations`,
     * `base_files`, `tail_files`, and — when there are generations to
     * test keys against — `hot_keys` and `base_files_read`
     * (`base_files_read` is 0 without generations). */
-  def probe(ss: SparkSession, dir: String, empty: DataFrame,
+  def probe(ss: SparkSession, dir: String, spec: Spec, empty: DataFrame,
             gaugePrefix: String,
             stageLog: Option[scala.collection.mutable.Buffer[(String, Double)]],
             maxPruneKeys: Long = MaxHotKeysForFilePrune)(
-      hotOf: Seq[Gen] => Hot): DataFrame = {
+      keys: DataFrame,
+      hotFilter: DataFrame => DataFrame = identity): DataFrame = {
     recover(ss, dir)
     val live = liveFiles(ss, dir)
     if (live.isEmpty) return empty
@@ -630,25 +621,36 @@ private[graft] object TieredIndex {
       return read(ss, tail, empty)
     }
     val tailDf = if (tail.isEmpty) empty else read(ss, tail, empty)
-    val hot = hotOf(gens)
-    gauge("hot_keys", hot.n.toDouble)
-    if (hot.n == 0) { gauge("base_files_read", 0); return tailDf }
-    val toRead =
-      if (hot.n <= maxPruneKeys) pruneFiles(baseFiles, hot.keys())
-      else baseFiles.map(_.name)
+    val hotRows = hotFilter(BloomMembership.flagSeen(
+        keys.withColumn("__k", keyHash(spec)), gens.map(_.bloom), "__k",
+        "__hot").filter(col("__hot")))
+      .select(spec.keyCols.map(c => col(c).cast("long")): _*)
+    def key(r: Row): Seq[Long] = (0 until r.length).map(r.getLong)
+    val rows = hotRows.limit(maxPruneKeys.toInt + 1).collect()
+    val (n, hot) =
+      if (rows.length <= maxPruneKeys) {
+        val ks = rows.map(key).distinct.toIndexedSeq
+        (ks.length.toLong, Some(ks))
+      } else {
+        val distinct = hotRows.distinct()
+        val n = distinct.count()
+        (n, if (n <= maxPruneKeys)
+          Some(distinct.collect().map(key).toIndexedSeq) else None)
+      }
+    gauge("hot_keys", n.toDouble)
+    if (n == 0) { gauge("base_files_read", 0); return tailDf }
+    val toRead = hot.fold(baseFiles.map(_.name))(pruneFiles(baseFiles, _))
     gauge("base_files_read", toRead.length.toDouble)
-    val baseDf =
-      if (toRead.isEmpty) empty
-      else hot.narrow(read(ss, toRead.map(new Path(new Path(dir), _)), empty))
-    tailDf.unionByName(baseDf)
-  }
-
-  /** Every committed row of the index — [[probe]] with nothing
-    * narrowed: no sidecar is read and no gauge recorded. */
-  def readAll(ss: SparkSession, dir: String, empty: DataFrame): DataFrame = {
-    recover(ss, dir)
-    val live = liveFiles(ss, dir)
-    if (live.isEmpty) empty else read(ss, live, empty)
+    if (toRead.isEmpty) return tailDf
+    val base = read(ss, toRead.map(new Path(new Path(dir), _)), empty)
+    tailDf.unionByName(hot match {
+      case Some(ks) if spec.keyCols.size == 1 &&
+          ks.length <= graft.operators.Dedup.MaxAnchorInLiterals =>
+        base.filter(graft.operators.ScanPrune.chunkedIn(
+          col(spec.keyCols.head), ks.map(_.head),
+          graft.operators.ScanPrune.inThreshold(ss)))
+      case _ => base
+    })
   }
 
   /** The index's own files read with `empty`'s schema: the library

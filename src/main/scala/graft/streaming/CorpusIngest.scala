@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.TextOps
 import graft.operators.{BloomMembership, Dedup, Drift, QualityClassifier}
 import graft.sources.ShardSink
+import graft.ql.{countedCheckpoint, observed}
 
 /** The production ingest loop end to end (p10): every stage the
   * corpus suite ships, composed into ONE streaming pipeline —
@@ -322,17 +323,15 @@ object CorpusIngest {
       // driver in one bounded collect, so removing the drops — from the
       // shipped rows here and from the band rows appended in step 4b —
       // is a map-side filter, not one more job per consumer.
-      val bandRows = Observation()
       val bandIdx = nearDup.map { nd =>
         timed(ss, stageLog, "neardup_band") {
-          Dedup.minhashIndex(fresh, "doc_id", "text",
-              nd.k, nd.numHashes, nd.bands)
-            .observe(bandRows, count(lit(1)).as("n")).localCheckpoint(true)
+          countedCheckpoint(Dedup.minhashIndex(fresh, "doc_id", "text",
+            nd.k, nd.numHashes, nd.bands))
         }
       }
-      val gateDrops = bandIdx.zip(nearDup).map { case (idx, nd) =>
+      val gateDrops = bandIdx.zip(nearDup).map { case ((idx, bandRows), nd) =>
         timed(ss, stageLog, "neardup_gate") {
-          dropTable(nearDupDrops(idx, observed(bandRows, "n"),
+          dropTable(nearDupDrops(idx, bandRows,
             narrowedCorpusIndex(ss, nd.indexDir, idx, nd.minBands, stageLog),
             nd.minBands))
         }
@@ -355,10 +354,11 @@ object CorpusIngest {
       // check, and (after the shard write) the index append. Pre-r20
       // each of the three re-ran the winnow kernel over the batch —
       // measured as ≥¾ of the gate's 12.7-15.3 s/batch steady cost.
+      // The checkpoint observes its row count: the probe's size guards.
       val batchAnchors = substr.map { sg =>
         timed(ss, stageLog, "substr_winnow") {
-          Dedup.winnowIndex(survivors, "doc_id", "text", sg.minLen, sg.k)
-            .localCheckpoint(true)
+          countedCheckpoint(
+            Dedup.winnowIndex(survivors, "doc_id", "text", sg.minLen, sg.k))
         }
       }
       val shipping = substr.fold(survivors) { sg =>
@@ -395,7 +395,7 @@ object CorpusIngest {
           }
           val inBatch = sides("substr_self") { _ =>
             Dedup.exactSubstrPairsFromAnchors(survivors,
-                batchAnchors.get, "doc_id", "text", sg.minLen, sg.k, sg.maxDf)
+                batchAnchors.get._1, "doc_id", "text", sg.minLen, sg.k, sg.maxDf)
               .select(col("b_id").as("doc_id"))
               .localCheckpoint(true)
           }
@@ -467,17 +467,17 @@ object CorpusIngest {
       //     tail files are read in full by every probe until the next
       //     compaction, so a small batch appends ONE.
       val shipIds = shipping.select("doc_id")
-      bandIdx.zip(nearDup).foreach { case (idx, nd) =>
+      bandIdx.zip(nearDup).foreach { case ((idx, bandRows), nd) =>
         timed(ss, stageLog, "neardup_append") {
           (if (substr.isDefined)
             idx.join(shipIds, idx("doc") === shipIds("doc_id"), "left_semi")
           else gateDrops.fold(idx)(d => withoutDrops(idx, "doc", d)))
             .coalesce(math.max(1,
-              (observed(bandRows, "n") / BandRowsPerAppendFile).toInt))
+              (bandRows / BandRowsPerAppendFile).toInt))
             .write.mode("append").parquet(nd.indexDir)
         }
       }
-      batchAnchors.zip(substr).foreach { case (anchors, sg) =>
+      batchAnchors.zip(substr).foreach { case ((anchors, _), sg) =>
         timed(ss, stageLog, "substr_append") {
           // coalesced: the anchor table is 32 checkpoint partitions,
           // and 32 small files per batch made the tail's per-probe
@@ -538,12 +538,6 @@ object CorpusIngest {
     }
   }
 
-  /** An observed count or gauge, 0 when absent: a plan that folds to
-    * an empty relation never runs, and its observation completes
-    * without the key. */
-  private def observed(o: Observation, name: String): Long =
-    o.get.get(name).fold(0L)(_.asInstanceOf[Long])
-
   /** Band rows per near-dup index append file: ~64 MB of
     * (doc, band, bucket) rows at 16 bytes each, the partition size AQE
     * coalesces a shuffle to. */
@@ -578,24 +572,16 @@ object CorpusIngest {
     }
 
   /** Run `f` as one stage of [[ingestBatch]]: every Spark job it
-    * launches carries `name` as its job description (AQE's query-stage
-    * jobs inherit it from the submitting thread), the caller's
-    * description is restored afterwards, and the wall seconds go into
+    * launches carries `name` as its job description
+    * ([[graft.ql.withJobDescription]]), and the wall seconds go into
     * `log` — the one stage timer of the `stageLog` profile. */
   private def timed[A](ss: SparkSession,
       log: Option[scala.collection.mutable.Buffer[(String, Double)]],
       name: String)(f: => A): A = {
-    val sc = ss.sparkContext
-    val caller = sc.getLocalProperty(JobDescription)
-    sc.setJobDescription(name)
     val t0 = System.nanoTime()
-    val a = try f finally sc.setLocalProperty(JobDescription, caller)
+    val a = graft.ql.withJobDescription(ss, name)(f)
     log.foreach(_ += name -> (System.nanoTime() - t0) / 1e9); a
   }
-
-  /** The local property `SparkContext.setJobDescription` sets (Spark
-    * keeps the constant package-private). */
-  private val JobDescription = "spark.job.description"
 
   /** The concurrent Spark actions of one [[ingestBatch]] call: writes
     * and probes that no later step of the batch waits on until a
@@ -1060,45 +1046,19 @@ object CorpusIngest {
       maxPruneKeys: Long = graft.sources.TieredIndex.MaxHotKeysForFilePrune)
       : DataFrame = {
     import ss.implicits._
-    graft.sources.TieredIndex.probe(ss, indexDir,
+    // hot rows reduce to SUSPECT docs — ≥ minBands hot bands (one row
+    // per (doc, band), so the per-doc row count IS the hot band count
+    // — a window over one doc-keyed exchange); only their keys can
+    // contribute to a drop. No narrowing of the base read beyond the
+    // file pruning: the pair counting semi-joins every corpus row,
+    // base and tail alike, to the batch's keys before anything
+    // shuffles it.
+    graft.sources.TieredIndex.probe(ss, indexDir, bandIndexSpec(),
         Seq.empty[(Long, Int, Long)].toDF("doc", "band", "bucket"), "ndidx",
-        stageLog, maxPruneKeys) { gens =>
-      // hot rows = batch (doc, band, bucket) rows whose key ANY
-      // generation's bloom claims to contain (map-side off the
-      // batchIdx checkpoint — one predicate per generation in the
-      // same scan), reduced to SUSPECT docs — ≥ minBands hot bands
-      // (one row per (doc, band), so the per-doc row count IS the
-      // hot band count — a window over one doc-keyed exchange); only
-      // their keys can contribute to a drop. One bounded collect
-      // brings them to the driver, which distincts them.
-      val suspect = BloomMembership
-        .flagSeen(batchIdx
-            .withColumn("__k", xxhash64(col("band"), col("bucket"))),
-          gens.map(_.bloom), "__k", "__hot")
-        .filter(col("__hot"))
-        .withColumn("__nb", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("doc")))
-        .filter(col("__nb") >= minBands)
-        .select(col("band").cast("long"), col("bucket"))
-      // The cap bounds the collected ROWS, and a key repeats once per
-      // suspect doc holding it (in-batch near-dups, a recrawl), so
-      // only a complete collect may be distincted on the driver: past
-      // the cap a count job gauges the distinct keys, and when they
-      // still fit it a second bounded collect brings them all. No
-      // narrowing of the base read here: the pair counting semi-joins
-      // every corpus row, base and tail alike, to the batch's keys
-      // before anything shuffles it.
-      def key(r: org.apache.spark.sql.Row) = Seq(r.getLong(0), r.getLong(1))
-      val rows = suspect.limit(maxPruneKeys.toInt + 1).collect()
-      if (rows.length <= maxPruneKeys) {
-        val keys = rows.map(key).distinct.toIndexedSeq
-        graft.sources.TieredIndex.Hot(keys.length.toLong, () => keys, identity)
-      } else {
-        val keys = suspect.distinct()
-        graft.sources.TieredIndex.Hot(keys.count(),
-          () => keys.collect().map(key).toIndexedSeq, identity)
-      }
-    }
+        stageLog, maxPruneKeys)(batchIdx, hot => hot
+      .withColumn("__nb", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("doc")))
+      .filter(col("__nb") >= minBands))
   }
 
   /** Maintenance for the frontier blooms (VERDICT r15 item 2): over an

@@ -12,8 +12,8 @@ import graft.sources.TieredIndex
   * generation-tiered compaction (`Dedup.compactAnchorIndex`), a key-
   * summary sidecar that lets the cross-corpus probe prune FILES (not
   * just shuffle rows), the persisted hot-hash metadata rebuilt per
-  * compaction, and the driver-side bloom mirror the probe's hot-set
-  * filtering rides. Differentials: the dir-based probe must decide
+  * compaction, and the map-side bloom hot-key derivation the probe's
+  * file pruning rides. Differentials: the dir-based probe must decide
   * exactly like the in-memory probe, with and without the sidecar,
   * with inline and persisted (fresh AND stale) hot tables. */
 class AnchorIndexSpec extends SparkSpec {
@@ -107,6 +107,9 @@ class AnchorIndexSpec extends SparkSpec {
 
   test("driver-side bloom mirror: every indexed fingerprint is hot " +
       "(no false negatives), a disjoint key set is almost all cold") {
+    // both properties through the production hot-key derivation
+    // (TieredIndex.probe's map-side flags), which must also flag
+    // exactly the keys the driver-side mirror claims
     val dir = Files.createTempDirectory("anchor_bloom").toString
     val idx = s"$dir/winnow_index"
     val corpus = (0L until 200L).map(i => doc(i, s"b$i"))
@@ -116,18 +119,27 @@ class AnchorIndexSpec extends SparkSpec {
     Dedup.compactAnchorIndex(spark, idx)
     val gens = TieredIndex.load(spark, idx).get
     val indexed = spark.read.parquet(idx).select("h")
-      .distinct().as[Long].collect()
+      .distinct().as[Long].collect().toSeq
     assert(indexed.length > 1000)
-    assert(indexed.forall(h =>
-      gens.exists(g => TieredIndex.mightContainKey(g, h))),
-      "bloom mirror produced a false negative on an inserted key")
+    // the production probe's hot-key count for a batch of fingerprints
+    def hotKeys(hs: Seq[Long]): Double = {
+      val buf = scala.collection.mutable.Buffer.empty[(String, Double)]
+      TieredIndex.probe(spark, idx, Dedup.anchorIndexSpec(),
+        Seq.empty[(Long, Int, Long)].toDF("doc", "pos", "h"), "anchor",
+        Some(buf))(hs.toDF("h"))
+      buf.toMap.apply("anchor:hot_keys")
+    }
+    assert(hotKeys(indexed) == indexed.length.toDouble,
+      "hot-key derivation produced a false negative on an indexed key")
     // disjoint probes: fp rate must stay near the design point
     val probes = (1L to 20000L).map(_ * 0x9e3779b97f4a7c15L)
       .filterNot(indexed.toSet)
-    val fp = probes.count(h =>
-      gens.exists(g => TieredIndex.mightContainKey(g, h)))
+    val fp = hotKeys(probes)
     assert(fp <= probes.length / 100,
-      s"driver bloom fp rate out of band: $fp/${probes.length}")
+      s"bloom fp rate out of band: $fp/${probes.length}")
+    assert(fp == probes.count(h =>
+        gens.exists(g => KernelOracles.mightContainKey(g, h))).toDouble,
+      "the map-side flags must match the driver-side bloom mirror")
   }
 
   test("hot-hash metadata: built at compaction, equal to the inline " +

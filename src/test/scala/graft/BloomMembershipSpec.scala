@@ -141,8 +141,8 @@ class BloomMembershipSpec extends SparkSpec {
           "key", "f")
         .select("id", "f").as[(Long, Boolean)].collect().toMap
       val want = hashes.map { case (id, h) => id ->
-        (BloomMembership.mightContainHash(epochA, h) ||
-          BloomMembership.mightContainHash(epochB, h)) }.toMap
+        (KernelOracles.mightContainHash(epochA, h) ||
+          KernelOracles.mightContainHash(epochB, h)) }.toMap
       assert(got == want,
         s"probe must flag exactly the driver reference's rows ($items keys)")
       // batch ∩ corpus = ids 0-4999: zero false negatives

@@ -62,9 +62,15 @@ class ComponentsSpec extends SparkSpec {
     // an 11-node chain cannot converge within one round (= 2
     // propagation steps since r22), so the maxIters guard must fire
     val edges = (0L until 10L).map(i => (i, i + 1))
-    intercept[IllegalStateException] {
-      Components.connectedComponents(edges.toDF("a", "b"), "a", "b", maxIters = 1)
-    }
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller label")
+    try {
+      intercept[IllegalStateException] {
+        Components.connectedComponents(edges.toDF("a", "b"), "a", "b", maxIters = 1)
+      }
+      // the round labels are scoped: the caller's label survives the throw
+      assert(sc.getLocalProperty("spark.job.description") == "caller label")
+    } finally sc.setJobDescription(null)
   }
 
   test("cluster resolution composes with near-dup pairs (keep one per cluster)") {

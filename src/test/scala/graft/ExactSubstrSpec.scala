@@ -6,7 +6,7 @@ import graft.operators.Dedup
 
 /** Exact-substring dedup: the winnowing guarantee (every >= minLen
   * shared run is found), exact longest-common-substring lengths, the
-  * graft_lcp kernel, fingerprint density, and set equivalence against
+  * graft_lcp_ext kernel, fingerprint density, and set equivalence against
   * a brute-force LCS on a repeat-heavy random corpus. */
 class ExactSubstrSpec extends SparkSpec {
   import spark.implicits._
@@ -40,27 +40,23 @@ class ExactSubstrSpec extends SparkSpec {
       minLen = 50, k = 8).count() == 0)
   }
 
-  test("graft_lcp: code-point common prefix length") {
-    val rows = Seq(
-      ("abcdef", "abcxyz", 3), ("", "abc", 0), ("same", "same", 4),
-      ("a", "b", 0), ("xy", "xyz", 2)
-    ).toDF("a", "b", "want")
-    val bad = rows.filter(
-      call_function("graft_lcp", col("a"), col("b")) =!= col("want"))
-    assert(bad.count() == 0)
-  }
-
   test("graft_lcp_ext: fused verify+extend matches the old expression chain") {
     // r22 differential: the fused zero-copy kernel must reproduce the
-    // old substr-equality filter + reversed-prefix/suffix graft_lcp
-    // chain bit-for-bit, including multi-byte code points (positions
-    // are code-point-based on both paths).
+    // old substr-equality filter + reversed-prefix/suffix lcp chain
+    // bit-for-bit, including multi-byte code points (positions are
+    // code-point-based on both paths).
     val r = new Random(23)
     val alphas = Seq("abcdefgh", "aabb", "äöüßλμπ😀x", "a")
     val k = 4
     val rows = Seq.tabulate(400) { i =>
       val alpha = alphas(i % alphas.length)
-      def s(n: Int) = Seq.fill(n)(alpha(r.nextInt(alpha.length))).mkString
+      // whole code points: the emoji is one 4-byte UTF-8 sequence
+      val cps = alpha.codePoints().toArray
+      def s(n: Int) = {
+        val sb = new java.lang.StringBuilder
+        (0 until n).foreach(_ => sb.appendCodePoint(cps(r.nextInt(cps.length))))
+        sb.toString
+      }
       val ta = s(10 + r.nextInt(60)); val tb = s(10 + r.nextInt(60))
       // positions over CODE POINTS (the winnow contract: pa <= cps-k+1)
       def pos(t: String) = {
@@ -68,26 +64,34 @@ class ExactSubstrSpec extends SparkSpec {
         1 + r.nextInt(math.max(1, cps - k + 1))
       }
       (ta, pos(ta), tb, pos(tb))
-    }.toDF("ta", "pa", "tb", "pb")
-    val old = rows.withColumn("m",
-        col("ta").substr(col("pa"), lit(k)) === col("tb").substr(col("pb"), lit(k)))
-      .withColumn("lext", when(col("m"), call_function("graft_lcp",
-        reverse(col("ta").substr(lit(1), col("pa") - 1)),
-        reverse(col("tb").substr(lit(1), col("pb") - 1)))).otherwise(lit(0)))
-      .withColumn("run", when(col("m"), col("lext") + lit(k) +
-        call_function("graft_lcp",
-          col("ta").substr(col("pa") + k, length(col("ta"))),
-          col("tb").substr(col("pb") + k, length(col("tb")))))
-        .otherwise(lit(0)))
-      .select(col("ta"), col("pa"), col("tb"), col("pb"), col("lext"), col("run"))
-    val fused = rows.select(col("ta"), col("pa"), col("tb"), col("pb"),
+    }
+    // the old chain in plain Scala over code points: anchor check
+    // substr(pa,k) === substr(pb,k), left extension = lcp of the
+    // reversed prefixes, right = lcp of the suffixes past the anchor
+    val df = rows.toDF("ta", "pa", "tb", "pb")
+    def cps(t: String) = t.codePoints().toArray
+    def str(a: Array[Int]) = new String(a, 0, a.length)
+    val want = df.as[(String, Int, String, Int)].collect().toSeq.map { case (ta, pa, tb, pb) =>
+      val (a, b) = (cps(ta), cps(tb))
+      val m = a.slice(pa - 1, pa - 1 + k).sameElements(b.slice(pb - 1, pb - 1 + k))
+      val lext = if (m) KernelOracles.lcp(str(a.take(pa - 1).reverse),
+        str(b.take(pb - 1).reverse)) else 0
+      val run = if (m) lext + k + KernelOracles.lcp(str(a.drop(pa - 1 + k)),
+        str(b.drop(pb - 1 + k))) else 0
+      (ta, pa, tb, pb, lext, run)
+    }
+    val fused = df
+      .select(col("ta"), col("pa"), col("tb"), col("pb"),
         call_function("graft_lcp_ext", col("ta"), col("pa"),
           col("tb"), col("pb"), lit(k)).as("e"))
       .select(col("ta"), col("pa"), col("tb"), col("pb"),
         col("e.lext").as("lext"), col("e.run").as("run"))
-    assert(old.exceptAll(fused).count() == 0 &&
-      fused.exceptAll(old).count() == 0,
-      "fused kernel diverged from the expression chain")
+      .as[(String, Int, String, Int, Int, Int)].collect().toSeq
+    assert(want.exists(_._6 > k), "no extended anchor — broken fixture")
+    val bad = fused.diff(want)
+    assert(fused.size == want.size && bad.isEmpty,
+      KernelOracles.escaped(s"${bad.size} rows diverged from the " +
+        s"code-point reference, e.g. ${bad.headOption}"))
   }
 
   test("winnowed anchor density is a small fraction of positions") {
@@ -188,6 +192,40 @@ class ExactSubstrSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect()
       .filter { case (a, b, _) => (a % 3 == 0) != (b % 3 == 0) }.toSet
     assert(want.nonEmpty, "split produced no cross pairs — broken fixture")
+    assert(got == want, s"missing=${want -- got}\nextra=${got -- want}")
+  }
+
+  test("cross-corpus probe past the probe-broadcast cap (> 100k batch " +
+      "anchors) == self-join pairs restricted across the split") {
+    // k = 8 over a 62-char alphabet: random 8-grams never collide, so
+    // the only pairs are the planted quotes; w = minLen - k + 1 = 2
+    // keeps ~2/3 of all positions as anchors
+    val r = new Random(37)
+    val alpha = (('a' to 'z') ++ ('A' to 'Z') ++ ('0' to '9')).mkString
+    val (minLen, k) = (9, 8)
+    val corpusRows = (0L until 100L).map(i => (i, randStr(r, 100, alpha)))
+    // every 10th batch doc quotes a 20-char run of one corpus doc
+    val batchRows = (1000L until 3000L).map { i =>
+      val body = randStr(r, 100, alpha)
+      if (i % 10 != 0) (i, body)
+      else (i, body.take(40) + corpusRows((i / 10 % 100).toInt)._2.slice(30, 50) +
+        body.drop(40))
+    }
+    val corpus = corpusRows.toDF("doc_id", "text")
+    val batch = batchRows.toDF("doc_id", "text")
+    val anchors = Dedup.winnowIndex(batch, "doc_id", "text", minLen, k).count()
+    assert(anchors > Dedup.MaxProbeBroadcastRows,
+      s"$anchors batch anchors do not pass the probe-broadcast cap")
+    val got = Dedup.exactSubstrPairsAgainst(
+        Dedup.winnowIndex(corpus, "doc_id", "text", minLen, k), corpus, batch,
+        "doc_id", "text", minLen, k)
+      .as[(Long, Long, Long)].collect().toSet
+    // corpus ids < 1000 <= batch ids, so a cross pair's a_id is the corpus doc
+    val want = Dedup.exactSubstrPairs(corpus.unionByName(batch), "doc_id", "text",
+        minLen, k)
+      .as[(Long, Long, Long)].collect()
+      .filter { case (a, b, _) => a < 1000L && b >= 1000L }.toSet
+    assert(want.size >= 200, s"only ${want.size} cross pairs — broken fixture")
     assert(got == want, s"missing=${want -- got}\nextra=${got -- want}")
   }
 

@@ -131,6 +131,42 @@ object KernelOracles {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
+  /** Driver-side reference of the [[graft.operators.BloomMembership.flagSeen]]
+    * probe for an already-`xxhash64`-hashed key: Spark's own
+    * `BloomFilter` deserialized and tested directly — no Spark
+    * expression involved (BloomMembershipSpec, TieredIndexSpec).
+    * Deserialized filters are cached by array identity, so a spec
+    * testing thousands of keys parses each filter once. */
+  def mightContainHash(bytes: Array[Byte], hashed: Long): Boolean =
+    filters.computeIfAbsent(bytes, b => org.apache.spark.util.sketch
+        .BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+      .mightContainLong(hashed)
+
+  private val filters = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[Array[Byte], org.apache.spark.util.sketch.BloomFilter]())
+
+  /** [[mightContainHash]] against one tiered-index generation for a
+    * SINGLE-Long-key spec (the anchor index's shape). Mirrors the
+    * build chain: `TieredIndex.keyHash` is Spark's `xxhash64` over the
+    * key column (XXH64 seed 42), and `BloomMembership.sketch` hashes
+    * that once more with the same `xxhash64` before inserting it. */
+  def mightContainKey(gen: graft.sources.TieredIndex.Gen, key: Long): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    mightContainHash(gen.bloom, XXH64.hashLong(XXH64.hashLong(key, 42L), 42L))
+  }
+
+  /** Longest common prefix LENGTH of two strings, in code points — the
+    * plain-Scala reference of the match extension `graft_lcp_ext`
+    * fuses (ExactSubstrSpec). */
+  def lcp(a: String, b: String): Int = {
+    var i = 0; var cp = 0
+    while (i < a.length && i < b.length && a.codePointAt(i) == b.codePointAt(i)) {
+      cp += 1
+      i += Character.charCount(a.codePointAt(i))
+    }
+    cp
+  }
+
   /** The rows of `input` on which `native` and `oracle` differ —
     * compared by value, doubles (also inside arrays and structs) by
     * their bits — after a line if no whole-stage codegen stage
@@ -157,6 +193,56 @@ object KernelOracles {
         s"${key.mkString(", ")}: native ${r.get(n)} vs oracle ${r.get(n + 1)}"
       }
   }
+
+  /** The rows of `input` on which `kernel`'s generated code and its
+    * interpreted `eval` disagree — the differential of the kernels
+    * with no HOF oracle. `expr` is evaluated over `input` twice, past
+    * an exchange (see [[diffs]]): compiled, after a line if no
+    * whole-stage codegen stage evaluates a `kernel`; and with
+    * whole-stage codegen off and `spark.sql.codegen.factoryMode` at
+    * `NO_CODEGEN`, where every projection interprets (a line if a
+    * codegen stage still appears). Rows pair up by input position;
+    * values compare like [[diffs]], doubles by their bits. */
+  def codegenDiffs(input: DataFrame, expr: Column,
+                   kernel: Class[_ <: Expression]): Seq[String] = {
+    val spark = input.sparkSession
+    val rows = input.collect()
+    val keyed = spark.createDataFrame(
+      java.util.Arrays.asList(rows.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(r.toSeq :+ i) }: _*),
+      input.schema.add("__row", org.apache.spark.sql.types.IntegerType))
+    def run(): (Map[Int, Any], Seq[WholeStageCodegenExec]) = {
+      val q = keyed.repartition(2).select(col("__row"), expr.as("__out"))
+      val out = q.collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      (out, codegenStages(q.queryExecution.executedPlan))
+    }
+    val (generated, stages) = run()
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val (interpreted, interpStages) =
+      try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; run() }
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    val compiled = stages.exists(w =>
+      stageBody(w.child).exists(_.expressions.exists(_.exists(kernel.isInstance))))
+    (if (compiled) Nil
+     else Seq(s"no whole-stage codegen stage evaluates ${kernel.getSimpleName}")) ++
+      (if (interpStages.isEmpty) Nil
+       else Seq("the interpreted run still compiled a whole-stage codegen stage")) ++
+      rows.indices.filterNot(i => same(generated(i), interpreted(i))).map { i =>
+        val key = rows(i).toSeq.map(v => Option(v).map(_.toString.take(80)))
+        escaped(s"${key.mkString(", ")}: codegen ${generated(i)} vs interpreted ${interpreted(i)}")
+      }
+  }
+
+  /** `s` with every non-ASCII char as a Java unicode escape: a failure
+    * message carrying raw multi-byte text can break the test-report
+    * writer on a non-UTF-8 default charset. */
+  def escaped(s: String): String = s.flatMap(c =>
+    if (c < 128) c.toString else f"\\u${c.toInt}%04x")
 
   /** Value equality with doubles compared by bits, recursively. */
   private def same(a: Any, b: Any): Boolean = (a, b) match {

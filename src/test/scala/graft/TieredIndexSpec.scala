@@ -140,7 +140,7 @@ class TieredIndexSpec extends SparkSpec {
       // (seed-42 chain; band is an Int column -> hashInt), then
       // sketch hashes the key once more
       val key = XXH64.hashLong(bucket, XXH64.hashInt(band, 42L))
-      assert(gens.exists(g => graft.operators.BloomMembership
+      assert(gens.exists(g => KernelOracles
           .mightContainHash(g.bloom, XXH64.hashLong(key, 42L))),
         s"key ($band,$bucket) lost from every bloom mid-merge")
     }
